@@ -12,9 +12,8 @@ echoed for parity (SURVEY.md §2.4, T1–T3).
 
 Multi-weight fan-out (T7, ``RankAggregator.java:104-129``): the j-th weight
 of every facet forms combination j; all combination scores are computed in
-ONE projection over ONE scan (the reference's single candidate pass), then k
-rows per combination are taken with one TakeOrdered each — no full sort, no
-per-combination rescan of the base data.
+ONE projection, then k rows per combination are taken with one TakeOrdered
+each — no full sort.
 
 Scale: the aggregation is a single wide projection when all facets live on
 one table (zero shuffles: scan → project → TakeOrdered).  For facets on
@@ -23,97 +22,107 @@ relation aggregated with ONE key-grouped shuffle (map-side partial agg) —
 full-outer joins cannot broadcast, so the join-free shape is the scale
 contract; per-facet LIMIT M pruning bounds the unioned row count.
 
-Persisted frames (multi-combination / auto-scale paths) are scoped to the
-workload and rely on Spark's LRU block eviction in long-lived sessions.
+Two passes, nothing cached: a probe pass collects, per facet whose scale
+or weight is data-dependent, its k+1 smallest distances (one TakeOrdered
+job each, plus one row count when a weight is estimated); the final pass
+binds the scales and weights as literals.  The probe is exact: the scale is
+the largest of the k smallest distances, and the T5 weight — Spark's exact
+``percentile(sim, 1 - k/N)`` — interpolates between the k-th and the
+(k+1)-th largest similarity, which are the similarities of the k+1 smallest
+distances (similarity never rises with distance; NULL-distance and disjoint
+rows score 0, so the list is padded with zeros when fewer rows have a
+distance).
 """
 
 from __future__ import annotations
 
 import functools
+import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simsearch_spark.operators import topk
 from simsearch_spark.plans.spec import Facet, SearchRequest
 
 
-def _facet_sim_frame(
-    df: DataFrame,
-    key_column: str,
-    facets: list[Facet],
-    k: int,
-    persisted: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Single-table path: one wide projection with per-facet dist + sim
-    columns; auto scales cross-joined as broadcast 1-row aggregates.
+def _similarity(dist: Column, scale: float | None, f: Facet) -> Column:
+    """Facet similarity at a bound scale; a NULL distance (or an unknown
+    scale) scores 0 (RankAggregator.java:239-241)."""
+    sim = topk.facet_similarity(dist, F.lit(scale).cast("double"), f)
+    return F.coalesce(sim, F.lit(0.0))
 
-    NULL attribute values yield sim 0 (not dropped): the entity can still
-    rank on its other facets (RankAggregator.java:239-241).
+
+def score_facets(
+    df: DataFrame, facets: list[Facet], k: int, estimate_weights: bool = False
+) -> tuple[DataFrame, dict[str, float]]:
+    """Probe pass of the single-table path.
+
+    Returns ``df`` restricted to the facets' pre-filters (P2,
+    ``SimSearchJdbcQuery.java:136-148``) with per-facet ``__dist_<name>``
+    and ``__sim_<name>`` columns whose scales are bound as literals, and —
+    with ``estimate_weights`` — the T5 weight of every facet whose
+    ``weights`` is None (``engine/weights/Estimator.java:177-189``): the
+    p = 1 - k/N percentile of its similarities over the N filtered rows.
+
+    Spark jobs: one ``orderBy(dist).limit(k or k+1)`` collect per facet
+    with an auto scale or an estimated weight, plus one row count when any
+    weight is estimated.  The similarities of the probed distances come
+    from the final plan's own expression over a one-row local relation,
+    which Spark's optimizer folds to a constant without running a job.
     """
-    cols = {c: F.col(c) for c in df.columns}
-    scored = df
+    filters = list(dict.fromkeys(f.filter for f in facets if f.filter))
+    base = df.where(F.expr(" AND ".join(f"({c})" for c in filters))) if filters else df
+    cols = {c: F.col(c) for c in base.columns}
+    scored = base.withColumns({
+        f"__dist_{f.name}": topk.facet_distance(
+            cols, Facet(**{**f.__dict__, "query_value": topk.resolve_query_value(df, f)})
+        )
+        for f in facets
+    })
+
+    estimate = [f for f in facets if f.weights is None] if estimate_weights else []
+    n = base.count() if estimate else 0
+    # Spark's Percentile interpolates between ascending positions lo and hi
+    # of pos = (n - 1)·p, so the weight needs the column's n - lo largest
+    # similarities: the k-th and (k+1)-th, or all n rows when n <= k + 1
+    pos = (n - 1) * max(0.0, min(1.0, 1.0 - k / max(n, 1)))
+    lo, hi = math.floor(pos), math.ceil(pos)
+    nearest: dict[str, list[float]] = {}
     for f in facets:
-        bound = Facet(**{**f.__dict__, "query_value": topk.resolve_query_value(df, f)})
-        d = topk.facet_distance(cols, bound)
-        scored = scored.withColumn(f"__dist_{f.name}", d)
+        limit = max(k if f.scale is None else 0, n - lo if f in estimate else 0)
+        if limit:
+            d = f"__dist_{f.name}"
+            probe = scored.select(d).where(F.col(d).isNotNull()).orderBy(d).limit(limit)
+            nearest[f.name] = [r[0] for r in probe.collect()]
 
-    # each auto-scaled facet runs its own k-th-distance job over this frame
-    # (TakeOrdered + 1-row agg); persist so those jobs and the final ranking
-    # read one materialization instead of re-scanning parquet per facet
-    if sum(1 for f in facets if f.scale is None) > 1:
-        scored = scored.persist()
-        if persisted is not None:
-            persisted.append(scored)
-
+    scales = {}
     for f in facets:
-        if f.scale is None:
-            sdf = topk.kth_distance(scored, f"__dist_{f.name}", k, f"__scale_{f.name}")
-            scored = scored.crossJoin(F.broadcast(sdf))
-        else:
-            scored = scored.withColumn(f"__scale_{f.name}", F.lit(float(f.scale)))
+        # Spark sorts NaN last, so the k-th entry is the k smallest's max
+        auto = nearest.get(f.name, [])[:k]
+        scales[f.name] = f.scale if f.scale is not None else (auto[-1] if auto else None)
+        sim = _similarity(F.col(f"__dist_{f.name}"), scales[f.name], f)
+        scored = scored.withColumn(f"__sim_{f.name}", sim)
 
-    for f in facets:
-        sim = topk.facet_similarity(F.col(f"__dist_{f.name}"), F.col(f"__scale_{f.name}"), f)
-        scored = scored.withColumn(f"__sim_{f.name}", F.coalesce(sim, F.lit(0.0)))
-    return scored
-
-
-def estimate_weights(
-    scored: DataFrame, facets: list[Facet], k: int, approximate: bool = False
-) -> dict[str, float]:
-    """T5 weight auto-estimation (``engine/weights/Estimator.java:177-189``;
-    invoked at ``RankAggregator.java:177-192``): for a facet with no
-    user-given weight, weight = the p-th percentile of its candidate score
-    distribution with p = (1 - k/N) where N = candidate count.
-
-    Exact ``percentile`` (linear interpolation at p·(n-1)) matches DuckDB's
-    ``quantile_cont`` — oracle-checkable. One aggregate job for all facets.
-
-    approximate=True switches to ``percentile_approx`` (t-digest sketch,
-    mergeable, no per-group sort buffer) — the 100 TB setting where an exact
-    percentile over the full candidate distribution is wasted precision for
-    a heuristic weight.  Declared queries keep the exact path.
-    """
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in facets:
-        aggs.append(F.sum(F.when(F.col(f"__sim_{f.name}").isNotNull(), 1).otherwise(0)).alias(f"__n_{f.name}"))
-    counts = scored.agg(*aggs).first()
-    percentile_aggs = []
-    for f in facets:
-        n = counts[f"__n_{f.name}"] or 1
-        p = max(0.0, min(1.0, 1.0 - k / n))
-        fn = F.percentile_approx if approximate else F.percentile
-        percentile_aggs.append(fn(F.col(f"__sim_{f.name}"), F.lit(p)).alias(f.name))
-    row = scored.agg(*percentile_aggs).first()
-    return {f.name: float(row[f.name]) for f in facets}
+    weights = {f.name: 0.0 for f in estimate}  # no rows: nothing to weigh
+    if n:
+        sims = df.sparkSession.sql("VALUES (0)").select(*[
+            F.array(*[
+                _similarity(F.lit(d), scales[f.name], f)
+                for d in nearest[f.name] + [None] * (n - lo - len(nearest[f.name]))
+            ])
+            for f in estimate
+        ]).first()
+        for f, top in zip(estimate, map(sorted, sims)):
+            v_lo, v_hi = top[0], top[hi - lo]  # Percentile.getPercentile
+            weights[f.name] = v_lo if v_lo == v_hi else (hi - pos) * v_lo + (pos - lo) * v_hi
+    return scored, weights
 
 
 def multi_facet_topk(
     df: DataFrame,
     request: SearchRequest,
     round_digits: int | None = 6,
-    eager_cleanup: bool = False,
 ) -> DataFrame:
     """Rank-aggregated top-k over facets of one table.
 
@@ -123,28 +132,15 @@ def multi_facet_topk(
     is rounded *before* ranking so cross-engine exp() last-ulp differences
     collapse into exact ties broken by id.
 
-    CACHE LIFECYCLE: multi-combination and auto-scale requests persist an
-    intermediate scored frame that the lazily-returned result still reads,
-    so by default it stays cached until LRU eviction (or the caller's
-    ``spark.catalog.clearCache()``).  Pass ``eager_cleanup=True`` to
-    materialize the k·combos result rows now (``localCheckpoint``) and
-    unpersist immediately — the right mode for long-lived sessions issuing
-    many requests; the default keeps the plan lazy/inspectable.
+    PROBE → FINAL: the probe pass (``score_facets``) runs its small jobs
+    eagerly and returns scales and estimated weights as numbers; the
+    returned frame is the final pass — scan → project → one TakeOrdered per
+    weight combination, with every scale and weight a literal.  Nothing is
+    persisted, so the result holds no cache and needs no cleanup; the
+    price is that the final pass recomputes the distances the probes saw.
     """
     facets, k, key = request.facets, request.k, request.key_column
-    handles: list[DataFrame] = []
-    scored = _facet_sim_frame(df, key, facets, k, persisted=handles)
-
-    need_estimate = [f for f in facets if f.weights is None]
-    # the scored frame is read once per weight combination (TakeOrdered each)
-    # plus twice by weight estimation; persist so the parquet scan + facet
-    # scoring run ONCE per workload, not once per job (round-1 flagged the
-    # j-fold rescan).  Single-combination requests with given weights read
-    # the frame exactly once — no persist needed.
-    if need_estimate or request.n_combinations > 1:
-        scored = scored.persist()
-        handles.append(scored)
-    est = estimate_weights(scored, need_estimate, k) if need_estimate else {}
+    scored, est = score_facets(df, facets, k, estimate_weights=True)
 
     n_combos = request.n_combinations
     weight_sets: list[dict[str, float]] = []
@@ -188,14 +184,7 @@ def multi_facet_topk(
             )
         )
         per_combo.append(top)
-    out = functools.reduce(lambda a, b: a.unionByName(b), per_combo)
-    if eager_cleanup and handles:
-        # materialize the bounded (k·combos rows) result, then free the
-        # workload-scoped cached frames instead of waiting for LRU eviction
-        out = out.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-    return out
+    return functools.reduce(lambda a, b: a.unionByName(b), per_combo)
 
 
 def multi_source_topk(
@@ -221,7 +210,7 @@ def multi_source_topk(
     sim_frames = []
     for f in facets:
         df = frames[f.name]
-        scored = _facet_sim_frame(df, key_column, [f], k)
+        scored, _ = score_facets(df, [f], k)
         frame = scored.select(
             F.col(key_column),
             F.lit(f.name).alias("__facet"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simsearch_spark.operators.rank_agg import estimate_weights, _facet_sim_frame, multi_facet_topk
+from simsearch_spark.operators.rank_agg import multi_facet_topk, score_facets
 from simsearch_spark.operators.topk import single_facet_topk
 from simsearch_spark.plans.spec import Facet, SearchRequest
 from simsearch_spark.sources.registry import load_table
@@ -246,7 +246,7 @@ def _customer_two_facets(weights_a, weights_b):
 
 
 #: shared oracle skeleton for the 2-facet customer query; weights are
-#: interpolated per declared query.  Mirrors _facet_sim_frame + weighted mean.
+#: interpolated per declared query.  Mirrors score_facets + weighted mean.
 def _sql_multi_attr(weight_pairs: list[tuple[float, float]]) -> str:
     combo_selects = []
     for j, (wa, wb) in enumerate(weight_pairs):
@@ -389,8 +389,7 @@ def q_weight_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
         Facet(name="acctbal", kind="numerical", value_cols=["c_acctbal"], query_value=NUM_Q),
         Facet(name="nat", kind="numerical", value_cols=["c_nationkey"], query_value=10.0),
     ]
-    scored = _facet_sim_frame(cust, "c_custkey", facets, K)
-    est = estimate_weights(scored, facets, K)
+    _, est = score_facets(cust, facets, K, estimate_weights=True)
     rows = [(name, round(w, 6)) for name, w in sorted(est.items())]
     return spark.createDataFrame(rows, "facet string, weight double")
 

@@ -81,6 +81,33 @@ def test_parse_rejects(cust):
         )
 
 
+def test_sql_prefilter_applies_before_scale_and_weight(spark, sf_dir):
+    """Ordinary WHERE predicates are P2 pre-filters: only matching rows
+    rank, and the auto scale (k-th nearest distance) and estimated weight
+    come from the filtered rows — checked against a numpy recomputation."""
+    import numpy as np
+
+    from simsearch_spark.plans.sql_frontend import execute_search_sql
+
+    part = load_table(spark, sf_dir, "part")
+    q, k = 1450.0, 10
+    sql = f"SELECT p_size FROM part WHERE p_size > 25 AND p_retailprice ~= {q} LIMIT {k}"
+    rows = execute_search_sql(spark, part, "part", sql, "p_partkey").collect()
+
+    src = part.select("p_partkey", "p_size", "p_retailprice").toPandas()
+    kept = src[src.p_size > 25]
+    assert len(kept) < len(src)  # the filter really removes rows
+    dist = np.abs(kept.p_retailprice.to_numpy() - q)
+    scale = np.sort(dist)[k - 1]
+    sim = np.exp(-0.05 * dist / (scale if scale > 0 else 1.0))
+    want = sorted(zip(-np.round(sim, 6), kept.p_partkey), key=lambda t: (t[0], t[1]))[:k]
+    assert [r.p_partkey for r in rows] == [int(i) for _, i in want]
+    assert all(r.p_size > 25 for r in rows)
+    for r, (neg_score, _) in zip(rows, want):
+        assert abs(r.score + neg_score) <= 2e-6
+        assert abs(r.p_retailprice_sim + neg_score) <= 2e-6
+
+
 def test_parse_point_lat_heuristic_guarded(spark):
     """POINT binding must not blindly take 'the next column' as latitude: a
     non-numeric or missing neighbor is a parse error steering the caller to

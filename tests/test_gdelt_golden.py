@@ -103,9 +103,9 @@ def test_gdelt_missing_values_score_zero(spark):
         Facet(name="position", kind="spatial", value_cols=["longitude", "latitude"],
               query_value=(-74.94, 42.15), weights=[0.5], scale=SCALE_POSITION),
     ]
-    from simsearch_spark.operators.rank_agg import _facet_sim_frame
+    from simsearch_spark.operators.rank_agg import score_facets
 
-    scored = _facet_sim_frame(df, "article_id", facets, 50)
+    scored, _ = score_facets(df, facets, 50)
     missing = scored.where(F.col("longitude").isNull())
     rows = missing.select("article_id", "__sim_persons", "__sim_position").collect()
     assert rows, "fixture should contain NULL-position rows"
@@ -141,7 +141,7 @@ def test_gdelt_pivot_golden_partial_parity(spark):
     import math as m
 
     from simsearch_spark.functions.measures import DECAY_FACTOR
-    from simsearch_spark.operators.rank_agg import _facet_sim_frame
+    from simsearch_spark.operators.rank_agg import score_facets
 
     golden = json.load(open(PIVOT_GOLDEN))
     results = [r for combo in golden for r in combo["rankedResults"]]
@@ -166,7 +166,7 @@ def test_gdelt_pivot_golden_partial_parity(spark):
     ids = sorted({r["id"] for r in results})
     dist_rows = {
         r.article_id: r
-        for r in _facet_sim_frame(df.where(F.col("article_id").isin(ids)), "article_id", probe, 5)
+        for r in score_facets(df.where(F.col("article_id").isin(ids)), probe, 5)[0]
         .select("article_id", "__dist_positive_sentiment", "__dist_position")
         .collect()
     }
@@ -179,14 +179,14 @@ def test_gdelt_pivot_golden_partial_parity(spark):
         assert 0 < s0 < 1 and d0 > 0
         scales[attr] = DECAY_FACTOR * d0 / -m.log(s0)
 
-    scored = _facet_sim_frame(
-        df.where(F.col("article_id").isin(ids)), "article_id",
+    scored = score_facets(
+        df.where(F.col("article_id").isin(ids)),
         [Facet(name="positive_sentiment", kind="numerical", value_cols=["positive_sentiment"],
                query_value=2.5, scale=scales["positive_sentiment"]),
          Facet(name="position", kind="spatial", value_cols=["longitude", "latitude"],
                query_value=(-74.94, 42.15), scale=scales["position"])],
         5,
-    ).select("article_id", "__sim_positive_sentiment", "__sim_position").collect()
+    )[0].select("article_id", "__sim_positive_sentiment", "__sim_position").collect()
     checked = 0
     for r in scored:
         for attr, col in (("positive_sentiment", "__sim_positive_sentiment"),

@@ -45,7 +45,8 @@ def test_facet_topk_column_pruning(spark, sf_dir):
 
 def test_multi_attr_no_shuffle(spark, sf_dir):
     """Single-table multi-facet aggregation: no hash-partition shuffle —
-    wide projection + broadcast scales + TakeOrdered per combination."""
+    wide projection with literal scales and weights + TakeOrdered per
+    combination."""
     cust = load_table(spark, sf_dir, "customer")
     req = SearchRequest(
         table="customer",
@@ -70,17 +71,6 @@ def test_scan_project_reads_three_columns(spark, sf_dir):
     # 11-column lineitem pruned to the 3 projected columns
     assert "l_orderkey" in plan and "l_extendedprice" in plan
     assert "l_quantity" not in plan and "l_shipdate" not in plan
-
-
-def test_weight_estimation_approx_close_to_exact(spark, sf_dir):
-    from simsearch_spark.operators.rank_agg import _facet_sim_frame, estimate_weights
-
-    cust = load_table(spark, sf_dir, "customer")
-    facets = [Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0)]
-    scored = _facet_sim_frame(cust, "c_custkey", facets, 10)
-    exact = estimate_weights(scored, facets, 10)["bal"]
-    approx = estimate_weights(scored, facets, 10, approximate=True)["bal"]
-    assert abs(exact - approx) < 0.05  # sketch within tolerance of exact
 
 
 def test_bench_stdout_fits_driver_tail_window():

@@ -1,3 +1,4 @@
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from simsearch_spark.operators.rank_agg import multi_facet_topk, multi_source_topk
@@ -185,49 +186,116 @@ def test_t8_exact_flag_reaches_response(spark):
     assert flags[1] is True and flags[2] is False and flags[3] is False
 
 
-def test_multi_facet_eager_cleanup_frees_cache(spark, sf_dir, monkeypatch):
-    """eager_cleanup=True must return identical rows while unpersisting the
-    workload-scoped scored frames it persisted (default mode leaves them for
-    LRU/clearCache; long-lived sessions opt into eager cleanup).  Asserts on
-    the SPECIFIC frames each call persists — recorded via a persist hook —
-    not the JVM-global RDD storage census, which other tests sharing the
-    session perturb (flaked under full-suite ordering in r5)."""
-    # patch the CLASSIC DataFrame: in PySpark 4 it overrides persist(), so a
-    # base-class patch never fires
+def test_multi_facet_search_persists_nothing(spark, sf_dir, monkeypatch):
+    """Auto-scaled, auto-weighted and multi-combination searches cache no
+    frame: the probe pass collects numbers and the final plan is scan →
+    project → TakeOrdered, with no broadcast scale join and no cached
+    relation.  Recorded via persist/cache hooks on the classic DataFrame
+    (in PySpark 4 it overrides both, so a base-class patch never fires)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from simsearch_spark.plans.spec import Facet, SearchRequest
-    from simsearch_spark.sources.registry import load_table
-
     recorded = []
-    orig_persist = DataFrame.persist
 
-    def recording_persist(self, *a, **k):
-        recorded.append(self)
-        return orig_persist(self, *a, **k)
+    def recording(orig):
+        def hook(self, *a, **kw):
+            recorded.append(self)
+            return orig(self, *a, **kw)
 
-    monkeypatch.setattr(DataFrame, "persist", recording_persist)
+        return hook
+
+    for name in ("persist", "cache"):
+        monkeypatch.setattr(DataFrame, name, recording(getattr(DataFrame, name)))
 
     cust = load_table(spark, sf_dir, "customer")
-    req = SearchRequest(
-        table="customer",
-        key_column="c_custkey",
-        facets=[
-            Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0),
-            Facet(name="nat", kind="numerical", value_cols=["c_nationkey"], query_value=10.0),
-        ],
-        k=5,
-    )  # no scales + no weights -> both persist sites trigger
-    lazy_rows = [tuple(r) for r in multi_facet_topk(cust, req).collect()]
-    lazy_frames, _ = list(recorded), recorded.clear()
-    assert len(lazy_frames) >= 2            # scored frame persisted at both sites
-    assert any(f.is_cached for f in lazy_frames)  # default mode leaves them cached
-    for f in lazy_frames:
-        f.unpersist()
+    auto = [
+        Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0),
+        Facet(name="nm", kind="textual", value_cols=["c_name"], query_value="Customer#000000007"),
+    ]
+    combos = [
+        Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0, weights=[0.9, 0.2]),
+        Facet(name="nat", kind="numerical", value_cols=["c_nationkey"], query_value=10.0, weights=[0.1, 0.8]),
+    ]
+    for facets, n_rows in ((auto, 5), (combos, 10)):
+        out = multi_facet_topk(cust, SearchRequest(table="customer", key_column="c_custkey", facets=facets, k=5))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan and "BroadcastExchange" not in plan
+        assert "percentile" not in plan.lower()
+        assert len(out.collect()) == n_rows
+    assert recorded == []
 
-    eager_rows = [tuple(r) for r in multi_facet_topk(cust, req, eager_cleanup=True).collect()]
-    eager_frames = list(recorded)
-    assert eager_rows == lazy_rows
-    assert len(eager_frames) >= 2
-    # eager mode must have unpersisted every frame it persisted itself
-    assert not any(f.is_cached for f in eager_frames)
+
+def test_search_jobs_bounded_by_probed_facets(spark, sf_dir):
+    """``Catalog.search`` launches at most P + 3 Spark jobs, P = facets
+    probed (auto scale or estimated weight): P probes, a row count (two jobs
+    under AQE) when a weight is estimated, and the final TakeOrdered."""
+    from simsearch_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark)
+    cat.register_source("customer", df=load_table(spark, sf_dir, "customer"))
+    cat.mount("bal", "customer", "c_custkey", ["c_acctbal"], "numerical_topk")
+    cat.mount("nat", "customer", "c_custkey", ["c_nationkey"], "numerical_topk")
+    cat.mount("nm", "customer", "c_custkey", ["c_name"], "textual_topk")
+    sc = spark.sparkContext
+
+    def jobs(group, conditions, weights=None):
+        sc.setJobGroup(group, group)
+        try:
+            assert cat.search(conditions, k=10, weights=weights).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("probe-one", {"bal": 1000.0}) <= 1 + 3
+    three = {"bal": 1000.0, "nat": 10.0, "nm": "Customer#000000007"}
+    weights = {"bal": [0.5], "nat": [0.3], "nm": [0.2]}
+    assert jobs("probe-three", three, weights) <= 3 + 3
+
+
+_PROBE_VALUES = st.one_of(st.none(), st.sampled_from([0.0, 1.0, 2.5, 4.0, 7.0]))
+_PROBE_TEXTS = st.one_of(st.none(), st.text(alphabet="ab", max_size=4))
+
+
+@given(
+    rows=st.lists(st.tuples(_PROBE_VALUES, _PROBE_TEXTS), max_size=12),
+    k=st.integers(1, 6),
+    case=st.sampled_from(["numerical", "textual", "disjoint"]),
+)
+@example(rows=[(1.0, "ab")] * 2, k=5, case="numerical")              # N < k
+@example(rows=[(1.0, "ab"), (2.5, "b")] * 2, k=4, case="numerical")  # N = k, ties
+@example(rows=[(v, "a") for v in (0.0, 1.0, 1.0, 4.0, None)], k=4, case="numerical")  # N = k+1
+@example(rows=[(v, "ab") for v in (0.0, 1.0, 2.5, 4.0, 7.0, 1.0)], k=2, case="numerical")  # N > k+1
+@example(rows=[(None, t) for t in ("ab", "abab", "b", "aba", "ba")], k=2, case="textual")
+@example(rows=[(None, None)] * 3, k=2, case="textual")              # no distance at all
+@example(rows=[(1.0, "abab"), (2.5, None), (4.0, "b")], k=1, case="disjoint")
+@settings(max_examples=8, deadline=None)
+def test_probe_scale_and_weight_equal_full_column(spark_prop, rows, k, case):
+    """The probe pass's scale and T5 weight are bit-identical to the
+    full-column definitions: ``kth_distance`` (the k-th nearest distance)
+    and Spark's exact ``percentile(sim, 1 - k/N)`` over all N rows —
+    across NULLs, tied distances, N < k, N = k, N = k+1 and a textual
+    query sharing no q-gram with any row."""
+    from simsearch_spark.operators.rank_agg import score_facets
+    from simsearch_spark.operators.topk import facet_similarity, kth_distance
+
+    df = spark_prop.createDataFrame(
+        [(i, x, t) for i, (x, t) in enumerate(rows)], "id long, x double, t string"
+    )
+    if case == "numerical":
+        facet = Facet(name="f", kind="numerical", value_cols=["x"], query_value=2.0)
+    else:
+        q = "zzz" if case == "disjoint" else "abab"
+        facet = Facet(name="f", kind="textual", value_cols=["t"], query_value=q)
+    scored, weights = score_facets(df, [facet], k, estimate_weights=True)
+
+    ref = scored.crossJoin(kth_distance(scored, "__dist_f", k, "__scale")).withColumn(
+        "ref_sim",
+        F.coalesce(facet_similarity(F.col("__dist_f"), F.col("__scale"), facet), F.lit(0.0)),
+    )
+    p = max(0.0, min(1.0, 1.0 - k / max(len(rows), 1)))
+    got = ref.agg(
+        F.count(F.when(~F.col("__sim_f").eqNullSafe(F.col("ref_sim")), 1)).alias("mismatched"),
+        F.percentile(F.col("ref_sim"), F.lit(p)).alias("weight"),
+    ).first()
+    assert got.mismatched == 0
+    if rows:
+        assert weights["f"] == got.weight
