@@ -1,9 +1,10 @@
 """Result post-processing (SURVEY.md §2.6 R1-R3).
 
 R1 extra columns: report attributes not used as similarity criteria.
-Reference batches ``IN (ids)`` lookups (``SearchHandler.java:772-834``);
-Spark-first this is a broadcast join of the k-row result against the base
-table — the scan is column-pruned to exactly the extra columns.
+Reference batches ``IN (ids)`` lookups (``SearchHandler.java:772-834``).
+A search request carries them in the projection over its k result rows
+(``rank_agg.multi_facet_topk``); ``attach_extra_columns`` serves callers
+that hold only a ranked result, with no request.
 
 R2 similarity matrix: k×k pairwise weighted similarity between result
 entities (``engine/processor/ResultMatrix.java:62-124``; skipped when k>50,
@@ -19,17 +20,18 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from simsearch_spark.functions import measures
+from simsearch_spark.operators import topk
 from simsearch_spark.plans.spec import Facet
 
 
 def attach_extra_columns(
     result: DataFrame, base: DataFrame, key_column: str, extra_columns: list[str]
 ) -> DataFrame:
-    """R1: left-join extra attributes onto the ranked result.  The result side
-    is k rows → broadcast it, keeping the base-table side shuffle-free."""
-    pruned = base.select(key_column, *extra_columns)
-    return F.broadcast(result).join(pruned, on=key_column, how="left")
+    """R1: left-join extra attributes onto a ranked result by key.  A left
+    outer join can build only its right side, so Spark broadcasts (or, above
+    the broadcast threshold, shuffles) the base table pruned to the key and
+    the extra columns — a search request avoids that by projecting them."""
+    return result.join(base.select(key_column, *extra_columns), on=key_column, how="left")
 
 
 def similarity_matrix(
@@ -41,8 +43,9 @@ def similarity_matrix(
     round_digits: int | None = 6,
 ) -> DataFrame:
     """R2: pairwise weighted similarity between all result pairs, using the
-    same per-facet decayed-similarity measures and scale factors as the query
-    (ResultMatrix.java:62-124 re-uses the facet measures verbatim).
+    query's own per-facet distance (``topk.distance``), decayed similarity
+    and scale factors (ResultMatrix.java:62-124 re-uses the facet measures
+    verbatim).
 
     Output: (left, right, sim) for all k² ordered pairs, diagonal included —
     matching the reference's full matrix shape.
@@ -61,32 +64,12 @@ def similarity_matrix(
 
     sims = []
     for f in facets:
-        scale = F.lit(float(scales[f.name]))
-        if f.kind == "numerical":
-            d = measures.abs_diff(F.col(f"l_{f.value_cols[0]}"), F.col(f"r_{f.value_cols[0]}"))
-            s = measures.decayed_similarity(d, scale, f.decay)
-        elif f.kind == "temporal":
-            d = F.abs(
-                F.col(f"l_{f.value_cols[0]}").cast("timestamp").cast("double")
-                - F.col(f"r_{f.value_cols[0]}").cast("timestamp").cast("double")
-            )
-            s = measures.decayed_similarity(d, scale, f.decay)
-        elif f.kind == "spatial":
-            lon, lat = f.value_cols[:2]
-            d = measures.planar_distance(
-                F.col(f"l_{lon}"), F.col(f"l_{lat}"), F.col(f"r_{lon}"), F.col(f"r_{lat}")
-            )
-            s = measures.decayed_similarity(d, scale, f.decay)
-        elif f.kind in ("categorical", "textual"):
-            col = f.value_cols[0]
-            d = measures.jaccard_distance(F.col(f"l_{col}"), F.col(f"r_{col}"))
-            s = measures.jaccard_similarity_scored(d, scale, f.decay)
-        elif f.kind == "vector":
-            col = f.value_cols[0]
-            d = measures.euclidean_distance(F.col(f"l_{col}"), F.col(f"r_{col}"))
-            s = measures.decayed_similarity(d, scale, f.decay)
-        else:
-            raise ValueError(f"unsupported facet kind {f.kind}")
+        d = topk.distance(
+            f,
+            topk.operands(f, [F.col(f"l_{c}") for c in f.value_cols]),
+            topk.operands(f, [F.col(f"r_{c}") for c in f.value_cols]),
+        )
+        s = topk.facet_similarity(d, F.lit(float(scales[f.name])), f)
         sims.append(F.coalesce(s, F.lit(0.0)) * F.lit(ws[f.name]))
 
     total = functools.reduce(lambda a, b: a + b, sims) / F.lit(total_w)

@@ -126,8 +126,9 @@ def multi_facet_topk(
 ) -> DataFrame:
     """Rank-aggregated top-k over facets of one table.
 
-    Output (per combination j): (combo, id-as-key_column, score, rank,
-    per-facet value + ``<name>_sim``) with the determinism contract
+    Output (per combination j): (combo, id-as-key_column, score,
+    per-facet value + ``<name>_sim``, the request's extra columns) with the
+    determinism contract
     ``ORDER BY score DESC, id ASC`` (FIXTURES.md §F4).  The aggregate score
     is rounded *before* ranking so cross-engine exp() last-ulp differences
     collapse into exact ties broken by id.
@@ -171,6 +172,8 @@ def multi_facet_topk(
             f"{f.name}_sim", F.round(sim, round_digits) if round_digits is not None else sim
         )
 
+    # R1 extra columns ride the projection over each combination's k rows
+    out_cols = [F.col(c) for c in dict.fromkeys([*facet_cols, *request.extra_columns])]
     per_combo = []
     for j in range(n_combos):
         top = (
@@ -180,7 +183,7 @@ def multi_facet_topk(
                 F.lit(j).alias("combo"),
                 F.col(key),
                 F.col(f"__score_{j}").alias("score"),
-                *[F.col(c) for c in dict.fromkeys(facet_cols)],
+                *out_cols,
             )
         )
         per_combo.append(top)

@@ -231,7 +231,7 @@ def jaccard_topk_pruned(
     categorical facet row-for-row (equality-tested).
     """
     from simsearch_spark.functions import measures
-    from simsearch_spark.operators.topk import kth_distance
+    from simsearch_spark.operators.topk import scale_over_rows
 
     qset = F.array(*[F.lit(t) for t in sorted(set(query_tokens))])
     base = df.where(F.col(tokens_col).isNotNull())
@@ -258,19 +258,14 @@ def jaccard_topk_pruned(
     else:
         scored = head
 
-    if scale is not None:
-        scale_col = F.lit(float(scale))
-        with_scale = scored
-    else:
-        # k-th distance over the pruned candidates equals the full-scan value:
-        # every excluded row has dist 1.0 >= any included distance
-        sdf = kth_distance(scored, "dist", k, "__scale")
-        with_scale = scored.crossJoin(F.broadcast(sdf))
-        scale_col = F.col("__scale")
+    order = [F.col("dist").asc(), F.col(id_col).asc()]
+    # the scale over the at most k rows equals the full-scan k-th distance:
+    # every excluded row has dist 1.0 >= any included one
+    scale_col = scale_over_rows(order) if scale is None else F.lit(float(scale))
     sim = F.round(measures.jaccard_similarity_scored(F.col("dist"), scale_col, decay), 6)
     return (
-        with_scale.withColumn("score", sim)
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
+        scored.orderBy(*order)
         .limit(k)
+        .withColumn("score", sim)
         .select(id_col, tokens_col, "dist", "score")
     )

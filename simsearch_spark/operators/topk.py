@@ -4,8 +4,8 @@ The reference walks per-attribute in-heap indexes (B+-tree leaves outward
 from q, STR-tree k-NN, inverted-list AllPairs) on one thread per attribute.
 The Spark-first equivalent is a declarative score-everything plan:
 
-    scan → [pre-filter] → dist column → (two-pass scale) → decayed sim
-         → orderBy(dist, id) LIMIT k
+    scan → [pre-filter] → dist column → orderBy(dist, id) LIMIT k
+         → scale, decayed sim and rank over the k rows
 
 which Catalyst executes as parquet scan with pushed filters + pruned columns
 feeding a ``TakeOrderedAndProject`` — per-partition top-k heaps merged on the
@@ -15,8 +15,9 @@ where maintaining a mutable global index is the wrong primitive.
 Scale rule (the data-dependent part): when ``Facet.scale`` is None the scale
 factor is the exact k-th nearest distance (``NumericalSimSearch.java:244-246``,
 ``CategoricalSimSearch.java:300-311``, ``SpatialSimSearch.java:129-137``).
-Implemented as a lazy 1-row aggregate cross-joined (broadcast) into the
-scoring pass — two scans, no collect, fully distributed.
+That is the largest distance among the k rows the search returns, so it is
+a window over those rows: the table is scanned once and nothing joins
+back to it.
 """
 
 from __future__ import annotations
@@ -36,52 +37,72 @@ from simsearch_spark.plans.spec import Facet
 # distance binding per facet kind
 # ---------------------------------------------------------------------------
 
-def facet_distance(df_cols: dict[str, Column], facet: Facet) -> Column:
-    """Bind a facet's distance expression over the source columns.
+def operands(facet: Facet, cols: list[Column]) -> list[Column]:
+    """A row's value columns as distance operands: a textual value becomes
+    its q-gram set, every other kind is compared as stored."""
+    if facet.kind == "textual":
+        return [qgrams(cols[0], facet.qgram)]
+    return cols
+
+
+def query_operands(facet: Facet) -> list[Column]:
+    """The query value as literal distance operands.  Set-valued queries are
+    resolved driver-side: Catalyst does not constant-fold higher-order array
+    exprs over literals, and a literal array is ~4x cheaper per row
+    (measured at sf0.1)."""
+    q = facet.query_value
+    if facet.kind == "numerical":
+        return [F.lit(float(q))]
+    if facet.kind == "temporal":
+        return [F.lit(q)]
+    if facet.kind == "spatial":
+        return [F.lit(float(q[0])), F.lit(float(q[1]))]
+    if facet.kind == "categorical":
+        return [F.array(*[F.lit(t) for t in sorted(set(q))])]
+    if facet.kind == "textual":
+        qs, w = str(q).lower(), facet.qgram
+        grams = sorted({qs[i : i + w] for i in range(max(len(qs) - w + 1, 1))})
+        return [F.array(*[F.lit(g) for g in grams])]
+    if facet.kind == "vector":
+        return [F.array(*[F.lit(float(x)) for x in q])]
+    raise ValueError(f"unsupported facet kind {facet.kind}")
+
+
+def distance(facet: Facet, a: list[Column], b: list[Column]) -> Column:
+    """The facet's distance between two operand lists (``operands`` /
+    ``query_operands``) — the one per-kind dispatch, shared by the query
+    and the result matrix.
 
     Mirrors the (operation × ingested) kernel dispatch of
     ``engine/processor/ingested/IndexSimSearch.java:155-271``.
     """
-    q = facet.query_value
-    if facet.kind in ("numerical",):
-        return measures.abs_diff(df_cols[facet.value_cols[0]], F.lit(float(q)))
+    if facet.kind == "numerical":
+        return measures.abs_diff(a[0], b[0])
     if facet.kind == "temporal":
         # epoch-seconds double semantics (DataIngestor.java:326-369)
-        col = df_cols[facet.value_cols[0]].cast("timestamp").cast("double")
-        qcol = F.lit(q).cast("timestamp").cast("double")
-        return F.abs(col - qcol)
+        return F.abs(a[0].cast("timestamp").cast("double") - b[0].cast("timestamp").cast("double"))
     if facet.kind == "spatial":
-        lon, lat = (df_cols[c] for c in facet.value_cols[:2])
-        qlon, qlat = float(q[0]), float(q[1])
         if facet.metric == "haversine":
-            return measures.haversine_distance(lon, lat, F.lit(qlon), F.lit(qlat))
-        return measures.planar_distance(lon, lat, F.lit(qlon), F.lit(qlat))
-    if facet.kind == "categorical":
-        tokens = df_cols[facet.value_cols[0]]
-        # query-side set resolved driver-side: Catalyst does not constant-fold
-        # higher-order array exprs over literals, and a literal array is ~4x
-        # cheaper per row (measured at sf0.1)
-        qset = F.array(*[F.lit(t) for t in sorted(set(q))])
-        return measures.jaccard_distance(tokens, qset)
-    if facet.kind == "textual":
-        grams = qgrams(df_cols[facet.value_cols[0]], facet.qgram)
-        qs = str(q).lower()
-        w = facet.qgram
-        py_grams = sorted({qs[i : i + w] for i in range(max(len(qs) - w + 1, 1))})
-        qg = F.array(*[F.lit(g) for g in py_grams])
-        return measures.jaccard_distance(grams, qg)
+            return measures.haversine_distance(*a[:2], *b[:2])
+        return measures.planar_distance(*a[:2], *b[:2])
+    if facet.kind in ("categorical", "textual"):
+        return measures.jaccard_distance(a[0], b[0])
     if facet.kind == "vector":
-        vec = df_cols[facet.value_cols[0]]
-        qvec = F.array(*[F.lit(float(x)) for x in q])
+        if facet.metric == "cosine":
+            return F.lit(1.0) - measures.cosine_similarity(a[0], b[0])
         metric = {
             "euclidean": measures.euclidean_distance,
             "manhattan": measures.manhattan_distance,
             "chebyshev": measures.chebyshev_distance,
         }
-        if facet.metric == "cosine":
-            return F.lit(1.0) - measures.cosine_similarity(vec, qvec)
-        return metric[facet.metric](vec, qvec)
+        return metric[facet.metric](a[0], b[0])
     raise ValueError(f"unsupported facet kind {facet.kind}")
+
+
+def facet_distance(df_cols: dict[str, Column], facet: Facet) -> Column:
+    """Bind a facet's distance from the query value over the source columns."""
+    row = operands(facet, [df_cols[c] for c in facet.value_cols])
+    return distance(facet, row, query_operands(facet))
 
 
 def facet_similarity(dist: Column, scale: Column, facet: Facet) -> Column:
@@ -92,22 +113,12 @@ def facet_similarity(dist: Column, scale: Column, facet: Facet) -> Column:
     return measures.decayed_similarity(dist, scale, facet.decay)
 
 
-# ---------------------------------------------------------------------------
-# two-pass k-th-distance scale
-# ---------------------------------------------------------------------------
-
-def kth_distance(scored: DataFrame, dist_col: str, k: int, out_name: str) -> DataFrame:
-    """1-row DataFrame holding the exact k-th smallest distance (dense, not
-    distinct — FIXTURES.md §F4).  ``orderBy(dist).limit(k)`` compiles to
-    TakeOrderedAndProject: per-partition heap of size k, merged once — scales
-    to any row count with O(k) memory."""
-    return (
-        scored.select(dist_col)
-        .where(F.col(dist_col).isNotNull())
-        .orderBy(F.col(dist_col))
-        .limit(k)
-        .agg(F.max(dist_col).alias(out_name))
-    )
+def scale_over_rows(order: list[Column]) -> Column:
+    """The auto scale of top-k rows sorted by ``order``: the largest of
+    their distances.  The rows are k of the smallest distances, so that is
+    the k-th nearest distance whichever tied rows were kept."""
+    frame = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return F.max("dist").over(frame)
 
 
 def resolve_query_value(df: DataFrame, facet: Facet) -> Any:
@@ -147,33 +158,25 @@ def single_facet_topk(
     if facet.filter:
         # P2 pre-filter: applied before scoring, pushed to the scan by Catalyst
         base = base.where(F.expr(facet.filter))
-    # P3: null values can never rank (score would be null); drop pre-score
-    base = base.where(F.col(facet.value_cols[0]).isNotNull())
 
-    scored = base.withColumn("dist", facet_distance(cols, facet))
-
-    if facet.scale is not None:
-        scale_col = F.lit(float(facet.scale))
-        with_scale = scored
-    else:
-        scale_df = kth_distance(scored, "dist", k, "__scale")
-        with_scale = scored.crossJoin(F.broadcast(scale_df))
-        scale_col = F.col("__scale")
-
+    # TakeOrderedAndProject keeps this O(k) memory; everything after it —
+    # the auto scale and the rank — runs on the k rows (one tiny partition)
+    order = [F.col("dist").asc_nulls_last(), F.col(key_column).asc()]
+    scale_col = scale_over_rows(order) if facet.scale is None else F.lit(float(facet.scale))
     sim = facet_similarity(F.col("dist"), scale_col, facet)
     if round_digits is not None:
         sim = F.round(sim, round_digits)
 
-    # TakeOrderedAndProject keeps this O(k) memory; the rank window runs on
-    # only k rows (single tiny partition), not the full table.
     out = (
-        with_scale.withColumn("score", sim)
-        .orderBy(F.col("dist").asc(), F.col(key_column).asc())
+        base.withColumn("dist", facet_distance(cols, facet))
+        .orderBy(*order)
         .limit(k)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.col("dist").asc(), F.col(key_column).asc())),
-        )
+        # P3: a NULL distance (a NULL value, coordinate or vector element)
+        # never ranks.  NULLs sort last, so dropping them after the limit
+        # leaves the k nearest non-NULL rows, and a filter before the sort
+        # would evaluate the distance a second time per row.
+        .where(F.col("dist").isNotNull())
+        .withColumns({"score": sim, "rank": F.row_number().over(Window.orderBy(*order))})
     )
     keep = [key_column, *facet.value_cols, "dist", "score", "rank"]
     return out.select(*[c for c in keep if c in out.columns])

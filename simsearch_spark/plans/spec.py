@@ -40,8 +40,8 @@ class Facet:
     weights: one weight per combination (T7 multi-weight fan-out,
         ``RankAggregator.java:104-129``); None → estimated from the candidate
         score distribution (T5, ``engine/weights/Estimator.java:177-189``).
-    scale: None → auto = exact k-th nearest distance (two-pass;
-        ``NumericalSimSearch.java:244-246`` et al.).
+    scale: None → auto = exact k-th nearest distance
+        (``NumericalSimSearch.java:244-246`` et al.).
     filter: optional boolean SQL applied *before* scoring (P2 pre-filter,
         ``SimSearchJdbcQuery.java:136-148``).
     metric: for vector facets: euclidean | manhattan | chebyshev | cosine.
@@ -77,7 +77,6 @@ class SearchRequest:
     k: int = 50
     algorithm: str = "threshold"
     extra_columns: list[str] = field(default_factory=list)
-    include_matrix: bool = False
 
     def __post_init__(self) -> None:
         # K_MAX=50 cap for multi-attribute queries (Constants.java:42,

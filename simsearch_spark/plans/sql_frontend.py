@@ -12,8 +12,8 @@ This parser goes straight to the `SearchRequest` IR — no rewrite tricks
 needed.  Defaults mirror the reference: k=50 when LIMIT omitted
 (``SqlParser.java:83-86``); ordinary predicates (P4: =, <>, <, >, <=, >=,
 BETWEEN, IN, LIKE, OR, NOT) pass through as pre-filters; extra SELECT
-columns become R1 extra-column joins; expressions in SELECT are rejected
-(``README.md:151``), as are subqueries (``README.md:155``).
+columns become R1 extra columns of the result; expressions in SELECT are
+rejected (``README.md:151``), as are subqueries (``README.md:155``).
 
 Facet kinds are bound from the table schema (the reference fixes them at
 mount time — ``Coordinator.java:535-578``): numeric→numerical,
@@ -233,12 +233,8 @@ def execute_search_sql(
     spark: SparkSession, df: DataFrame, table: str, sql: str, key_column: str
 ) -> DataFrame:
     """Parse + run: the reference's SQL terminal path (Runner.java:136-174 →
-    SearchHandler), collapsed to parse → multi_facet_topk → R1 join."""
-    from simsearch_spark.operators.postprocess import attach_extra_columns
+    SearchHandler), collapsed to parse → multi_facet_topk, whose final
+    projection carries the extra SELECT columns (R1)."""
     from simsearch_spark.operators.rank_agg import multi_facet_topk
 
-    parsed = parse_search_sql(df, table, sql, key_column)
-    out = multi_facet_topk(df, parsed.request)
-    if parsed.request.extra_columns:
-        out = attach_extra_columns(out, df, key_column, parsed.request.extra_columns)
-    return out
+    return multi_facet_topk(df, parse_search_sql(df, table, sql, key_column).request)

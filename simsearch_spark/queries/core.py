@@ -61,7 +61,7 @@ SELECT l_orderkey AS id, l_linenumber AS line, l_extendedprice AS value FROM lin
 
 
 # -----------------------------------------------------------------------------
-# K1/T4: numerical top-k with auto scale (two-pass k-th distance)
+# K1/T4: numerical top-k with auto scale (k-th distance of the k rows)
 # -----------------------------------------------------------------------------
 
 def q_num_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

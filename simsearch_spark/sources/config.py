@@ -276,9 +276,4 @@ def search_reference_request(
         algorithm=spec.get("algorithm", "threshold"),
         extra_columns=list((spec.get("output") or {}).get("extra_columns", [])),
     )
-    out = multi_facet_topk(cat.frame, req, round_digits=round_digits)
-    if req.extra_columns:
-        from simsearch_spark.operators.postprocess import attach_extra_columns
-
-        out = attach_extra_columns(out, cat.frame, cat.key_column, req.extra_columns)
-    return out
+    return multi_facet_topk(cat.frame, req, round_digits=round_digits)

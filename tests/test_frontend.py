@@ -147,6 +147,81 @@ def test_response_format_shape(cust):
     assert to_json(resp).startswith("[")
 
 
+def test_catalog_search_returns_extra_columns(spark, cust):
+    """R1: ``Catalog.search(extra_columns=...)`` returns the requested
+    columns with the base rows' values."""
+    from simsearch_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark)
+    cat.register_source("customer", df=cust)
+    cat.mount("bal", "customer", "c_custkey", ["c_acctbal"], "numerical_topk")
+    out = cat.search({"bal": 1000.0}, k=5, extra_columns=["c_mktsegment", "c_nationkey"]).collect()
+    base = {r.c_custkey: r for r in cust.collect()}
+    assert len(out) == 5
+    for r in out:
+        assert (r.c_mktsegment, r.c_nationkey) == (
+            base[r.c_custkey].c_mktsegment, base[r.c_custkey].c_nationkey
+        )
+
+
+def test_similarity_matrix_uses_the_facet_distance(spark):
+    """R2: the matrix scores each pair with the facet's own distance —
+    q-gram Jaccard for a textual facet, the facet's vector metric, and
+    haversine when the spatial facet asks for it — recomputed here in
+    plain Python."""
+    import math
+
+    from simsearch_spark.operators.postprocess import similarity_matrix
+    from simsearch_spark.plans.spec import Facet
+
+    rows = [
+        (1, "red widget", [0.0, 1.0], 2.35, 48.85),
+        (2, "Red Widgets", [3.0, -1.0], -0.13, 51.51),
+        (3, "blue gadget", [0.5, 0.5], 13.40, 52.52),
+        (4, "ab", [2.0, 2.0], 2.35, 48.86),
+    ]
+    result = spark.createDataFrame(rows, "id long, name string, vec array<double>, lon double, lat double")
+    facets = [
+        Facet(name="nm", kind="textual", value_cols=["name"], query_value="red"),
+        Facet(name="v", kind="vector", value_cols=["vec"], query_value=[0.0, 0.0], metric="manhattan"),
+        Facet(name="geo", kind="spatial", value_cols=["lon", "lat"], query_value=(0.0, 0.0),
+              metric="haversine"),
+    ]
+    scales = {"nm": 0.5, "v": 2.0, "geo": 300.0}
+    weights = {"nm": 0.5, "v": 0.3, "geo": 0.2}
+    got = {
+        (r.left, r.right): r.sim
+        for r in similarity_matrix(result, facets, "id", scales, weights).collect()
+    }
+
+    def grams(s):
+        s = s.lower()
+        return {s[i : i + 3] for i in range(max(len(s) - 2, 1))} - {""}
+
+    def haversine(lon1, lat1, lon2, lat2):
+        p1, p2 = math.radians(lat1), math.radians(lat2)
+        dphi, dlam = p2 - p1, math.radians(lon2) - math.radians(lon1)
+        a = math.sin(dphi / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dlam / 2) ** 2
+        return 2 * 6371.0088 * math.asin(math.sqrt(a))
+
+    def sim(d, scale, jaccard=False):
+        return 0.0 if jaccard and d >= 1.0 else math.exp(-0.05 * d / scale)
+
+    assert len(got) == len(rows) ** 2
+    for a in rows:
+        for b in rows:
+            ga, gb = grams(a[1]), grams(b[1])
+            d_nm = 1.0 - len(ga & gb) / len(ga | gb)
+            d_v = sum(abs(x - y) for x, y in zip(a[2], b[2]))
+            d_geo = haversine(a[3], a[4], b[3], b[4])
+            want = (
+                weights["nm"] * sim(d_nm, scales["nm"], jaccard=True)
+                + weights["v"] * sim(d_v, scales["v"])
+                + weights["geo"] * sim(d_geo, scales["geo"])
+            ) / sum(weights.values())
+            assert abs(got[(a[0], b[0])] - want) < 1.5e-6, (a[0], b[0])
+
+
 def test_word2vec_skips_unknown_tokens(spark):
     docs = spark.createDataFrame(
         [(1, ["a", "b"]), (2, ["zzz"]), (3, ["a"])], "id long, tokens array<string>"

@@ -380,3 +380,25 @@ def test_mount_rejects_conflicting_key_columns(spark, tmp_path):
     p.write_text(json.dumps(cfg))
     with pytest.raises(ValueError, match="key_column"):
         mount_reference_sources(spark, str(p))
+
+
+def test_search_json_extra_columns_match_base_rows(spark, tmp_path):
+    """``output.extra_columns`` of a reference ``search.json`` come back on
+    every ranked row with the base rows' values."""
+    import json
+
+    from simsearch_spark.sources.config import mount_reference_sources, search_reference_request
+
+    (tmp_path / "d.csv").write_text("id,a,b\n1,2.5,x\n2,4.5,y\n3,9.0,z\n")
+    cfg = {
+        "sources": [{"name": "s1", "type": "csv", "directory": str(tmp_path)}],
+        "search": [{"source": "s1", "dataset": "d.csv", "operation": "numerical_topk",
+                    "search_column": "a", "key_column": "id"}],
+    }
+    (tmp_path / "sources.json").write_text(json.dumps(cfg))
+    search = {"queries": [{"column": "a", "value": 4.0}], "k": 2,
+              "output": {"extra_columns": ["b"]}}
+    (tmp_path / "search.json").write_text(json.dumps(search))
+    cat = mount_reference_sources(spark, str(tmp_path / "sources.json"))
+    out = search_reference_request(cat, str(tmp_path / "search.json")).collect()
+    assert sorted((r.id, r.b) for r in out) == [(1, "x"), (2, "y")]

@@ -29,9 +29,11 @@ def test_facet_topk_plan_contract(spark, sf_dir):
     assert "Sort " not in plan.replace("TakeOrdered", "")
     # the pre-filter must reach the parquet scan
     assert "PushedFilters" in plan and "BUILDING" in plan
-    # no shuffle exchanges — only the 1-row broadcast of the scale
+    # no shuffle exchanges, and the auto scale comes from the k result rows:
+    # no broadcast scale join, one scan of the table
     assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan
-    assert "BroadcastExchange" in plan
+    assert "BroadcastExchange" not in plan
+    assert plan.count("FileScan") == 1
 
 
 def test_facet_topk_column_pruning(spark, sf_dir):
@@ -62,6 +64,29 @@ def test_multi_attr_no_shuffle(spark, sf_dir):
     plan = _plan(multi_facet_topk(cust, req))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_result_rows_never_join_back_to_the_table(spark, sf_dir):
+    """After the top-k, operators work on the k result rows only: a
+    Singleton search takes its auto scale from its own rows, and a SQL
+    search's extra SELECT columns ride the final projection — neither plan
+    joins, broadcasts or scans the table a second time."""
+    from simsearch_spark.plans.sql_frontend import execute_search_sql
+
+    cust = load_table(spark, sf_dir, "customer")
+    facet = Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0)
+    sql = (
+        "SELECT c_mktsegment, c_nationkey FROM customer WHERE c_acctbal ~= 1000 "
+        "AND c_name ~= 'Customer#000000007' LIMIT 5"
+    )
+    for out in (
+        single_facet_topk(cust, "c_custkey", facet, k=5),
+        execute_search_sql(spark, cust, "customer", sql, "c_custkey"),
+    ):
+        plan = _plan(out)
+        assert "Join" not in plan and "BroadcastExchange" not in plan
+        assert plan.count("FileScan") == 1
+        assert len(out.collect()) == 5
 
 
 def test_scan_project_reads_three_columns(spark, sf_dir):

@@ -53,6 +53,34 @@ def test_filter_applied_before_scoring(spark, sf_dir):
     assert segs == {"BUILDING"}
 
 
+def test_null_distance_never_ranks(spark):
+    """P3: a row whose distance is NULL — a NULL latitude, or a vector with
+    a NULL element — never ranks, even though its first value column is
+    set; with fewer non-NULL rows than k every non-NULL row is returned."""
+    import math
+
+    df = spark.createDataFrame(
+        [
+            (i, float(i), None if i == 7 else 0.0, [None, 0.0] if i == 3 else [float(i), 0.0])
+            for i in range(20)
+        ],
+        "id long, lon double, lat double, vec array<double>",
+    )
+    spatial = Facet(name="loc", kind="spatial", value_cols=["lon", "lat"], query_value=(6.5, 0.0))
+    vector = Facet(name="v", kind="vector", value_cols=["vec"], query_value=[2.5, 0.0])
+    for facet, k, want in (
+        (spatial, 3, [6, 8, 5]),
+        (vector, 4, [2, 1, 4, 0]),
+        (spatial, 25, [i for i in range(20) if i != 7]),
+    ):
+        res = single_facet_topk(df, "id", facet, k=k).collect()
+        assert sorted(r.id for r in res) == sorted(want)
+        assert [r.rank for r in res] == list(range(1, len(want) + 1))
+        assert all(r.dist is not None and r.score is not None for r in res)
+        # the auto scale is the largest returned distance: its row scores exp(-decay)
+        assert res[-1].score == round(math.exp(-0.05), 6)
+
+
 def test_multi_attr_weight_denominator(spark, sf_dir):
     """NULL facet ⇒ sim 0 but weight stays in denominator (RankAggregator.java:236-259)."""
     df = spark.createDataFrame(
@@ -270,12 +298,13 @@ _PROBE_TEXTS = st.one_of(st.none(), st.text(alphabet="ab", max_size=4))
 @settings(max_examples=8, deadline=None)
 def test_probe_scale_and_weight_equal_full_column(spark_prop, rows, k, case):
     """The probe pass's scale and T5 weight are bit-identical to the
-    full-column definitions: ``kth_distance`` (the k-th nearest distance)
-    and Spark's exact ``percentile(sim, 1 - k/N)`` over all N rows —
+    full-column definitions: the k-th nearest distance (the largest of the
+    k smallest non-NULL distances) and Spark's exact
+    ``percentile(sim, 1 - k/N)`` over all N rows —
     across NULLs, tied distances, N < k, N = k, N = k+1 and a textual
     query sharing no q-gram with any row."""
     from simsearch_spark.operators.rank_agg import score_facets
-    from simsearch_spark.operators.topk import facet_similarity, kth_distance
+    from simsearch_spark.operators.topk import facet_similarity
 
     df = spark_prop.createDataFrame(
         [(i, x, t) for i, (x, t) in enumerate(rows)], "id long, x double, t string"
@@ -287,7 +316,14 @@ def test_probe_scale_and_weight_equal_full_column(spark_prop, rows, k, case):
         facet = Facet(name="f", kind="textual", value_cols=["t"], query_value=q)
     scored, weights = score_facets(df, [facet], k, estimate_weights=True)
 
-    ref = scored.crossJoin(kth_distance(scored, "__dist_f", k, "__scale")).withColumn(
+    kth_distance = (
+        scored.select("__dist_f")
+        .where(F.col("__dist_f").isNotNull())
+        .orderBy(F.col("__dist_f"))
+        .limit(k)
+        .agg(F.max("__dist_f").alias("__scale"))
+    )
+    ref = scored.crossJoin(kth_distance).withColumn(
         "ref_sim",
         F.coalesce(facet_similarity(F.col("__dist_f"), F.col("__scale"), facet), F.lit(0.0)),
     )
