@@ -89,23 +89,6 @@ __all__ = [
 ]
 
 
-def _residual_expr(vec_col: str, cell_col: str, cmap: dict[int, list[float]]):
-    """Row-local residual ``v − centroid(own cell)`` as a when-chain over
-    the bounded cell set (the same construction as
-    ``operators/pq.py ivf_pq_topk`` residual mode, applied corpus-wide at
-    encode time instead of probe-time)."""
-    from simsearch_spark.operators.kmeans import _lit_vec
-
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    res = None
-    for cid in sorted(cmap, reverse=True):
-        sub = F.zip_with(dbl, _lit_vec(cmap[cid]), lambda x, m: x - m)
-        res = sub if res is None else F.when(
-            F.col(cell_col) == F.lit(cid), sub
-        ).otherwise(res)
-    return res
-
-
 def encode_residual_codes(
     emb: DataFrame,
     id_col: str,
@@ -118,12 +101,12 @@ def encode_residual_codes(
     own cell's residual.  Pure codegen column expressions (argmin over
     ksub literal centroids per subspace), row-local, zero shuffles — the
     corpus never moves; identical code values to the probe-time encode
-    inside ``ivf_pq_topk`` (same residual, same strict-< argmin)."""
-    from simsearch_spark.operators.pq import pq_encode
+    inside ``ivf_pq_topk`` (the same ``cell_residual`` and ``pq_encode``)."""
+    from simsearch_spark.operators.pq import cell_residual, pq_encode
 
     enc_in = emb.select(
         F.col(id_col),
-        _residual_expr(vec_col, cell_col, cmap).alias("__r"),
+        cell_residual(vec_col, cell_col, cmap, sorted(cmap)).alias("__r"),
         F.col(cell_col).alias("cell"),
     )
     enc = pq_encode(enc_in, id_col, "__r", codebooks)
@@ -153,7 +136,7 @@ def _train_vector_family(
     Returns ``(params_fragment, n_vectors)`` for the manifest."""
     from simsearch_spark.queries.cluster import PQ_ITERS, PQ_KSUB, PQ_M, PQ_TRAIN_N
     from simsearch_spark.queries.ivfpq import (
-        _cent_rows6,
+        _centroid_map6,
         _sample_rows,
         _train_books_residual_rows,
     )
@@ -163,8 +146,7 @@ def _train_vector_family(
     # one centroid aggregation + one bounded-sample collect; the Lloyd
     # chains run driver-side on the collected sample (r14 — identical
     # codebooks, tests/test_pq.py pins the arms equal)
-    cent_rows = _cent_rows6(train)
-    cmap = dict(cent_rows)
+    cmap = _centroid_map6(train)
     books = _train_books_residual_rows(_sample_rows(train), cmap)
 
     # the five artifact writes and the vector count are independent jobs
@@ -175,7 +157,7 @@ def _train_vector_family(
     def write_centroids():
         _write(
             spark.createDataFrame(
-                cent_rows, "cluster_id int, centroid array<double>"
+                sorted(cmap.items()), "cluster_id int, centroid array<double>"
             ),
             os.path.join(out_dir, "ivf_centroids"),
         )

@@ -63,6 +63,7 @@ from simsearch_spark.mount.lock import (
     restore_crashed_swap,
     snapshot_read,
 )
+from simsearch_spark.operators.kmeans import nearest_center, probe_cells
 
 __all__ = [
     "append_rows",
@@ -214,24 +215,9 @@ def _check_cells_known(
 def _assign_cells(
     emb: DataFrame, id_col: str, vec_col: str, cmap: dict[int, list[float]]
 ):
-    """Nearest-centroid assignment for rows without one — the identical
-    strict-< argmin ``ivf_pq_topk`` uses inline (broadcast literal
-    centroids, codegen, row-local)."""
-    from simsearch_spark.functions.measures import euclidean_distance
-    from simsearch_spark.operators.kmeans import _lit_vec
-
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    euclidean_distance(F.col(vec_col), _lit_vec(vec)).alias("d"),
-                    F.lit(int(cid)).alias("cid"),
-                )
-                for cid, vec in sorted(cmap.items())
-            ]
-        )
-    )
-    return emb.withColumn("__cell", best["cid"])
+    """Route rows without an assignment to their ``nearest_center`` cell
+    (broadcast literal centroids, codegen, row-local) as ``__cell``."""
+    return emb.withColumn("__cell", nearest_center(F.col(vec_col), cmap)["id"])
 
 
 def _drop_existing_ids(
@@ -984,17 +970,8 @@ def _merge_cells_impl(
         return {"merged": False, "reason": "no surviving cell to merge into"}
 
     # nearest surviving centroid per dust cell — driver-side over the
-    # bounded centroid set, the same L2/lowest-id rule as probe routing
-    target_of = {
-        c: min(
-            survivors,
-            key=lambda s: (
-                sum((a - b) ** 2 for a, b in zip(cmap[c], survivors[s])),
-                s,
-            ),
-        )
-        for c in cell_ids
-    }
+    # bounded centroid set, by the probe routing rule itself
+    target_of = {c: probe_cells(survivors, cmap[c], 1)[0] for c in cell_ids}
 
     codes_path = os.path.join(mount_dir, "pq_codes")
     dust = spark.read.parquet(codes_path).where(

@@ -138,33 +138,21 @@ def serve_ivfpq_topk(
     store; in production a key-value store — here the embeddings table
     with a pushed ``IN`` filter on the bounded candidate ids).
 
-    Identical candidate and scoring arithmetic to
-    ``operators/pq.py ivf_pq_topk(residual=True)``: same probe rule
-    (L2², ties by cell id), same per-cell query-residual LUTs, same
-    round-6 ADC distance, same cosine rerank — hash-equal output, zero
-    training."""
+    The candidate and scoring rules are the ones
+    ``operators/pq.py ivf_pq_topk`` calls — ``probe_cells`` and
+    ``cell_adc`` — plus the same round-6 cosine rerank: hash-equal
+    output, zero training."""
     from simsearch_spark.functions.measures import cosine_similarity
-    from simsearch_spark.operators.kmeans import _lit_vec
-    from simsearch_spark.operators.pq import _adc_dist_expr
+    from simsearch_spark.operators.kmeans import _lit_vec, probe_cells
+    from simsearch_spark.operators.pq import cell_adc
 
     cmap = load_centroid_map(spark, mount_dir)
     books = load_codebooks(spark, mount_dir)
     qv = [float(x) for x in query_vec]
-
-    by_dist = sorted(
-        cmap.items(),
-        key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]),
-    )
-    probe_ids = [cid for cid, _v in by_dist[:n_probe]]
+    probe_ids = probe_cells(cmap, qv, n_probe)
 
     codes = read_codes(spark, mount_dir).where(F.col("cell").isin(probe_ids))
-    adc = None
-    for cid in reversed(probe_ids):
-        qres = [a - b for a, b in zip(qv, cmap[cid])]
-        e = _adc_dist_expr(books, qres)
-        adc = e if adc is None else F.when(
-            F.col("cell") == F.lit(cid), e
-        ).otherwise(adc)
+    adc = cell_adc(books, cmap, qv, probe_ids, "cell")
     cand = (
         codes.select(F.col(id_col), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
@@ -206,7 +194,7 @@ def serve_ivfpq_multi_topk(
     """BATCH serving from mounted artifacts — the full production shape:
     Q queries route driver-side against the mounted centroids, ONE scan
     over the union of probed code partitions computes every query's ADC
-    (per-cell residual LUT when-chains, exploded per-query pair list),
+    (an Arrow kernel gathering each query's per-cell residual LUTs),
     per-query rerank is a rank-limit window, and one point-lookup into
     ``emb`` rescores the ≤ Q·rerank candidate union exactly.  Per-query
     results equal ``operators/pq.py ivf_pq_multi_topk`` (and therefore Q
@@ -218,32 +206,27 @@ def serve_ivfpq_multi_topk(
     from pyspark.sql.window import Window
 
     from simsearch_spark.functions.measures import cosine_similarity
-    from simsearch_spark.operators.pq import _adc_luts
+    from simsearch_spark.operators.kmeans import probe_cells
+    from simsearch_spark.operators.pq import cell_luts
 
     cmap = load_centroid_map(spark, mount_dir)
     books = load_codebooks(spark, mount_dir)
     qs = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
-    probes: dict[int, list[int]] = {}
-    for qid, qv in qs:
-        by_dist = sorted(
-            cmap.items(),
-            key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]),
-        )
-        probes[qid] = [cid for cid, _v in by_dist[:n_probe]]
+    probes = {qid: probe_cells(cmap, qv, n_probe) for qid, qv in qs}
     union_cells = sorted({c for ps in probes.values() for c in ps})
 
     codes = read_codes(spark, mount_dir).where(F.col("cell").isin(union_cells))
     # the per-(query, cell) residual LUTs, built once driver-side — the
-    # same `_adc_luts` constants the literal expression path indexes, so
+    # same `cell_luts` constants the literal `cell_adc` path indexes, so
     # the Arrow kernel below is float-identical to the Q-sized when-chain
     # it replaces (r13: at Q=16 the chain cost ~0.5 s/query in codegen +
     # eval; the kernel is a numpy gather per (query, cell))
     m = len(books)
-    luts: dict[tuple[int, int], "np.ndarray"] = {}
-    for qid, qv in qs:
-        for cid in probes[qid]:
-            qres = [a - b for a, b in zip(qv, cmap[cid])]
-            luts[(qid, cid)] = np.asarray(_adc_luts(books, qres), dtype=np.float64)
+    luts = {
+        (qid, cid): np.asarray(lut, dtype=np.float64)
+        for qid, qv in qs
+        for cid, lut in cell_luts(books, cmap, qv, probes[qid])
+    }
     sel = codes.select(
         F.col(id_col), F.col("cell").cast("int").alias("cell"),
         *[F.col(f"code_{j}") for j in range(m)],
@@ -366,16 +349,14 @@ def serve_pivot_knn(
     overestimates) — tests/test_mount.py."""
     from simsearch_spark.functions.measures import euclidean_distance
     from simsearch_spark.operators.kmeans import _lit_vec
-    from simsearch_spark.operators.pivot import embedding_lower_bound
+    from simsearch_spark.operators.pivot import embedding_lower_bound, query_embedding
 
     pivots = load_pivots(spark, mount_dir)
     qv = [float(x) for x in query_vec]
-    q_emb = [
-        float(sum((a - b) ** 2 for a, b in zip(qv, vec)) ** 0.5)
-        for _pid, vec in pivots
-    ]
     embd = spark.read.parquet(os.path.join(mount_dir, "pivot_embedded"))
-    with_lb = embd.withColumn("lb", embedding_lower_bound(len(pivots), q_emb))
+    with_lb = embd.withColumn(
+        "lb", embedding_lower_bound(len(pivots), query_embedding(pivots, qv))
+    )
 
     exact_dist = euclidean_distance(F.col(vec_col), _lit_vec(qv))
     # pass 1: radius = exact k-th distance among the k best lb rows — the

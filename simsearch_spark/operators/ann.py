@@ -13,7 +13,7 @@ the rest of the corpus.  Hyperplanes come from a fixed LCG (deterministic,
 literal-expressible in oracle SQL).
 
 IVF variant: coarse centroids (here: the fixture's `label` k-means-style
-clusters, or any precomputed centroid table) → probe nearest `n_probe`
+clusters, or any precomputed centroid map) → probe nearest `n_probe`
 centroids → exact-score members.  Same plan shape as LSH with a learned
 quantizer.
 """
@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions import measures
+from simsearch_spark.operators.kmeans import probe_cells
 
 
 def lcg_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -210,46 +211,18 @@ def ivf_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: DataFrame,
+    centroids: dict[int, list[float]],
     query_vec: list[float],
     k: int,
     n_probe: int = 1,
-    assign_col: str | None = None,
+    assign_col: str = "label",
 ) -> DataFrame:
-    """IVF: probe the `n_probe` centroids nearest the query, exact-score their
-    members.  `centroids` = (cluster_id, centroid array<double>); rows are
-    assigned by `assign_col` if the table persists an assignment, else by
-    nearest centroid computed on the fly (one broadcast-join pass).
+    """IVF: probe the `n_probe` centroids nearest the query
+    (``kmeans.probe_cells``), exact-score their members.  `centroids` is
+    the cell id → centroid map; rows are routed by their persisted
+    assignment `assign_col`, a pushable ``IN`` filter — one scan, no join.
     """
-    cent = [(r[0], list(r[1])) for r in centroids.collect()]
-    # deterministic probe order: distance, then cluster id (collect order is
-    # arbitrary and a bare stable sort would leak it into ties)
-    by_dist = sorted(
-        cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(query_vec, c[1])), c[0])
-    )
-    probe_ids = [cid for cid, _v in by_dist[:n_probe]]
-
-    if assign_col is None:
-        # assign rows to nearest centroid inline (centroids broadcast as
-        # literals); array_min over (dist, id) structs keeps each distance
-        # expression in the codegen tree ONCE — a folded when-chain doubles
-        # the tree per centroid (see operators/kmeans.py::assign_clusters)
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        measures.euclidean_distance(
-                            F.col(vec_col), F.lit([float(x) for x in vec])
-                        ).alias("d"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, vec in sorted(cent)
-                ]
-            )
-        )
-        df = df.withColumn("__cluster", best["cid"])
-        assign_col = "__cluster"
-
+    probe_ids = probe_cells(centroids, query_vec, n_probe)
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     score = F.round(measures.cosine_similarity(F.col(vec_col), qv), 6)
     return (

@@ -32,7 +32,12 @@ shuffles for assignment.  TWO assignment kernels share that contract:
   lowest cluster id) so both paths are BIT-IDENTICAL — equality-tested in
   tests/test_cluster.py.
 
-``kmeans_assign(assignment="auto")`` picks per call.
+``kmeans_assign`` picks the table kernel iff k > ``LITERAL_K_MAX``.
+
+The two IVF routing rules every centroid consumer shares live here too:
+``nearest_center`` (the strict-``<`` argmin above, as one column) and
+``probe_cells`` (the query's probe order) — the declared operators, the
+mount and the serve path all call these, so they agree by construction.
 
 Reference scope note: the reference engine has no clustering operator
 (clusters arrive pre-labeled, e.g. ``pivoting/` uses data-dependent pivot
@@ -56,33 +61,55 @@ def _lit_vec(vals: list[float]) -> Column:
     return F.lit([float(v) for v in vals])
 
 
-def assign_clusters(
-    df: DataFrame, vec_col: str, centroids: dict[int, list[float]]
-) -> DataFrame:
-    """Add ``cluster_id`` (nearest centroid, L2; lowest id wins ties) and
-    ``dist`` columns.  Pure column expressions — no shuffle, no UDF.
+def nearest_center(vec: Column, centers: dict[int, list[float]]) -> Column:
+    """The nearest center of ``vec`` (L2; lowest id wins ties) as a
+    ``struct(dist, id)`` column.
 
-    The argmin is ``array_min`` over (dist, cluster_id) structs: Spark's
-    struct ordering compares dist first, then cluster_id, which is exactly
-    the strict-``<``/lowest-id-on-ties rule.  Each centroid's distance
+    The argmin is ``array_min`` over (dist, id) structs: Spark's struct
+    ordering compares dist first, then id, which is exactly the
+    strict-``<``/lowest-id-on-ties rule.  Each center's distance
     expression appears ONCE — a folded when-chain would re-embed every
     prior distance inside each comparison, doubling the codegen tree per
-    centroid (k=8 produced multi-MiB task binaries and dominated runtime
+    center (k=8 produced multi-MiB task binaries and dominated runtime
     with JIT compilation, not data)."""
-    items = sorted(centroids.items())
-    vec = F.col(vec_col)
-    best = F.array_min(
+    return F.array_min(
         F.array(
             *[
                 F.struct(
                     euclidean_distance(vec, _lit_vec(cvec)).alias("dist"),
-                    F.lit(cid).alias("cluster_id"),
+                    F.lit(int(cid)).alias("id"),
                 )
-                for cid, cvec in items
+                for cid, cvec in sorted(centers.items())
             ]
         )
     )
-    return df.withColumn("cluster_id", best["cluster_id"]).withColumn("dist", best["dist"])
+
+
+def probe_cells(
+    cmap: dict[int, list[float]], query: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` cells nearest ``query``, nearest first: L2² to the
+    centroid, ties by cell id (a bare stable sort would leak the map's
+    order into ties).  Driver-side over the bounded centroid map.  A query
+    whose length differs from the centroids' raises — ``zip`` would
+    otherwise truncate it silently and route on a prefix."""
+    q = [float(x) for x in query]
+    for cid, vec in cmap.items():
+        if len(vec) != len(q):
+            raise ValueError(f"query dim {len(q)} != centroid {cid}'s {len(vec)}")
+    by_dist = sorted(
+        cmap.items(), key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0])
+    )
+    return [cid for cid, _v in by_dist[:n_probe]]
+
+
+def assign_clusters(
+    df: DataFrame, vec_col: str, centroids: dict[int, list[float]]
+) -> DataFrame:
+    """Add ``cluster_id`` (``nearest_center``) and ``dist`` columns.  Pure
+    column expressions — no shuffle, no UDF."""
+    best = nearest_center(F.col(vec_col), centroids)
+    return df.withColumn("cluster_id", best["id"]).withColumn("dist", best["dist"])
 
 
 def assign_clusters_table(
@@ -195,18 +222,15 @@ def kmeans_assign(
     vec_col: str,
     k: int = 8,
     iters: int = 2,
-    assignment: str = "auto",
 ) -> DataFrame:
     """Run ``iters`` deterministic Lloyd iterations and return ``df`` with
     final ``cluster_id`` + ``dist`` columns.  Empty clusters keep their
     previous centroid (mirrored by the oracle's LEFT JOIN + coalesce).
 
-    assignment: ``"literal"`` (codegen, small k), ``"table"`` (broadcast
-    Arrow kernel, any k), or ``"auto"`` (table iff k > LITERAL_K_MAX).
-    Both kernels are bit-identical — the choice is a physical-plan knob."""
-    if assignment == "auto":
-        assignment = "table" if k > LITERAL_K_MAX else "literal"
-    assign = assign_clusters if assignment == "literal" else assign_clusters_table
+    Assignment runs the literal codegen kernel up to ``LITERAL_K_MAX``
+    clusters and the broadcast Arrow kernel above it; both are
+    bit-identical, so the choice is a physical-plan knob."""
+    assign = assign_clusters_table if k > LITERAL_K_MAX else assign_clusters
     # persist across the training passes (r14): the seed collect and each
     # Lloyd mean re-scan the frame — without the pin every pass re-runs
     # the caller's lineage (scan + any fan-out exchange).  The cache is

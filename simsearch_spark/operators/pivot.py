@@ -94,6 +94,20 @@ def embedding_lower_bound(n_pivots: int, query_emb: list[float]) -> Column:
     return lb
 
 
+def query_embedding(pivots: list, query_vec: list[float]) -> list[float]:
+    """The query's row of the pivot embedding: its euclidean distance to
+    each pivot, driver-side.  A query whose length differs from the
+    pivots' raises — ``zip`` would truncate it into a wrong embedding,
+    and its NULL exact distances would leave the radius pass no row."""
+    for pid, vec in pivots:
+        if len(vec) != len(query_vec):
+            raise ValueError(f"query dim {len(query_vec)} != pivot {pid}'s {len(vec)}")
+    return [
+        float(sum((a - b) ** 2 for a, b in zip(query_vec, vec)) ** 0.5)
+        for _pid, vec in pivots
+    ]
+
+
 def pivot_knn(
     df: DataFrame,
     id_col: str,
@@ -127,11 +141,7 @@ def pivot_knn(
     if metric != "euclidean":
         raise NotImplementedError("pruned path implemented for euclidean; use prune=False")
     embedded = embed_distances(df, vec_col, pivots, metric)
-    q_emb = [
-        float(sum((a - b) ** 2 for a, b in zip(query_vec, vec)) ** 0.5)
-        for _pid, vec in pivots
-    ]
-    lb = embedding_lower_bound(len(pivots), q_emb)
+    lb = embedding_lower_bound(len(pivots), query_embedding(pivots, query_vec))
     with_lb = embedded.withColumn("lb", lb)
 
     # pass 1: radius = exact k-th distance among the k best lower-bound rows

@@ -23,6 +23,10 @@ round-6 means, so the DuckDB oracle unrolls it the same way):
   once).  Row-local, zero shuffles; the corpus never moves.
 - ``pq_adc_topk``: the ADC scan — per-subspace LUT as an array literal,
   ``element_at`` + sum, one TakeOrderedAndProject.  O(k) driver memory.
+- IVF-PQ (``ivf_pq_topk`` / ``ivf_pq_multi_topk``) encodes residuals
+  ``v − centroid(cell)``: ``cell_residual`` and ``cell_adc`` are the one
+  residual and one per-probed-cell ADC rule the mount's encode and the
+  serve path (mount/) share with these operators.
 
 Reference parity note: the reference engine has no quantization (its V4
 path re-scores exact vectors); PQ extends the LLM-pipeline ANN family
@@ -33,11 +37,11 @@ from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from simsearch_spark.functions.measures import cosine_similarity, euclidean_distance
-from simsearch_spark.operators.kmeans import _lit_vec
+from simsearch_spark.functions.measures import cosine_similarity
+from simsearch_spark.operators.kmeans import _lit_vec, nearest_center, probe_cells
 
 __all__ = [
     "pq_train",
@@ -226,25 +230,14 @@ def _pq_train_engine(
         ),
     )
     for _ in range(iters):
-        # per-row argmin against the row's OWN subspace codebook — the
-        # identical struct/array_min strict-< rule as assign_clusters,
+        # per-row nearest_center against the row's OWN subspace codebook,
         # chosen by a when-chain on j (each distance expression once)
         best = None
         for j in reversed(range(m)):
-            bj = F.array_min(
-                F.array(
-                    *[
-                        F.struct(
-                            euclidean_distance(F.col("_sub"), _lit_vec(cvec)).alias("dist"),
-                            F.lit(int(cid)).alias("cluster_id"),
-                        )
-                        for cid, cvec in sorted(codebooks[j].items())
-                    ]
-                )
-            )
+            bj = nearest_center(F.col("_sub"), codebooks[j])
             best = bj if best is None else F.when(F.col("j") == j, bj).otherwise(best)
         rows = (
-            flat.withColumn("cluster_id", best["cluster_id"])
+            flat.withColumn("cluster_id", best["id"])
             .select("j", "cluster_id", F.posexplode(F.col("_sub")).alias("pos", "v"))
             .groupBy("j", "cluster_id", "pos")
             .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("mv"))
@@ -289,19 +282,8 @@ def pq_encode(
     passthrough = [c for c in df.columns if c not in (id_col, vec_col)]
     out_cols += [F.col(c) for c in passthrough]
     for j, cb in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        euclidean_distance(sub, _lit_vec(cvec)).alias("dist"),
-                        F.lit(int(cid)).alias("cid"),
-                    )
-                    for cid, cvec in sorted(cb.items())
-                ]
-            )
-        )
-        out_cols.append(best["cid"].alias(f"code_{j}"))
+        best = nearest_center(F.slice(F.col(vec_col), j * dsub + 1, dsub), cb)
+        out_cols.append(best["id"].alias(f"code_{j}"))
         out_cols.append(best["dist"].alias(f"dist_{j}"))
     return df.select(*out_cols)
 
@@ -323,9 +305,9 @@ def _adc_luts(
 ) -> list[list[float]]:
     """Per-subspace ksub-entry LUTs of squared subdistances for a query —
     the driver-side constant both the literal expression
-    (``_adc_dist_expr``) and the Arrow batch-serve kernel
-    (``mount/serve.py``) index with ``code_j``; sharing the builder keeps
-    the two paths float-identical."""
+    (``_lut_expr``) and the Arrow batch-serve kernel (``mount/serve.py``)
+    index with ``code_j``; sharing this one function keeps the two paths
+    float-identical."""
     m, dsub = _check_query_dim(codebooks, query_vec)
     luts = []
     for j, cb in enumerate(codebooks):
@@ -341,19 +323,75 @@ def _adc_luts(
     return luts
 
 
-def _adc_dist_expr(
-    codebooks: list[dict[int, list[float]]], query_vec: list[float]
-):
-    """The ADC distance column over ``code_0..code_{m-1}``: per subspace
-    the query builds a ksub-entry LUT of squared subdistances driver-side
-    (m·ksub floats — constant); the scan is m ``element_at`` lookups + a
+def _lut_expr(luts: list[list[float]]) -> Column:
+    """The ADC distance column over ``code_0..code_{m-1}`` for one query's
+    LUTs (m·ksub driver floats — constant): m ``element_at`` lookups + a
     fixed-order sum, rounded to 6 (the engine-wide score contract)."""
-    luts = _adc_luts(codebooks, query_vec)
     acc = None
     for j in range(len(luts)):
         term = F.element_at(F.lit(luts[j]), F.col(f"code_{j}") + 1)
         acc = term if acc is None else acc + term
     return F.round(F.sqrt(acc), 6)
+
+
+def _by_cell(
+    cell_col: str, arms: list[tuple[int, Column]], otherwise: Column | None = None
+) -> Column:
+    """Each row's arm, selected by its cell: a when-chain testing the
+    cells in ``arms`` order; without ``otherwise`` the last arm is the
+    unconditional base (the rows are already restricted to these cells)."""
+    out = otherwise
+    for cid, arm in reversed(arms):
+        out = arm if out is None else F.when(
+            F.col(cell_col) == F.lit(cid), arm
+        ).otherwise(out)
+    return out
+
+
+def cell_residual(
+    vec_col: str, cell_col: str, cmap: dict[int, list[float]], cells: list[int]
+) -> Column:
+    """Row-local residual ``v − centroid(own cell)`` for rows whose cell is
+    one of ``cells`` — codegen, no join; the IVF-PQ encode rule of the
+    declared operators and of the mount (``encode_residual_codes``)."""
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return _by_cell(
+        cell_col,
+        [(cid, F.zip_with(dbl, _lit_vec(cmap[cid]), lambda x, m: x - m)) for cid in cells],
+    )
+
+
+def cell_luts(
+    codebooks: list[dict[int, list[float]]],
+    cmap: dict[int, list[float]],
+    query_vec: list[float],
+    cells: list[int],
+) -> list[tuple[int, list[list[float]]]]:
+    """Per probed cell, the ADC LUTs of the query residual
+    ``q − centroid(cell)`` — the driver constants both the literal
+    ``cell_adc`` expression and the batch-serve Arrow kernel index."""
+    return [
+        (cid, _adc_luts(codebooks, [float(a) - b for a, b in zip(query_vec, cmap[cid])]))
+        for cid in cells
+    ]
+
+
+def cell_adc(
+    codebooks: list[dict[int, list[float]]],
+    cmap: dict[int, list[float]],
+    query_vec: list[float],
+    cells: list[int],
+    cell_col: str,
+    otherwise: Column | None = None,
+) -> Column:
+    """The residual ADC distance of each row against ``query_vec``: one
+    LUT expression per probed cell, selected by the row's cell
+    (``otherwise`` for rows in none of ``cells``)."""
+    return _by_cell(
+        cell_col,
+        [(cid, _lut_expr(luts)) for cid, luts in cell_luts(codebooks, cmap, query_vec, cells)],
+        otherwise,
+    )
 
 
 def pq_adc_topk(
@@ -364,16 +402,43 @@ def pq_adc_topk(
     k: int,
 ) -> DataFrame:
     """Asymmetric-distance top-k over an ENCODED corpus: the
-    ``_adc_dist_expr`` scan + one TakeOrderedAndProject.  Returns
+    ``_lut_expr`` scan + one TakeOrderedAndProject.  Returns
     (id, adc_dist) ascending, ties by id.  Approximate by construction
     (quantization error); recall is audited against the exact scan in
     tests."""
     return (
         codes.select(
-            F.col(id_col), _adc_dist_expr(codebooks, query_vec).alias("adc_dist")
+            F.col(id_col), _lut_expr(_adc_luts(codebooks, query_vec)).alias("adc_dist")
         )
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(k)
+    )
+
+
+def _cell_codes(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    assign_col: str,
+    cmap: dict[int, list[float]],
+    codebooks: list[dict[int, list[float]]],
+    cells: list[int],
+) -> DataFrame:
+    """The rows of ``cells`` (a pushable ``assign_col IN cells`` scan
+    filter), PQ-encoded against their own cell's residual.  The vector
+    rides along as ``__v`` (pq_encode passes through everything but
+    id/vec) so the bounded rerank needs no second scan; the cell rides
+    as ``__cell_id`` for ``cell_adc``."""
+    return pq_encode(
+        df.where(F.col(assign_col).isin(cells)).select(
+            F.col(id_col),
+            cell_residual(vec_col, assign_col, cmap, cells).alias("__r"),
+            F.col(vec_col).alias("__v"),
+            F.col(assign_col).alias("__cell_id"),
+        ),
+        id_col,
+        "__r",
+        codebooks,
     )
 
 
@@ -381,31 +446,29 @@ def ivf_pq_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: DataFrame | list,
+    centroids: dict[int, list[float]],
     codebooks: list[dict[int, list[float]]],
     query_vec: list[float],
     k: int,
     n_probe: int = 1,
     rerank: int = 32,
-    assign_col: str | None = None,
-    residual: bool = False,
+    assign_col: str = "label",
 ) -> DataFrame:
     """IVF-PQ serving — the composed billion-scale ANN shape (Jégou 2011
     §V; FAISS ``IndexIVFPQ``): route the query to its ``n_probe`` nearest
-    IVF cells, ADC-scan ONLY those cells' PQ codes, then exact-rescore the
-    ``rerank`` best ADC candidates and return the true-cosine top-k.
+    IVF cells (``probe_cells``), ADC-scan ONLY those cells' PQ codes, then
+    exact-rescore the ``rerank`` best ADC candidates and return the
+    true-cosine top-k.
 
-    residual=True is the full FAISS ``IndexIVFPQ`` semantic: the codes are
-    understood as PQ over RESIDUALS ``v − centroid(cell)`` (train the
-    codebooks on residual vectors — see ``queries/ivfpq.py``), each row is
-    encoded against its own cell's residual, and the query builds ONE LUT
-    PER PROBED CELL from ``q − centroid(cell)`` (n_probe·m·ksub driver
-    floats — still constant).  Residuals concentrate near the origin, so
-    the same codebook budget spends its centroids on a much smaller ball —
-    the recall-per-byte reason production IVF-PQ encodes residuals.  The
-    caller must pass ROUND-6-PINNED centroid vectors in residual mode (the
-    cross-engine determinism contract: an unrounded float avg folds
-    differently per plan).
+    The codes are PQ over RESIDUALS ``v − centroid(cell)`` (train the
+    codebooks on residual vectors — see ``queries/ivfpq.py``): each row is
+    encoded against its own cell's residual (``cell_residual``), and the
+    query builds ONE LUT PER PROBED CELL from ``q − centroid(cell)``
+    (``cell_adc``; n_probe·m·ksub driver floats — still constant).
+    Residuals concentrate near the origin, so the same codebook budget
+    spends its centroids on a much smaller ball — the recall-per-byte
+    reason production IVF-PQ encodes residuals.  The plain (non-residual)
+    ADC scan is ``pq_adc_topk``.
 
     Plan shape (the thing that must survive 100×): the cell predicate
     ``assign_col IN probes`` is a pushable scan filter, so the bytes read
@@ -417,80 +480,16 @@ def ivf_pq_topk(
     those rows alone — in production the full vectors come from a point
     store keyed by id, here the bounded candidate rows still carry them.
 
-    ``centroids`` = (cluster_id, centroid array<double>), a driver-bounded
-    frame exactly like ``ivf_topk``'s — or the same rows already collected
-    as ``[(cluster_id, [float, ...])]`` (r14: callers that also need the
-    centroid map driver-side pass the collected list so the aggregation
-    runs once, not once per consumer); rows are routed by ``assign_col``
-    when the table persists an assignment (the mount-time artifact shape),
-    else assigned to their nearest centroid inline.  Returns
+    ``centroids`` is the cell id → centroid map
+    (``mount.artifacts.load_centroid_map``'s shape), ROUND-6-PINNED (the
+    cross-engine determinism contract: an unrounded float avg folds
+    differently per plan); ``assign_col`` holds each row's cell, the
+    persisted assignment of the mount-time artifact shape.  Returns
     (id_col, adc_dist, cos_sim), cos_sim descending, ties by id.
     """
-    cent = (
-        [(cid, list(vec)) for cid, vec in centroids]
-        if isinstance(centroids, list)
-        else [(r[0], list(r[1])) for r in centroids.collect()]
-    )
-    # deterministic probe order: distance, then cluster id (ivf_topk's rule)
-    by_dist = sorted(
-        cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(query_vec, c[1])), c[0])
-    )
-    probe_ids = [cid for cid, _v in by_dist[:n_probe]]
-
-    if assign_col is None:
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        euclidean_distance(F.col(vec_col), _lit_vec(vec)).alias("d"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, vec in sorted(cent)
-                ]
-            )
-        )
-        df = df.withColumn("__cell", best["cid"])
-        assign_col = "__cell"
-
-    cells = df.where(F.col(assign_col).isin(probe_ids))
-    cmap = {cid: [float(x) for x in vec] for cid, vec in cent}
-    if residual:
-        # per-row residual against the row's OWN cell centroid — a when
-        # chain over the n_probe surviving cells (codegen, row-local)
-        dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        # build bottom-up: the LAST probe id is the when-chain base
-        res = None
-        for cid in reversed(probe_ids):
-            sub = F.zip_with(dbl, _lit_vec(cmap[cid]), lambda x, m: x - m)
-            res = sub if res is None else F.when(
-                F.col(assign_col) == F.lit(cid), sub
-            ).otherwise(res)
-        enc_in = cells.select(
-            F.col(id_col),
-            res.alias("__r"),
-            F.col(vec_col).alias("__v"),
-            F.col(assign_col).alias("__cell_id"),
-        )
-        enc = pq_encode(enc_in, id_col, "__r", codebooks)
-        # one ADC expression per probed cell, selected by the row's cell
-        adc = None
-        for cid in reversed(probe_ids):
-            qres = [a - b for a, b in zip([float(x) for x in query_vec], cmap[cid])]
-            e = _adc_dist_expr(codebooks, qres)
-            adc = e if adc is None else F.when(
-                F.col("__cell_id") == F.lit(cid), e
-            ).otherwise(adc)
-    else:
-        # the vector rides along under a private name (pq_encode passes
-        # through everything but id/vec) so the bounded rerank needs no
-        # second scan
-        enc = pq_encode(
-            cells.select(F.col(id_col), F.col(vec_col), F.col(vec_col).alias("__v")),
-            id_col,
-            vec_col,
-            codebooks,
-        )
-        adc = _adc_dist_expr(codebooks, query_vec)
+    probe_ids = probe_cells(centroids, query_vec, n_probe)
+    enc = _cell_codes(df, id_col, vec_col, assign_col, centroids, codebooks, probe_ids)
+    adc = cell_adc(codebooks, centroids, query_vec, probe_ids, "__cell_id")
     cand = (
         enc.select(F.col(id_col), F.col("__v"), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
@@ -512,13 +511,13 @@ def ivf_pq_multi_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: DataFrame | list,
+    centroids: dict[int, list[float]],
     codebooks: list[dict[int, list[float]]],
     queries: list[tuple[int, list[float]]],
     k: int,
     n_probe: int = 1,
     rerank: int = 32,
-    assign_col: str | None = None,
+    assign_col: str = "label",
 ) -> DataFrame:
     """BATCH IVF-PQ serving — Q queries against ONE cell-routed scan (the
     shape a real retrieval pipeline runs: thousands of queries per batch;
@@ -526,14 +525,14 @@ def ivf_pq_multi_topk(
     Q-queries-one-scan pattern with ``ivf_pq_topk``'s residual ADC scan:
 
     1. every query routes to its ``n_probe`` nearest cells driver-side
-       (same L2²/ties-by-cell rule as the single-query path); the scan
+       (``probe_cells``, as the single-query path); the scan
        predicate is the UNION of all probed cells — one pushed ``IN``
        filter, bytes read ∝ |∪ probed cells| / n_cells, paid ONCE for the
        whole batch instead of once per query;
     2. each surviving row residual-encodes ONCE against its own cell
-       (when-chain over the union cells — identical codes to the
+       (``cell_residual`` over the union cells — identical codes to the
        single-query path);
-    3. per (row, query): the query's per-cell residual LUT fold, NULL when
+    3. per (row, query): the query's ``cell_adc`` fold, NULL when
        the row's cell is outside that query's probes — emitted as an
        exploded (query_id, adc_dist) pair list, so the scan stays single;
     4. per-query rerank selection is a rank-limit window
@@ -544,74 +543,24 @@ def ivf_pq_multi_topk(
        query_id) and a final per-query top-k rank window.
 
     Returns (query_id, id_col, adc_dist, cos_sim, rank), rank ≤ k per
-    query.  Residual mode only — it IS the IndexIVFPQ semantic; the
+    query.  ``centroids`` and ``assign_col`` as in ``ivf_pq_topk``; the
     ``queries`` list must be sorted by query_id (determinism contract).
     """
     from pyspark.sql.window import Window
 
-    from simsearch_spark.operators.kmeans import _lit_vec
-
-    cent = (
-        [(cid, list(vec)) for cid, vec in centroids]
-        if isinstance(centroids, list)
-        else [(r[0], list(r[1])) for r in centroids.collect()]
-    )
-    cmap = {cid: [float(x) for x in vec] for cid, vec in cent}
     qs = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
-    probes: dict[int, list[int]] = {}
-    for qid, qv in qs:
-        by_dist = sorted(
-            cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0])
-        )
-        probes[qid] = [cid for cid, _v in by_dist[:n_probe]]
+    probes = {qid: probe_cells(centroids, qv, n_probe) for qid, qv in qs}
     union_cells = sorted({c for ps in probes.values() for c in ps})
+    enc = _cell_codes(df, id_col, vec_col, assign_col, centroids, codebooks, union_cells)
 
-    if assign_col is None:
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        euclidean_distance(F.col(vec_col), _lit_vec(vec)).alias("d"),
-                        F.lit(cid).alias("cid"),
-                    )
-                    for cid, vec in sorted(cent)
-                ]
-            )
+    no_probe = F.lit(None).cast("double")
+    entries = [
+        F.struct(
+            F.lit(qid).alias("query_id"),
+            cell_adc(codebooks, centroids, qv, probes[qid], "__cell_id", no_probe).alias("adc_dist"),
         )
-        df = df.withColumn("__cell", best["cid"])
-        assign_col = "__cell"
-
-    cells = df.where(F.col(assign_col).isin(union_cells))
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    res = None
-    for cid in reversed(union_cells):
-        sub = F.zip_with(dbl, _lit_vec(cmap[cid]), lambda x, m: x - m)
-        res = sub if res is None else F.when(
-            F.col(assign_col) == F.lit(cid), sub
-        ).otherwise(res)
-    enc = pq_encode(
-        cells.select(
-            F.col(id_col),
-            res.alias("__r"),
-            F.col(vec_col).alias("__v"),
-            F.col(assign_col).alias("__cell_id"),
-        ),
-        id_col,
-        "__r",
-        codebooks,
-    )
-
-    entries = []
-    for qid, qv in qs:
-        adc = F.lit(None).cast("double")
-        for cid in probes[qid]:
-            qres = [a - b for a, b in zip(qv, cmap[cid])]
-            adc = F.when(
-                F.col("__cell_id") == F.lit(cid), _adc_dist_expr(codebooks, qres)
-            ).otherwise(adc)
-        entries.append(
-            F.struct(F.lit(qid).alias("query_id"), adc.alias("adc_dist"))
-        )
+        for qid, qv in qs
+    ]
     cand = (
         enc.select(
             F.col(id_col), F.col("__v"), F.explode(F.array(*entries)).alias("q")

@@ -141,13 +141,15 @@ def multi_facet_topk(
     price is that the final pass recomputes the distances the probes saw.
     """
     facets, k, key = request.facets, request.k, request.key_column
-    scored, est = score_facets(df, facets, k, estimate_weights=True)
+    # a lone facet's weight cancels in Σw·sim/Σw — unless it is 0, which
+    # would zero every score — so one facet runs no estimate and weighs 1
+    scored, est = score_facets(df, facets, k, estimate_weights=len(facets) > 1)
 
     n_combos = request.n_combinations
     weight_sets: list[dict[str, float]] = []
     for j in range(n_combos):
         weight_sets.append(
-            {f.name: (f.weights[j] if f.weights is not None else est[f.name]) for f in facets}
+            {f.name: (f.weights[j] if f.weights is not None else est.get(f.name, 1.0)) for f in facets}
         )
 
     # T7: every combination's score in one projection over one scan

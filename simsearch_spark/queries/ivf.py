@@ -23,25 +23,25 @@ N_PROBE = 2
 EMB_DIM = 64
 
 
-def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _centroid_map(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
+    """label → mean embedding, collected once (bounded: n_cells × dim)."""
     emb = load_table(spark, sf_dir, "embeddings")
     flat = emb.select(
         "label", F.posexplode(F.col("embedding")).alias("pos", "v")
     ).groupBy("label", "pos").agg(F.avg(F.col("v").cast("double")).alias("mv"))
-    return (
+    rows = (
         flat.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias("pairs"))
-        .select(
-            F.col("label").alias("cluster_id"),
-            F.transform("pairs", lambda p: p["mv"]).alias("centroid"),
-        )
+        .select("label", F.transform("pairs", lambda p: p["mv"]).alias("centroid"))
+        .collect()
     )
+    return {int(r[0]): [float(x) for x in r[1]] for r in rows}
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where(F.col("vec_id") == IVF_QUERY_ID).first().embedding]
-    cents = _centroids(spark, sf_dir)
+    cents = _centroid_map(spark, sf_dir)
     out = ivf_topk(
         emb, "vec_id", "embedding", cents, qvec, K, n_probe=N_PROBE, assign_col="label"
     )

@@ -35,7 +35,7 @@ from simsearch_spark.queries.cluster import (
 )
 from simsearch_spark.queries.core import K
 from simsearch_spark.queries.ivf import (
-    _centroids,
+    _centroid_map,
     EMB_DIM,
     IVF_QUERY_ID,
     N_PROBE,
@@ -71,21 +71,20 @@ def _centroids6(emb: DataFrame) -> DataFrame:
     )
 
 
-def _cent_rows6(emb: DataFrame) -> list[tuple[int, list[float]]]:
-    """``_centroids6`` collected ONCE as ``[(cluster_id, centroid)]``
+def _centroid_map6(emb: DataFrame) -> dict[int, list[float]]:
+    """``_centroids6`` collected ONCE as the cell id → centroid map
     (bounded: n_cells × dim) — shared by residual training, probe
     selection, and the residual when-chains, so the centroid aggregation
     runs exactly one Spark job per query (guide §1.2: it used to rerun
     under the training passes, the probe collect, and the plan
     when-chains before the r14 restructure)."""
-    rows = _centroids6(emb).collect()
-    return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
+    return {int(r[0]): [float(x) for x in r[1]] for r in _centroids6(emb).collect()}
 
 
 def _sample_rows(emb: DataFrame) -> list:
     """The bounded lowest-id PQ training sample, collected in one job
     (≤PQ_TRAIN_N rows; the ``pq_training_sample`` contract with the label
-    kept for residual mode)."""
+    kept for the residual subtraction)."""
     return (
         emb.orderBy("vec_id")
         .limit(PQ_TRAIN_N)
@@ -120,13 +119,6 @@ def _train_books_residual_rows(
     return pq_train_rows(res_rows, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS)
 
 
-def _train_books_residual(emb: DataFrame, cents: DataFrame):
-    """Compatibility wrapper (tests/tools): collect the centroid frame
-    once and run the driver-local residual trainer."""
-    cmap = {int(r[0]): [float(x) for x in r[1]] for r in cents.collect()}
-    return _train_books_residual_rows(_sample_rows(emb), cmap)
-
-
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k with RESIDUAL encoding (operators/pq.py::ivf_pq_topk,
     the full FAISS IndexIVFPQ semantic): round-6-pinned label-mean IVF
@@ -144,12 +136,11 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").persist()
     try:
         qvec = [float(x) for x in emb.where(F.col("vec_id") == IVF_QUERY_ID).first().embedding]
-        cent_rows = _cent_rows6(emb)
-        books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows))
+        cmap = _centroid_map6(emb)
+        books = _train_books_residual_rows(_sample_rows(emb), cmap)
         out = ivf_pq_topk(
-            emb, "vec_id", "embedding",
-            cent_rows, books, qvec, K,
-            n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+            emb, "vec_id", "embedding", cmap, books, qvec, K,
+            n_probe=N_PROBE, rerank=RERANK, assign_col="label",
         )
         # K rows — materialize eagerly so the session-scoped caches can be
         # dropped here instead of leaking across queries (ADVICE r10)
@@ -317,10 +308,10 @@ def q_ann_ivfpq_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         qs = sorted((int(r.vec_id), [float(x) for x in r.embedding]) for r in qrows)
-        cent_rows = _cent_rows6(emb)
-        books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows))
+        cmap = _centroid_map6(emb)
+        books = _train_books_residual_rows(_sample_rows(emb), cmap)
         out = ivf_pq_multi_topk(
-            emb, "vec_id", "embedding", cent_rows, books,
+            emb, "vec_id", "embedding", cmap, books,
             qs, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label",
         )
         return out.select(
@@ -401,7 +392,7 @@ def _recall_audit_body(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Data
     from simsearch_spark.queries.pipeline import ANN_QUERY_ID, PLANES
 
     qvec = [float(x) for x in emb.where(F.col("vec_id") == ANN_QUERY_ID).first().embedding]
-    cents = _centroids(spark, sf_dir)
+    cents = _centroid_map(spark, sf_dir)
     exact = cosine_topk(emb, "vec_id", "embedding", qvec, K).select(F.col("vec_id").alias("id"))
     lsh = lsh_cosine_topk(emb, "vec_id", "embedding", qvec, K, PLANES, probe_hamming=1).select(
         F.lit("lsh").alias("method"), F.col("vec_id").alias("id")
@@ -410,11 +401,11 @@ def _recall_audit_body(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Data
         emb, "vec_id", "embedding", cents, qvec, K,
         n_probe=N_PROBE, assign_col="label",
     ).select(F.lit("ivf").alias("method"), F.col("vec_id").alias("id"))
-    cent_rows6 = _cent_rows6(emb)
-    books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows6))
+    cmap6 = _centroid_map6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), cmap6)
     ivfpq = ivf_pq_topk(
-        emb, "vec_id", "embedding", cent_rows6, books,
-        qvec, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+        emb, "vec_id", "embedding", cmap6, books,
+        qvec, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     ).select(F.lit("ivfpq").alias("method"), F.col("vec_id").alias("id"))
     hits = (
         lsh.unionByName(ivf).unionByName(ivfpq)

@@ -55,11 +55,14 @@ def clustered(spark):
 
 @pytest.fixture(scope="module")
 def trained(spark, clustered):
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.queries.ivfpq import (
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
 
-    cents = _centroids6(clustered).persist()
-    books = _train_books_residual(clustered, cents)
-    return cents, books
+    cents = _centroid_map6(clustered)
+    return cents, _train_books_residual_rows(_sample_rows(clustered), cents)
 
 
 def _exact_ids(clustered, qvec):
@@ -77,7 +80,7 @@ def _recall(clustered, cents, books, qvec, exact, n_probe, rerank):
         r.vec_id
         for r in ivf_pq_topk(
             clustered, "vec_id", "embedding", cents, books, qvec, K,
-            n_probe=n_probe, rerank=rerank, assign_col="label", residual=True,
+            n_probe=n_probe, rerank=rerank, assign_col="label",
         ).collect()
     }
     return len(got & exact) / K
@@ -119,7 +122,11 @@ def test_mounted_serve_matches_operator_on_clustered(spark, clustered, tmp_path)
     artifacts equals the in-query operator (same probes, codes, rerank)."""
     from simsearch_spark.mount import mount, serve_ivfpq_topk
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.queries.ivfpq import (
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
 
     d = str(tmp_path / "m_clustered")
     mount(spark, "unused", d, emb_frame=clustered,
@@ -127,11 +134,11 @@ def test_mounted_serve_matches_operator_on_clustered(spark, clustered, tmp_path)
               [(1, "one doc")], "doc_id long, text string"))
     qvec = [float(x) for x in clustered.where(F.col("vec_id") == 7).first().embedding]
     served = serve_ivfpq_topk(spark, d, clustered, qvec, K, n_probe=2, rerank=30)
-    cents = _centroids6(clustered)
-    books = _train_books_residual(clustered, cents)
+    cents = _centroid_map6(clustered)
+    books = _train_books_residual_rows(_sample_rows(clustered), cents)
     declared = ivf_pq_topk(
         clustered, "vec_id", "embedding", cents, books, qvec, K,
-        n_probe=2, rerank=30, assign_col="label", residual=True,
+        n_probe=2, rerank=30, assign_col="label",
     ).select(F.col("vec_id").alias("id"), "adc_dist", "cos_sim")
     key = lambda rows: sorted((r.id, r.adc_dist, r.cos_sim) for r in rows)
     assert key(served.collect()) == key(declared.collect())

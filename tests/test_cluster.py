@@ -6,15 +6,40 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
-from simsearch_spark.operators.kmeans import kmeans_assign
+from simsearch_spark.operators.kmeans import kmeans_assign, nearest_center, probe_cells
 from simsearch_spark.operators.quantize import QUANT_LEVELS, quantization_error
 from simsearch_spark.sources.registry import load_table
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def test_nearest_center_ties_keep_lowest_id(spark):
+    """Strict-< argmin: the nearest center wins; among equidistant
+    centers the lowest id does, whatever the map's insertion order."""
+    centers = {5: [1.0, 0.0], 2: [-1.0, 0.0], 9: [3.0, 0.0]}
+    vec = lambda *xs: F.array(*[F.lit(float(x)) for x in xs])
+    row = spark.range(1).select(
+        nearest_center(vec(0.0, 0.0), centers).alias("tie"),
+        nearest_center(vec(0.5, 0.0), centers).alias("win"),
+    ).first()
+    assert (row.tie.id, row.tie.dist) == (2, 1.0)
+    assert (row.win.id, row.win.dist) == (5, 0.5)
+
+
+def test_probe_cells_order_distance_then_id():
+    """Probe order is L2² to the centroid, ties by cell id; a query of the
+    wrong length raises instead of routing on a truncated prefix."""
+    cmap = {7: [1.0, 0.0], 4: [2.0, 0.0], 3: [0.0, 1.0], 1: [-1.0, 0.0]}
+    assert probe_cells(cmap, [0.0, 0.0], 3) == [1, 3, 7]
+    assert probe_cells(cmap, [0.0, 0.0], 9) == [1, 3, 7, 4]
+    assert probe_cells(cmap, [2.0, 0.1], 2) == [4, 7]
+    with pytest.raises(ValueError, match="query dim"):
+        probe_cells(cmap, [0.0], 1)
 
 
 def test_kmeans_partitioning_invariance(spark, sf_dir):
@@ -70,14 +95,19 @@ def test_quantization_error_bound(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_assignment_table_equals_literal(spark, sf_dir):
+def test_assignment_table_equals_literal(spark, sf_dir, monkeypatch):
     """assign via broadcast-centroid Arrow kernel == literal-centroid
     codegen, on raw (unrounded) distances — the bit-identical contract
-    that lets `auto` switch paths as a pure physical-plan knob."""
+    that lets k switch paths as a pure physical-plan knob.  Each kernel
+    is forced by moving the ``LITERAL_K_MAX`` switch point."""
+    from simsearch_spark.operators import kmeans
+
     emb = load_table(spark, sf_dir, "embeddings")
     for k in (3, 8, 33):
-        lit = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2, assignment="literal")
-        tab = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2, assignment="table")
+        monkeypatch.setattr(kmeans, "LITERAL_K_MAX", k)
+        lit = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2)
+        monkeypatch.setattr(kmeans, "LITERAL_K_MAX", k - 1)
+        tab = kmeans_assign(emb, "vec_id", "embedding", k=k, iters=2)
         sel = lambda d: d.select("vec_id", "cluster_id", "dist")
         assert _rows(sel(lit)) == _rows(sel(tab)), f"k={k} path divergence"
 

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from simsearch_spark.operators.ann import cosine_topk, ivf_topk, lcg_hyperplanes, lsh_cosine_topk
@@ -88,11 +89,22 @@ def test_ivf_topk_probes_clusters(spark, sf_dir):
     by_label = {}
     for r in rows:
         by_label.setdefault(r.label, []).append(np.array(r.embedding, dtype=float))
-    cent = [(int(lbl), [float(x) for x in np.mean(vs, axis=0)]) for lbl, vs in sorted(by_label.items())]
-    cdf = spark.createDataFrame(cent, "cluster_id int, centroid array<double>")
-    res = ivf_topk(emb, "vec_id", "embedding", cdf, qvec, 5, n_probe=2, assign_col="label")
+    cent = {int(lbl): [float(x) for x in np.mean(vs, axis=0)] for lbl, vs in by_label.items()}
+    res = ivf_topk(emb, "vec_id", "embedding", cent, qvec, 5, n_probe=2, assign_col="label")
     got = [r.vec_id for r in res.collect()]
     assert len(got) == 5 and 3 in got
+
+
+def test_ivf_topk_rejects_wrong_length_query(spark):
+    """A query shorter than the vectors raises rather than routing on a
+    truncated prefix and scoring k rows NULL (``zip_with`` pads)."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0], i % 2) for i in range(6)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    cents = {0: [2.0, 1.0, 0.0], 1: [3.0, 1.0, 0.0]}
+    with pytest.raises(ValueError, match="query dim"):
+        ivf_topk(df, "vec_id", "embedding", cents, [1.0, 1.0], 3, assign_col="label")
 
 
 def test_simhash_banded_equals_allpairs(spark, sf_dir):

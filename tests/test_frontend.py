@@ -164,6 +164,24 @@ def test_catalog_search_returns_extra_columns(spark, cust):
         )
 
 
+def test_single_facet_ranks_by_similarity_when_estimate_is_zero(spark):
+    """A one-facet request without weights ranks by similarity.  Only rows
+    17-19 share a q-gram with the query, so an estimated T5 weight (the
+    1 - k/N percentile of the similarities) would be 0, zero every score
+    and return the k lowest keys."""
+    from simsearch_spark.sources.catalog import Catalog
+
+    names = [f"{c}{c}{c} lemon" for c in "abcdefghijklmnoprs"[:17]]
+    names += ["zqxw", "zqxw lemon", "lemon zqx"]
+    df = spark.createDataFrame(list(enumerate(names)), "id long, nm string")
+    cat = Catalog(spark)
+    cat.register_source("t", df=df)
+    cat.mount("nm", "t", "id", ["nm"], "textual_topk")
+    out = cat.search({"nm": "zqxw"}, k=5).collect()
+    assert out[0].id == 17 and {r.id for r in out[:3]} == {17, 18, 19}
+    assert out[0].score == 1.0 and all(r.score > 0 for r in out[:3])
+
+
 def test_similarity_matrix_uses_the_facet_distance(spark):
     """R2: the matrix scores each pair with the facet's own distance —
     q-gram Jaccard for a textual facet, the facet's vector metric, and

@@ -226,8 +226,9 @@ def test_served_multi_query_equals_operator(spark, sf_dir, mount_dir):
     from simsearch_spark.queries.ivf import MULTI_QUERY_IDS, N_PROBE
     from simsearch_spark.queries.ivfpq import (
         RERANK,
-        _centroids6,
-        _train_books_residual,
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -240,9 +241,10 @@ def test_served_multi_query_equals_operator(spark, sf_dir, mount_dir):
     served = serve_ivfpq_multi_topk(
         spark, mount_dir, emb, qs, K, n_probe=N_PROBE, rerank=RERANK
     )
-    cents = _centroids6(emb)
+    cents = _centroid_map6(emb)
     declared = ivf_pq_multi_topk(
-        emb, "vec_id", "embedding", cents, _train_books_residual(emb, cents),
+        emb, "vec_id", "embedding", cents,
+        _train_books_residual_rows(_sample_rows(emb), cents),
         qs, K, n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     )
     assert _rows(served) == _rows(declared)
@@ -314,6 +316,16 @@ def test_served_pivot_knn_equals_operator_and_brute(spark, sf_dir, mount_dir):
         for r in pivot_knn(emb, "vec_id", "embedding", qvec, k, prune=False).collect()
     ]
     assert served == pruned == brute and len(served) == k
+
+
+def test_served_pivot_knn_rejects_wrong_length_query(spark, sf_dir, mount_dir):
+    """A query of the wrong length raises rather than getting NULL exact
+    distances, a NULL radius, and an empty answer."""
+    from simsearch_spark.mount.serve import serve_pivot_knn
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="query dim"):
+        serve_pivot_knn(spark, mount_dir, emb, [0.5, 0.25], 5)
 
 
 def test_stream_append_equals_batch_append(spark, sf_dir, tmp_path):

@@ -148,7 +148,7 @@ def test_ivf_pq_scans_only_probed_cells(spark, sf_dir):
     every served row must come from a probed cell."""
     from simsearch_spark.operators.pq import ivf_pq_topk
     from simsearch_spark.queries.cluster import pq_training_sample
-    from simsearch_spark.queries.ivf import _centroids
+    from simsearch_spark.queries.ivf import _centroid_map
     from simsearch_spark.sources.registry import load_table
 
     # another test's persist() of this table would make the CacheManager
@@ -157,7 +157,7 @@ def test_ivf_pq_scans_only_probed_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")  # NOT persisted: real scan
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     books = pq_train(pq_training_sample(emb), "vec_id", "embedding", m=4, ksub=8, iters=1)
-    cents = _centroids(spark, sf_dir)
+    cents = _centroid_map(spark, sf_dir)
     out = ivf_pq_topk(
         emb, "vec_id", "embedding", cents, books, q, 10,
         n_probe=2, rerank=30, assign_col="label",
@@ -167,7 +167,7 @@ def test_ivf_pq_scans_only_probed_cells(spark, sf_dir):
     assert "Exchange" not in plan, plan
     # membership: served ids lie in the 2 probed cells
     cent = sorted(
-        [(r[0], list(r[1])) for r in cents.collect()],
+        cents.items(),
         key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0]),
     )
     probed = {cid for cid, _ in cent[:2]}
@@ -187,15 +187,15 @@ def test_ivf_pq_rerank_monotone_and_exact_at_depth(spark, sf_dir):
     from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.operators.pq import ivf_pq_topk
     from simsearch_spark.queries.cluster import pq_training_sample
-    from simsearch_spark.queries.ivf import _centroids
+    from simsearch_spark.queries.ivf import _centroid_map
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").persist()
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     books = pq_train(pq_training_sample(emb), "vec_id", "embedding", m=4, ksub=8, iters=1)
-    cents = _centroids(spark, sf_dir)
+    cents = _centroid_map(spark, sf_dir)
     cent = sorted(
-        [(r[0], list(r[1])) for r in cents.collect()],
+        cents.items(),
         key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0]),
     )
     probed = [cid for cid, _ in cent[:2]]
@@ -228,31 +228,6 @@ def test_ivf_pq_rerank_monotone_and_exact_at_depth(spark, sf_dir):
     assert shallow <= mid <= full
 
 
-def test_ivf_pq_inline_assignment_matches_explicit(spark):
-    """Without a persisted assignment column, rows route to their nearest
-    centroid inline — identical output to routing by a precomputed
-    assignment of the same rule."""
-    from simsearch_spark.operators.pq import ivf_pq_topk
-
-    rng = random.Random(9)
-    centers = {0: [0.0, 0.0, 0.0, 0.0], 1: [10.0, 10.0, 10.0, 10.0], 2: [-10.0, 10.0, -10.0, 10.0]}
-    rows = []
-    for i in range(90):
-        c = centers[i % 3]
-        rows.append((i, [v + rng.uniform(-1, 1) for v in c], i % 3))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, cell int").persist()
-    cents = spark.createDataFrame(
-        [(k, v) for k, v in centers.items()], "cluster_id int, centroid array<double>"
-    )
-    books = pq_train(df, "vec_id", "embedding", m=2, ksub=4, iters=2)
-    q = [9.5, 10.5, 9.5, 10.5]
-    a = ivf_pq_topk(df, "vec_id", "embedding", cents, books, q, 5, n_probe=1, rerank=20,
-                    assign_col="cell").collect()
-    b = ivf_pq_topk(df.drop("cell"), "vec_id", "embedding", cents, books, q, 5,
-                    n_probe=1, rerank=20).collect()
-    assert a == b and len(a) == 5
-
-
 def test_encode_passthrough_and_code_range(spark):
     vecs = [[float(i % 7), float(i % 3), float(-i % 5), 1.0] for i in range(40)]
     df = _frame(spark, vecs).withColumn("label", F.col("vec_id") % 4)
@@ -267,8 +242,9 @@ def test_encode_passthrough_and_code_range(spark):
 
 def test_ivf_pq_residual_zero_centroids_equals_plain(spark):
     """With all-zero centroids the residual transform is the identity, so
-    residual mode must reproduce plain mode EXACTLY (codes, ADC distances,
-    ordering) — the algebraic pin for the per-cell LUT plumbing."""
+    IVF-PQ probing every cell must reproduce the plain ADC scan
+    (``pq_adc_topk``) EXACTLY — the same candidates with the same ADC
+    distances — the algebraic pin for the per-cell LUT plumbing."""
     from simsearch_spark.operators.pq import ivf_pq_topk
 
     rng = random.Random(21)
@@ -276,16 +252,15 @@ def test_ivf_pq_residual_zero_centroids_equals_plain(spark):
         (i, [rng.gauss(0, 1) for _ in range(8)], i % 3) for i in range(120)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, cell int").persist()
-    zero_cents = spark.createDataFrame(
-        [(c, [0.0] * 8) for c in range(3)], "cluster_id int, centroid array<double>"
-    )
+    zero_cents = {c: [0.0] * 8 for c in range(3)}
     books = pq_train(df, "vec_id", "embedding", m=2, ksub=4, iters=2)
     q = [rng.gauss(0, 1) for _ in range(8)]
-    plain = ivf_pq_topk(df, "vec_id", "embedding", zero_cents, books, q, 7,
-                        n_probe=2, rerank=25, assign_col="cell").collect()
-    res = ivf_pq_topk(df, "vec_id", "embedding", zero_cents, books, q, 7,
-                      n_probe=2, rerank=25, assign_col="cell", residual=True).collect()
-    assert plain == res and len(plain) == 7
+    plain = pq_adc_topk(pq_encode(df, "vec_id", "embedding", books), "vec_id", books, q, 25)
+    res = ivf_pq_topk(df, "vec_id", "embedding", zero_cents, books, q, 25,
+                      n_probe=3, rerank=25, assign_col="cell")
+    key = lambda rows: sorted((r.vec_id, r.adc_dist) for r in rows)
+    got = key(res.collect())
+    assert key(plain.collect()) == got and len(got) == 25
 
 
 def test_ivf_pq_residual_exact_at_full_rerank(spark, sf_dir):
@@ -295,15 +270,19 @@ def test_ivf_pq_residual_exact_at_full_rerank(spark, sf_dir):
     plain codes (the transform is live)."""
     from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.queries.ivfpq import (
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").persist()
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    cents = _centroids6(emb).persist()
-    books = _train_books_residual(emb, cents)
+    cents = _centroid_map6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), cents)
     cent = sorted(
-        [(r[0], list(r[1])) for r in cents.collect()],
+        cents.items(),
         key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0]),
     )
     probed = [cid for cid, _ in cent[:2]]
@@ -321,7 +300,7 @@ def test_ivf_pq_residual_exact_at_full_rerank(spark, sf_dir):
         r.vec_id
         for r in ivf_pq_topk(
             emb, "vec_id", "embedding", cents, books, q, 10,
-            n_probe=2, rerank=in_cells.count(), assign_col="label", residual=True,
+            n_probe=2, rerank=in_cells.count(), assign_col="label",
         ).collect()
     ]
     assert got == exact
@@ -334,7 +313,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     Q times (the batch changes the scan count, never the answer)."""
     from simsearch_spark.operators.pq import ivf_pq_multi_topk, ivf_pq_topk
     from simsearch_spark.queries.cluster import pq_training_sample
-    from simsearch_spark.queries.ivf import _centroids
+    from simsearch_spark.queries.ivf import _centroid_map
     from simsearch_spark.sources.registry import load_table
 
     spark.catalog.clearCache()
@@ -342,7 +321,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     qrows = emb.where(F.col("vec_id").isin(3, 7, 11)).select("vec_id", "embedding").collect()
     qs = sorted((int(r.vec_id), [float(x) for x in r.embedding]) for r in qrows)
     books = pq_train(pq_training_sample(emb), "vec_id", "embedding", m=4, ksub=8, iters=1)
-    cents = _centroids(spark, sf_dir)
+    cents = _centroid_map(spark, sf_dir)
     out = ivf_pq_multi_topk(
         emb, "vec_id", "embedding", cents, books, qs, 10,
         n_probe=2, rerank=30, assign_col="label",
@@ -353,7 +332,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     assert "PushedFilters" in plan and "In(label" in plan, plan
 
     # union membership: the pushed set is the union of per-query probes
-    cent = [(r[0], list(r[1])) for r in cents.collect()]
+    cent = list(cents.items())
     union = set()
     for _qid, qv in qs:
         by = sorted(cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]))
@@ -373,7 +352,7 @@ def test_multi_query_ivfpq_single_union_scan(spark, sf_dir):
     for qid, qv in qs:
         single = ivf_pq_topk(
             emb, "vec_id", "embedding", cents, books, qv, 10,
-            n_probe=2, rerank=30, assign_col="label", residual=True,
+            n_probe=2, rerank=30, assign_col="label",
         ).collect()
         assert got[qid] == [(r.vec_id, r.adc_dist, r.cos_sim) for r in single], qid
 
@@ -390,7 +369,7 @@ def test_driver_local_training_equals_engine_arm(spark, sf_dir):
         PQ_ITERS, PQ_KSUB, PQ_M, pq_training_sample,
     )
     from simsearch_spark.queries.ivfpq import (
-        _cent_rows6,
+        _centroid_map6,
         _sample_rows,
         _train_books_residual_rows,
     )
@@ -407,8 +386,7 @@ def test_driver_local_training_equals_engine_arm(spark, sf_dir):
 
         # residual arm: driver-side ``v − centroid(label)`` must match the
         # former broadcast-join + in-engine-Lloyd construction
-        cent_rows = _cent_rows6(emb)
-        cmap = dict(cent_rows)
+        cmap = _centroid_map6(emb)
         books_local = _train_books_residual_rows(_sample_rows(emb), cmap)
         res = F.zip_with(
             F.transform(F.col("embedding"), lambda x: x.cast("double")),
@@ -416,7 +394,7 @@ def test_driver_local_training_equals_engine_arm(spark, sf_dir):
             lambda x, m: x - m,
         )
         cents_df = spark.createDataFrame(
-            cent_rows, "cluster_id int, centroid array<double>"
+            sorted(cmap.items()), "cluster_id int, centroid array<double>"
         )
         sample_df = emb.orderBy("vec_id").limit(256).select(
             "vec_id", "label", "embedding"

@@ -62,25 +62,17 @@ def _ivfpq_serving_frame(spark, multi: bool):
     from simsearch_spark.operators.pq import ivf_pq_multi_topk, ivf_pq_topk
     from simsearch_spark.queries.core import K
     from simsearch_spark.queries.ivf import IVF_QUERY_ID, MULTI_QUERY_IDS, N_PROBE
-    from simsearch_spark.queries.ivfpq import RERANK, _centroids6
+    from simsearch_spark.queries.ivfpq import (
+        RERANK,
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").persist()
-    try:  # r14 API: collected centroid rows + driver-local residual books
-        from simsearch_spark.queries.ivfpq import (
-            _cent_rows6,
-            _sample_rows,
-            _train_books_residual_rows,
-        )
-
-        cent_rows = _cent_rows6(emb)
-        books = _train_books_residual_rows(_sample_rows(emb), dict(cent_rows))
-    except ImportError:  # pre-r14 tree (before-plan capture)
-        from simsearch_spark.queries.ivfpq import _train_books_residual
-
-        cents = _centroids6(emb).persist()
-        books = _train_books_residual(emb, cents)
-        cent_rows = cents
+    cmap = _centroid_map6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), cmap)
     if multi:
         qrows = (
             emb.where(F.col("vec_id").isin(*MULTI_QUERY_IDS))
@@ -88,13 +80,13 @@ def _ivfpq_serving_frame(spark, multi: bool):
         )
         qs = sorted((int(r.vec_id), [float(x) for x in r.embedding]) for r in qrows)
         return ivf_pq_multi_topk(
-            emb, "vec_id", "embedding", cent_rows, books, qs, K,
+            emb, "vec_id", "embedding", cmap, books, qs, K,
             n_probe=N_PROBE, rerank=RERANK, assign_col="label",
         )
     qvec = [float(x) for x in emb.where(F.col("vec_id") == IVF_QUERY_ID).first().embedding]
     return ivf_pq_topk(
-        emb, "vec_id", "embedding", cent_rows, books, qvec, K,
-        n_probe=N_PROBE, rerank=RERANK, assign_col="label", residual=True,
+        emb, "vec_id", "embedding", cmap, books, qvec, K,
+        n_probe=N_PROBE, rerank=RERANK, assign_col="label",
     )
 
 

@@ -246,7 +246,7 @@ def _pq_encode_probe(spark, sf_dir: str) -> int:
 def _ivfpq_serve_probe(spark, sf_dir: str) -> int:
     """The composed RESIDUAL IVF-PQ serve (r10, the declared query's exact
     shape): round-6 centroids + bounded-sample residual PQ training, then
-    ``ivf_pq_topk(residual=True)`` routed to n_probe=2 of the fixture
+    ``ivf_pq_topk`` routed to n_probe=2 of the fixture
     cells.  Returns the ADC-SCANNED row count (the probed cells'
     population): the scale claim is that this is N·(n_probe/n_cells) — the
     probed FRACTION stays constant as N grows (labels replicate, so cell
@@ -255,24 +255,25 @@ def _ivfpq_serve_probe(spark, sf_dir: str) -> int:
     mount-time cost, same accounting as embed_pq_encode."""
     from pyspark.sql import functions as F
 
+    from simsearch_spark.operators.kmeans import probe_cells
     from simsearch_spark.operators.pq import ivf_pq_topk
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.queries.ivfpq import (
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroids6(emb).persist()
-    books = _train_books_residual(emb, cents)
+    cmap = _centroid_map6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), cmap)
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
     served = ivf_pq_topk(
-        emb, "vec_id", "embedding", cents, books, q, 10,
-        n_probe=2, rerank=50, assign_col="label", residual=True,
+        emb, "vec_id", "embedding", cmap, books, q, 10,
+        n_probe=2, rerank=50, assign_col="label",
     ).collect()
     assert len(served) == 10
-    cent = sorted(
-        [(r[0], list(r[1])) for r in cents.collect()],
-        key=lambda c: (sum((a - b) ** 2 for a, b in zip(q, c[1])), c[0]),
-    )
-    probed = [cid for cid, _ in cent[:2]]
+    probed = probe_cells(cmap, q, 2)
     return int(emb.where(F.col("label").isin(probed)).count())
 
 
@@ -284,27 +285,28 @@ def _ivfpq_multi_serve_probe(spark, sf_dir: str) -> int:
     re-scan their (overlapping) cells Q times."""
     from pyspark.sql import functions as F
 
+    from simsearch_spark.operators.kmeans import probe_cells
     from simsearch_spark.operators.pq import ivf_pq_multi_topk
-    from simsearch_spark.queries.ivfpq import _centroids6, _train_books_residual
+    from simsearch_spark.queries.ivfpq import (
+        _centroid_map6,
+        _sample_rows,
+        _train_books_residual_rows,
+    )
     from simsearch_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroids6(emb).persist()
-    books = _train_books_residual(emb, cents)
+    cmap = _centroid_map6(emb)
+    books = _train_books_residual_rows(_sample_rows(emb), cmap)
     qrows = (
         emb.where(F.col("vec_id").isin(3, 7, 11)).select("vec_id", "embedding").collect()
     )
     qs = sorted((int(r.vec_id), [float(x) for x in r.embedding]) for r in qrows)
     served = ivf_pq_multi_topk(
-        emb, "vec_id", "embedding", cents, books, qs, 10,
+        emb, "vec_id", "embedding", cmap, books, qs, 10,
         n_probe=2, rerank=50, assign_col="label",
     ).collect()
     assert len(served) == 10 * len(qs)
-    cent = [(r[0], list(r[1])) for r in cents.collect()]
-    union = set()
-    for _qid, qv in qs:
-        by = sorted(cent, key=lambda c: (sum((a - b) ** 2 for a, b in zip(qv, c[1])), c[0]))
-        union |= {cid for cid, _ in by[:2]}
+    union = {cid for _qid, qv in qs for cid in probe_cells(cmap, qv, 2)}
     return int(emb.where(F.col("label").isin(sorted(union))).count())
 
 
