@@ -16,11 +16,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: reference defaults (BASELINE.md; Constants.java:38,40,42,44)
+#: reference defaults (BASELINE.md; Constants.java:38,40,42)
 DECAY_FACTOR = 0.05
 QGRAM = 3
 K_MAX = 50
-INFLATION_FACTOR = 1000
 
 
 # ---------------------------------------------------------------------------
@@ -57,12 +56,15 @@ def haversine_distance(lon: Column, lat: Column, qlon: Column, qlat: Column) -> 
 
 def jaccard_distance(tokens: Column, query_tokens: Column) -> Column:
     """Set distance ``1 - |A∩B| / |A∪B|``
-    (``engine/measure/CategoricalDistance.java:45,67``).  Computed with
-    array_intersect/array_union — JVM-side, codegen-friendly.  Inputs must be
-    deduplicated arrays (use ``array_distinct`` upstream)."""
-    isect = F.size(F.array_intersect(tokens, query_tokens)).cast("double")
-    union = F.size(F.array_union(tokens, query_tokens)).cast("double")
-    return F.when(union == 0, F.lit(0.0)).otherwise(F.lit(1.0) - isect / union)
+    (``engine/measure/CategoricalDistance.java:45,67``).  Inputs must be
+    deduplicated arrays (``array_distinct`` upstream), so
+    ``|A∪B| = |A| + |B| - |A∩B|`` needs no union array — the DuckDB
+    oracles compute it the same way.  A NULL set has a NULL distance."""
+    isect = F.size(F.array_intersect(tokens, query_tokens))
+    union = F.size(tokens) + F.size(query_tokens) - isect
+    return F.when(union == 0, F.lit(0.0)).otherwise(
+        F.lit(1.0) - isect.cast("double") / union.cast("double")
+    )
 
 
 def euclidean_distance(a: Column, b: Column) -> Column:

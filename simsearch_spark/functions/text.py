@@ -22,21 +22,22 @@ def tokenize(col: Column, sep: str = " ") -> Column:
     ``TokenSetCollectionReader.java:47-143``): split on a separator, drop
     empties, dedupe, sort (the reference stores sorted token sets —
     ``manager/ingested/categorical/TokenSet.java``)."""
-    toks = F.array_distinct(F.filter(F.split(col, sep), lambda t: t != ""))
-    return F.array_sort(toks)
+    return F.sort_array(F.array_distinct(F.array_remove(F.split(col, sep), "")))
 
 
 def qgrams(col: Column, q: int = 3) -> Column:
     """Distinct q-gram set of a string (``DataIngestor.java:151-204``).
 
-    Built with sequence+transform (codegen) rather than a UDF:
-    positions 1..len-q+1, substring each.  Strings shorter than q yield the
-    whole string as a single gram (matches padding-free semantics)."""
-    s = F.lower(col)
-    n = F.length(s)
-    count = F.greatest(n - F.lit(q - 1), F.lit(1))
+    Built with sequence+transform rather than a UDF: positions
+    1..len-q+1, substring each.  Strings shorter than q yield the whole
+    string as a single gram (matches padding-free semantics); a NULL or
+    empty string yields no gram.  ``array_remove`` and ``sort_array`` take
+    no lambda, so only the substring ``transform`` is evaluated per
+    element."""
+    s = F.lower(F.coalesce(col, F.lit("")))
+    count = F.greatest(F.length(s) - F.lit(q - 1), F.lit(1))
     grams = F.transform(F.sequence(F.lit(1), count), lambda i: s.substr(i, F.lit(q)))
-    return F.array_sort(F.array_distinct(F.filter(grams, lambda g: g != "")))
+    return F.sort_array(F.array_distinct(F.array_remove(grams, "")))
 
 
 # ---------------------------------------------------------------------------

@@ -5,45 +5,80 @@ Reference semantics: aggregate score of entity e =
 sim 0 while its weight stays in the denominator
 (``RankAggregator.java:236-259``).  TA / NRA / PRA differ only in *access
 strategy* (queue pops + random access vs bound maintenance) — on complete
-data all three produce the same ranked list, so the Spark build has a single
-exact execution strategy: full per-facet scoring + weighted mean +
-TakeOrderedAndProject.  The ``algorithm`` request field is accepted and
-echoed for parity (SURVEY.md §2.4, T1–T3).
+data all three produce the same ranked list.  The Spark build runs one
+exact strategy, the Threshold Algorithm's stopping rule
+(``ThresholdRanking.java:189-289``) over at most two scans; the
+``algorithm`` request field is accepted and echoed for parity (SURVEY.md
+§2.4, T1–T3):
+
+- *Probe pass (sorted access).*  Every facet whose scale or weight is
+  data-dependent returns its nearest rows in one TakeOrdered job (plus one
+  row count when a weight is estimated).  The scale is the largest of the
+  k smallest distances; the T5 weight — Spark's exact
+  ``percentile(sim, 1 - k/N)`` — interpolates between the k-th and the
+  (k+1)-th largest similarity, which are the similarities of the k+1
+  smallest distances (similarity never rises with distance; NULL-distance
+  and disjoint rows score 0, so the list is padded with zeros when fewer
+  rows have a distance).
+- *Candidate answer.*  When every facet is probed, each probe returns its
+  D = max(``DEPTH``, k+1) nearest rows with the key, every facet's value
+  columns and distances and the request's extra columns.  The union of
+  those rows is scored with the final pass's own expressions over a local
+  relation, which runs no job.  A row no probe returned is at least the
+  D-th distance away on every facet that returned D rows and has no
+  distance on the others; as a similarity never rises with distance and
+  ``+``, ``×w`` (w ≥ 0), ``/Σw`` and the rounding are monotone, its score
+  is at most τ_j, combination j's score of those D-th distances.  When
+  every combination's k-th candidate beats τ_j by more than one rounding
+  unit, no unseen row can place and the candidates are the answer: a local
+  relation, with no second scan of the table.
+- *Final pass (fallback).*  Otherwise — the certificate fails (ties wider
+  than D, fewer than k scored rows), or a facet has an explicit scale and
+  weight so nothing probes it — the final pass scans the table once:
+  scan → project → one TakeOrdered per weight combination, every scale and
+  weight a literal.  Nothing is persisted in either case.
 
 Multi-weight fan-out (T7, ``RankAggregator.java:104-129``): the j-th weight
 of every facet forms combination j; all combination scores are computed in
-ONE projection, then k rows per combination are taken with one TakeOrdered
-each — no full sort.
+ONE projection, then k rows per combination are taken — no full sort.
 
 Scale: the aggregation is a single wide projection when all facets live on
 one table (zero shuffles: scan → project → TakeOrdered).  For facets on
 different tables, per-facet score rows union into one (key, facet, sim)
 relation aggregated with ONE key-grouped shuffle (map-side partial agg) —
 full-outer joins cannot broadcast, so the join-free shape is the scale
-contract; per-facet LIMIT M pruning bounds the unioned row count.
-
-Two passes, nothing cached: a probe pass collects, per facet whose scale
-or weight is data-dependent, its k+1 smallest distances (one TakeOrdered
-job each, plus one row count when a weight is estimated); the final pass
-binds the scales and weights as literals.  The probe is exact: the scale is
-the largest of the k smallest distances, and the T5 weight — Spark's exact
-``percentile(sim, 1 - k/N)`` — interpolates between the k-th and the
-(k+1)-th largest similarity, which are the similarities of the k+1 smallest
-distances (similarity never rises with distance; NULL-distance and disjoint
-rows score 0, so the list is padded with zeros when fewer rows have a
-distance).
+contract.
 """
 
 from __future__ import annotations
 
 import functools
 import math
+from collections import Counter
+from dataclasses import dataclass
+from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.types import (
+    DateType,
+    DoubleType,
+    IntegerType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from simsearch_spark.operators import topk
 from simsearch_spark.plans.spec import Facet, SearchRequest
+
+#: TA sorted-access depth: with every facet probed, each probe returns its
+#: max(DEPTH, k + 1) nearest rows as candidates.  0 turns the candidate
+#: answer off, so every search runs the final pass.
+DEPTH = 1024
 
 
 def _similarity(dist: Column, scale: float | None, f: Facet) -> Column:
@@ -53,10 +88,119 @@ def _similarity(dist: Column, scale: float | None, f: Facet) -> Column:
     return F.coalesce(sim, F.lit(0.0))
 
 
+@dataclass
+class _Probe:
+    base: DataFrame  # the table restricted to the facets' pre-filters
+    dists: dict[str, Column]  # ``__dist_<name>`` -> its expression over ``base``
+    scales: dict[str, float | None]
+    weights: dict[str, float]  # the estimated T5 weights
+    rows: dict[str, list]  # candidate mode: each facet's non-NULL-distance rows
+    #: candidate mode: each facet's D-th distance, None when its probe
+    #: returned fewer rows (every row it did not return has no distance)
+    bounds: dict[str, float | None]
+
+
+def _probe(
+    df: DataFrame, facets: list[Facet], k: int, estimate_weights: bool,
+    carry: list[str] | None = None,
+) -> _Probe:
+    """The probe pass: scales and T5 weights as numbers.
+
+    With ``carry`` (candidate mode) every facet is probed for its D nearest
+    rows, each carrying the ``carry`` columns and every facet's distance;
+    NaN distances sort first, so a probe that is not all NaN saw every NaN
+    row.  Without it a facet is probed only for the distances its scale or
+    weight reads."""
+    filters = list(dict.fromkeys(f.filter for f in facets if f.filter))
+    base = df.where(F.expr(" AND ".join(f"({c})" for c in filters))) if filters else df
+    cols = {c: F.col(c) for c in base.columns}
+    dists = {
+        f"__dist_{f.name}": topk.facet_distance(
+            cols, Facet(**{**f.__dict__, "query_value": topk.resolve_query_value(df, f)})
+        )
+        for f in facets
+    }
+
+    estimate = [f for f in facets if f.weights is None] if estimate_weights else []
+    n = base.count() if estimate else 0
+    # Spark's Percentile interpolates between ascending positions lo and hi
+    # of pos = (n - 1)·p, so the weight needs the column's n - lo largest
+    # similarities: the k-th and (k+1)-th, or all n rows when n <= k + 1
+    pos = (n - 1) * max(0.0, min(1.0, 1.0 - k / max(n, 1)))
+    lo, hi = math.floor(pos), math.ceil(pos)
+    depth = max(DEPTH, k + 1) if carry is not None else 0
+    nearest: dict[str, list[float]] = {}
+    rows: dict[str, list] = {}
+    bounds: dict[str, float | None] = {}
+    for f in facets:
+        need = max(k if f.scale is None else 0, n - lo if f in estimate else 0)
+        limit = max(depth, need)
+        if not limit:
+            continue
+        name = f"__dist_{f.name}"
+        if carry is None:
+            got = _nearest(base.select(dists[name].alias(name)), name, limit)
+            nearest[f.name] = [r[0] for r in got]
+            continue
+        # the other facets' distances are computed on the D rows only
+        got = _nearest(
+            base.select(*carry, dists[name].alias(name)), name, limit, nan_first=True,
+            then=[*carry, *[F.col(c) if c == name else e.alias(c) for c, e in dists.items()]],
+        )
+        vals = [r[name] for r in got]
+        rows[f.name], bounds[f.name] = got, (vals[-1] if len(got) == limit else None)
+        nan = [v for v in vals if math.isnan(v)]
+        nearest[f.name] = [v for v in vals if not math.isnan(v)] + nan
+        if len(got) == limit and len(vals) - len(nan) < need:
+            # NaN rows crowd out distances the scale or the weight reads
+            got = _nearest(base.select(dists[name].alias(name)), name, need)
+            nearest[f.name] = [r[0] for r in got]
+
+    scales = {}
+    for f in facets:
+        # Spark sorts NaN last, so the k-th entry is the k smallest's max
+        auto = nearest.get(f.name, [])[:k]
+        scales[f.name] = f.scale if f.scale is not None else (auto[-1] if auto else None)
+
+    weights = {f.name: 0.0 for f in estimate}  # no rows: nothing to weigh
+    if n:
+        # one similarity expression per facet over the n - lo nearest
+        # distances, padded with NULLs (sim 0), as a local relation: the
+        # projection folds on the driver and runs no job
+        table = pa.table({
+            f"d{i}": pa.array((nearest[f.name] + [None] * (n - lo))[: n - lo], pa.float64())
+            for i, f in enumerate(estimate)
+        })
+        sims = df.sparkSession.createDataFrame(table).select(*[
+            _similarity(F.col(f"d{i}"), scales[f.name], f) for i, f in enumerate(estimate)
+        ])
+        for f, top in zip(estimate, map(sorted, zip(*sims.collect()))):
+            v_lo, v_hi = top[0], top[hi - lo]  # Percentile.getPercentile
+            weights[f.name] = v_lo if v_lo == v_hi else (hi - pos) * v_lo + (pos - lo) * v_hi
+    return _Probe(base, dists, scales, weights, rows, bounds)
+
+
+def _nearest(
+    frame: DataFrame, name: str, limit: int, nan_first: bool = False,
+    then: list[Column] | None = None,
+) -> list:
+    """The rows of ``frame`` nearest by distance column ``name``, collected
+    (projected to ``then`` after the limit), without those whose distance
+    is NULL.  NULLs sort last, so dropping them after the limit leaves the
+    nearest non-NULL rows, where a filter before the sort would evaluate
+    the distance a second time per row."""
+    d = F.col(name)
+    order = [F.isnan(d).desc(), d.asc_nulls_last()] if nan_first else [d.asc_nulls_last()]
+    top = frame.orderBy(*order).limit(limit)
+    if then is not None:
+        top = top.select(*then)
+    return [r for r in top.collect() if r[name] is not None]
+
+
 def score_facets(
     df: DataFrame, facets: list[Facet], k: int, estimate_weights: bool = False
 ) -> tuple[DataFrame, dict[str, float]]:
-    """Probe pass of the single-table path.
+    """Probe pass of the single-table path, with the table-side scores.
 
     Returns ``df`` restricted to the facets' pre-filters (P2,
     ``SimSearchJdbcQuery.java:136-148``) with per-facet ``__dist_<name>``
@@ -67,56 +211,51 @@ def score_facets(
 
     Spark jobs: one ``orderBy(dist).limit(k or k+1)`` collect per facet
     with an auto scale or an estimated weight, plus one row count when any
-    weight is estimated.  The similarities of the probed distances come
-    from the final plan's own expression over a one-row local relation,
-    which Spark's optimizer folds to a constant without running a job.
+    weight is estimated.
     """
-    filters = list(dict.fromkeys(f.filter for f in facets if f.filter))
-    base = df.where(F.expr(" AND ".join(f"({c})" for c in filters))) if filters else df
-    cols = {c: F.col(c) for c in base.columns}
-    scored = base.withColumns({
-        f"__dist_{f.name}": topk.facet_distance(
-            cols, Facet(**{**f.__dict__, "query_value": topk.resolve_query_value(df, f)})
-        )
+    p = _probe(df, facets, k, estimate_weights)
+    return p.base.withColumns(p.dists).withColumns(_sims(facets, p.scales)), p.weights
+
+
+def _sims(facets: list[Facet], scales: dict[str, float | None]) -> dict[str, Column]:
+    """``__sim_<name>`` over the ``__dist_<name>`` columns."""
+    return {
+        f"__sim_{f.name}": _similarity(F.col(f"__dist_{f.name}"), scales[f.name], f)
         for f in facets
-    })
+    }
 
-    estimate = [f for f in facets if f.weights is None] if estimate_weights else []
-    n = base.count() if estimate else 0
-    # Spark's Percentile interpolates between ascending positions lo and hi
-    # of pos = (n - 1)·p, so the weight needs the column's n - lo largest
-    # similarities: the k-th and (k+1)-th, or all n rows when n <= k + 1
-    pos = (n - 1) * max(0.0, min(1.0, 1.0 - k / max(n, 1)))
-    lo, hi = math.floor(pos), math.ceil(pos)
-    nearest: dict[str, list[float]] = {}
+
+def _score_columns(
+    facets: list[Facet], scales: dict[str, float | None],
+    weight_sets: list[dict[str, float]], round_digits: int | None,
+) -> list[dict[str, Column]]:
+    """The final pass's expressions over the ``__dist_<name>`` columns, in
+    two stages: the ``__sim_<name>`` similarities, then every combination's
+    ``__score_<j>`` (T7: all of them in one projection) and the rounded
+    ``<name>_sim`` output columns."""
+    out = {}
+    for j, ws in enumerate(weight_sets):
+        total_w = sum(ws.values())
+        num = functools.reduce(
+            lambda a, b: a + b,
+            [F.col(f"__sim_{f.name}") * F.lit(ws[f.name]) for f in facets],
+        )
+        score = num / F.lit(total_w) if total_w else F.lit(0.0)
+        if round_digits is not None:
+            score = F.round(score, round_digits)
+        out[f"__score_{j}"] = score
     for f in facets:
-        limit = max(k if f.scale is None else 0, n - lo if f in estimate else 0)
-        if limit:
-            d = f"__dist_{f.name}"
-            probe = scored.select(d).where(F.col(d).isNotNull()).orderBy(d).limit(limit)
-            nearest[f.name] = [r[0] for r in probe.collect()]
+        sim = F.col(f"__sim_{f.name}")
+        out[f"{f.name}_sim"] = F.round(sim, round_digits) if round_digits is not None else sim
+    return [_sims(facets, scales), out]
 
-    scales = {}
-    for f in facets:
-        # Spark sorts NaN last, so the k-th entry is the k smallest's max
-        auto = nearest.get(f.name, [])[:k]
-        scales[f.name] = f.scale if f.scale is not None else (auto[-1] if auto else None)
-        sim = _similarity(F.col(f"__dist_{f.name}"), scales[f.name], f)
-        scored = scored.withColumn(f"__sim_{f.name}", sim)
 
-    weights = {f.name: 0.0 for f in estimate}  # no rows: nothing to weigh
-    if n:
-        sims = df.sparkSession.sql("VALUES (0)").select(*[
-            F.array(*[
-                _similarity(F.lit(d), scales[f.name], f)
-                for d in nearest[f.name] + [None] * (n - lo - len(nearest[f.name]))
-            ])
-            for f in estimate
-        ]).first()
-        for f, top in zip(estimate, map(sorted, sims)):
-            v_lo, v_hi = top[0], top[hi - lo]  # Percentile.getPercentile
-            weights[f.name] = v_lo if v_lo == v_hi else (hi - pos) * v_lo + (pos - lo) * v_hi
-    return scored, weights
+def _output_columns(request: SearchRequest) -> list[str]:
+    """Per-facet value columns + ``<name>_sim``, then the R1 extra columns."""
+    cols = []
+    for f in request.facets:
+        cols += [*f.value_cols, f"{f.name}_sim"]
+    return list(dict.fromkeys([*cols, *request.extra_columns]))
 
 
 def multi_facet_topk(
@@ -133,51 +272,41 @@ def multi_facet_topk(
     is rounded *before* ranking so cross-engine exp() last-ulp differences
     collapse into exact ties broken by id.
 
-    PROBE → FINAL: the probe pass (``score_facets``) runs its small jobs
-    eagerly and returns scales and estimated weights as numbers; the
-    returned frame is the final pass — scan → project → one TakeOrdered per
-    weight combination, with every scale and weight a literal.  Nothing is
-    persisted, so the result holds no cache and needs no cleanup; the
-    price is that the final pass recomputes the distances the probes saw.
+    PROBE → CANDIDATES | FINAL (module docstring): the probe pass runs its
+    small jobs eagerly; the answer is a local relation read from the
+    probed rows when the TA certificate holds, and otherwise the final
+    pass — scan → project → one TakeOrdered per weight combination.
     """
     facets, k, key = request.facets, request.k, request.key_column
     # a lone facet's weight cancels in Σw·sim/Σw — unless it is 0, which
     # would zero every score — so one facet runs no estimate and weighs 1
-    scored, est = score_facets(df, facets, k, estimate_weights=len(facets) > 1)
+    estimate = len(facets) > 1
+    # the candidate answer needs every facet's sorted access; a facet with
+    # an explicit scale and weight has no probe, so its request keeps the
+    # single final pass
+    carry = None
+    if DEPTH > 0 and all(f.scale is None or (estimate and f.weights is None) for f in facets):
+        value_cols = [c for f in facets for c in f.value_cols]
+        carry = list(dict.fromkeys([key, *value_cols, *request.extra_columns]))
+    probe = _probe(df, facets, k, estimate, carry)
 
-    n_combos = request.n_combinations
-    weight_sets: list[dict[str, float]] = []
-    for j in range(n_combos):
-        weight_sets.append(
-            {f.name: (f.weights[j] if f.weights is not None else est.get(f.name, 1.0)) for f in facets}
-        )
+    weight_sets = [
+        {f.name: (f.weights[j] if f.weights is not None else probe.weights.get(f.name, 1.0)) for f in facets}
+        for j in range(request.n_combinations)
+    ]
+    stages = _score_columns(facets, probe.scales, weight_sets, round_digits)
+    if carry:
+        answer = _candidate_answer(probe, request, weight_sets, stages, round_digits)
+        if answer is not None:
+            return answer
 
-    # T7: every combination's score in one projection over one scan
-    for j, ws in enumerate(weight_sets):
-        total_w = sum(ws.values())
-        num = functools.reduce(
-            lambda a, b: a + b,
-            [F.col(f"__sim_{f.name}") * F.lit(ws[f.name]) for f in facets],
-        )
-        score = num / F.lit(total_w) if total_w else F.lit(0.0)
-        if round_digits is not None:
-            score = F.round(score, round_digits)
-        scored = scored.withColumn(f"__score_{j}", score)
-
-    facet_cols: list = []
-    for f in facets:
-        for c in f.value_cols:
-            facet_cols.append(c)
-        facet_cols.append(f"{f.name}_sim")
-        sim = F.col(f"__sim_{f.name}")
-        scored = scored.withColumn(
-            f"{f.name}_sim", F.round(sim, round_digits) if round_digits is not None else sim
-        )
-
+    scored = probe.base.withColumns(probe.dists)
+    for stage in stages:
+        scored = scored.withColumns(stage)
     # R1 extra columns ride the projection over each combination's k rows
-    out_cols = [F.col(c) for c in dict.fromkeys([*facet_cols, *request.extra_columns])]
+    out_cols = [F.col(c) for c in _output_columns(request)]
     per_combo = []
-    for j in range(n_combos):
+    for j in range(len(weight_sets)):
         top = (
             scored.orderBy(F.col(f"__score_{j}").desc(), F.col(key).asc())
             .limit(k)
@@ -192,6 +321,110 @@ def multi_facet_topk(
     return functools.reduce(lambda a, b: a.unionByName(b), per_combo)
 
 
+def _candidate_answer(
+    probe: _Probe, request: SearchRequest, weight_sets: list[dict[str, float]],
+    stages: list[dict[str, Column]], round_digits: int | None,
+) -> DataFrame | None:
+    """The top-k read from the probed rows, or None when the TA certificate
+    does not hold (module docstring).  The candidates are scored with the
+    final pass's expressions over a local relation of their distances and
+    ranked here, so the key type must order in Python as in Spark."""
+    facets, k, key = request.facets, request.k, request.key_column
+    schema = probe.base.schema
+    if not (
+        _python_ordered(schema[key].dataType)
+        # the bound needs scores that never rise with distance
+        and all(0 < f.decay < math.inf for f in facets)
+        and all(s is None or math.isfinite(s) for s in probe.scales.values())
+        and all(0 <= w < math.inf for ws in weight_sets for w in ws.values())
+    ):
+        return None
+
+    # a row returned by several probes counts once, with as many copies as
+    # the probe that saw it most often: a row that can place lies strictly
+    # inside some probe, which then returned all of its copies
+    copies: dict[Any, list] = {}
+    for f in facets:
+        seen = Counter()
+        for r in probe.rows[f.name]:
+            frozen = _frozen(r)
+            seen[frozen] += 1
+            copies.setdefault(frozen, [r, 0])
+        for frozen, c in seen.items():
+            copies[frozen][1] = max(copies[frozen][1], c)
+    cands = [r for r, c in copies.values() for _ in range(c)]
+    if len(cands) < k:
+        return None
+
+    # one more row holds each facet's D-th distance (NULL where the probe
+    # returned fewer rows); its scores are the bounds τ_j
+    table = pa.table({
+        f"__dist_{f.name}": pa.array(
+            [r[f"__dist_{f.name}"] for r in cands] + [probe.bounds[f.name]], pa.float64()
+        )
+        for f in facets
+    })
+    scored = probe.base.sparkSession.createDataFrame(table)
+    for stage in stages:
+        scored = scored.withColumns(stage)
+    score_cols = [f"__score_{j}" for j in range(len(weight_sets))]
+    sim_cols = [f"{f.name}_sim" for f in facets]
+    scored = scored.select(*score_cols, *sim_cols)
+    *values, taus = scored.collect()
+
+    # Spark ranks a NaN score first; every NaN-distance row is a candidate
+    # unless a probe returned only NaN rows, whose NaN bound fails the test
+    eps = 10.0 ** -round_digits if round_digits is not None else 1e-9
+    out_cols = _output_columns(request)
+    sim_at = {c: len(score_cols) + i for i, c in enumerate(sim_cols)}
+    out_rows = []
+    for j in range(len(weight_sets)):
+        order = sorted(range(len(cands)), key=lambda i: _rank_key(values[i][j], cands[i][key]))[:k]
+        if not values[order[-1]][j] > taus[j] + eps:
+            return None
+        for i in order:
+            r, v = cands[i], values[i]
+            out_rows.append((j, r[key], v[j], *[v[sim_at[c]] if c in sim_at else r[c] for c in out_cols]))
+
+    fields = {f.name: f for f in scored.schema.fields}
+    out_schema = StructType([
+        StructField("combo", IntegerType(), False),
+        schema[key],
+        StructField("score", DoubleType(), any(fields[c].nullable for c in score_cols)),
+        *[fields[c] if c in sim_at else schema[c] for c in out_cols],
+    ])
+    arrow = LocalDataToArrowConversion.convert(out_rows, out_schema, False)
+    return probe.base.sparkSession.createDataFrame(arrow, schema=out_schema)
+
+
+def _python_ordered(t) -> bool:
+    """Key types whose Python order is Spark's ascending order."""
+    if isinstance(t, StringType):
+        return t.collation == "UTF8_BINARY"  # UTF-8 bytes order as code points
+    return isinstance(t, (IntegralType, DateType))
+
+
+def _rank_key(score: float, key: Any) -> tuple:
+    """``ORDER BY score DESC, key ASC`` as Spark sorts: NaN is the largest
+    double and a NULL key the smallest key."""
+    nan = math.isnan(score)
+    return (not nan, 0.0 if nan else -score, key is not None, key)
+
+
+def _frozen(v: Any) -> Any:
+    """A collected value as a hashable one that tells apart exactly the
+    values Spark tells apart (NaN equals NaN, -0.0 is not 0.0)."""
+    if isinstance(v, float):
+        return v.hex()
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_frozen, v))
+    if isinstance(v, dict):
+        return tuple((_frozen(a), _frozen(b)) for a, b in v.items())
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
 def multi_source_topk(
     frames: dict[str, DataFrame],
     facets: list[Facet],
@@ -199,74 +432,24 @@ def multi_source_topk(
     k: int,
     weights: dict[str, float] | None = None,
     round_digits: int | None = 6,
-    prune_m: int | None = None,
 ) -> DataFrame:
     """General path: facets over *different* tables (the reference's vertical
     per-attribute maps, ``Coordinator.java:75``).  Each frame is scored
     independently; the per-facet (key, sim) rows union into one relation and
     aggregate with ONE key-grouped shuffle — absent entities produce no row
     for that facet, so their sim coalesces to 0
-    (RankAggregator.java:239-241).
-
-    Per-facet frames can be pre-pruned to their M = 1000·k best candidates
-    (INFLATION_FACTOR, Constants.java:44), bounding the unioned row count —
-    the exact analog of the reference's bounded candidate queues.
-    """
+    (RankAggregator.java:239-241)."""
     sim_frames = []
     for f in facets:
-        df = frames[f.name]
-        scored, _ = score_facets(df, [f], k)
-        frame = scored.select(
+        scored, _ = score_facets(frames[f.name], [f], k)
+        sim_frames.append(scored.select(
             F.col(key_column),
             F.lit(f.name).alias("__facet"),
             F.col(f"__sim_{f.name}").alias("__sim"),
-        )
-        if prune_m is not None:
-            # INFLATION_FACTOR candidate pruning (Constants.java:44,
-            # SearchHandler.java:318-320): keep each facet's M best
-            # candidates before aggregation.  With M = 1000·k this matches
-            # the reference's bounded queues — and like the reference, an
-            # entity outside every facet's top-M cannot surface (the
-            # reference's approximate-tail caveat, SURVEY §4); omit prune_m
-            # for the exact path.
-            frame = frame.orderBy(F.col("__sim").desc(), F.col(key_column).asc()).limit(prune_m)
-        sim_frames.append(frame)
+        ))
     return aggregate_sim_frames(
         sim_frames, [f.name for f in facets], key_column, k, weights, round_digits
     )
-
-
-INFLATION_FACTOR = 1000  # Constants.java:44 — candidate bound M = 1000·k
-
-
-def multi_source_topk_approximate(
-    frames: dict[str, DataFrame],
-    facets: list[Facet],
-    key_column: str,
-    k: int,
-    weights: dict[str, float] | None = None,
-    round_digits: int | None = 6,
-    prune_m: int | None = None,
-) -> DataFrame:
-    """T8 approximate tail fill (``ThresholdRanking.java:294-310``,
-    ``NoRandomAccessRanking.java:252-269``): bounded-candidate ranking where
-    incompletely-seen entities still surface, ranked by their LOWER-BOUND
-    aggregate score (unseen facets contribute 0 — the same fill-in the
-    reference reports when its queues dry up), with a per-row ``exact``
-    flag: true iff every facet scored the entity.
-
-    The Spark analog of "emission stalled" is the per-facet candidate bound:
-    each facet keeps its M = INFLATION_FACTOR·k best candidates
-    (``Constants.java:44``), so an entity inside some facets' top-M but
-    outside others' gets a partial (lower-bound) score and exact=false —
-    exactly the reference's approximate tail, without its timeout
-    nondeterminism.  ``prune_m=None`` uses the reference default M."""
-    m = prune_m if prune_m is not None else INFLATION_FACTOR * k
-    out = multi_source_topk(frames, facets, key_column, k, weights, round_digits, prune_m=m)
-    exact = functools.reduce(
-        lambda a, b: a & b, [F.col(f"{f.name}_sim").isNotNull() for f in facets]
-    )
-    return out.withColumn("exact", exact)
 
 
 def aggregate_sim_frames(

@@ -4,11 +4,9 @@
 
 Per weight combination the reference emits: the weights used, and ranked
 results each carrying (id, score, exact flag, rank, per-attribute
-{name, value, score}, optional extra attributes).  The exact-path Spark
-build computes full scores, so ``exact`` defaults to true; the T8
-approximate path (``rank_agg.multi_source_topk_approximate``,
-``ThresholdRanking.java:294-310``) attaches a per-row ``exact`` column —
-false for lower-bound-scored tail entities — which is honored here.
+{name, value, score}, optional extra attributes).  Every Spark search
+path is exact — the candidate answer only stands when the TA certificate
+proves it (``rank_agg``) — so ``exact`` is always true.
 """
 
 from __future__ import annotations
@@ -59,7 +57,7 @@ def format_response(
                     "id": _jsonable(r[request.key_column]),
                     "rank": rank,
                     "score": r["score"],
-                    "exact": bool(r["exact"]) if "exact" in r.__fields__ else True,
+                    "exact": True,
                     "attributes": attributes,
                     "extraAttributes": {
                         c: _jsonable(r[c]) for c in request.extra_columns if c in r.__fields__

@@ -39,9 +39,12 @@ from simsearch_spark.plans.spec import Facet
 
 def operands(facet: Facet, cols: list[Column]) -> list[Column]:
     """A row's value columns as distance operands: a textual value becomes
-    its q-gram set, every other kind is compared as stored."""
+    its q-gram set, a categorical one its distinct tokens, every other kind
+    is compared as stored."""
     if facet.kind == "textual":
         return [qgrams(cols[0], facet.qgram)]
+    if facet.kind == "categorical":
+        return [F.array_distinct(cols[0])]
     return cols
 
 

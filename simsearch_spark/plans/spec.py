@@ -69,7 +69,10 @@ class Facet:
 class SearchRequest:
     """k + facets (+ algorithm accepted for parity, recorded not dispatched:
     TA/NRA/PRA produce identical results on complete data — SURVEY.md §2.4 —
-    so the Spark build has one exact execution strategy)."""
+    so the Spark build has one exact execution strategy, TA's stopping
+    rule: the answer is read from the probed facets' nearest rows when the
+    threshold certificate proves no unseen row can place, and a final pass
+    over the table runs otherwise — see ``operators.rank_agg``)."""
 
     table: str
     key_column: str

@@ -233,8 +233,8 @@ def execute_search_sql(
     spark: SparkSession, df: DataFrame, table: str, sql: str, key_column: str
 ) -> DataFrame:
     """Parse + run: the reference's SQL terminal path (Runner.java:136-174 →
-    SearchHandler), collapsed to parse → multi_facet_topk, whose final
-    projection carries the extra SELECT columns (R1)."""
+    SearchHandler), collapsed to parse → multi_facet_topk, whose probed
+    rows or final projection carry the extra SELECT columns (R1)."""
     from simsearch_spark.operators.rank_agg import multi_facet_topk
 
     return multi_facet_topk(df, parse_search_sql(df, table, sql, key_column).request)

@@ -7,6 +7,7 @@ before it shows up as a benchmark cliff at scale.
 
 from pyspark.sql import functions as F
 
+from simsearch_spark.operators import rank_agg
 from simsearch_spark.operators.rank_agg import multi_facet_topk
 from simsearch_spark.operators.topk import single_facet_topk
 from simsearch_spark.plans.spec import Facet, SearchRequest
@@ -45,10 +46,12 @@ def test_facet_topk_column_pruning(spark, sf_dir):
     assert "c_acctbal" in plan
 
 
-def test_multi_attr_no_shuffle(spark, sf_dir):
+def test_multi_attr_no_shuffle(spark, sf_dir, monkeypatch):
     """Single-table multi-facet aggregation: no hash-partition shuffle —
-    wide projection with literal scales and weights + TakeOrdered per
-    combination."""
+    the final pass is a wide projection with literal scales and weights +
+    TakeOrdered per combination (forced: ``DEPTH = 0`` turns the candidate
+    answer off)."""
+    monkeypatch.setattr(rank_agg, "DEPTH", 0)
     cust = load_table(spark, sf_dir, "customer")
     req = SearchRequest(
         table="customer",
@@ -66,12 +69,15 @@ def test_multi_attr_no_shuffle(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_result_rows_never_join_back_to_the_table(spark, sf_dir):
+def test_result_rows_never_join_back_to_the_table(spark, sf_dir, monkeypatch):
     """After the top-k, operators work on the k result rows only: a
     Singleton search takes its auto scale from its own rows, and a SQL
-    search's extra SELECT columns ride the final projection — neither plan
-    joins, broadcasts or scans the table a second time."""
+    search's extra SELECT columns ride the final projection (forced by
+    ``DEPTH = 0``) — neither plan joins, broadcasts or scans the table a
+    second time."""
     from simsearch_spark.plans.sql_frontend import execute_search_sql
+
+    monkeypatch.setattr(rank_agg, "DEPTH", 0)
 
     cust = load_table(spark, sf_dir, "customer")
     facet = Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0)

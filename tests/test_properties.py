@@ -133,11 +133,10 @@ def test_multi_source_aggregation_has_no_join(spark, sf_dir):
         Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=500.0),
         Facet(name="nm", kind="textual", value_cols=["c_name"], query_value="Customer#0"),
     ]
-    for m in (None, 100):
-        out = multi_source_topk({"bal": cust, "nm": cust}, facets, "c_custkey", 5, prune_m=m)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in plan and "FullOuter" not in plan, plan
-        assert out.count() == 5
+    out = multi_source_topk({"bal": cust, "nm": cust}, facets, "c_custkey", 5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan and "FullOuter" not in plan, plan
+    assert out.count() == 5
 
 
 def test_corpus_quality_filter_buckets(spark, sf_dir):

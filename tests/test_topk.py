@@ -138,82 +138,6 @@ def test_kmax_validation(spark):
         pass
 
 
-def test_multi_source_prune_m_matches_exact_when_m_large(spark, sf_dir):
-    """With M >= per-facet candidate counts, INFLATION_FACTOR pruning must
-    not change the result; with tiny M it bounds each facet's reach (the
-    reference's approximate-tail behavior, SURVEY §4)."""
-    from simsearch_spark.sources.registry import load_table
-
-    cust = load_table(spark, sf_dir, "customer")
-    facets = [
-        Facet(name="bal", kind="numerical", value_cols=["c_acctbal"], query_value=1000.0),
-        Facet(name="nat", kind="numerical", value_cols=["c_nationkey"], query_value=10.0),
-    ]
-    frames = {"bal": cust, "nat": cust}
-    exact = [(r.c_custkey, r.score) for r in
-             multi_source_topk(frames, facets, "c_custkey", 5).collect()]
-    pruned = [(r.c_custkey, r.score) for r in
-              multi_source_topk(frames, facets, "c_custkey", 5, prune_m=1_000_000).collect()]
-    assert exact == pruned
-    tiny = multi_source_topk(frames, facets, "c_custkey", 5, prune_m=5).collect()
-    assert len(tiny) == 5  # still fills k from the bounded candidate pool
-
-
-def test_t8_approximate_tail_fill_flags_lower_bound_rows(spark):
-    """T8 (ThresholdRanking.java:294-310): entities outside some facet's
-    candidate bound still surface with a lower-bound score and exact=false;
-    fully-scored entities are exact=true; an ample bound reproduces the
-    exact path with every row exact."""
-    from simsearch_spark.operators.rank_agg import multi_source_topk_approximate
-
-    a = spark.createDataFrame(
-        [(1, 5.0), (2, 4.9), (3, 0.0)], "id long, x double"
-    )
-    b = spark.createDataFrame(
-        [(3, 7.0), (1, 6.9), (2, 0.0)], "id long, y double"
-    )
-    facets = [
-        Facet(name="fx", kind="numerical", value_cols=["x"], query_value=5.0, scale=1.0),
-        Facet(name="fy", kind="numerical", value_cols=["y"], query_value=7.0, scale=1.0),
-    ]
-    # prune_m=2 keeps each facet's 2 best: id=3 drops from fx, id=2 from fy
-    rows = {
-        r.id: r
-        for r in multi_source_topk_approximate(
-            {"fx": a, "fy": b}, facets, "id", k=3, prune_m=2
-        ).collect()
-    }
-    assert rows[1].exact  # both facets saw it
-    assert not rows[2].exact and rows[2].fy_sim is None  # fy unseen -> lower bound
-    assert not rows[3].exact and rows[3].fx_sim is None
-    # reference-default bound (1000*k) covers everything here: all exact and
-    # identical to the exact path
-    ample = multi_source_topk_approximate({"fx": a, "fy": b}, facets, "id", k=3)
-    assert all(r.exact for r in ample.collect())
-    exact_path = multi_source_topk({"fx": a, "fy": b}, facets, "id", k=3)
-    assert [(r.id, r.score) for r in ample.collect()] == [
-        (r.id, r.score) for r in exact_path.collect()
-    ]
-
-
-def test_t8_exact_flag_reaches_response(spark):
-    """The per-row exact flag must surface in the reference JSON shape."""
-    from simsearch_spark.operators.response import format_response
-    from simsearch_spark.operators.rank_agg import multi_source_topk_approximate
-
-    a = spark.createDataFrame([(1, 5.0), (2, 4.9), (3, 0.0)], "id long, x double")
-    b = spark.createDataFrame([(3, 7.0), (1, 6.9), (2, 0.0)], "id long, y double")
-    facets = [
-        Facet(name="fx", kind="numerical", value_cols=["x"], query_value=5.0, scale=1.0),
-        Facet(name="fy", kind="numerical", value_cols=["y"], query_value=7.0, scale=1.0),
-    ]
-    out = multi_source_topk_approximate({"fx": a, "fy": b}, facets, "id", k=3, prune_m=2)
-    req = SearchRequest(table="t", key_column="id", facets=facets, k=3)
-    resp = format_response(out, req, weights_used={0: {"fx": 1.0, "fy": 1.0}})
-    flags = {r["id"]: r["exact"] for r in resp[0]["rankedResults"]}
-    assert flags[1] is True and flags[2] is False and flags[3] is False
-
-
 def test_multi_facet_search_persists_nothing(spark, sf_dir, monkeypatch):
     """Auto-scaled, auto-weighted and multi-combination searches cache no
     frame: the probe pass collects numbers and the final plan is scan →
@@ -253,9 +177,10 @@ def test_multi_facet_search_persists_nothing(spark, sf_dir, monkeypatch):
 
 
 def test_search_jobs_bounded_by_probed_facets(spark, sf_dir):
-    """``Catalog.search`` launches at most P + 3 Spark jobs, P = facets
-    probed (auto scale or estimated weight): P probes, a row count (two jobs
-    under AQE) when a weight is estimated, and the final TakeOrdered."""
+    """``Catalog.search`` launches at most P Spark jobs, P = facets probed
+    (auto scale or estimated weight), when the candidate answer stands:
+    the P probes and no final pass.  An estimated weight adds a row count
+    (two jobs under AQE)."""
     from simsearch_spark.sources.catalog import Catalog
 
     cat = Catalog(spark)
@@ -273,10 +198,11 @@ def test_search_jobs_bounded_by_probed_facets(spark, sf_dir):
             sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert jobs("probe-one", {"bal": 1000.0}) <= 1 + 3
+    assert jobs("probe-one", {"bal": 1000.0}) <= 1
     three = {"bal": 1000.0, "nat": 10.0, "nm": "Customer#000000007"}
     weights = {"bal": [0.5], "nat": [0.3], "nm": [0.2]}
-    assert jobs("probe-three", three, weights) <= 3 + 3
+    assert jobs("probe-three", three, weights) <= 3
+    assert jobs("probe-estimated", {"bal": 1000.0, "nm": "Customer#000000007"}) <= 2 + 2
 
 
 _PROBE_VALUES = st.one_of(st.none(), st.sampled_from([0.0, 1.0, 2.5, 4.0, 7.0]))
