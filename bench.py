@@ -10,8 +10,8 @@ runs 2-4 — C2 compiles on background threads, so a single "warm" run still
 carries multi-second compile jitter (observed 52 s vs 74 s totals for an
 identical tree) and the min is the number that scales with data, not with
 Janino.  The per-query MEDIAN of runs 2-4 (a true warm median, not
-contaminated by the cold run) plus run 1 and the layout timings go to
-BENCH_DETAIL.json, committed per round.
+contaminated by the cold run) plus run 1 and the mount/serve timings go
+to BENCH_DETAIL.json, committed per round.
 """
 
 from __future__ import annotations
@@ -52,107 +52,6 @@ def _best_of(n: int, fn) -> float:
         fn()
         times.append(time.perf_counter() - t0)
     return round(min(times), 3)
-
-
-def run_layouts(spark) -> dict[str, float]:
-    """Materialize the two SCALE.md layout contracts at bench scale and time
-    the partition-pruned read path against its full-scan dual — the measured
-    counterpart of tests/test_layouts.py's plan asserts.  Build cost is
-    reported separately (a mount-time artifact at scale, paid once, not per
-    query).  Each timed path is warmed once, then best-of-2.
-
-    Read the numbers honestly: at bench SF the whole table fits a sub-second
-    scan, so the pruned path's fixed overhead (partition listing + the extra
-    candidate-resolution job) exceeds what pruning saves — the same shape
-    SCALE.md §4 records for banded SimHash.  What the artifact demonstrates
-    is that the pruned path is *exact* (asserted against the scan dual every
-    run) and *constant-overhead*: its cost tracks the touched buckets/cells,
-    not table size, which is the 100×-scale argument."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from simsearch_spark.functions import measures
-    from simsearch_spark.functions.text import tokenize
-    from simsearch_spark.operators.setsim import (
-        jaccard_topk_pruned,
-        postings_candidates,
-        token_postings,
-    )
-    from simsearch_spark.operators.spatial import grid_knn, with_grid_cells
-    from simsearch_spark.sources.registry import load_table
-
-    out: dict[str, float] = {}
-    root = tempfile.mkdtemp(prefix="simsearch_layouts_")
-    try:
-        # --- spatial grid: partitionBy(cell_x, cell_y) vs brute scan ---
-        cell, qx, qy, k = 15.0, 12.0, 40.0, 10
-        geo = load_table(spark, SF_DIR, "customer").select(
-            F.col("c_custkey").alias("id"),
-            (F.abs(F.col("c_acctbal")) % 360 - 180).alias("lon"),
-            ((F.col("c_custkey") % 180) - 90).cast("double").alias("lat"),
-        )
-        grid_path = f"{root}/geo_cells"
-        t0 = time.perf_counter()
-        (
-            with_grid_cells(geo, "lon", "lat", cell)
-            .repartition("cell_x", "cell_y")
-            .write.partitionBy("cell_x", "cell_y")
-            .parquet(grid_path)
-        )
-        out["grid_build"] = round(time.perf_counter() - t0, 3)
-        part = spark.read.parquet(grid_path)
-
-        def knn_pruned():
-            return grid_knn(part, "id", "lon", "lat", qx, qy, k, cell_deg=cell).collect()
-
-        def knn_brute():
-            dist = measures.planar_distance(
-                F.col("lon"), F.col("lat"), F.lit(qx), F.lit(qy)
-            )
-            return (
-                geo.withColumn("dist", dist)
-                .orderBy(F.col("dist").asc(), F.col("id").asc())
-                .limit(k)
-                .collect()
-            )
-
-        assert [(r.id, r.dist) for r in knn_pruned()] == [
-            (r.id, r.dist) for r in knn_brute()
-        ]
-        out["grid_knn_pruned"] = _best_of(2, knn_pruned)
-        out["spatial_knn_scan"] = _best_of(2, knn_brute)
-
-        # --- token postings: partitionBy(tok_bucket64) vs arrays_overlap scan ---
-        docs = load_table(spark, SF_DIR, "documents").withColumn(
-            "tokens", tokenize(F.col("text"))
-        )
-        post_path = f"{root}/postings"
-        t0 = time.perf_counter()
-        (
-            token_postings(docs, "doc_id", "tokens")
-            .repartition("tok_bucket64")
-            .write.partitionBy("tok_bucket64")
-            .parquet(post_path)
-        )
-        out["postings_build"] = round(time.perf_counter() - t0, 3)
-        postings = spark.read.parquet(post_path)
-        q = ["spark", "join", "table", "window"]
-
-        def topk_postings():
-            cand = postings_candidates(postings, q, "doc_id")
-            return jaccard_topk_pruned(docs, "doc_id", "tokens", q, 8, candidates=cand).collect()
-
-        def topk_scan():
-            return jaccard_topk_pruned(docs, "doc_id", "tokens", q, 8).collect()
-
-        assert [r.doc_id for r in topk_postings()] == [r.doc_id for r in topk_scan()]
-        out["jaccard_topk_postings"] = _best_of(2, topk_postings)
-        out["jaccard_topk_scan"] = _best_of(2, topk_scan)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 def run_mount(spark) -> dict[str, float]:
@@ -318,12 +217,11 @@ def main() -> None:
     warms = [run_all(spark) for _ in range(3)]
     warm = {k: round(min(w[k] for w in warms), 2) for k in warms[0]}
     med = {k: round(sorted(w[k] for w in warms)[1], 2) for k in warms[0]}
-    layouts = run_layouts(spark)
     mount_times = run_mount(spark)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # The driver records only the LAST 2000 chars of stdout: the full
-    # cold/median/layout detail goes to BENCH_DETAIL.json (committed per
+    # cold/median/mount detail goes to BENCH_DETAIL.json (committed per
     # round), and the stdout line is compact, scalars first, the headline
     # MIN map last — so the surviving tail is metric-consistent with
     # rounds 1-6 and the median lives in the repo artifact.
@@ -344,7 +242,6 @@ def main() -> None:
         "queries_min": warm,
         "queries_median": med,
         "queries_cold": cold,
-        "layouts": layouts,
         "mount": mount_times,
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -1078,8 +1078,7 @@ def stream_append_codes(
     with the same codegen expressions as the batch path and appends its
     partitioned code rows.  Because encoding is
     a pure row-local function of the frozen artifacts, the final codes
-    table is IDENTICAL for any micro-batch split of any arrival order —
-    the same split-invariance the LSH/qsketch streaming fronts guarantee
+    table is IDENTICAL for any micro-batch split of any arrival order
     (pinned in tests/test_mount.py).  The manifest count is refreshed on
     each batch commit.
 

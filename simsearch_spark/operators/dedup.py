@@ -446,8 +446,7 @@ def minhash_lsh_pairs(
     bucket_cap: hot-bucket guard (``LSH_BUCKET_CAP``) — each (band_idx,
     band_hash) bucket contributes candidates from at most its ``cap``
     lowest-id members; a boilerplate cluster can no longer turn one bucket
-    key into a quadratic join key.  The streaming dual
-    (streaming/lshdedup.py) applies the same cap to its keyed state.
+    key into a quadratic join key.
 
     hot_mode: what happens ABOVE the cap (VERDICT r10 task 2).
     ``"cap"`` (default): drop-with-count — overflow members are dropped
@@ -557,7 +556,7 @@ def verify_shingle_pairs(
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (id_a, id_b) pairs against a
     (id, shingles, ...) signature frame — the shared tail of the batch LSH
-    join and the streaming candidate sink (streaming/lshdedup.py)."""
+    join and the mounted dedup append (mount/dedup.py)."""
     shingle_map = banded.select(F.col(id_col), F.col("shingles"))
     ver = (
         cand.join(shingle_map.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
@@ -777,8 +776,7 @@ def embedding_cosine_pairs(
     lowest-id members, so an adversarial near-constant corpus (every sign
     bit equal → one bucket) is bounded at cap²/2 pairs in a cap-row task
     instead of one quadratic straggler.  Overflow members are dropped from
-    that bucket (drop-with-count; see LSH_BUCKET_CAP).  The streaming dual
-    applies the same cap to its keyed state.
+    that bucket (drop-with-count; see LSH_BUCKET_CAP).
 
     blocked=True (default): distributed block-tiled pair join.  Rows are
     hashed into B ≈ n/block_rows blocks; each unordered block pair (p ≤ q)

@@ -16,11 +16,11 @@ so FIXED parameters degenerate as the corpus grows —
 
 These functions turn (corpus size, target threshold) into parameters once,
 at mount time — like IVF centroids or the bigram LM, a profile artifact —
-and both the batch operators (operators/dedup.py) and the streaming fronts
-(streaming/lshdedup.py) accept them unchanged.  The sign-LSH front's
-per-band independent keys (ann.py ``lsh_band_keys``) remove the old
-``bands·band_bits ≤ 63`` single-key packing cap, so band_bits can keep
-growing to any corpus size (2^40 buckets at 10^12 rows is 40 bits/band).
+and the batch operators (operators/dedup.py) accept them unchanged.  The
+sign-LSH front's per-band independent keys (ann.py ``lsh_band_keys``)
+remove the old ``bands·band_bits ≤ 63`` single-key packing cap, so
+band_bits can keep growing to any corpus size (2^40 buckets at 10^12 rows
+is 40 bits/band).
 
 All public knowledge: the banding amplification construction and its
 S-curve are textbook MMDS; sign-LSH collision probability

@@ -13,8 +13,7 @@ partitioning, or arrival time:
 - batch: one ``TakeOrderedAndProject`` (per-partition top-k heaps, O(k)
   driver) — no shuffle of the corpus;
 - merge: bottom-k of a union == bottom-k of the per-part bottom-k's, so
-  shards/partitions/streams combine losslessly (the mergeability the
-  streaming front relies on, streaming/qsketch.py);
+  shards and partitions combine losslessly;
 - oracle: the identical ORDER BY hash LIMIT k is plain SQL.
 
 Quantile estimate = the exact linear-interpolated quantile OF THE SAMPLE
@@ -46,15 +45,10 @@ def bottomk_sample(df: DataFrame, key_col: str, val_col: str, k: int) -> DataFra
     NULL keys and NULL/NaN values are outside the sampling domain (the
     quantile operators' shared contract).
 
-    PRECONDITION (ADVICE r10): ``key_col`` must be unique per row — the
-    engine's sampling keys are row identities (doc_id, event_id).  With
-    duplicate keys the batch sample keeps duplicate rows per key while the
-    streaming dual (streaming/qsketch.py) keeps one deduped member per
-    (hash, key), so the documented latest-view == batch-sample invariant
-    holds only on unique keys.  Both sides are still individually
-    deterministic under duplicates: this side orders by (_h, _k, _v); the
-    streaming side keeps the MINIMUM value per key (arrival-order
-    invariant), which coincides with this ordering's first row per key."""
+    ``key_col`` is expected to be unique per row — the engine's sampling
+    keys are row identities (doc_id, event_id).  Under duplicate keys the
+    sample keeps duplicate rows per key and stays deterministic: rows order
+    by (_h, _k, _v)."""
     key = F.col(key_col).cast("string")
     v = F.col(val_col).cast("double")
     return (

@@ -157,115 +157,3 @@ def jaccard_self_join_naive(df: DataFrame, id_col: str, tokens_col: str, thresho
         .where(F.col("jaccard") >= float(threshold))
         .select("id_a", "id_b", "overlap", "size_a", "size_b", "jaccard")
     )
-
-
-def token_postings(df: DataFrame, id_col: str, tokens_col: str, n_buckets: int = 64) -> DataFrame:
-    """Inverted-list layout (token, id) with a hash bucket column — the
-    mount-time dual of the reference's in-heap inverted index
-    (CategoricalSimSearch.java:126-320).  Write it
-    ``partitionBy("tok_bucket{n}")``: a search then reads only the buckets
-    its query tokens hash into (partition pruning), never the full posting
-    list.  The bucket count is embedded in the COLUMN NAME so the layout is
-    self-describing — a reader can never silently prune with the wrong
-    modulus (which would drop true partitions and return wrong results)."""
-    return (
-        df.select(F.col(id_col), F.explode(tokens_col).alias("token"))
-        .withColumn(
-            f"tok_bucket{n_buckets}",
-            F.pmod(F.xxhash64("token"), F.lit(n_buckets)).cast("int"),
-        )
-    )
-
-
-def postings_candidates(postings: DataFrame, query_tokens: list[str], id_col: str) -> DataFrame:
-    """Candidate ids sharing ≥1 query token, read from a (partitioned)
-    postings table.  The bucket modulus is parsed from the layout's own
-    ``tok_bucket{n}`` column (written by token_postings), and the bucket
-    values are computed with the same xxhash64 in a bounded |query|-row job,
-    so the ``tok_bucket{n} IN (...)`` literal predicate prunes partitions at
-    the scan and can never disagree with the stored layout."""
-    import re
-
-    bucket_cols = [c for c in postings.columns if re.fullmatch(r"tok_bucket\d+", c)]
-    if len(bucket_cols) != 1:
-        raise ValueError(
-            f"postings table must carry exactly one tok_bucket<n> column, found {bucket_cols}"
-        )
-    bucket_col = bucket_cols[0]
-    n_buckets = int(bucket_col[len("tok_bucket"):])
-    spark = postings.sparkSession
-    toks = sorted(set(query_tokens))
-    bdf = (
-        spark.createDataFrame([(t,) for t in toks], "token string")
-        .select(F.pmod(F.xxhash64("token"), F.lit(n_buckets)).cast("int").alias("b"))
-        .distinct()
-    )
-    buckets = [r.b for r in bdf.collect()]
-    return (
-        postings.where(F.col(bucket_col).isin(buckets) & F.col("token").isin(toks))
-        .select(id_col)
-        .distinct()
-    )
-
-
-def jaccard_topk_pruned(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    query_tokens: list[str],
-    k: int,
-    decay: float = 0.05,
-    scale: float | None = None,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """K4 categorical top-k with inverted-list pruning — the *search* dual of
-    the set-sim join (the reference walks its inverted index with exactly
-    this structure, CategoricalSimSearch.java:126-320).
-
-    Only rows sharing >=1 query token can have Jaccard distance < 1, so the
-    scan is pre-filtered with ``arrays_overlap`` — at scale, a token-bucketed
-    or inverted-list table turns this into pruned reads.  Exact: if fewer
-    than k rows share a token, the tail is filled with dist=1 rows by id
-    (their similarity is 0 by the disjoint-set rule, matching the full-scan
-    ranking's tie-break).  Output matches `single_facet_topk` on a
-    categorical facet row-for-row (equality-tested).
-    """
-    from simsearch_spark.functions import measures
-    from simsearch_spark.operators.topk import scale_over_rows
-
-    qset = F.array(*[F.lit(t) for t in sorted(set(query_tokens))])
-    base = df.where(F.col(tokens_col).isNotNull())
-    if candidates is not None:
-        # ids pre-resolved from a partition-pruned postings table
-        # (token_postings/postings_candidates) — identical candidate set to
-        # the arrays_overlap scan, reads only the query tokens' buckets
-        sharing = base.join(candidates, on=id_col, how="left_semi")
-    else:
-        sharing = base.where(F.arrays_overlap(F.col(tokens_col), qset))
-    scored = sharing.withColumn("dist", measures.jaccard_distance(F.col(tokens_col), qset))
-
-    head = scored.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
-    n_head = head.count()
-    if n_head < k:
-        # tail fill: disjoint rows all sit at dist exactly 1.0, sim 0
-        tail = (
-            base.join(sharing.select(id_col), on=id_col, how="left_anti")
-            .withColumn("dist", F.lit(1.0))
-            .orderBy(F.col(id_col).asc())
-            .limit(k - n_head)
-        )
-        scored = head.unionByName(tail.select(head.columns))
-    else:
-        scored = head
-
-    order = [F.col("dist").asc(), F.col(id_col).asc()]
-    # the scale over the at most k rows equals the full-scan k-th distance:
-    # every excluded row has dist 1.0 >= any included one
-    scale_col = scale_over_rows(order) if scale is None else F.lit(float(scale))
-    sim = F.round(measures.jaccard_similarity_scored(F.col("dist"), scale_col, decay), 6)
-    return (
-        scored.orderBy(*order)
-        .limit(k)
-        .withColumn("score", sim)
-        .select(id_col, tokens_col, "dist", "score")
-    )

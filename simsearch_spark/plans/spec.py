@@ -88,6 +88,11 @@ class SearchRequest:
             raise ValueError("k must be <= 50 for multi-attribute queries (K_MAX)")
         if self.k <= 0:
             raise ValueError("k must be positive")
+        # T6 validation (Validator.java:14-24); NaN fails the range test
+        for f in self.facets:
+            for w in f.weights or ():
+                if not 0.0 <= w <= 1.0:
+                    raise ValueError(f"weight {w} of facet {f.name!r} outside [0, 1]")
 
     @property
     def n_combinations(self) -> int:

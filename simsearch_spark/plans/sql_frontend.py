@@ -41,6 +41,7 @@ _SQL_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
+_WORD_RE = re.compile(r"\w+")
 _SIM_COND_RE = re.compile(r"^\s*(?P<col>\w+)\s*~=\s*(?P<val>.+?)\s*$", re.DOTALL)
 #: tolerant of the stray trailing ')' the reference corpus contains
 _POINT_RE = re.compile(r"^POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)+$", re.IGNORECASE)
@@ -64,31 +65,38 @@ class ParsedQuery:
 
 
 def _split_top_level_and(where: str) -> list[str]:
-    """Split on ANDs that are not inside quotes/parens and not the AND of a
-    BETWEEN bound (the reference treats the similarity conjunction the same
-    way, SqlParser.java:104-161)."""
-    # shield "BETWEEN x AND y" so its AND doesn't split the predicate
-    where = re.sub(
-        r"(BETWEEN\s+\S+)\s+AND\s+", r"\1 __BETWEEN_AND__ ", where, flags=re.IGNORECASE
-    )
-    parts, depth, in_str, cur = [], 0, False, []
-    tokens = re.split(r"(\s+AND\s+)", where, flags=re.IGNORECASE)
-    for tok in tokens:
-        if re.fullmatch(r"\s+AND\s+", tok, flags=re.IGNORECASE) and depth == 0 and not in_str:
-            parts.append("".join(cur))
-            cur = []
+    """Split on the ANDs outside quotes and parentheses (the reference
+    treats the similarity conjunction the same way, SqlParser.java:104-161).
+    A top-level BETWEEN claims the next top-level AND as its bound, so
+    ``x [NOT] BETWEEN lo AND hi`` stays one predicate whatever ``lo`` is
+    (typed literal, quoted string with spaces)."""
+    parts, start, depth, between, i = [], 0, 0, 0, 0
+    while i < len(where):
+        ch = where[i]
+        if ch in "'\"`":
+            end = where.find(ch, i + 1)
+            i = len(where) if end < 0 else end + 1
             continue
-        for ch in tok:
-            if ch == "'":
-                in_str = not in_str
-            elif ch == "(" and not in_str:
-                depth += 1
-            elif ch == ")" and not in_str:
-                depth -= 1
-        cur.append(tok)
-    if cur:
-        parts.append("".join(cur))
-    return [p.strip().replace("__BETWEEN_AND__", "AND") for p in parts if p.strip()]
+        # at depth 0 whole words are consumed, so a match starts a word
+        word = _WORD_RE.match(where, i) if depth == 0 else None
+        if word:
+            keyword = word.group().upper()
+            if keyword == "BETWEEN":
+                between += 1
+            elif keyword == "AND" and between:
+                between -= 1
+            elif keyword == "AND":
+                parts.append(where[start:i])
+                start = word.end()
+            i = word.end()
+            continue
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        i += 1
+    parts.append(where[start:])
+    return [p.strip() for p in parts if p.strip()]
 
 
 def _parse_value(raw: str):
@@ -208,8 +216,6 @@ def parse_search_sql(
                     f"WEIGHTS combo has {len(ws)} values for {len(facets)} similarity conditions"
                 )
             for i, w in enumerate(ws):
-                if not 0.0 <= w <= 1.0:  # T6 validation (Validator.java:14-24)
-                    raise SqlParseError(f"weight {w} outside [0, 1]")
                 per_facet[i].append(w)
         for f, ws in zip(facets, per_facet):
             f.weights = ws
@@ -222,10 +228,13 @@ def parse_search_sql(
     # P2: pre-filters apply to every facet before scoring
     for f in facets:
         f.filter = " AND ".join(filters) if filters else None
-    req = SearchRequest(
-        table=table, key_column=key_column, facets=facets, k=k,
-        algorithm=algorithm, extra_columns=extra_cols,
-    )
+    try:
+        req = SearchRequest(
+            table=table, key_column=key_column, facets=facets, k=k,
+            algorithm=algorithm, extra_columns=extra_cols,
+        )
+    except ValueError as e:
+        raise SqlParseError(str(e)) from e
     return ParsedQuery(request=req, filters=filters)
 
 

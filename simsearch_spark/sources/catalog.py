@@ -18,7 +18,7 @@ Sources supported (reference parity: ``Coordinator.java:287-360``):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +44,6 @@ class MountedAttribute:
     table: str
     key_column: str
     value_columns: list[str]
-    options: dict = field(default_factory=dict)
 
 
 class Catalog:
@@ -98,7 +97,6 @@ class Catalog:
         key_column: str,
         value_columns: list[str] | str,
         operation: str,
-        **options: Any,
     ) -> MountedAttribute:
         if table not in self._tables:
             raise KeyError(f"unknown source table {table!r}; register_source first")
@@ -116,7 +114,6 @@ class Catalog:
             table=table,
             key_column=key_column,
             value_columns=cols,
-            options=options,
         )
         self._attrs[attribute] = ma
         return ma

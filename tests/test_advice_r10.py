@@ -8,17 +8,12 @@ advisor described:
    reads past end), which the image-side bounded-failure handlers did not
    catch: one malformed payload failed the whole Spark task instead of
    producing the documented failure row.
-2. operators/qsketch.py + streaming/qsketch.py — duplicate keys broke the
-   determinism claim: the streaming dedup kept the LAST-arrival value per
-   (hash, key), so the final state depended on arrival order.  Now it
-   keeps the MINIMUM value (a pure function of the data) and the
-   unique-key precondition is documented on both sides.
-3. queries/media.py — media_meta's GIF/BMP/TIFF synth packs width into
+2. queries/media.py — media_meta's GIF/BMP/TIFF synth packs width into
    16-bit fields; a fixture doc with n_chars > 65535 raised struct.error
    inside the synth UDF and failed the query on 3/4 of doc_ids.  Oversized
    widths now route to the PNG container (32-bit), on both the Spark side
    and the oracle.
-4. operators/dedup.py / queries/ivfpq.py — minhash_lsh_pairs persisted its
+3. operators/dedup.py / queries/ivfpq.py — minhash_lsh_pairs persisted its
    signature/exploded frames (and the ivfpq queries their cents/emb)
    without unpersisting; across a multi-query session cached relations
    accumulated and could trip the CacheManager InMemoryRelation
@@ -86,43 +81,6 @@ def test_truncated_tiff_sniff_degrades_to_unknown_dims(spark):
     )
     (row,) = decode_image_meta(df).collect()
     assert (row.format, row.width, row.height) == ("tiff", -1, -1)
-
-
-def test_qsketch_stream_duplicate_keys_arrival_invariant(spark, tmp_path):
-    """Duplicate keys with different values: the streamed latest view must
-    be the same whichever value arrives first (min-value rule), where the
-    pre-fix last-arrival dedup gave two different final states."""
-    from simsearch_spark.streaming.qsketch import bottomk_sample_stream
-
-    filler = [(i, float(i)) for i in range(10)]
-    dup_lo, dup_hi = (7, 5.0), (7, 100.0)
-
-    views = []
-    for name, batches in (
-        ("qsdup_lo_first", ([dup_lo] + filler, [dup_hi])),
-        ("qsdup_hi_first", ([dup_hi] + filler, [dup_lo])),
-    ):
-        src = str(tmp_path / name)
-        for bi, rows in enumerate(batches):
-            spark.createDataFrame(rows, "doc_id long, v double").write.parquet(
-                f"{src}/b{bi}"
-            )
-        stream = spark.readStream.schema("doc_id long, v double").parquet(src + "/*")
-        out = bottomk_sample_stream(stream, "doc_id", "v", k=64, shards=1)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        snaps = spark.sql(f"SELECT * FROM {name}").collect()
-        last = max(r.seq for r in snaps)
-        views.append(sorted((r.h, r.key, r.val) for r in snaps if r.seq == last))
-
-    assert views[0] == views[1]
-    assert [v for _h, k, v in views[0] if k == "7"] == [5.0]  # min value kept
 
 
 def test_media_meta_oversized_width_routes_png(spark, tmp_path):

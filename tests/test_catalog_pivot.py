@@ -26,6 +26,9 @@ def test_mount_search_lifecycle(catalog):
     assert {e["attribute"] for e in cat} == {"bal", "nm"}
     res = catalog.search({"bal": 1000.0, "nm": "Customer#000000001"}, k=5).collect()
     assert len(res) == 5
+    for bad in (2.0, -1.0, float("nan")):  # T6: weights lie in [0, 1]
+        with pytest.raises(ValueError, match="outside"):
+            catalog.search({"bal": 1000.0, "nm": "x"}, k=5, weights={"bal": [bad], "nm": [0.5]})
     catalog.unmount("nm")
     assert len(catalog.catalog()) == 1
     with pytest.raises(KeyError):
@@ -39,6 +42,8 @@ def test_mount_validation(catalog):
         catalog.mount("a", "customer", "c_custkey", "c_acctbal", "bogus_op")
     with pytest.raises(KeyError):
         catalog.mount("a", "customer", "c_custkey", "no_such_col", "numerical_topk")
+    with pytest.raises(TypeError):  # no per-attribute options: decay/scale are per request
+        catalog.mount("a", "customer", "c_custkey", "c_acctbal", "numerical_topk", decay=0.5)
 
 
 def test_append_and_delete(catalog, spark):
@@ -121,28 +126,3 @@ def test_run_with_timeout(spark):
             lambda: spark.range(2_000_000_000).selectExpr("sum(id * id)").collect(),
             timeout_s=0.4,
         )
-
-
-def test_grid_knn_equals_brute_force(spark, sf_dir):
-    """Ring-expansion grid k-NN is pruning only: results must equal the
-    brute-force top-k for several query points and cell sizes."""
-    from simsearch_spark.operators.spatial import grid_knn
-    from simsearch_spark.functions import measures
-
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.abs(F.col("c_acctbal")) % 360 - 180).alias("lon"),
-        ((F.col("c_custkey") % 180) - 90).cast("double").alias("lat"),
-    )
-    for (qx, qy), cell in [((12.5, -40.0), 5.0), ((12.5, -40.0), 0.5), ((-179.0, 89.0), 2.0)]:
-        brute = [
-            (r.c_custkey, round(r.dist, 9))
-            for r in cust.withColumn(
-                "dist", measures.planar_distance(F.col("lon"), F.col("lat"), F.lit(qx), F.lit(qy))
-            ).orderBy(F.col("dist").asc(), F.col("c_custkey").asc()).limit(7).collect()
-        ]
-        grid = [
-            (r.c_custkey, round(r.dist, 9))
-            for r in grid_knn(cust, "c_custkey", "lon", "lat", qx, qy, 7, cell_deg=cell).collect()
-        ]
-        assert grid == brute, (qx, qy, cell)

@@ -157,24 +157,6 @@ def test_shingle_frame_equals_column_fn(spark, sf_dir):
     assert col_fn == pandas_fn
 
 
-def test_jaccard_topk_pruned_equals_full_scan(spark, sf_dir):
-    """Inverted-list pruning must reproduce the full-scan categorical top-k
-    exactly — including the dist=1 tail-fill when few rows share tokens."""
-    from simsearch_spark.functions.text import tokenize
-    from simsearch_spark.operators.setsim import jaccard_topk_pruned
-    from simsearch_spark.operators.topk import single_facet_topk
-    from simsearch_spark.plans.spec import Facet
-
-    docs = load_table(spark, sf_dir, "documents").withColumn("tokens", tokenize(F.col("text")))
-    for q in (["spark", "join", "table", "window"], ["zzz-not-a-token"]):
-        facet = Facet(name="t", kind="categorical", value_cols=["tokens"], query_value=q)
-        full = [(r.doc_id, r.dist, r.score) for r in
-                single_facet_topk(docs, "doc_id", facet, k=8).collect()]
-        pruned = [(r.doc_id, r.dist, r.score) for r in
-                  jaccard_topk_pruned(docs, "doc_id", "tokens", q, 8).collect()]
-        assert pruned == full, q
-
-
 def test_simhash_banded_blocks_carry_entropy(spark, sf_dir):
     """Round-1 advice: the char-fold base hash is < 2^30, so a block lying
     past the meaningful bit range is the constant 0 for every row and its

@@ -1,3 +1,5 @@
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,22 @@ from simsearch_spark.sources.registry import load_table
 @pytest.fixture(scope="module")
 def cust(spark, sf_dir):
     return load_table(spark, sf_dir, "customer")
+
+
+@pytest.fixture(scope="module")
+def orders(spark, sf_dir):
+    return load_table(spark, sf_dir, "orders")
+
+
+#: pre-filters whose ANDs are not conjunctions: BETWEEN bounds (typed,
+#: spaced and negated) and a quoted string holding the words
+BETWEEN_FILTERS = [
+    "o_orderdate BETWEEN '1995-01-01 00:00:00' AND '1996-01-01'",
+    "o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1996-01-01'",
+    "o_orderdate BETWEEN TIMESTAMP '1995-01-01 00:00:00' AND TIMESTAMP '1996-01-01 00:00:00'",
+    "o_totalprice NOT BETWEEN 1000 AND 2000.5",
+    "o_orderpriority <> 'between 1 AND 2'",
+]
 
 
 def test_parse_basic(cust):
@@ -42,7 +60,7 @@ def test_parse_kinds_from_schema(cust, spark, sf_dir):
     assert p2.request.facets[0].kind == "temporal"
 
 
-def test_parse_weights_combos_and_filters(cust):
+def test_parse_weights_combos_and_filters(cust, orders):
     p = parse_search_sql(
         cust, "customer",
         "SELECT c_mktsegment FROM customer WHERE c_acctbal ~= 100 AND c_name ~= 'x' "
@@ -53,6 +71,35 @@ def test_parse_weights_combos_and_filters(cust):
     assert p.request.algorithm == "no_random_access"
     assert p.filters == ["c_mktsegment = 'BUILDING'"]
     assert p.request.extra_columns == ["c_mktsegment"]
+    for flt in BETWEEN_FILTERS:
+        p = parse_search_sql(
+            orders, "orders",
+            f"SELECT * FROM orders WHERE o_totalprice ~= 100 AND {flt} AND o_orderstatus = 'F' LIMIT 5",
+            "o_orderkey",
+        )
+        assert [f.name for f in p.request.facets] == ["o_totalprice"]
+        assert p.filters == [flt, "o_orderstatus = 'F'"]
+
+
+def test_sql_between_prefilter_equals_range_filters(spark, orders):
+    """A BETWEEN pre-filter with typed bounds returns the rows of the same
+    range written as ``>=`` / ``<=`` pre-filters."""
+    from simsearch_spark.plans.sql_frontend import execute_search_sql
+
+    sql = "SELECT o_orderdate FROM orders WHERE o_totalprice ~= 100000 AND {} LIMIT 10"
+    lo, hi = "DATE '1996-01-01'", "TIMESTAMP '1997-06-30 12:00:00'"
+    between = execute_search_sql(
+        spark, orders, "orders", sql.format(f"o_orderdate BETWEEN {lo} AND {hi}"), "o_orderkey"
+    ).collect()
+    ranged = execute_search_sql(
+        spark, orders, "orders",
+        sql.format(f"o_orderdate >= {lo} AND o_orderdate <= {hi}"), "o_orderkey",
+    ).collect()
+    assert len(between) == 10 and between == ranged
+    assert all(
+        datetime.datetime(1996, 1, 1) <= r.o_orderdate <= datetime.datetime(1997, 6, 30, 12)
+        for r in between
+    )
 
 
 def test_parse_rejects(cust):

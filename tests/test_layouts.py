@@ -1,111 +1,10 @@
-"""Partitioned-layout contracts: prove (via .explain) that the scale-path
-layouts SCALE.md claims actually reach the scan as partition pruning, and
-that the pruned reads stay exact.
-
-Two layouts, mirroring the reference's two in-heap indexes:
-- spatial grid cells partitionBy(cell_x, cell_y) — replaces the JTS STR-tree
-  (SpatialSimSearch.java:88-143); grid_knn's ring predicate must show up as
-  PartitionFilters, not a post-scan Filter.
-- token posting lists partitionBy(tok_bucket) — replaces the in-heap
-  inverted index (CategoricalSimSearch.java:126-320); a search reads only
-  the buckets its query tokens hash into.
-"""
+"""Layout contract: prove (via the executed plan) that two tables bucketed
+and sorted on the same key join without a shuffle — the co-located layout a
+100 TB deployment uses for repeated entity joins."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from simsearch_spark.functions.text import tokenize
-from simsearch_spark.operators.setsim import (
-    jaccard_topk_pruned,
-    postings_candidates,
-    token_postings,
-)
-from simsearch_spark.operators.spatial import grid_knn
 from simsearch_spark.sources.registry import load_table
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def geo_frame(spark, sf_dir):
-    """customer-derived lon/lat, as in q_spatial_knn."""
-    return load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        (F.abs(F.col("c_acctbal")) % 360 - 180).alias("lon"),
-        ((F.col("c_custkey") % 180) - 90).cast("double").alias("lat"),
-    )
-
-
-def test_grid_knn_partition_pruning(spark, geo_frame, tmp_path_factory):
-    """grid_knn over a cell-partitioned table: the ring predicate must be
-    PartitionFilters on the scan AND results must equal the unpartitioned
-    run row-for-row."""
-    from simsearch_spark.operators.spatial import with_grid_cells
-
-    cell = 8.0
-    path = str(tmp_path_factory.mktemp("grid") / "geo_cells")
-    with_grid_cells(geo_frame, "lon", "lat", cell).write.partitionBy(
-        "cell_x", "cell_y"
-    ).parquet(path)
-    part = spark.read.parquet(path)
-
-    qx, qy = 12.0, 40.0
-    got = grid_knn(part, "id", "lon", "lat", qx, qy, 7, cell_deg=cell)
-    plan = _executed_plan(got)
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1][:400]
-    assert "cell_x" in pf and "cell_y" in pf
-    # and the data filter did NOT have to re-derive cells from lon/lat
-    want = [(r.id, r.dist) for r in
-            grid_knn(geo_frame, "id", "lon", "lat", qx, qy, 7, cell_deg=cell).collect()]
-    assert [(r.id, r.dist) for r in got.collect()] == want
-
-
-def test_token_postings_partition_pruning(spark, sf_dir, tmp_path_factory):
-    """Candidate resolution from a bucket-partitioned posting list: the
-    tok_bucket IN (...) predicate must prune partitions, and the candidate
-    set must be exactly the arrays_overlap scan's."""
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "tokens", tokenize(F.col("text"))
-    )
-    path = str(tmp_path_factory.mktemp("tok") / "postings")
-    token_postings(docs, "doc_id", "tokens").write.partitionBy("tok_bucket64").parquet(path)
-    postings = spark.read.parquet(path)
-
-    q = ["spark", "join", "table", "window"]
-    cand = postings_candidates(postings, q, "doc_id")
-    plan = _executed_plan(cand)
-    assert "PartitionFilters" in plan
-    assert "tok_bucket" in plan.split("PartitionFilters", 1)[1][:400]
-
-    want = {r.doc_id for r in
-            docs.where(F.arrays_overlap("tokens", F.array(*[F.lit(t) for t in q])))
-            .select("doc_id").collect()}
-    assert {r.doc_id for r in cand.collect()} == want
-
-
-def test_jaccard_topk_via_postings_equals_scan(spark, sf_dir, tmp_path_factory):
-    """End-to-end: top-k driven by the pruned posting reads must reproduce
-    the arrays_overlap path row-for-row (including tail-fill)."""
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "tokens", tokenize(F.col("text"))
-    )
-    path = str(tmp_path_factory.mktemp("tok2") / "postings")
-    token_postings(docs, "doc_id", "tokens").write.partitionBy("tok_bucket64").parquet(path)
-    postings = spark.read.parquet(path)
-
-    for q in (["spark", "join", "table", "window"], ["zzz-not-a-token"]):
-        cand = postings_candidates(postings, q, "doc_id")
-        via_postings = [(r.doc_id, r.dist, r.score) for r in
-                        jaccard_topk_pruned(docs, "doc_id", "tokens", q, 8,
-                                            candidates=cand).collect()]
-        via_scan = [(r.doc_id, r.dist, r.score) for r in
-                    jaccard_topk_pruned(docs, "doc_id", "tokens", q, 8).collect()]
-        assert via_postings == via_scan, q
 
 
 def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path_factory):

@@ -156,66 +156,6 @@ def test_auto_minhash_pairs_still_find_known_dups(spark):
     assert (1000, 1001) in pairs
 
 
-def test_stream_and_batch_agree_on_wide_auto_params(spark, tmp_path):
-    """Split-invariance of the wide (>63-plane) banding: the streaming
-    bucket-state candidates equal the batch band join's distinct candidate
-    set under the same auto sizing."""
-    from simsearch_spark.operators.ann import lcg_hyperplanes, lsh_band_keys
-    from simsearch_spark.operators.lshparams import auto_sign_lsh_params
-    from simsearch_spark.streaming.lshdedup import embedding_candidates_stream
-
-    dim = 16
-    df = _planted(spark, n=120, dim=dim).persist()
-    prm = auto_sign_lsh_params(df.count(), 0.9)
-    assert prm.n_planes > 63
-
-    # batch candidate set via the same per-band keys
-    planes = lcg_hyperplanes(dim, prm.n_planes, seed=7)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    expl = df.select(
-        F.col("id").alias("doc"),
-        F.posexplode(lsh_band_keys(v, planes, prm.band_bits)).alias(
-            "band_idx", "band_hash"
-        ),
-    )
-    left = expl.select(F.col("doc").alias("id_a"), "band_idx", "band_hash")
-    right = expl.select(F.col("doc").alias("id_b"), "band_idx", "band_hash")
-    batch = {
-        (r.id_a, r.id_b)
-        for r in left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .collect()
-    }
-
-    # streaming: two micro-batches through the keyed bucket state
-    src = str(tmp_path / "vecs")
-    ids = [r.id for r in df.select("id").collect()]
-    half = sorted(ids)[len(ids) // 2]
-    df.where(F.col("id") <= half).write.parquet(src + "/b0")
-    df.where(F.col("id") > half).write.parquet(src + "/b1")
-    stream = spark.readStream.schema("id long, embedding array<double>").parquet(
-        src + "/*"
-    )
-    out = embedding_candidates_stream(
-        stream, dim, id_col="id", n_planes=prm.n_planes, band_bits=prm.band_bits
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wide_lsh_cand")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r.id_a, r.id_b)
-        for r in spark.sql("SELECT * FROM wide_lsh_cand").distinct().collect()
-    }
-    assert streamed == batch
-
-
 # -----------------------------------------------------------------------------
 # hot-bucket guard (r10): a planted adversarial bucket must stay bounded
 # -----------------------------------------------------------------------------
@@ -286,68 +226,6 @@ def test_hot_bucket_cap_bounds_minhash_pairs(spark):
     assert capped == {(a, b) for a in range(cap) for b in range(a + 1, cap)}
     full = minhash_lsh_pairs(df, "doc_id", "text", 0.7, bucket_cap=None).count()
     assert full == 30 * 29 // 2
-
-
-def test_hot_bucket_cap_stream_batch_symmetric(spark, tmp_path):
-    """The streaming keyed state applies the SAME cap: for an id-ordered
-    stream the final candidate set equals the batch lowest-id-cap rule,
-    and the set is invariant to where the micro-batch boundaries fall."""
-    from simsearch_spark.operators.ann import lcg_hyperplanes, lsh_band_keys
-    from simsearch_spark.operators.dedup import _cap_lsh_buckets
-    from simsearch_spark.streaming.lshdedup import embedding_candidates_stream
-
-    dim = 16
-    cap = 8
-    n_planes, band_bits = 16, 4
-    df = _hot_vectors(spark).persist()
-
-    # batch candidate set under the same cap and keys
-    planes = lcg_hyperplanes(dim, n_planes, seed=7)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    expl = df.select(
-        F.col("id").alias("doc"),
-        F.posexplode(lsh_band_keys(v, planes, band_bits)).alias("band_idx", "band_hash"),
-    )
-    expl = _cap_lsh_buckets(expl, ["band_idx", "band_hash"], "doc", cap)
-    left = expl.select(F.col("doc").alias("id_a"), "band_idx", "band_hash")
-    right = expl.select(F.col("doc").alias("id_b"), "band_idx", "band_hash")
-    batch = {
-        (r.id_a, r.id_b)
-        for r in left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .collect()
-    }
-    # the guard really bit: hot pairs bounded at cap
-    assert len({p for p in batch if p[1] < 10_000}) == cap * (cap - 1) // 2
-
-    for splits, name in ((1, "hot_cap_s1"), (3, "hot_cap_s3")):
-        src = str(tmp_path / name)
-        ids = sorted(r.id for r in df.select("id").collect())
-        bounds = [ids[int(len(ids) * k / splits)] for k in range(1, splits)] + [ids[-1] + 1]
-        lo = None
-        for bi, hi in enumerate(bounds):
-            part = df.where(F.col("id") < hi if lo is None else (F.col("id") >= lo) & (F.col("id") < hi))
-            part.write.parquet(f"{src}/b{bi}")
-            lo = hi
-        stream = spark.readStream.schema("id long, embedding array<double>").parquet(src + "/*")
-        out = embedding_candidates_stream(
-            stream, dim, id_col="id", n_planes=n_planes, band_bits=band_bits, bucket_cap=cap
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        streamed = {
-            (r.id_a, r.id_b)
-            for r in spark.sql(f"SELECT * FROM {name}").distinct().collect()
-        }
-        assert streamed == batch, (name, len(streamed), len(batch))
 
 
 def test_salt_mode_recovers_all_hot_bucket_pairs(spark):

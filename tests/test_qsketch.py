@@ -1,5 +1,5 @@
 """Tests for the deterministic bottom-k quantile sketch
-(operators/qsketch.py, streaming/qsketch.py)."""
+(operators/qsketch.py)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,41 +72,3 @@ def test_sketch_error_is_sane_and_audited(spark, sf_dir):
     # deterministic uniform check with a known answer: values 0..999
     approx, n = approx_quantile_sketch(_docs(spark, 1000), "doc_id", "v", 0.5, 256)
     assert n == 256 and abs(approx - 499.5) < 100  # ~3 sigma of rank error
-
-
-def test_stream_latest_view_equals_batch_sample(spark, tmp_path):
-    """The streamed per-shard snapshots' latest view, merged to a global
-    bottom-k, equals the batch sample — for 1-batch and 3-batch splits of
-    the same data (split-invariance)."""
-    from simsearch_spark.streaming.qsketch import bottomk_sample_stream
-
-    df = _docs(spark, 300).persist()
-    k = 40
-    batch = [(r._h, r._k, r._v) for r in bottomk_sample(df, "doc_id", "v", k).collect()]
-
-    for splits, name in ((1, "qs_s1"), (3, "qs_s3")):
-        src = str(tmp_path / name)
-        for bi in range(splits):
-            df.where(F.pmod(F.col("doc_id"), F.lit(splits)) == bi).write.parquet(
-                f"{src}/b{bi}"
-            )
-        stream = spark.readStream.schema("doc_id long, v double").parquet(src + "/*")
-        out = bottomk_sample_stream(stream, "doc_id", "v", k, shards=4)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        snaps = spark.sql(f"SELECT * FROM {name}").collect()
-        latest_seq = {}
-        for r in snaps:
-            latest_seq[r.shard] = max(latest_seq.get(r.shard, 0), r.seq)
-        latest = sorted(
-            (r.h, r.key, r.val)
-            for r in snaps
-            if r.seq == latest_seq[r.shard]
-        )[:k]
-        assert latest == batch, (name, len(latest))

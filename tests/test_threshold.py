@@ -51,7 +51,7 @@ _ROWS = st.lists(st.tuples(st.sampled_from([1, 1, 1, 2]), _VALUES, _TEXTS, _DATE
     depth=st.sampled_from([2, 1024, 1024]),
     kinds=st.sampled_from([("x", "t"), ("x", "d"), ("t", "d"), ("x", "t", "d"), ("t",)]),
     weights=st.one_of(
-        st.none(), st.lists(st.sampled_from([0.0, 0.5, 1.0, 2.0]), min_size=2, max_size=3)
+        st.none(), st.lists(st.sampled_from([0.0, 0.25, 0.5, 1.0]), min_size=2, max_size=3)
     ),
     prefilter=st.booleans(),
 )

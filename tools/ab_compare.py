@@ -41,7 +41,7 @@ def main(old_path: str, new_path: str) -> None:
             print("  biggest regressions:")
             for k in movers[-5:]:
                 print(f"    {k:32s} {qo[k]:7.2f} -> {qn[k]:7.2f}")
-    for sect in ("mount", "layouts"):
+    for sect in ("mount",):
         so, sn = old.get(sect, {}), new.get(sect, {})
         common = sorted(set(so) & set(sn))
         print(f"\n{sect}:")
