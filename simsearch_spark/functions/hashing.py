@@ -120,29 +120,82 @@ def hamming64(a: Column, b: Column) -> Column:
     — a JVM intrinsic here and a DuckDB builtin on the oracle side)."""
     return F.bit_count(a.bitwiseXOR(b))
 
+
+#: characters folded per pass of :func:`batch_kgram_hashes` — its working
+#: set is ~12 bytes per character, so a pass holds ~12 MB however large
+#: the batch or its documents
+KGRAM_CHAR_BUDGET = 1 << 20
+#: cells (8 bytes each) of the padded matrix :func:`batch_fold_hashes`
+#: folds per pass
+FOLD_CELL_BUDGET = 1 << 20
+
+
+def _fold_spans(codes, S, L):
+    """Char-fold hash of every span ``codes[S_i : S_i + L_i]``.  Spans
+    are sorted LONGEST-first, so for char column j the still-active rows
+    (L > j) are a contiguous prefix and the fold is one gather + one fused
+    multiply-add + one mod over a shrinking slice — no mask, no padded 2D
+    matrix, total work ∝ total span characters."""
+    import numpy as np
+
+    order = np.argsort(-L, kind="stable")
+    s_d, L_d = S[order], L[order]
+    W = int(L_d[0]) if len(L_d) else 0
+    # active-prefix length per column: rows with L > j (L_d descending)
+    counts = np.searchsorted(-L_d, -np.arange(W), side="left")
+    h = np.zeros(len(s_d), dtype=np.int64)
+    for j in range(W):
+        n_j = counts[j]
+        if n_j == 0:
+            break
+        hj = h[:n_j]
+        np.multiply(hj, 31, out=hj)
+        np.add(hj, codes[s_d[:n_j] + j], out=hj)
+        np.mod(hj, MOD, out=hj)
+    H = np.empty_like(h)
+    H[order] = h
+    return H
+
+
 def batch_kgram_hashes(texts: list, k: int):
     """Char-fold hashes of every token k-gram of every text, vectorized
-    ACROSS the whole batch (r15, guide §4.2): the r14 kernel folded each
-    k-gram char-by-char in interpreted Python (~25 interpreter ops per
-    character of the corpus); here every k-gram of every document becomes
-    a row of one padded codepoint matrix and the fold runs column-wise
-    over the batch (measured 1.9-2.5x on the kernel).  Bit-identical by
-    construction: a k-gram is exactly the substring of its document
+    ACROSS the batch (r15, guide §4.2): every k-gram becomes a span of one
+    codepoint buffer and the fold runs column-wise over all spans at once
+    (measured 1.9-2.5x over the interpreted per-char loop).  Bit-identical
+    by construction: a k-gram is exactly the substring of its document
     between the enclosing word boundaries (split/join on the single-space
     delimiter is the identity), and the fold is the same
     ``h = (h*31 + ord(c)) % MOD`` integer recurrence in the same order.
-    Length-bucketed so one long k-gram cannot inflate the padded width of
-    the whole batch.  Returns a list of int64 arrays, one per text, plus
-    the per-text k-gram count."""
+
+    Memory is bounded by ``KGRAM_CHAR_BUDGET``: the spans are folded in
+    chunks of at most that many characters (a document longer than the
+    budget is split between k-grams; only a single k-gram longer than the
+    budget makes a chunk of its own), so the working set no longer grows
+    with the batch.  Lone surrogates hash by their code point, as ``ord``
+    does.  Returns a list of int64 arrays, one per text, plus the per-text
+    k-gram count."""
     import numpy as np
 
-    _MOD = MOD
+    parts: list[list] = [[] for _ in texts]
+    doc_nkg = []
+    pend_codes, pend_S, pend_L, pend_owner = [], [], [], []
+    pend_chars = 0
 
-    doc_s, doc_L, doc_nkg, doc_codes = [], [], [], []
-    base = 0
-    for t in texts:
-        codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
-        n_chars = len(codes)
+    def flush():
+        nonlocal pend_chars
+        H = _fold_spans(
+            np.concatenate(pend_codes), np.concatenate(pend_S), np.concatenate(pend_L)
+        )
+        p = 0
+        for ti, n in pend_owner:
+            parts[ti].append(H[p : p + n])
+            p += n
+        for buf in (pend_codes, pend_S, pend_L, pend_owner):
+            buf.clear()
+        pend_chars = 0
+
+    for ti, t in enumerate(texts):
+        codes = np.frombuffer(t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
         # word boundaries = positions of the literal space (split(" "))
         sp = np.flatnonzero(codes == 32)
         starts = np.empty(len(sp) + 1, dtype=np.int64)
@@ -158,42 +211,32 @@ def batch_kgram_hashes(texts: list, k: int):
         # empty slice with n_kg == 1)
         ends = np.empty(n_kg, dtype=np.int64)
         ends[: n_kg - 1] = starts[kk : kk + n_kg - 1] - 1
-        ends[n_kg - 1] = n_chars
+        ends[n_kg - 1] = len(codes)
         s = starts[:n_kg]
-        doc_s.append(s + base)
-        doc_L.append(ends - s)
         doc_nkg.append(n_kg)
-        doc_codes.append(codes)
-        base += n_chars
-    if not doc_codes:
-        return [], []
-    allc = np.concatenate(doc_codes).astype(np.int64)
-    S = np.concatenate(doc_s)
-    L = np.concatenate(doc_L)
-    # sort k-grams LONGEST-first: for char column j the still-active rows
-    # (L > j) are then a contiguous prefix, so the fold is one gather +
-    # one fused multiply-add + one mod over a shrinking slice — no mask,
-    # no padded 2D matrix, total work ∝ total k-gram characters
-    order = np.argsort(-L, kind="stable")
-    s_d, L_d = S[order], L[order]
-    W = int(L_d[0]) if len(L_d) else 0
-    # active-prefix length per column: rows with L > j (L_d descending)
-    counts = np.searchsorted(-L_d, -np.arange(W), side="left")
-    h = np.zeros(len(s_d), dtype=np.int64)
-    for j in range(W):
-        n_j = counts[j]
-        if n_j == 0:
-            break
-        hj = h[:n_j]
-        np.multiply(hj, 31, out=hj)
-        np.add(hj, allc[s_d[:n_j] + j], out=hj)
-        np.mod(hj, _MOD, out=hj)
-    H = np.empty_like(h)
-    H[order] = h
-    out, p = [], 0
-    for n in doc_nkg:
-        out.append(H[p : p + n])
-        p += n
+        # hand the k-grams to the pending chunk in runs whose character
+        # span fits the budget's remaining room (ends is non-decreasing)
+        i = 0
+        while i < n_kg:
+            room = KGRAM_CHAR_BUDGET - pend_chars
+            j = i + int(np.searchsorted(ends[i:], s[i] + room, side="right"))
+            if j == i:
+                if pend_owner:
+                    flush()
+                    continue
+                j = i + 1  # one k-gram longer than the whole budget
+            lo, hi = int(s[i]), int(ends[j - 1])
+            pend_codes.append(codes[lo:hi])
+            pend_S.append(s[i:j] - lo + pend_chars)
+            pend_L.append(ends[i:j] - s[i:j])
+            pend_owner.append((ti, j - i))
+            pend_chars += hi - lo
+            i = j
+            if pend_chars >= KGRAM_CHAR_BUDGET:
+                flush()
+    if pend_owner:
+        flush()
+    out = [p[0] if len(p) == 1 else np.concatenate(p) for p in parts]
     return out, doc_nkg
 
 
@@ -207,8 +250,10 @@ def batch_fold_hashes(strings):
     same property the scalar fold has for leading NULs), so the fold runs
     mask-free in 4-character Horner steps over the padded matrix
     (h·31⁴ < 2^50, exact in int64).  Rows are length-bucketed so one huge
-    string cannot inflate the padded width of the whole batch.  Returns
-    an int64 array aligned with ``strings``."""
+    string cannot inflate the padded width of the whole batch, and a
+    bucket holds at most ``FOLD_CELL_BUDGET`` cells: a string longer than
+    that folds alone, in column blocks of the budget's width.  Returns an
+    int64 array aligned with ``strings``."""
     import numpy as np
 
     n = len(strings)
@@ -225,32 +270,39 @@ def batch_fold_hashes(strings):
         if W == 0:
             break  # every remaining string is empty -> hash 0
         # close the bucket where lengths drop below W/2 so padding never
-        # exceeds 2x the useful cells (one huge string stops inflating
-        # the width of thousands of short ones)
+        # exceeds 2x the useful cells, or where it would pass the budget
         cut = int(np.searchsorted(-lens_desc, -(W // 2), side="left"))
-        hi = min(max(lo + 1, cut), lo + 4096, n)
+        hi = min(max(lo + 1, cut), lo + max(1, FOLD_CELL_BUDGET // W), n)
         sel = order[lo:hi]
-        mat = np.zeros((len(sel), W), dtype=np.int64)
-        for r, si in enumerate(sel):
-            s = strings[si]
-            if s:
-                mat[r, W - len(s):] = np.frombuffer(
-                    s.encode("utf-32-le"), dtype=np.uint32
-                )
+        rows = [strings[si] for si in sel]
         h = np.zeros(len(sel), dtype=np.int64)
-        j = 0
-        while j + 4 <= W:
-            h = (
-                h * P4
-                + mat[:, j] * P3
-                + mat[:, j + 1] * P2
-                + mat[:, j + 2] * 31
-                + mat[:, j + 3]
-            ) % MOD
-            j += 4
-        while j < W:
-            h = (h * 31 + mat[:, j]) % MOD
-            j += 1
+        # the Horner fold continues across blocks, so splitting columns
+        # changes nothing but the size of the matrix
+        B = max(4, FOLD_CELL_BUDGET // len(sel))
+        for c0 in range(0, W, B):
+            c1 = min(c0 + B, W)
+            mat = np.zeros((len(sel), c1 - c0), dtype=np.int64)
+            for r, s in enumerate(rows):
+                off = W - len(s)  # the padded column where s begins
+                a = max(c0, off)
+                if a < c1:
+                    mat[r, a - c0 :] = np.frombuffer(
+                        s[a - off : c1 - off].encode("utf-32-le", "surrogatepass"),
+                        dtype=np.uint32,
+                    )
+            j = 0
+            while j + 4 <= c1 - c0:
+                h = (
+                    h * P4
+                    + mat[:, j] * P3
+                    + mat[:, j + 1] * P2
+                    + mat[:, j + 2] * 31
+                    + mat[:, j + 3]
+                ) % MOD
+                j += 4
+            while j < c1 - c0:
+                h = (h * 31 + mat[:, j]) % MOD
+                j += 1
         H[sel] = h
         lo = hi
     return H

@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -222,12 +223,12 @@ def _train_vector_family(
 
     with ThreadPoolExecutor(max_workers=4) as ex:
         futs = [
-            ex.submit(write_centroids),
-            ex.submit(write_codebooks),
-            ex.submit(write_codes),
-            ex.submit(write_pivot_artifacts),
+            ex.submit(inheritable_thread_target(spark)(fn))
+            for fn in (
+                write_centroids, write_codebooks, write_codes, write_pivot_artifacts
+            )
         ]
-        f_count = ex.submit(emb.count)
+        f_count = ex.submit(inheritable_thread_target(spark)(emb.count))
         for f in futs:
             f.result()
         n_vectors = int(f_count.result())
@@ -312,7 +313,10 @@ def _train_text_family(
         ]
         with ThreadPoolExecutor(max_workers=4) as ex:
             futs = [
-                ex.submit(_write, frame, os.path.join(out_dir, name), part)
+                ex.submit(
+                    inheritable_thread_target(spark)(_write),
+                    frame, os.path.join(out_dir, name), part,
+                )
                 for frame, name, part in jobs
             ]
             for f in futs:

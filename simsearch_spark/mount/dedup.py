@@ -27,6 +27,15 @@ footprint, not the corpus.  Within the pruned scan the delta's distinct
 (band_idx, band_hash) keys join BROADCAST (driver-bounded: |delta|·bands
 keys), so the base table never shuffles.
 
+Two append paths, one answer.  A crawl delta of at most
+``MAX_IN_LITERALS // bands`` documents runs DRIVER-RESIDENT: its rows are
+collected once, signed in-process by ``minhash_rows`` (the kernel the
+Arrow pass runs), and paired and verified over driver-side sets against
+bounded collects of the base band and shingle rows its keys touch — no
+Python-worker pass and no checkpoint.  Larger deltas, over-cap buckets
+and id types Python does not order as Spark does take ``_append_large``,
+the distributed path; tests/test_mount_dedup.py pins the two equal.
+
 The FROZEN-HASH contract: the manifest records (n_hashes, bands,
 shingle_n, seed, threshold, bucket_cap, hot_mode) at mount; every delta
 computes signatures with the SAME family, which makes the parity pin
@@ -49,12 +58,25 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from simsearch_spark.mount.artifacts import _write, load_manifest
-from simsearch_spark.mount.lock import locked, mount_write_lock
+from simsearch_spark.mount.lock import locked
 from simsearch_spark.operators.dedup import (
     LSH_BUCKET_CAP,
     _bucket_key_expr,
@@ -62,8 +84,10 @@ from simsearch_spark.operators.dedup import (
     _hot_bucket_rows,
     _with_block_group,
     minhash_banded_frame,
+    minhash_rows,
     verify_shingle_pairs,
 )
+from simsearch_spark.operators.rank_agg import _python_ordered
 
 __all__ = [
     "mount_dedup",
@@ -122,11 +146,11 @@ MAX_IN_LITERALS = 2048
 #: already bounded by directory pruning + the broadcast key join
 MAX_HASH_PUSH_LITERALS = 128
 
-#: guard on the optimistic (hot-count-free) candidate collect: a healthy
-#: corpus' delta-touching pair stream is a few rows per true duplicate,
-#: so overflowing this bound means a degenerate bucket — fall back to
-#: the capped distributed path rather than pull an unbounded stream
-MAX_OPTIMISTIC_PAIR_ROWS = 200_000
+#: guard on the driver path's collect of the base band rows its keys
+#: touch: a healthy corpus holds a few rows per delta band key, so
+#: overflowing this bound means a degenerate bucket — fall back to the
+#: capped distributed path rather than pull an unbounded stream
+MAX_BASE_BAND_ROWS = 200_000
 
 
 def _text_ok(text_col: str):
@@ -226,8 +250,6 @@ def mount_dedup(
         # commit-point concern (ADVICE r13): no idempotency probe reads a
         # half-built mount because the manifest — the only discovery
         # point — is written strictly after both writes return.
-        from concurrent.futures import ThreadPoolExecutor
-
         n_docs = int(banded.count())
         # scale-adaptive layout (r15): directory counts track corpus size
         # — ~1k band rows / ~512 shingle rows per directory, pow-2, so a
@@ -253,15 +275,15 @@ def mount_dedup(
                 banded.select(
                     F.col(id_col), F.col("shingles")
                 ).withColumn(
-                    "sbkt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt)).cast("int")
+                    "sbkt", _sbkt(id_col, n_sbkt)
                 ).repartition("sbkt").sortWithinPartitions(id_col),
                 os.path.join(mount_dir, "dedup_shingles"),
                 partition_by="sbkt",
             )
 
         with ThreadPoolExecutor(max_workers=2) as ex:
-            f_b = ex.submit(write_bands)
-            f_s = ex.submit(write_shingles)
+            f_b = ex.submit(inheritable_thread_target(spark)(write_bands))
+            f_s = ex.submit(inheritable_thread_target(spark)(write_shingles))
             f_b.result()
             f_s.result()
     finally:
@@ -313,12 +335,7 @@ def mount_dedup(
 
 
 def _delta_touching_candidates(
-    union_expl: DataFrame,
-    id_col: str,
-    cap: int | None,
-    hot_mode: str,
-    dedup: bool = True,
-    broadcast_new: bool = False,
+    union_expl: DataFrame, id_col: str, cap: int | None, hot_mode: str
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs with at least one NEW (delta) member,
     over the union membership of the delta-touched buckets, under the
@@ -368,8 +385,6 @@ def _delta_touching_candidates(
                 F.col(id_col).alias("_id_n"),
                 F.explode(F.sequence(F.lit(0), F.col("_g") - 1)).alias("_br"),
             )
-            if broadcast_new:
-                left = F.broadcast(left)
             extra = (
                 left.join(right, [*keys, "_br"])
                 .where(F.col("_id_n") != F.col("_id_o"))
@@ -384,12 +399,6 @@ def _delta_touching_candidates(
     new_side = union_expl.where(F.col("_new")).select(
         *keys, F.col(id_col).alias("_id_n")
     )
-    if broadcast_new:
-        # the delta side is driver-bounded (fast-path gate: ≤ lim rows ×
-        # bands keys) — broadcasting it keeps the full-membership side
-        # shuffle-free, which removes every exchange from the candidate
-        # job when the caller also dedups driver-side
-        new_side = F.broadcast(new_side)
     all_side = union_expl.select(*keys, F.col(id_col).alias("_id_o"))
     cand = (
         new_side.join(all_side, keys)
@@ -401,14 +410,65 @@ def _delta_touching_candidates(
     )
     if extra is not None:
         cand = cand.unionByName(extra)
-    # dedup=False callers collect the (candidate-bounded) pair stream and
-    # dedup driver-side, trading the dropDuplicates exchange for a set()
-    return cand.dropDuplicates(["id_a", "id_b"]) if dedup else cand
+    return cand.dropDuplicates(["id_a", "id_b"])
 
 
-def _empty_pairs(spark: SparkSession, id_dtype: str) -> DataFrame:
-    return spark.createDataFrame(
-        [], f"id_a {id_dtype}, id_b {id_dtype}, jaccard double"
+def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """``rows`` as an Arrow-backed local relation: Catalyst folds a
+    projection over it on the driver (no job), and scanning it starts no
+    Python worker, which a Python-list ``createDataFrame`` (a Python RDD)
+    does."""
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()  # convert rejects []
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _sbkt(col: str, n_sbkt: int):
+    """The shingle table's hash-range partition of an id column."""
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_sbkt)).cast("int")
+
+
+def _sbkts(spark: SparkSession, ids: list, id_field: StructField, n_sbkt: int) -> set:
+    """The shingle partitions of ``ids``: Spark's own xxhash64, projected
+    over a local relation, so it folds on the driver and runs no job."""
+    ids_local = _local_frame(spark, [(i,) for i in ids], StructType([id_field]))
+    return {r[0] for r in ids_local.select(_sbkt(id_field.name, n_sbkt)).collect()}
+
+
+#: the index artifacts' schemas, partition columns last (``mount_dedup``
+#: writes them; the id type is the manifest's ``id_dtype``)
+_INDEX_DDL = {
+    "dedup_bands": "band_hash bigint, `{id}` {t}, band_idx int, bkt int",
+    "dedup_shingles": "`{id}` {t}, shingles array<string>, sbkt int",
+}
+
+
+def _index_reader(spark: SparkSession, mount_dir: str, name: str, dd: dict):
+    """One dedup index artifact as a relation.  With the mounted id dtype
+    on record the schema is given, not inferred: inference reads a
+    parquet footer in a Spark job of its own, on every append."""
+    reader = spark.read
+    if dd.get("id_dtype"):
+        reader = reader.schema(
+            _INDEX_DDL[name].format(id=dd["id_col"], t=dd["id_dtype"])
+        )
+    return reader.parquet(os.path.join(mount_dir, name))
+
+
+def _pairs_frame(spark: SparkSession, rows: list, id_type) -> DataFrame:
+    """(id_a, id_b, jaccard) from driver-verified rows; the rounding is
+    Spark's own ``round`` (HALF_UP on the decimal expansion), folded over
+    the local relation."""
+    schema = StructType([
+        StructField("id_a", id_type),
+        StructField("id_b", id_type),
+        StructField("jaccard", DoubleType()),
+    ])
+    return _local_frame(spark, rows, schema).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -441,7 +501,6 @@ def _update_index(
     in already-hot buckets (review r14)."""
     import shutil
     import uuid
-    from concurrent.futures import ThreadPoolExecutor
 
     bands_path = os.path.join(mount_dir, "dedup_bands")
     sh_path = os.path.join(mount_dir, "dedup_shingles")
@@ -456,16 +515,15 @@ def _update_index(
 
     def wr_shingles():
         banded_d.select(F.col(id_col), F.col("shingles")).withColumn(
-            "sbkt",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt)).cast("int"),
+            "sbkt", _sbkt(id_col, n_sbkt)
         ).repartition("sbkt").sortWithinPartitions(id_col).write.mode(
             "overwrite"
         ).partitionBy("sbkt").parquet(sh_stage)
 
     try:
         with ThreadPoolExecutor(max_workers=2) as ex:
-            f_b = ex.submit(wr_bands)
-            f_s = ex.submit(wr_shingles)
+            f_b = ex.submit(inheritable_thread_target(spark)(wr_bands))
+            f_s = ex.submit(inheritable_thread_target(spark)(wr_shingles))
             # bands first: its failure must abort BEFORE any publication.
             # Both futures are always drained so no write outlives this
             # call half-finished in the background.
@@ -523,32 +581,31 @@ def dedup_append(
     verification but BEFORE the index updates, so a sink can commit the
     pairs idempotently before the batch's ids become "already mounted".
 
-    DRIVER-JOB FLOOR (r13): a production deployment appends thousands of
-    deltas a day, so the per-delta fixed cost — driver jobs and parquet
-    listings, not data volume — IS the operator's cost.  One probe job
-    collects the delta's (id, sbkt, band-hash) metadata; when the delta
-    is small enough that every derived key set stays within
-    ``MAX_IN_LITERALS`` (the common crawl-batch case) the whole append
-    runs DRIVER-RESIDENT: the id/bucket/hash sets and the candidates'
-    base-side shingle buckets are derived without further jobs, the
-    shingle relation (one file listing) is shared by the idempotency
-    probe and the verify stage, the candidate chain executes once over a
-    checkpointed union, and the two index writes go out concurrently —
-    6 bounded jobs total vs ~20 in the r12 shape.  Larger deltas take
-    the distributed path (same semantics, collect-free key handling)."""
+    DRIVER-RESIDENT SMALL DELTAS: a production deployment appends
+    thousands of deltas a day, so the per-delta fixed cost — Spark jobs,
+    Python workers, checkpoints — IS the operator's cost.  A delta of at
+    most ``MAX_IN_LITERALS // bands`` documents (the common crawl batch)
+    is collected once and signed in-process by ``minhash_rows``; pairing,
+    the hot-bucket check, tombstones and Jaccard verification run over
+    driver-side sets.  What runs on Spark is the limit-collect of the
+    delta, the idempotency probe beside one ordered collect of the base
+    band rows its keys touch, one collect of the candidates' base
+    shingles, and the two index writes.  Larger deltas, over-cap buckets
+    and id types Python does not order as Spark does take the
+    distributed path (same semantics)."""
+    return _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs)[0]
+
+
+def _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs):
+    """``dedup_append``'s body, run under the caller's write lock.  Also
+    returns how many delta rows were already mounted (None past the
+    gate), which ``serve_dedup_lookup`` reads to reject a probe id that
+    collides with a mounted one."""
     manifest = load_manifest(mount_dir)
     dd = manifest.get("dedup")
     if not dd:
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col, text_col = dd["id_col"], dd["text_col"]
-    cap = dd["bucket_cap"]
-    # the fan-outs the index was WRITTEN with (frozen in the manifest;
-    # pre-freeze mounts fall back to the constants they were built with)
-    n_bkt = int(dd.get("n_bkt", N_BKT))
-    n_sbkt = int(dd.get("n_sbkt", N_SBKT))
-    bands_path = os.path.join(mount_dir, "dedup_bands")
-    sh_path = os.path.join(mount_dir, "dedup_shingles")
-
     # cast the delta's id to the MOUNTED dtype: xxhash64 (the sbkt
     # scheme) is type-sensitive, so an int-typed delta against a
     # long-typed mount would probe the wrong shingle partitions —
@@ -562,282 +619,223 @@ def dedup_append(
     thr = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     if int(spark.conf.get(thr, "32")) < 4096:
         spark.conf.set(thr, "4096")
-    delta = docs_delta.withColumn(
-        id_col, F.col(id_col).cast(id_dtype)
+    delta = docs_delta.select(
+        F.col(id_col).cast(id_dtype).alias(id_col), F.col(text_col)
     ).where(_text_ok(text_col))
-    # persist the RAW banded frame BEFORE the probe collect: the fused
-    # shingle/permutation kernel is the dominant delta compute, and the
-    # candidate/verify/write stages all re-read it from cache
-    banded_raw = minhash_banded_frame(
-        delta, id_col, text_col,
-        dd["n_hashes"], dd["bands"], dd["shingle_n"], dd["seed"],
-        fanout=False,  # delta-sized by design; keeps the limit-probe 1 job
-    ).persist()
+    # the fast-path gate: lim is sized so the delta's band keys
+    # (lim·bands) stay within MAX_IN_LITERALS; overflow → distributed path
+    lim = max(1, MAX_IN_LITERALS // max(1, int(dd["bands"])))
+    rows = delta.limit(lim + 1).collect()
+    small = len(rows) <= lim
+    if small:
+        # the collected rows ARE the delta from here on: a fallback
+        # re-reads them from a local relation, never from the source
+        delta = _local_frame(spark, rows, delta.schema)
+    id_field = delta.schema[id_col]
     # ONE relation per artifact: spark.read.parquet lists the directory
     # when the relation is resolved, and every frame derived from the
-    # same reader object shares that file index — the r12 shape paid the
-    # 256-directory shingle listing twice (idempotency probe + verify)
-    sh_reader = spark.read.parquet(sh_path)
-    try:
-        # the fast-path gate: collect the delta's metadata bounded by
-        # lim+1 rows; overflow means a large delta → distributed path.
-        # lim is sized so n_new·bands (the band-key count) stays within
-        # MAX_IN_LITERALS, the same bound the r12 fast path enforced.
-        lim = max(1, MAX_IN_LITERALS // max(1, int(dd["bands"])))
-        meta = (
-            banded_raw.select(
-                F.col(id_col).alias("_id"),
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt))
-                .cast("int")
-                .alias("_sbkt"),
-                F.col("bands").alias("_bands"),
-            )
-            .limit(lim + 1)
-            .collect()
+    # same reader object shares that file index
+    sh_reader = _index_reader(spark, mount_dir, "dedup_shingles", dd)
+    # tombstoned base docs (delete_docs, r14): excluded from every pair
+    # result until compaction reclaims their index rows — driver-bounded
+    # by deletes since the last compact
+    tomb = _dedup_tomb_ids(spark, mount_dir, id_col)
+    ids = [r[0] for r in rows]
+    out = None
+    # duplicate and NULL delta ids keep the distributed path's join semantics
+    if (
+        small
+        and _python_ordered(id_field.dataType)
+        and len(set(ids)) == len(ids)
+        and None not in ids
+    ):
+        out = _append_driver(
+            spark, mount_dir, manifest, ids, [r[1] for r in rows],
+            id_field, sh_reader, tomb, update, on_pairs,
         )
-        # tombstoned base docs (delete_docs, r14): excluded from every
-        # pair result until compaction reclaims their index rows —
-        # driver-bounded by deletes since the last compact
-        tomb = _dedup_tomb_ids(spark, mount_dir, id_col)
-        if len(meta) <= lim:
-            return _append_small(
-                spark, mount_dir, manifest, dd, meta, banded_raw, sh_reader,
-                id_col, id_dtype, n_bkt, n_sbkt, cap, bands_path,
-                update, on_pairs, tomb,
-            )
-        return _append_large(
-            spark, mount_dir, manifest, dd, banded_raw, sh_reader,
-            id_col, id_dtype, n_bkt, n_sbkt, cap, bands_path,
-            update, on_pairs, tomb,
+    if out is None:
+        out = _append_large(
+            spark, mount_dir, manifest, delta, id_field, sh_reader, tomb,
+            update, on_pairs,
         )
-    finally:
-        banded_raw.unpersist()
+    pairs, n_new = out
+    return pairs, (len(rows) - n_new if small else None)
 
 
-def _append_small(
-    spark, mount_dir, manifest, dd, meta, banded_raw, sh_reader,
-    id_col, id_dtype, n_bkt, n_sbkt, cap, bands_path, update, on_pairs,
-    tomb=frozenset(),
-) -> DataFrame:
-    """The driver-resident append: ``meta`` is the delta's full
-    (id, sbkt, band-hashes) metadata, so every key set the r12 shape
-    collected in separate jobs is already in hand."""
-    from concurrent.futures import ThreadPoolExecutor
+def _commit(spark, mount_dir, manifest, pairs, banded_d, expl_d, n_new, update, on_pairs):
+    """The shared tail: hand the pairs to ``on_pairs``, then append the
+    new rows to the index (the ADVICE r13 ordering is _update_index's)."""
+    if on_pairs is not None:
+        on_pairs(pairs)
+    if update:
+        dd = manifest["dedup"]
+        _update_index(
+            spark, mount_dir, manifest, expl_d, banded_d, dd["id_col"], n_new,
+            int(dd.get("n_sbkt", N_SBKT)),
+        )
+    return pairs, n_new
 
-    delta_ids = [r["_id"] for r in meta]
-    dbkts = sorted({r["_sbkt"] for r in meta})
-    # the delta's band keys, bucket footprint, and hash set — all driver-
-    # computable from meta (band hashes are non-negative by construction,
-    # so bkt = hash % n_bkt equals the stored pmod).  Derived from ALL
-    # delta ids (a superset of the post-idempotency set) so the base
-    # probe can run CONCURRENTLY with the idempotency probe below; the
-    # superset only ADDS base rows, which the replay branch drops again
-    keys_all = sorted({(i, int(h)) for r in meta for i, h in enumerate(r["_bands"])})
-    hashes_all = sorted({h for _, h in keys_all})
-    bkts_all = sorted({h % n_bkt for h in hashes_all})
-    keys_local = spark.createDataFrame(keys_all, "band_idx int, band_hash long")
+
+def _append_driver(
+    spark, mount_dir, manifest, ids, texts, id_field, sh_reader, tomb,
+    update, on_pairs,
+):
+    """The driver-resident append of a gated delta (``dedup_append``
+    docstring).  Returns (pairs, n_new), or None when a touched bucket is
+    over the hot cap or the base band rows overflow their guard — the
+    capped distributed path owns those."""
+    dd = manifest["dedup"]
+    id_col = id_field.name
+    n_bkt = int(dd.get("n_bkt", N_BKT))
+    n_sbkt = int(dd.get("n_sbkt", N_SBKT))
+    if not ids:
+        return _pairs_frame(spark, [], id_field.dataType), 0
+    shingles, bands = minhash_rows(
+        texts, dd["n_hashes"], dd["bands"], dd["shingle_n"], dd["seed"]
+    )
+    # band keys, hash set and bucket footprint of ALL delta ids (a
+    # superset of the post-idempotency set), so the base read can run
+    # CONCURRENTLY with the idempotency probe; the superset only ADDS
+    # base rows, which the pairing below never reaches.  Band hashes are
+    # non-negative, so bkt = hash % n_bkt equals the stored pmod
+    keys = sorted({(j, h) for b in bands for j, h in enumerate(b)})
+    hashes = sorted({h for _, h in keys})
+    keys_local = _local_frame(spark, keys, StructType([
+        StructField("band_idx", IntegerType()), StructField("band_hash", LongType()),
+    ]))
     # DIRECTORY-pruned base scan; for TINY deltas the band-hash set is
     # additionally pushed as point predicates (the table is sorted by
     # band_hash per directory, so the In filter skips non-matching row
-    # groups — deployments raise spark.sql.parquet.pushdown.
-    # inFilterThreshold so the set stays OR-of-eq instead of min/max).
-    # Past MAX_HASH_PUSH_LITERALS the literals cost more at plan time
-    # than they prune and the broadcast key join alone bounds the scan
-    base = spark.read.parquet(bands_path).where(F.col("bkt").isin(bkts_all))
-    if len(hashes_all) <= MAX_HASH_PUSH_LITERALS:
-        base = base.where(F.col("band_hash").isin(hashes_all))
-    base_matched = base.join(
-        F.broadcast(keys_local), ["band_idx", "band_hash"]
-    ).select("band_idx", "band_hash", id_col, F.lit(False).alias("_new"))
-
-    def probe_existing():
-        # idempotency probe: sbkt directory pruning + id point-lookups,
-        # one bounded job over the shared shingle relation
-        return {
-            r[0]
-            for r in sh_reader.where(F.col("sbkt").isin(dbkts))
-            .where(F.col(id_col).isin(delta_ids))
-            .select(id_col)
-            .collect()
-        }
-
-    # the two index probes touch DIFFERENT artifacts and neither depends
-    # on the other — overlap them (Spark's scheduler is thread-safe).
-    # The base checkpoint also pre-pays the scan the hot-bucket count and
-    # candidate join both replay — the r12 shape re-scanned parquet for
-    # each (its localCheckpoint after candidate generation came too late)
+    # groups).  Past MAX_HASH_PUSH_LITERALS the literals cost more at
+    # plan time than they prune and the broadcast key join alone bounds
+    # the scan.  TakeOrdered collects in ONE job (a bare limit-collect
+    # runs up to four as it scales its partition count up)
+    base = _index_reader(spark, mount_dir, "dedup_bands", dd).where(
+        F.col("bkt").isin(sorted({h % n_bkt for h in hashes}))
+    )
+    if len(hashes) <= MAX_HASH_PUSH_LITERALS:
+        base = base.where(F.col("band_hash").isin(hashes))
+    base_q = (
+        base.join(F.broadcast(keys_local), ["band_idx", "band_hash"])
+        .select("band_idx", "band_hash", id_col)
+        .orderBy("band_idx", "band_hash", id_col)
+        .limit(MAX_BASE_BAND_ROWS + 1)
+    )
+    # idempotency probe: sbkt directory pruning + id point-lookups
+    probe = (
+        sh_reader.where(F.col("sbkt").isin(sorted(_sbkts(spark, ids, id_field, n_sbkt))))
+        .where(F.col(id_col).isin(ids))
+        .select(id_col)
+    )
+    # the two reads touch DIFFERENT artifacts — overlap them (Spark's
+    # scheduler is thread-safe); the job group rides along
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_exist = ex.submit(probe_existing)
-        f_base = ex.submit(lambda: base_matched.localCheckpoint(eager=True))
-        existing = f_exist.result()
-        base_ckpt = f_base.result()
-    new_meta = [r for r in meta if r["_id"] not in existing]
-    n_new = len(new_meta)
-    if n_new == 0:
+        f_exist = ex.submit(inheritable_thread_target(spark)(probe.collect))
+        f_base = ex.submit(inheritable_thread_target(spark)(base_q.collect))
+        existing = {r[0] for r in f_exist.result()}
+        base_rows = f_base.result()
+    new = [i for i, x in enumerate(ids) if x not in existing]
+    if not new:
         # deliberately does NOT invoke on_pairs: an all-duplicate delta
         # is a REPLAY, and overwriting the sink's batch directory with an
         # empty frame would destroy the pairs the original
         # (crashed-after-index-update) run already committed
-        return _empty_pairs(spark, id_dtype)
-    new_id_set = {r["_id"] for r in new_meta}
-    if existing:
-        # partial replay: restrict the checkpointed base rows to the NEW
-        # ids' key set (the superset probe may have pulled buckets only
-        # the replayed ids touch) and the delta frame to the new ids
-        keys_new = sorted(
-            {(i, int(h)) for r in new_meta for i, h in enumerate(r["_bands"])}
+        return _pairs_frame(spark, [], id_field.dataType), 0
+    if len(base_rows) > MAX_BASE_BAND_ROWS:
+        return None
+
+    # bucket membership = its base rows ∪ its new delta ids; the batch
+    # operator's cap counts distinct members, and a bucket within the
+    # cap pairs exactly as uncapped (under either hot_mode)
+    members: dict = {}
+    for i in new:
+        for j, h in enumerate(bands[i]):
+            members.setdefault((j, h), set()).add(ids[i])
+    for j, h, x in base_rows:
+        if (j, h) in members:
+            members[(j, h)].add(x)
+    cap = dd["bucket_cap"]
+    if cap is not None and any(len(m) > cap for m in members.values()):
+        return None
+    new_ids = {ids[i] for i in new}
+    cand = set()
+    for m in members.values():
+        for a in m & new_ids:
+            for b in m:
+                # Python orders these id types as least/greatest do; a
+                # NULL base id never equi-joins, so it never pairs
+                if a != b and b is not None and a not in tomb and b not in tomb:
+                    cand.add((min(a, b), max(a, b)))
+
+    # verification: the candidates' BASE-side shingles come from the
+    # sbkt-pruned shingle directories, point-looked-up by id
+    sh_of = {ids[i]: shingles[i] for i in new}
+    base_ids = sorted({x for p in cand for x in p if x not in new_ids})
+    if base_ids:
+        sh = sh_reader.where(
+            F.col("sbkt").isin(sorted(_sbkts(spark, base_ids, id_field, n_sbkt)))
         )
-        base_ckpt = base_ckpt.join(
-            F.broadcast(
-                spark.createDataFrame(keys_new, "band_idx int, band_hash long")
-            ),
-            ["band_idx", "band_hash"],
-            "left_semi",
-        )
-        banded_d = banded_raw.where(F.col(id_col).isin(sorted(new_id_set)))
-    else:
-        banded_d = banded_raw
-    expl_d = _expl_frame(banded_d, id_col, n_bkt)
-    union_expl = base_ckpt.unionByName(
-        expl_d.select("band_idx", "band_hash", id_col, F.lit(True).alias("_new"))
-    )
-    # OPTIMISTIC candidate pass: on a healthy corpus no bucket exceeds
-    # the hot cap, so the capped result equals the uncapped one — skip
-    # the hot-bucket count job, generate the raw pair stream annotated
-    # with its bucket key, and let the DRIVER verify the no-hot-bucket
-    # assumption from the stream itself (for bucket k the distinct
-    # partner ids across its rows ∪ its delta ids = the full membership).
-    # The collect is limit-guarded: a degenerate corpus overflows the
-    # guard (or reveals an over-cap bucket) and falls back to the capped
-    # distributed path — paying the count job only when it matters
-    fallback = True
-    opt = (
-        union_expl.where(F.col("_new"))
-        .select("band_idx", "band_hash", F.col(id_col).alias("_id_n"))
-    )
-    opt = F.broadcast(opt).join(
-        union_expl.select("band_idx", "band_hash", F.col(id_col).alias("_id_o")),
-        ["band_idx", "band_hash"],
-    ).where(F.col("_id_n") != F.col("_id_o"))
-    guard = MAX_OPTIMISTIC_PAIR_ROWS
-    opt_rows = (
-        opt.select(
-            "band_idx", "band_hash",
-            F.least("_id_n", "_id_o").alias("id_a"),
-            F.greatest("_id_n", "_id_o").alias("id_b"),
-            F.pmod(F.xxhash64(F.least("_id_n", "_id_o")), F.lit(n_sbkt))
-            .cast("int")
-            .alias("_sb_a"),
-            F.pmod(F.xxhash64(F.greatest("_id_n", "_id_o")), F.lit(n_sbkt))
-            .cast("int")
-            .alias("_sb_b"),
-        )
-        .limit(guard + 1)
-        .collect()
-    )
-    if len(opt_rows) <= guard:
-        # bucket sizes, driver-derived: a delta-touching bucket's full
-        # membership = the distinct ids over its pair rows (every member
-        # pairs with the bucket's delta member(s); a single-member bucket
-        # generates no rows and trivially satisfies any cap)
-        members: dict = {}
-        for r in opt_rows:
-            k = (r["band_idx"], r["band_hash"])
-            s = members.setdefault(k, set())
-            s.add(r["id_a"])
-            s.add(r["id_b"])
-        if cap is None or all(len(s) <= cap for s in members.values()):
-            fallback = False
-            raw_rows = opt_rows
-    if fallback:
-        cand = _delta_touching_candidates(
-            union_expl, id_col, cap, dd["hot_mode"], dedup=False,
-            broadcast_new=True,
-        )
-        raw_rows = (
-            cand.withColumn(
-                "_sb_a",
-                F.pmod(F.xxhash64(F.col("id_a")), F.lit(n_sbkt)).cast("int"),
-            )
-            .withColumn(
-                "_sb_b",
-                F.pmod(F.xxhash64(F.col("id_b")), F.lit(n_sbkt)).cast("int"),
-            )
-            .collect()
-        )
-    # collected pair stream: bounded by the (hot-bucket-capped) candidate
-    # set exactly as the r12 base-ids collect was; folding the base-id
-    # anti-join, the pair dedup (dropDuplicates would add an exchange; a
-    # set() over the stream is free), and the sbkt derivation into it
-    seen_pairs = set()
-    cand_rows = []
-    for r in raw_rows:
-        if r["id_a"] in tomb or r["id_b"] in tomb:
-            continue  # tombstoned base doc (delete_docs): never reported
-        k = (r["id_a"], r["id_b"])
-        if k not in seen_pairs:
-            seen_pairs.add(k)
-            cand_rows.append(r)
-    if not cand_rows:
-        pairs = _empty_pairs(spark, id_dtype)
-    else:
-        cand_local = spark.createDataFrame(
-            [(r["id_a"], r["id_b"]) for r in cand_rows],
-            f"id_a {id_dtype}, id_b {id_dtype}",
-        )
-        base_ids = sorted(
-            {r["id_a"] for r in cand_rows if r["id_a"] not in new_id_set}
-            | {r["id_b"] for r in cand_rows if r["id_b"] not in new_id_set}
-        )
-        if base_ids:
-            cbkts = sorted(
-                {r["_sb_a"] for r in cand_rows if r["id_a"] not in new_id_set}
-                | {r["_sb_b"] for r in cand_rows if r["id_b"] not in new_id_set}
-            )
-            base_sh = sh_reader.where(F.col("sbkt").isin(cbkts))
-            if len(base_ids) <= MAX_IN_LITERALS:
-                base_sh = base_sh.where(F.col(id_col).isin(base_ids))
-            sh = base_sh.select(id_col, "shingles").unionByName(
-                banded_d.select(id_col, "shingles")
-            )
+        if len(base_ids) <= MAX_IN_LITERALS:
+            sh = sh.where(F.col(id_col).isin(base_ids))
         else:
-            sh = banded_d.select(id_col, "shingles")
-        pairs = verify_shingle_pairs(
-            cand_local, sh, id_col, dd["threshold"]
-        ).localCheckpoint(eager=True)
-    if on_pairs is not None:
-        on_pairs(pairs)
-    if update:
-        _update_index(
-            spark, mount_dir, manifest, expl_d, banded_d, id_col, n_new, n_sbkt
-        )
-    return pairs
+            sh = sh.join(
+                F.broadcast(_local_frame(
+                    spark, [(x,) for x in base_ids], StructType([id_field])
+                )),
+                id_col, "left_semi",
+            )
+        sh_of.update({r[0]: r[1] for r in sh.select(id_col, "shingles").collect()})
+    verified = []
+    threshold = float(dd["threshold"])
+    for a, b in sorted(cand):
+        if a not in sh_of or b not in sh_of:
+            continue  # band rows without shingles: an interrupted append
+        sa, sb = set(sh_of[a]), set(sh_of[b])
+        inter = len(sa & sb)
+        # array_intersect/array_union deduplicate: set sizes, Spark's
+        # double division, the threshold tested BEFORE rounding
+        jac = inter / (len(sa) + len(sb) - inter)
+        if jac >= threshold:
+            verified.append((a, b, jac))
+    pairs = _pairs_frame(spark, verified, id_field.dataType)
+    banded_d = _local_frame(
+        spark,
+        [(ids[i], shingles[i], bands[i]) for i in new],
+        StructType([
+            id_field,
+            StructField("shingles", ArrayType(StringType())),
+            StructField("bands", ArrayType(LongType())),
+        ]),
+    )
+    return _commit(
+        spark, mount_dir, manifest, pairs, banded_d,
+        _expl_frame(banded_d, id_col, n_bkt), len(new), update, on_pairs,
+    )
 
 
 def _append_large(
-    spark, mount_dir, manifest, dd, banded_raw, sh_reader,
-    id_col, id_dtype, n_bkt, n_sbkt, cap, bands_path, update, on_pairs,
-    tomb=frozenset(),
-) -> DataFrame:
-    """The distributed append for deltas past the fast-path gate: no
-    literal In pushdowns (a giant literal In costs more in planning than
-    it prunes — measured: an 18k-hash delta took the append from ~6 s to
-    ~30 s), shuffle-join probe when the key set would strain the driver
-    broadcast."""
-    dbkts = [
-        r[0]
-        for r in banded_raw.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt)).cast("int")
-        )
-        .distinct()
-        .collect()
-    ]
+    spark, mount_dir, manifest, delta, id_field, sh_reader, tomb, update, on_pairs,
+):
+    """The distributed append for deltas past the fast-path gate (and the
+    driver path's fallbacks): no literal In pushdowns (a giant literal In
+    costs more in planning than it prunes — measured: an 18k-hash delta
+    took the append from ~6 s to ~30 s), shuffle-join probe when the key
+    set would strain the driver broadcast.  Returns (pairs, n_new)."""
+    dd = manifest["dedup"]
+    id_col = id_field.name
+    n_bkt = int(dd.get("n_bkt", N_BKT))
+    n_sbkt = int(dd.get("n_sbkt", N_SBKT))
+    dbkts = [r[0] for r in delta.select(_sbkt(id_col, n_sbkt)).distinct().collect()]
     existing = sh_reader.where(F.col("sbkt").isin(dbkts)).select(id_col)
-    banded_d = banded_raw.join(existing, id_col, "left_anti").persist()
+    banded_d = minhash_banded_frame(
+        delta, id_col, dd["text_col"],
+        dd["n_hashes"], dd["bands"], dd["shingle_n"], dd["seed"],
+    ).join(existing, id_col, "left_anti").persist()
     try:
         n_new = int(banded_d.count())
         if n_new == 0:
-            return _empty_pairs(spark, id_dtype)  # replay — see _append_small
+            # a replay — see _append_driver
+            return _pairs_frame(spark, [], id_field.dataType), 0
         expl_d = _expl_frame(banded_d, id_col, n_bkt).persist()
         try:
             # the delta's distinct band keys against the DIRECTORY-PRUNED
@@ -848,9 +846,9 @@ def _append_large(
                 bkts = sorted(
                     {r[0] for r in expl_d.select("bkt").distinct().collect()}
                 )
-                base = spark.read.parquet(bands_path).where(
-                    F.col("bkt").isin(bkts)
-                )
+                base = _index_reader(
+                    spark, mount_dir, "dedup_bands", dd
+                ).where(F.col("bkt").isin(bkts))
                 probe = (
                     F.broadcast(keys_d)
                     if n_keys_bound <= MAX_BROADCAST_KEYS
@@ -865,7 +863,7 @@ def _append_large(
                     )
                 )
                 cand = _delta_touching_candidates(
-                    union_expl, id_col, cap, dd["hot_mode"]
+                    union_expl, id_col, dd["bucket_cap"], dd["hot_mode"]
                 ).localCheckpoint(eager=True)
                 if tomb:
                     # tombstoned base docs drop from the pair stream
@@ -879,8 +877,8 @@ def _append_large(
                             ~F.col("id_a").isin(tl) & ~F.col("id_b").isin(tl)
                         )
                     else:
-                        tdf = spark.createDataFrame(
-                            [(i,) for i in tl], f"{id_col} {id_dtype}"
+                        tdf = _local_frame(
+                            spark, [(i,) for i in tl], StructType([id_field])
                         )
                         cand = cand.join(
                             F.broadcast(tdf.withColumnRenamed(id_col, "id_a")),
@@ -911,18 +909,10 @@ def _append_large(
             if base_ids:
                 base_sh = sh_reader
                 if len(base_ids) <= MAX_IN_LITERALS:
-                    # sbkt values must match Spark's xxhash64 — derive them
-                    # with the engine itself on a tiny local frame
-                    bdf = spark.createDataFrame(
-                        [(i,) for i in base_ids], f"{id_col} {id_dtype}"
-                    ).select(
-                        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    cbkts = sorted({int(r[0]) for r in bdf.distinct().collect()})
                     base_sh = base_sh.where(
-                        F.col("sbkt").isin(cbkts)
+                        F.col("sbkt").isin(
+                            sorted(_sbkts(spark, base_ids, id_field, n_sbkt))
+                        )
                     ).where(F.col(id_col).isin(base_ids))
                 sh = base_sh.select(id_col, "shingles").unionByName(
                     banded_d.select(id_col, "shingles")
@@ -932,14 +922,10 @@ def _append_large(
             pairs = verify_shingle_pairs(
                 cand, sh, id_col, dd["threshold"]
             ).localCheckpoint(eager=True)
-            if on_pairs is not None:
-                on_pairs(pairs)
-            if update:
-                _update_index(
-                    spark, mount_dir, manifest, expl_d, banded_d,
-                    id_col, n_new, n_sbkt,
-                )
-            return pairs
+            return _commit(
+                spark, mount_dir, manifest, pairs, banded_d, expl_d, n_new,
+                update, on_pairs,
+            )
         finally:
             expl_d.unpersist()
     finally:

@@ -66,8 +66,11 @@ def serve_dedup_lookup(
     silently read as "no duplicates" (the replay guard drops mounted
     ids), so collisions are rejected loudly — pass a fresh id if the
     corpus legitimately uses the default."""
+    from pyspark.sql.types import DataType
+
     from simsearch_spark.mount.artifacts import load_manifest
-    from simsearch_spark.mount.dedup import dedup_append
+    from simsearch_spark.mount.dedup import _dedup_delta, _local_frame
+    from simsearch_spark.mount.lock import mount_write_lock
 
     manifest = load_manifest(mount_dir)
     dd = manifest.get("dedup")
@@ -80,26 +83,19 @@ def serve_dedup_lookup(
             probe_id = "\x00__dedup_probe__"
         else:
             probe_id = -1
-    delta = spark.createDataFrame(
-        [(probe_id, text)], f"{id_col} {id_dtype}, {text_col} string"
+    # a local relation: the append's gate collect folds on the driver
+    delta = _local_frame(
+        spark, [(probe_id, text)],
+        DataType.fromDDL(f"{id_col} {id_dtype}, {text_col} string"),
     )
-    n_sbkt = int(dd.get("n_sbkt", 256))
-    pbkt = delta.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sbkt)).cast("int")
-    ).first()[0]
-    mounted = (
-        spark.read.parquet(os.path.join(mount_dir, "dedup_shingles"))
-        .where(F.col("sbkt") == pbkt)
-        .where(F.col(id_col) == probe_id)
-        .limit(1)
-        .count()
-    )
-    if mounted:
+    with mount_write_lock(mount_dir, "dedup_append"):
+        pairs, n_mounted = _dedup_delta(spark, mount_dir, delta, False, None)
+    # the append's own idempotency probe found the probe id mounted
+    if n_mounted:
         raise ValueError(
             f"serve_dedup_lookup: probe_id {probe_id!r} is a mounted id — "
             "the lookup would read as a replay; pass an unused probe_id"
         )
-    pairs = dedup_append(spark, mount_dir, delta, update=False)
     return pairs.select(
         F.when(F.col("id_a") == F.lit(probe_id), F.col("id_b"))
         .otherwise(F.col("id_a"))

@@ -159,6 +159,67 @@ def simhash_frame(
     return df.select(id_col, text_col).mapInPandas(proc, f"{id_col} {id_dtype}, sig long")
 
 
+def minhash_rows(
+    texts: list, n_hashes: int, bands: int, shingle_n: int, seed: int
+) -> tuple[list, list]:
+    """The MinHash-LSH signature of each text: its distinct word shingles
+    (first-occurrence order) and its ``bands`` band hashes.  Shingling,
+    char-fold hashing, the n permutation minima and band folding run
+    fused over the whole list; the kernel of :func:`minhash_banded_frame`
+    (one call per Arrow batch) and of the driver-resident dedup append
+    (one call per delta).  NULL/empty texts get the EMPTY shingle set and
+    the PERM_MOD sentinel signature."""
+    import numpy as np
+
+    from simsearch_spark.functions.hashing import (
+        MOD,
+        PERM_MOD,
+        batch_kgram_hashes,
+        perm_params,
+    )
+
+    rows_per_band = n_hashes // bands
+    params = perm_params(n_hashes, seed)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
+
+    def band_fold(sig) -> list:
+        out = []
+        for j in range(bands):
+            acc = 0
+            for r in range(rows_per_band):
+                acc = (acc * 31 + int(sig[j * rows_per_band + r])) % MOD
+            out.append(acc)
+        return out
+
+    nonempty = [t is not None and t.strip() != "" for t in texts]
+    # one batched char-fold over EVERY k-gram of every text (r15, guide
+    # §4.2).  Duplicate shingles are hashed too: a permutation's MIN over
+    # the k-gram multiset equals its min over the distinct set, so the
+    # signatures are bit-identical (equality pinned in tests); the
+    # distinct STRING list is the output column and keeps the
+    # first-occurrence dedup.
+    all_hs = iter(
+        batch_kgram_hashes([t for t, ok in zip(texts, nonempty) if ok], shingle_n)[0]
+    )
+    sentinel = band_fold(np.full(n_hashes, PERM_MOD, dtype=np.int64))
+    sh_out, band_out = [], []
+    for t, ok in zip(texts, nonempty):
+        if not ok:
+            sh_out.append([])
+            band_out.append(list(sentinel))
+            continue
+        words = t.split(" ")
+        count = max(len(words) - (shingle_n - 1), 1)
+        sh_out.append(
+            list(dict.fromkeys(" ".join(words[i : i + shingle_n]) for i in range(count)))
+        )
+        # (n_hashes, n_kgrams) permuted hashes; a*h ≤ 9e8·1e9 < 2^63
+        perm = (a_vec * next(all_hs) + b_vec) % PERM_MOD
+        band_out.append(band_fold(perm.min(axis=1)))
+    return sh_out, band_out
+
+
 def minhash_banded_frame(
     df: DataFrame,
     id_col: str,
@@ -167,13 +228,11 @@ def minhash_banded_frame(
     bands: int = 4,
     shingle_n: int = 3,
     seed: int = 42,
-    fanout: bool = True,
 ) -> DataFrame:
     """(id, shingles, bands): the MinHash-LSH signature table in ONE Arrow
-    pass — shingling, char-fold hashing, the n permutation minima, and band
-    folding fused (the JVM chain evaluated n_hashes array-min HOF
-    expressions per row).  All-integer modular arithmetic identical to
-    ``minhash_bands(minhash_signature(token_hashes(...)))``
+    pass of :func:`minhash_rows` (the JVM chain evaluated n_hashes
+    array-min HOF expressions per row).  All-integer modular arithmetic
+    identical to ``minhash_bands(minhash_signature(token_hashes(...)))``
     (equality-tested on non-empty texts).  NULL/empty texts produce an
     EMPTY shingle set and the PERM_MOD sentinel signature (the column chain
     shingles them as [""], which made m empty docs collide into the same
@@ -182,73 +241,19 @@ def minhash_banded_frame(
     universe, so the sentinel is defense-in-depth for direct callers."""
     from collections.abc import Iterator
 
-    import numpy as np
     import pandas as pd
 
-    from simsearch_spark.functions.hashing import MOD as _MOD
-    from simsearch_spark.functions.hashing import PERM_MOD, perm_params
     from simsearch_spark.operators.fanout import fanout_for_kernel
 
     # the fused shingle/permutation kernel is the corpus pass this table
-    # costs — spread a single-split scan across the cores first (r14).
-    # fanout=False is the delta-append tier: its work is ∝|delta| by
-    # design and the caller's 1-job limit-probe must stay single-job
-    if fanout:
-        df = fanout_for_kernel(df, id_col)
+    # costs — spread a single-split scan across the cores first (r14)
+    df = fanout_for_kernel(df, id_col)
     id_dtype = dict(df.dtypes)[id_col]
-    rows_per_band = n_hashes // bands
-    params = perm_params(n_hashes, seed)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
-
-    from simsearch_spark.functions.hashing import batch_kgram_hashes
-
-    def _band_fold(sig, j, rpb):
-        acc = 0
-        for r in range(rpb):
-            acc = (acc * 31 + int(sig[j * rpb + r])) % _MOD
-        return acc
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts, nonempty = [], []
-            for t in pdf[text_col]:
-                ok = t is not None and t.strip() != ""
-                nonempty.append(ok)
-                if ok:
-                    texts.append(t)
-            # one batched char-fold over EVERY k-gram of the whole Arrow
-            # batch (r15, guide §4.2 — was an interpreted per-char loop).
-            # Duplicate shingles are hashed too: a permutation's MIN over
-            # the k-gram multiset equals its min over the distinct set, so
-            # the signatures are bit-identical (equality still pinned in
-            # tests); the distinct STRING list below is the output column
-            # and keeps the first-occurrence dedup.
-            all_hs = iter(batch_kgram_hashes(texts, shingle_n)[0])
-            sh_out, band_out = [], []
-            ti = iter(texts)
-            for ok in nonempty:
-                if not ok:
-                    sh_out.append([])
-                    band_out.append(
-                        [_band_fold(np.full(n_hashes, PERM_MOD, dtype=np.int64),
-                                    j, rows_per_band) for j in range(bands)]
-                    )
-                    continue
-                t = next(ti)
-                words = t.split(" ")
-                count = max(len(words) - (shingle_n - 1), 1)
-                shingles = list(
-                    dict.fromkeys(" ".join(words[i : i + shingle_n]) for i in range(count))
-                )
-                hs = next(all_hs)
-                # (n_hashes, n_kgrams) permuted hashes; a*h ≤ 9e8·1e9 < 2^63
-                perm = (a_vec * hs + b_vec) % PERM_MOD
-                sig = perm.min(axis=1)
-                bvals = [_band_fold(sig, j, rows_per_band) for j in range(bands)]
-                sh_out.append(shingles)
-                band_out.append(bvals)
-            yield pd.DataFrame({id_col: pdf[id_col], "shingles": sh_out, "bands": band_out})
+            sh, bv = minhash_rows(list(pdf[text_col]), n_hashes, bands, shingle_n, seed)
+            yield pd.DataFrame({id_col: pdf[id_col], "shingles": sh, "bands": bv})
 
     return df.select(id_col, text_col).mapInPandas(
         proc, f"{id_col} {id_dtype}, shingles array<string>, bands array<long>"

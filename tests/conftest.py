@@ -54,7 +54,6 @@ SLOW_TESTS: dict[str, set[str] | None] = {
     },
     "test_mount_dedup.py": {
         "test_dedup_embed_append_same_cell_parity",
-        "test_delete_docs_lifecycle",
         "test_compact_dedup_collapses_append_debris",
         "test_stream_dedup_append_equals_batch",
     },

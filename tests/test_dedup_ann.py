@@ -524,3 +524,26 @@ def test_clustered_pair_kernel_clamped(spark):
     rows_of = lambda d: sorted(tuple(r) for r in d.collect())
     assert rows_of(got) == rows_of(want)
     assert len(rows_of(got)) > 0
+
+
+def test_minhash_rows_equals_banded_frame(spark, sf_dir):
+    """The driver-side kernel IS the Arrow kernel: ``minhash_rows`` on a
+    list gives the rows ``minhash_banded_frame`` gives, NULL, blank and
+    unicode texts included."""
+    from simsearch_spark.operators.dedup import minhash_banded_frame, minhash_rows
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(120)
+    extra = spark.createDataFrame(
+        [(9001, "x y"), (9002, ""), (9003, None), (9004, "  déjà ✨ vu  "), (9005, "\t")],
+        "doc_id long, text string",
+    )
+    rows = sorted(tuple(r) for r in docs.unionByName(extra).collect())
+    sh, bands = minhash_rows([t for _i, t in rows], 16, 4, 3, 42)
+    got = {i: (s, b) for (i, _t), s, b in zip(rows, sh, bands)}
+    want = {
+        r.doc_id: (list(r.shingles), list(r.bands))
+        for r in minhash_banded_frame(
+            docs.unionByName(extra), "doc_id", "text", 16, 4, 3, 42
+        ).collect()
+    }
+    assert got == want

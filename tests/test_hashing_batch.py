@@ -79,3 +79,44 @@ def test_batch_fold_hashes_bit_identical():
 
 def test_batch_fold_hashes_empty_input():
     assert batch_fold_hashes([]).shape == (0,)
+
+
+@pytest.mark.parametrize("budget", [1, 64, 1000])
+def test_chunked_folds_equal_unchunked(budget, monkeypatch):
+    """Both kernels fold in bounded passes; any budget, including one far
+    below the longest document (which then spans several passes) and
+    below a single k-gram, gives the one-pass result."""
+    import simsearch_spark.functions.hashing as hh
+
+    texts = _corpus() + ["lone \ud800 surrogate", ""]
+    want_kg = hh.batch_kgram_hashes(texts, 3)
+    want_fold = hh.batch_fold_hashes(texts)
+    monkeypatch.setattr(hh, "KGRAM_CHAR_BUDGET", budget)
+    monkeypatch.setattr(hh, "FOLD_CELL_BUDGET", budget)
+    got, nkg = hh.batch_kgram_hashes(texts, 3)
+    assert nkg == want_kg[1]
+    for g, w in zip(got, want_kg[0]):
+        assert g.shape == w.shape and (g == w).all()
+    assert (hh.batch_fold_hashes(texts) == want_fold).all()
+    # a lone surrogate hashes by its code point, as ord() does
+    assert int(want_fold[-2]) == _scalar_fold("lone \ud800 surrogate")
+
+
+def test_kgram_kernel_memory_is_bounded():
+    """A batch holding an MB-sized document: the kernel's peak stays near
+    the budget plus the largest document, not ~25 bytes per character of
+    the whole batch (the one-pass kernel peaked at ~87 MB here)."""
+    import tracemalloc
+
+    rng = random.Random(5)
+    texts = [" ".join("w%d" % rng.randint(0, 999) for _ in range(150)) for _ in range(2000)]
+    texts.append(" ".join("word%d" % rng.randint(0, 99999) for _ in range(200_000)))
+    tracemalloc.start()
+    try:
+        got, _ = batch_kgram_hashes(texts, 3)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert sum(map(len, texts)) > 3_000_000
+    assert peak < 45e6, peak
+    assert (got[-1][:50] == _scalar_kgrams(texts[-1][:2000], 3)[:50]).all()

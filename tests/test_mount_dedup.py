@@ -11,6 +11,8 @@ holding ACROSS the mounted boundary, and idempotent under re-submission.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,7 +97,7 @@ def test_dedup_append_idempotent(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.parametrize("hot_mode", ["cap", "salt"])
-def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode):
+def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode, monkeypatch):
     """A boilerplate cluster SPANNING base and delta: bucket size is the
     base+delta membership, and the cap (lowest-id keep) / salt (blocked
     full recall) policies match the batch operator on the union exactly.
@@ -126,7 +128,15 @@ def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode):
         spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS,
         bucket_cap=cap, hot_mode=hot_mode,
     )
+    # the delta is small, but its over-cap buckets route it from the
+    # driver path to the capped distributed path
+    import simsearch_spark.mount.dedup as md
+
+    large_calls = []
+    orig = md._append_large
+    monkeypatch.setattr(md, "_append_large", lambda *a: large_calls.append(1) or orig(*a))
     got = _rows(dedup_append(spark, d, delta))
+    assert large_calls == [1]
     want = _rows(
         _batch_restricted(docs, delta_ids, bucket_cap=cap, hot_mode=hot_mode)
     )
@@ -640,3 +650,224 @@ def test_auto_fanout_scales_with_corpus(spark, sf_dir, tmp_path):
     sdirs = [x for x in os.listdir(f"{d}/dedup_shingles") if x.startswith("sbkt=")]
     assert 0 < len(sdirs) <= 8
     assert load_manifest(d)["dedup"]["n_sbkt"] == 8
+
+
+# -- the driver-resident small-delta path -----------------------------------
+# A delta within the fast-path gate is signed, paired and verified on the
+# driver; it must answer exactly as the distributed path (_append_large),
+# which these tests force by making the driver path decline.
+
+
+def _texts(seed: int, n: int, words: int = 30) -> list[str]:
+    rng = random.Random(seed)
+    return [" ".join(f"w{rng.randrange(400)}" for _ in range(words)) for _ in range(n)]
+
+
+def _near(t: str) -> str:
+    """``t`` plus one word: 3-shingle jaccard 28/29."""
+    return t + " zz"
+
+
+def _mount_texts(spark, d, texts, id_dtype="bigint", ids=None, **kw):
+    ids = list(range(len(texts))) if ids is None else ids
+    base = spark.createDataFrame(list(zip(ids, texts)), f"doc_id {id_dtype}, text string")
+    mount_dedup(spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS, **kw)
+
+
+def _both_paths(monkeypatch, fn):
+    """``fn()`` on the driver path (asserting it did not fall back), then
+    with the driver path declining so the distributed path answers."""
+    import simsearch_spark.mount.dedup as md
+
+    fell_back = []
+    orig = md._append_large
+    with monkeypatch.context() as m:
+        m.setattr(md, "_append_large", lambda *a: fell_back.append(1) or orig(*a))
+        driver = fn()
+    assert not fell_back, "the driver path fell back"
+    with monkeypatch.context() as m:
+        m.setattr(md, "_append_driver", lambda *a: None)
+        large = fn()
+    return driver, large
+
+
+@pytest.fixture(scope="module")
+def small_mount(spark, tmp_path_factory):
+    """40 random documents, mounted once; tests read it with update=False."""
+    texts = _texts(11, 40)
+    d = str(tmp_path_factory.mktemp("driver_path") / "m")
+    _mount_texts(spark, d, texts)
+    return d, texts
+
+
+def test_driver_path_equals_large_path(spark, small_mount, monkeypatch):
+    """Near-dups of base docs, delta↔delta pairs, a partial replay, a full
+    replay, an all-empty-text delta and an int delta against the bigint
+    mount: the driver path and the distributed path agree row for row."""
+    from simsearch_spark.mount.serve import serve_dedup_lookup
+
+    d, texts = small_mount
+    fresh = _texts(12, 1)[0]
+    rows = (
+        [(1000 + i, _near(texts[i])) for i in range(6)]  # delta ↔ base
+        + [(2000, fresh), (2001, _near(fresh))]  # delta ↔ delta
+        + [(i, texts[i]) for i in range(10, 14)]  # partial replay
+    )
+    delta = spark.createDataFrame(rows, "doc_id bigint, text string")
+    driver, large = _both_paths(
+        monkeypatch, lambda: _rows(dedup_append(spark, d, delta, update=False))
+    )
+    assert driver == large
+    got = {(a, b) for a, b, _j in driver}
+    assert {(i, 1000 + i) for i in range(6)} <= got and (2000, 2001) in got
+    assert not {i for p in got for i in p} & set(range(10, 14))  # replayed ids
+
+    as_int = delta.withColumn("doc_id", F.col("doc_id").cast("int"))
+    assert _both_paths(
+        monkeypatch, lambda: _rows(dedup_append(spark, d, as_int, update=False))
+    ) == (driver, driver)
+
+    for quiet in (
+        spark.createDataFrame([(i, texts[i]) for i in range(8)], "doc_id bigint, text string"),
+        spark.createDataFrame([(3000, ""), (3001, "   "), (3002, None)], "doc_id bigint, text string"),
+    ):
+        assert _both_paths(
+            monkeypatch, lambda: _rows(dedup_append(spark, d, quiet, update=False))
+        ) == ([], [])
+
+    def lookup(text):
+        return lambda: sorted(tuple(r) for r in serve_dedup_lookup(spark, d, text).collect())
+
+    assert _both_paths(monkeypatch, lookup(_texts(13, 1)[0])) == ([], [])
+    hit, hit_large = _both_paths(monkeypatch, lookup(_near(texts[3])))
+    assert hit == hit_large and [i for i, _j in hit] == [3]
+
+
+def test_driver_path_string_ids(spark, tmp_path, monkeypatch):
+    """String ids order in Python as least/greatest order them in Spark."""
+    from simsearch_spark.mount.serve import serve_dedup_lookup
+
+    texts = _texts(21, 24)
+    ids = [f"doc-{i:02d}é" for i in range(24)]
+    d = str(tmp_path / "m_str")
+    _mount_texts(spark, d, texts, id_dtype="string", ids=ids)
+    delta = spark.createDataFrame(
+        [("a-new", _near(texts[4])), ("z-new", _near(texts[7])), ("doc-05é", texts[5])],
+        "doc_id string, text string",
+    )
+    driver, large = _both_paths(
+        monkeypatch, lambda: _rows(dedup_append(spark, d, delta, update=False))
+    )
+    assert driver == large
+    assert {(a, b) for a, b, _j in driver} >= {("a-new", "doc-04é"), ("doc-07é", "z-new")}
+    hit = _both_paths(
+        monkeypatch,
+        lambda: sorted(tuple(r) for r in serve_dedup_lookup(spark, d, texts[9]).collect()),
+    )
+    assert hit[0] == hit[1] == [("doc-09é", 1.0)]
+
+
+def test_driver_path_tombstones_and_index_rows(spark, tmp_path, monkeypatch):
+    """A tombstoned base doc never pairs on either path, and an update=True
+    append leaves the same band/shingle rows and manifest count whichever
+    path wrote them."""
+    from simsearch_spark.mount import load_manifest
+    from simsearch_spark.mount.dedup import delete_docs
+
+    texts = _texts(31, 30)
+    rows = [(100 + i, _near(texts[i])) for i in range(5)] + [(2, texts[2])]
+    mounts = []
+    for name in ("m_driver", "m_large"):
+        d = str(tmp_path / name)
+        _mount_texts(spark, d, texts)
+        delete_docs(spark, d, [1])
+        mounts.append(d)
+    delta = spark.createDataFrame(rows, "doc_id bigint, text string")
+    calls = iter(mounts)
+    driver, large = _both_paths(
+        monkeypatch, lambda: _rows(dedup_append(spark, next(calls), delta))
+    )
+    assert driver == large
+    # doc 1 is tombstoned; the replayed row (2, texts[2]) is dropped, but
+    # the mounted doc 2 still pairs with its near-dup 102
+    assert {(a, b) for a, b, _j in driver} == {(0, 100), (2, 102), (3, 103), (4, 104)}
+
+    def index(d):
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(f"{d}/dedup_bands").collect()),
+            sorted(
+                (r[0], tuple(r[1]), r[2])
+                for r in spark.read.parquet(f"{d}/dedup_shingles").collect()
+            ),
+            load_manifest(d)["dedup"]["n_docs"],
+        )
+
+    assert index(mounts[0]) == index(mounts[1])
+
+
+def test_small_delta_job_ceiling(spark, tmp_path):
+    """The fixed cost the driver path removes, pinned: a small delta given
+    as a local relation appends in at most 8 Spark jobs and a lookup in at
+    most 4, every job carries the caller's job group (thread-pool jobs
+    included), and no plan holds a Python-worker node."""
+    import time
+
+    from pyspark.sql.classic.dataframe import DataFrame as _DF
+    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.types import DataType
+
+    import simsearch_spark.mount.dedup as md
+    from simsearch_spark.mount.serve import serve_dedup_lookup
+
+    texts = _texts(41, 40)
+    d = str(tmp_path / "m_jobs")
+    _mount_texts(spark, d, texts)
+    delta = md._local_frame(
+        spark,
+        [(500 + i, _near(texts[i])) for i in range(20)],
+        DataType.fromDDL("doc_id bigint, text string"),
+    )
+
+    plans: list[str] = []
+    orig_collect, orig_parquet = _DF.collect, DataFrameWriter.parquet
+
+    def spy_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig_collect(self)
+
+    def spy_parquet(self, path, *a, **kw):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return orig_parquet(self, path, *a, **kw)
+
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def jobs(group, fn):
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        bus.waitUntilEmpty()
+        time.sleep(0.2)
+        assert set(tracker.getJobIdsForGroup(None)) == before, "a job ran without the group"
+        return len(tracker.getJobIdsForGroup(group)), out
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(_DF, "collect", spy_collect)
+    mp.setattr(DataFrameWriter, "parquet", spy_parquet)
+    try:
+        n_append, pairs = jobs("g_append", lambda: dedup_append(spark, d, delta))
+        n_lookup, hits = jobs(
+            "g_lookup", lambda: orig_collect(serve_dedup_lookup(spark, d, texts[30]))
+        )
+    finally:
+        mp.undo()
+    assert len(_rows(pairs)) == 20 and [r[0] for r in hits] == [30]
+    assert n_append <= 8, n_append
+    assert n_lookup <= 4, n_lookup
+    for p in plans:
+        for node in ("MapInPandas", "PythonRDD", "ExistingRDD", "EvalPython"):
+            assert node not in p, p
