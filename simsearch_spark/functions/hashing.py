@@ -157,6 +157,14 @@ def _fold_spans(codes, S, L):
     return H
 
 
+def blank_text(t) -> bool:
+    """NULL or space-only text — the one emptiness rule of the Python
+    text kernels, equal to the SQL filters' ``trim(text) = ''`` and to
+    the oracles: Spark's and DuckDB's ``trim`` strip spaces only, so a
+    tab- or newline-only text is NOT blank (its one k-gram is itself)."""
+    return t is None or t.strip(" ") == ""
+
+
 def batch_kgram_hashes(texts: list, k: int):
     """Char-fold hashes of every token k-gram of every text, vectorized
     ACROSS the batch (r15, guide §4.2): every k-gram becomes a span of one

@@ -36,8 +36,9 @@ deployment pays once.  This package is that deployment shape:
   atomically replaces the artifact generation without interrupting
   serving.  r14 makes refresh FAMILY-GRANULAR
   (``refresh(families=["vector"|"text"|"dedup"|"bpe"])``): drift is
-  usually localized, so only the drifted family retrains — per-artifact
-  rename-aside swaps, untouched families byte-identical — and
+  usually localized, so only the drifted family retrains — one
+  whole-generation swap, untouched families hardlinked and
+  byte-identical (``lock.next_generation``) — and
   ``audit.audit_dedup`` adds the dedup dual of the drift audit (measured
   LSH recall on a bounded sample, with ``dedup_reestimate=True`` re-
   sizing the banding from the current corpus).

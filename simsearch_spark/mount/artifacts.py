@@ -82,6 +82,7 @@ __all__ = [
     "mount",
     "FAMILY_ARTIFACTS",
     "load_manifest",
+    "save_manifest",
     "load_centroid_map",
     "load_codebooks",
     "load_profiles",
@@ -416,8 +417,7 @@ def mount(
             "artifacts": FAMILY_ARTIFACTS["vector"] + FAMILY_ARTIFACTS["text"],
         }
         os.makedirs(mount_dir, exist_ok=True)
-        with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        save_manifest(mount_dir, manifest)
 
         if dedup:
             # the persisted MinHash signature/band index (mount/dedup.py) —
@@ -444,6 +444,33 @@ def load_manifest(mount_dir: str) -> dict:
             f"mount manifest version {m.get('version')} != {MANIFEST_VERSION}"
         )
     return m
+
+
+def _manifest_or_new(mount_dir: str) -> dict:
+    """The mount's manifest, or an empty one for a directory that a
+    single-family mount (``mount_dedup``, ``mount_bpe``) is creating."""
+    try:
+        return load_manifest(mount_dir)
+    except FileNotFoundError:
+        return {
+            "version": MANIFEST_VERSION,
+            "source": None,
+            "params": {},
+            "counts": {},
+            "artifacts": [],
+        }
+
+
+def save_manifest(mount_dir: str, manifest: dict) -> None:
+    """The ONE writer of ``manifest.json``: dump to a sibling temp file,
+    then ``os.replace`` it over the old one.  A reader, or a crash
+    mid-dump, sees the previous manifest or the new one, never a
+    truncated one; and inside a ``lock.next_generation`` tree the
+    hardlinked previous manifest is replaced, never written through."""
+    path = os.path.join(mount_dir, "manifest.json")
+    with open(path + ".tmp", "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+    os.replace(path + ".tmp", path)
 
 
 def load_centroid_map(spark: SparkSession, mount_dir: str) -> dict[int, list[float]]:

@@ -13,14 +13,14 @@ This module closes the operational loop:
   multi-query brute scan; returns the recall and the per-query hit
   counts.  At 100 TB the brute arm runs against a corpus sample; here the
   corpus IS probe-sized.
-- ``refresh``: retrain every artifact from the CURRENT corpus into a
-  sibling ``<mount>__next`` directory and atomically swap it in
-  (write-new-then-swap, the ``compact_codes`` discipline lifted to the
-  whole mount) with a manifest ``generation`` bump.  Serving is never
-  interrupted: a serve that loaded artifacts before the swap finishes on
-  the old generation (loads are bounded collects), the next serve sees
-  the new one.  On an object store this is a manifest-pointer swap; on a
-  local filesystem it is two directory renames.
+- ``refresh``: retrain every artifact (or only the drifted families)
+  from the CURRENT corpus into a new generation and atomically swap it
+  in (``lock.next_generation``) with a manifest ``generation`` bump.
+  Serving is never interrupted: a serve that loaded artifacts before the
+  swap finishes on the old generation (loads are bounded collects), the
+  next serve sees the new one.  On an object store this is a
+  manifest-pointer swap; on a local filesystem it is two directory
+  renames.
 
 The degradation→refresh→recovery loop is pinned by
 tests/test_mount_audit.py on a planted drifted delta (the
@@ -29,23 +29,25 @@ mixture-of-Gaussians machinery from tests/test_ann_recall.py).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from simsearch_spark.mount.lock import (
-    locked,
-    mount_state_fence,
-    mount_state_token,
-    mount_write_lock,
-    plant_lock,
-    restore_crashed_swap,
+from simsearch_spark.mount.artifacts import (
+    FAMILY_ARTIFACTS,
+    _dedup_family_params,
+    _train_text_family,
+    _train_vector_family,
+    load_manifest,
+    load_profiles,
+    mount,
+    save_manifest,
 )
-from simsearch_spark.mount.artifacts import load_manifest, mount
+from simsearch_spark.mount.bpe import mount_bpe
+from simsearch_spark.mount.lock import locked, mount_state_token, next_generation
+from simsearch_spark.sources.registry import load_table
 
 __all__ = ["audit_drift", "audit_dedup", "audit_text", "auto_maintain", "refresh"]
 
@@ -508,6 +510,7 @@ def audit_text(
     }
 
 
+@locked("refresh")
 def refresh(
     spark: SparkSession,
     mount_dir: str,
@@ -532,127 +535,112 @@ def refresh(
 
     ``families`` (VERDICT r13 task 1): ``None`` retrains EVERYTHING —
     the whole-mount default.  A subset of ``FAMILY_ARTIFACTS`` keys
-    (``vector`` / ``text`` / ``dedup``) regenerates ONLY those families
-    — drift is usually localized (the audit names the family), and at
-    100 TB a full retrain re-pays the entire corpus for artifacts that
-    did not drift.  Family artifacts train into a sibling staging
-    directory and swap in per-artifact (rename-aside, ``_swap_dirs``);
-    every artifact of an untouched family is byte-identical afterwards,
-    and the manifest generation still advances.
+    (``vector`` / ``text`` / ``dedup`` / ``bpe``) regenerates ONLY those
+    families — drift is usually localized (the audit names the family),
+    and at 100 TB a full retrain re-pays the entire corpus for artifacts
+    that did not drift.  Every artifact of an untouched family is
+    byte-identical afterwards (the same inodes), and the manifest
+    generation still advances.  Both modes carry the mounted language-ID
+    profiles and dedup hash family unless the caller passes new ones.
 
-    Crash discipline: the full-mount swap is write-new-then-two-renames
-    (an object store swaps a manifest pointer instead).  A crash between
-    the renames leaves ``<mount>__old`` holding the intact previous
-    generation — the next ``refresh`` (or any caller) restores it before
-    proceeding, so no crash point loses a generation.  The family path
-    inherits ``_swap_dirs``' per-artifact guarantee: at least one
-    complete copy of each artifact exists at every instant."""
-    restore_crashed_swap(mount_dir)  # BEFORE locking (lock.py docstring)
-    with mount_write_lock(mount_dir, "refresh"):
-        return _refresh_impl(
-            spark, mount_dir, sf_dir, emb_frame, docs_frame, families,
-            mount_kwargs,
-        )
-
-
-def _refresh_impl(
-    spark: SparkSession,
-    mount_dir: str,
-    sf_dir: str | None,
-    emb_frame: DataFrame | None,
-    docs_frame: DataFrame | None,
-    families: list[str] | None,
-    mount_kwargs: dict,
-) -> dict:
+    Crash discipline: both modes publish through
+    ``lock.next_generation`` — the retrain writes into a sibling
+    directory (a hardlink tree of what it keeps), and the new
+    generation becomes visible by two directory renames, all families
+    and the manifest at once (an object store swaps a manifest pointer
+    instead).  A failure before the renames — a guard, a fence, an
+    exception in a trainer — leaves the live mount untouched.  A crash
+    between the renames leaves ``<mount>__old`` holding the intact
+    previous generation, which the next lock acquisition on the mount
+    restores, so no crash point loses a generation or mixes two."""
     allow_shrink = bool(mount_kwargs.pop("allow_shrink", False))
-    old = mount_dir.rstrip("/") + "__old"
     old_manifest = load_manifest(mount_dir)
     tok0 = mount_state_token(mount_dir)  # refresh fence snapshot (mount/lock.py)
     src = sf_dir if sf_dir is not None else old_manifest["source"]
     if families is not None:
         return _refresh_families(
             spark, mount_dir, src, old_manifest, list(families),
-            emb_frame, docs_frame, allow_shrink, mount_kwargs,
+            emb_frame, docs_frame, allow_shrink, mount_kwargs, tok0,
         )
     if "dedup_reestimate" in mount_kwargs:
         raise ValueError(
             "dedup_reestimate=True requires families=['dedup'] — a full "
             "refresh regenerates the index with the carried hash family"
         )
-    nxt = mount_dir.rstrip("/") + "__next"
-    if os.path.isdir(nxt):
-        shutil.rmtree(nxt)  # a crashed earlier refresh left debris
-    # carry the mounted dedup hash family into the new generation — a
-    # refresh must never silently revert a custom family to the module
-    # defaults (self-review r12); an explicit dedup_params still wins
-    if "profiles" not in mount_kwargs and os.path.isdir(
-        os.path.join(mount_dir, "langid_profiles")
-    ):
-        # carry the MOUNTED language-ID profiles (possibly custom) — the
-        # full path must not silently revert them to the embedded seeds
-        # any more than the family path does (review r14)
-        from simsearch_spark.mount.artifacts import load_profiles
-
-        mount_kwargs["profiles"] = load_profiles(spark, mount_dir)
-    if "dedup_params" not in mount_kwargs and old_manifest.get("dedup"):
-        dd = old_manifest["dedup"]
-        mount_kwargs["dedup_params"] = {
-            k: dd[k]
-            for k in (
-                "id_col", "text_col", "threshold", "n_hashes", "bands",
-                "shingle_n", "seed", "bucket_cap", "hot_mode",
-            )
-            if k in dd
-        }
-    mount(
-        spark, src, nxt,
-        emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
+    mount_kwargs = _carry_mounted(
+        spark, mount_dir, old_manifest, mount_kwargs, FAMILY_ARTIFACTS
     )
-    if old_manifest.get("bpe"):
-        # carry the frozen-tokenizer artifact into the new generation
-        # (mount() does not train it by default — mount_bpe is opt-in,
-        # like mount_dedup was before it moved into mount's default set)
-        from simsearch_spark.mount.bpe import mount_bpe
-        from simsearch_spark.sources.registry import load_table
-
-        bp = old_manifest["bpe"]
-        mount_bpe(
-            spark, nxt,
-            load_table(spark, src, "documents") if docs_frame is None else docs_frame,
-            text_col=bp["text_col"], n_merges=bp["n_merges"],
+    with next_generation(
+        mount_dir, "refresh", tok0, rewrite=os.listdir(mount_dir)
+    ) as nxt:
+        mount(
+            spark, src, nxt,
+            emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
         )
-    manifest = load_manifest(nxt)
-    n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
-    n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
-    if n_new < n_old and not allow_shrink:
-        shutil.rmtree(nxt)
-        raise ValueError(
-            f"refresh: retrain frame covers {n_new} vectors < the mounted "
-            f"{n_old} — appended rows would silently vanish from the new "
-            "generation; pass emb_frame/docs_frame holding the CURRENT "
-            "corpus (or allow_shrink=True to re-scope deliberately)"
-        )
-    manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
-    with open(os.path.join(nxt, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-
-    try:
-        mount_state_fence(mount_dir, tok0, "refresh")
-    except Exception:
-        shutil.rmtree(nxt, ignore_errors=True)
-        raise
-    # the two-rename swap would carry the HELD lock file away with the
-    # old generation, leaving the rest of the caller's critical section
-    # (e.g. auto_maintain's compactions) without cross-process
-    # exclusion — plant our lock into nxt so the rename moves an owned
-    # lock file into place atomically (review r14)
-    plant_lock(nxt, "refresh")
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(mount_dir, old)
-    os.rename(nxt, mount_dir)
-    shutil.rmtree(old)
+        if old_manifest.get("bpe"):
+            # carry the frozen-tokenizer artifact into the new generation
+            # (mount() does not train it by default — mount_bpe is opt-in,
+            # like mount_dedup was before it moved into mount's default set)
+            bp = old_manifest["bpe"]
+            mount_bpe(
+                spark, nxt,
+                load_table(spark, src, "documents") if docs_frame is None else docs_frame,
+                text_col=bp["text_col"], n_merges=bp["n_merges"],
+            )
+        manifest = load_manifest(nxt)
+        n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
+        n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
+        _guard_shrink(n_new, n_old, "vectors", "the new generation", allow_shrink)
+        manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
+        save_manifest(nxt, manifest)
     return manifest
+
+
+def _guard_shrink(
+    n_new: int, n_old: int, unit: str, where: str, allow_shrink: bool
+) -> None:
+    """Reject a retrain frame covering fewer rows than the mount holds:
+    the appended rows would silently vanish from the new generation."""
+    if n_new < n_old and not allow_shrink:
+        raise ValueError(
+            f"refresh: retrain frame covers {n_new} {unit} < the mounted "
+            f"{n_old} — appended {unit} would silently vanish from {where}; "
+            "pass emb_frame/docs_frame holding the CURRENT corpus (or "
+            "allow_shrink=True to re-scope deliberately)"
+        )
+
+
+#: the dedup hash-family keys a refresh carries into the new generation
+#: (the layout fan-outs ``n_bkt``/``n_sbkt`` are deliberately re-derived)
+_DEDUP_CARRIED = (
+    "id_col", "text_col", "threshold", "n_hashes", "bands", "shingle_n",
+    "seed", "bucket_cap", "hot_mode",
+)
+
+
+def _carry_mounted(
+    spark: SparkSession,
+    mount_dir: str,
+    old_manifest: dict,
+    mount_kwargs: dict,
+    families,
+) -> dict:
+    """``mount_kwargs`` with the MOUNTED language-ID profiles and dedup
+    hash family filled in for the retrained ``families`` where the
+    caller passed none — a refresh must never silently revert a custom
+    family or profile set to the module defaults (self-review r12,
+    review r14)."""
+    kw = dict(mount_kwargs)
+    if (
+        "text" in families
+        and kw.get("profiles") is None
+        and os.path.isdir(os.path.join(mount_dir, "langid_profiles"))
+    ):
+        kw["profiles"] = load_profiles(spark, mount_dir)
+    dd = old_manifest.get("dedup")
+    if "dedup" in families and kw.get("dedup_params") is None and dd:
+        kw["dedup_params"] = {k: dd[k] for k in _DEDUP_CARRIED if k in dd}
+    return kw
 
 
 def _refresh_families(
@@ -665,21 +653,15 @@ def _refresh_families(
     docs_frame: DataFrame | None,
     allow_shrink: bool,
     mount_kwargs: dict,
+    tok0: tuple,
 ) -> dict:
     """Family-granular refresh (VERDICT r13 task 1): retrain only the
-    named families into ``<mount>__famnext``, swap each artifact in via
-    the rename-aside discipline, and advance the manifest generation.
+    named families into the ``next_generation`` tree, whose every other
+    entry is a hardlink of the live mount, and publish it with one swap.
     Untouched families' artifacts are never rewritten — byte-identical
-    across the refresh (pinned in tests/test_mount_audit.py)."""
-    from simsearch_spark.mount.artifacts import (
-        FAMILY_ARTIFACTS,
-        _dedup_family_params,
-        _train_text_family,
-        _train_vector_family,
-    )
-    from simsearch_spark.mount.maintain import _swap_dirs
-    from simsearch_spark.sources.registry import load_table
-
+    across the refresh (pinned in tests/test_mount_audit.py).  A vector
+    retrain does not keep ``tombstones``: it is the compaction horizon,
+    exactly as the full refresh."""
     unknown = set(families) - set(FAMILY_ARTIFACTS)
     if unknown:
         raise ValueError(
@@ -706,14 +688,15 @@ def _refresh_families(
     if mount_kwargs.get("dedup_reestimate") and "dedup" not in families:
         raise ValueError("dedup_reestimate=True requires 'dedup' in families")
 
-    tok0 = mount_state_token(mount_dir)  # refresh fence snapshot (mount/lock.py)
-    fam_tmp = mount_dir.rstrip("/") + "__famnext"
-    if os.path.isdir(fam_tmp):
-        shutil.rmtree(fam_tmp)  # a crashed earlier family refresh left debris
-    os.makedirs(fam_tmp)
-    manifest = json.loads(json.dumps(old_manifest))  # deep copy
-
-    try:
+    mount_kwargs = _carry_mounted(
+        spark, mount_dir, old_manifest, mount_kwargs, families
+    )
+    rewrite = {a for fam in families for a in FAMILY_ARTIFACTS[fam]}
+    if "vector" in families:
+        rewrite.add("tombstones")
+    with next_generation(
+        mount_dir, "refresh(families=...)", tok0, rewrite
+    ) as nxt:
         vparams = n_new = None
         if "vector" in families:
             emb = (
@@ -724,21 +707,15 @@ def _refresh_families(
             train = mount_kwargs.get("train_frame")
             try:
                 vparams, n_new = _train_vector_family(
-                    spark, emb, emb if train is None else train, fam_tmp
+                    spark, emb, emb if train is None else train, nxt
                 )
             finally:
                 emb.unpersist()
             n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
-            if n_new < n_old and not allow_shrink:
-                raise ValueError(
-                    f"refresh: retrain frame covers {n_new} vectors < the "
-                    f"mounted {n_old} — appended rows would silently vanish "
-                    "from the new generation; pass emb_frame holding the "
-                    "CURRENT corpus (or allow_shrink=True)"
-                )
+            _guard_shrink(
+                n_new, n_old, "vectors", "the new generation", allow_shrink
+            )
 
-        dd_manifest = None
-        bp_manifest = None
         langs = None
         if {"text", "dedup", "bpe"} & set(families):
             # ONE persisted documents read shared by both trainers — the
@@ -754,71 +731,37 @@ def _refresh_families(
             )
             try:
                 if "text" in families:
-                    prof = mount_kwargs.get("profiles")
-                    if prof is None and os.path.isdir(
-                        os.path.join(mount_dir, "langid_profiles")
-                    ):
-                        # carry the MOUNTED profiles (possibly custom) —
-                        # a refresh must never silently revert them to
-                        # the embedded seeds (the r12 dedup-family rule
-                        # applied to the text family, review r14)
-                        from simsearch_spark.mount.artifacts import (
-                            load_profiles,
-                        )
-
-                        prof = load_profiles(spark, mount_dir)
                     # EARLY coverage pre-check (review r14): reject an
                     # obviously-shrunk frame before paying the retrain
                     # (docs is persisted — the count is cheap); the
                     # post-train bm25 comparison below stays the
                     # authoritative guard
                     n_txt_old = _bm25_ndocs(spark, mount_dir)
-                    if int(docs.count()) < n_txt_old and not allow_shrink:
-                        raise ValueError(
-                            f"refresh: retrain frame covers {docs.count()} "
-                            f"docs < the mounted {n_txt_old} — appended docs "
-                            "would silently vanish from the text artifacts; "
-                            "pass docs_frame holding the CURRENT corpus (or "
-                            "allow_shrink=True)"
-                        )
-                    langs = _train_text_family(spark, docs, prof, fam_tmp)
+                    _guard_shrink(
+                        int(docs.count()), n_txt_old, "docs",
+                        "the text artifacts", allow_shrink,
+                    )
+                    langs = _train_text_family(
+                        spark, docs, mount_kwargs.get("profiles"), nxt
+                    )
                     # coverage guard (review r14): the text artifacts
                     # derive from the docs frame — a retrain that covers
                     # fewer docs than the mounted bm25_global silently
                     # drops appended docs from every LM/BM25 table, the
                     # same failure the vector/dedup guards reject
-                    n_txt_new = _bm25_ndocs(spark, fam_tmp)
-                    if n_txt_new < n_txt_old and not allow_shrink:
-                        raise ValueError(
-                            f"refresh: retrain frame covers {n_txt_new} docs "
-                            f"< the mounted {n_txt_old} — appended docs would "
-                            "silently vanish from the text artifacts; pass "
-                            "docs_frame holding the CURRENT corpus (or "
-                            "allow_shrink=True)"
-                        )
+                    _guard_shrink(
+                        _bm25_ndocs(spark, nxt), n_txt_old, "docs",
+                        "the text artifacts", allow_shrink,
+                    )
                     # re-baseline the drift audit on the NEW tables +
-                    # the corpus they trained on (scored from fam_tmp —
+                    # the corpus they trained on (scored from nxt —
                     # the live mount is untouched until publication)
-                    txt_baseline = _sample_lm_stats(spark, fam_tmp, docs)
+                    txt_baseline = _sample_lm_stats(spark, nxt, docs)
                 if "dedup" in families:
+                    # resolved per call, so a wrapped mount_dedup is seen
                     from simsearch_spark.mount.dedup import mount_dedup
 
-                    dp = mount_kwargs.get("dedup_params")
-                    if dp is None and old_manifest.get("dedup"):
-                        dd = old_manifest["dedup"]
-                        dp = {
-                            k: dd[k]
-                            for k in (
-                                "id_col", "text_col", "threshold", "n_hashes",
-                                "bands", "shingle_n", "seed", "bucket_cap",
-                                "hot_mode",
-                            )
-                            if k in dd
-                        }
-                    n_docs_old = int(
-                        old_manifest.get("dedup", {}).get("n_docs", 0)
-                    )
-                    dpf = _dedup_family_params(dp)
+                    dpf = _dedup_family_params(mount_kwargs.get("dedup_params"))
                     if mount_kwargs.get("dedup_reestimate"):
                         # re-size the banding from the CURRENT corpus at
                         # the mounted threshold (VERDICT r13 task 3): a
@@ -836,22 +779,16 @@ def _refresh_families(
                         )
                         dpf["n_hashes"] = mp.n_hashes
                         dpf["bands"] = mp.bands
-                    dd_manifest = mount_dedup(spark, fam_tmp, docs, **dpf)
-                    n_docs_new = int(dd_manifest["dedup"]["n_docs"])
-                    if n_docs_new < n_docs_old and not allow_shrink:
-                        raise ValueError(
-                            f"refresh: retrain frame covers {n_docs_new} docs "
-                            f"< the mounted {n_docs_old} — appended docs would "
-                            "silently vanish from the new dedup index; pass "
-                            "docs_frame holding the CURRENT corpus (or "
-                            "allow_shrink=True)"
-                        )
+                    dd_manifest = mount_dedup(spark, nxt, docs, **dpf)
+                    _guard_shrink(
+                        int(dd_manifest["dedup"]["n_docs"]),
+                        int(old_manifest.get("dedup", {}).get("n_docs", 0)),
+                        "docs", "the new dedup index", allow_shrink,
+                    )
                 if "bpe" in families:
-                    from simsearch_spark.mount.bpe import mount_bpe
-
                     bp = old_manifest["bpe"]
                     bp_manifest = mount_bpe(
-                        spark, fam_tmp, docs,
+                        spark, nxt, docs,
                         text_col=bp["text_col"], n_merges=bp["n_merges"],
                     )
                     if (
@@ -873,60 +810,20 @@ def _refresh_families(
             finally:
                 docs.unpersist()
 
-        # refresh fence: a lock-bypassing append during the retrain
-        # must abort publication (fam_tmp cleaned by the finally)
-        mount_state_fence(mount_dir, tok0, "refresh(families=...)")
-        # PUBLISH: per-artifact rename-aside swaps — the only mutation of
-        # the live mount, each step leaving a complete copy on disk.
-        # The DEDUP family swaps LAST, immediately before the atomic
-        # manifest replace below: dedup is the one family whose manifest
-        # params drive how its artifacts are READ (the frozen hash
-        # family), so the window in which new artifacts could serve
-        # under the old family block is two renames wide.  A crash
-        # inside that window is DETECTABLE — audit_dedup's integrity
-        # cross-check recomputes the sample's band rows from the
-        # manifest family and reports every mismatch — and repairable
-        # by re-running the dedup family refresh (review r14).
-        for fam in sorted(families, key=lambda f: f == "dedup"):
-            for art in FAMILY_ARTIFACTS[fam]:
-                art_tmp = os.path.join(fam_tmp, art)
-                if os.path.isdir(art_tmp):
-                    _swap_dirs(art_tmp, os.path.join(mount_dir, art))
-
+        # the trainers' own manifest blocks (dedup, bpe) are already in
+        # the tree's manifest, which started as the live one
+        manifest = load_manifest(nxt)
         if "vector" in families:
             manifest["params"].update(vparams)
             manifest["counts"]["n_vectors"] = int(n_new)
-            # a vector retrain is the compaction horizon, exactly as the
-            # full refresh: tombstoned rows are not re-encoded
-            tomb = os.path.join(mount_dir, "tombstones")
-            if os.path.isdir(tomb):
-                shutil.rmtree(tomb)
         if "text" in families:
             manifest["params"]["langs"] = langs
             manifest["text_audit"] = {
                 "baseline_ppl": txt_baseline["log_ppl"],
                 "baseline_coverage": txt_baseline["coverage"],
             }
-        if "dedup" in families:
-            manifest["dedup"] = dd_manifest["dedup"]
-            for art in FAMILY_ARTIFACTS["dedup"]:
-                # a dedup family ADDED via refresh (dedup_params on a
-                # dedup-less mount) must enter the artifact inventory
-                if art not in manifest.get("artifacts", []):
-                    manifest.setdefault("artifacts", []).append(art)
-        if "bpe" in families:
-            manifest["bpe"] = bp_manifest["bpe"]
-            if "bpe_merges" not in manifest.get("artifacts", []):
-                manifest.setdefault("artifacts", []).append("bpe_merges")
         manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
-        # atomic replace: the manifest is never half-written, and the
-        # artifact-vs-manifest inconsistency window closes with one rename
-        mpath = os.path.join(mount_dir, "manifest.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(mpath + ".tmp", mpath)
-    finally:
-        shutil.rmtree(fam_tmp, ignore_errors=True)
+        save_manifest(nxt, manifest)
     return manifest
 
 
@@ -1021,8 +918,8 @@ def auto_maintain(
             a["recall"] is not None and a["recall"] < dedup_recall_floor
         ) or a["index_integrity_mismatches"] > 0:
             # low measured recall OR stored-vs-family mismatch (index
-            # corruption / an interrupted family swap) — both are fixed
-            # by rebuilding the index from the current corpus
+            # corruption) — both are fixed by rebuilding the index from
+            # the current corpus
             to_refresh.append("dedup")
     if manifest.get("bpe") and docs_frame is not None:
         from simsearch_spark.mount.bpe import audit_bpe

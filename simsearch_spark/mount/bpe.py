@@ -22,14 +22,18 @@ into deltas encodes identically (split-invariance for free).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simsearch_spark.mount.lock import locked
-from simsearch_spark.mount.artifacts import _write, load_manifest
+from simsearch_spark.mount.artifacts import (
+    _manifest_or_new,
+    _write,
+    load_manifest,
+    save_manifest,
+)
 
 __all__ = [
     "mount_bpe",
@@ -159,18 +163,7 @@ def mount_bpe(
     # a falling ratio means the merges no longer fit the incoming
     # distribution (new language, new boilerplate) — tokenizer drift.
     baseline = _sample_cpt(spark, live, text_col, merges, AUDIT_SAMPLE_N)
-    try:
-        manifest = load_manifest(mount_dir)
-    except FileNotFoundError:
-        from simsearch_spark.mount.artifacts import MANIFEST_VERSION
-
-        manifest = {
-            "version": MANIFEST_VERSION,
-            "source": None,
-            "params": {},
-            "counts": {},
-            "artifacts": [],
-        }
+    manifest = _manifest_or_new(mount_dir)
     manifest["bpe"] = {
         "text_col": text_col,
         "n_merges": n,
@@ -179,8 +172,7 @@ def mount_bpe(
     }
     if "bpe_merges" not in manifest.get("artifacts", []):
         manifest.setdefault("artifacts", []).append("bpe_merges")
-    with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    save_manifest(mount_dir, manifest)
     return manifest
 
 
@@ -242,15 +234,18 @@ def bpe_encode_stats(
     return toks.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("bpe_tokens")).alias("n_subwords"),
+        # NULL for a group whose documents hold no token at all
         F.round(
-            F.sum(
-                F.aggregate(
-                    F.transform(F.col("bpe_tokens"), F.length),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-            ).cast("double")
-            / F.sum(F.size("bpe_tokens")),
+            F.try_divide(
+                F.sum(
+                    F.aggregate(
+                        F.transform(F.col("bpe_tokens"), F.length),
+                        F.lit(0).cast("long"),
+                        lambda a, x: a + x,
+                    )
+                ).cast("double"),
+                F.sum(F.size("bpe_tokens")),
+            ),
             6,
         ).alias("chars_per_token"),
     )

@@ -56,7 +56,6 @@ ingestion dual of the text front.
 
 from __future__ import annotations
 
-import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
@@ -75,7 +74,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from simsearch_spark.mount.artifacts import _write, load_manifest
+from simsearch_spark.mount.artifacts import (
+    _manifest_or_new,
+    _write,
+    load_manifest,
+    save_manifest,
+)
 from simsearch_spark.mount.lock import locked
 from simsearch_spark.operators.dedup import (
     LSH_BUCKET_CAP,
@@ -291,18 +295,7 @@ def mount_dedup(
 
     # a dedup-only mount (text corpus without vector artifacts) is a
     # legitimate deployment — start a fresh manifest when none exists
-    try:
-        manifest = load_manifest(mount_dir)
-    except FileNotFoundError:
-        from simsearch_spark.mount.artifacts import MANIFEST_VERSION
-
-        manifest = {
-            "version": MANIFEST_VERSION,
-            "source": None,
-            "params": {},
-            "counts": {},
-            "artifacts": [],
-        }
+    manifest = _manifest_or_new(mount_dir)
     manifest["dedup"] = {
         "id_col": id_col,
         # Spark's xxhash64 is TYPE-sensitive (int and long hash
@@ -329,8 +322,7 @@ def mount_dedup(
     for a in ("dedup_bands", "dedup_shingles"):
         if a not in manifest["artifacts"]:
             manifest["artifacts"].append(a)
-    with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    save_manifest(mount_dir, manifest)
     return manifest
 
 
@@ -552,8 +544,7 @@ def _update_index(
     finally:
         shutil.rmtree(sh_stage, ignore_errors=True)
     manifest["dedup"]["n_docs"] = int(manifest["dedup"]["n_docs"]) + n_new
-    with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    save_manifest(mount_dir, manifest)
 
 
 @locked("dedup_append")

@@ -1,6 +1,6 @@
-"""Concurrent-mutator safety for the mount lifecycle (r14).
+"""Concurrent-mutator safety and the publish rules of the mount lifecycle.
 
-Two mechanisms, layered:
+Three mechanisms, layered:
 
 1. ``mount_write_lock`` — an advisory, re-entrant, crash-recoverable
    write lock every MUTATING lifecycle op takes (appends, deletes,
@@ -11,8 +11,9 @@ Two mechanisms, layered:
    ``refresh`` retrain-and-swap concurrent with an append loses the
    delta the same way; two appends interleaving can double-commit
    through the idempotency probe.  READS never take the lock — serving
-   stays lock-free (the rename-aside swap keeps a complete artifact on
-   disk at every instant).
+   stays lock-free (both publish rules below keep a complete artifact on
+   disk at every instant).  Every acquisition first repairs what a
+   crashed publish left behind (``restore_crashed_swap``).
 
    Scope and honesty: the lock is a same-host advisory file lock
    (atomic ``O_CREAT|O_EXCL``), which matches the engine's coordinator
@@ -23,14 +24,35 @@ Two mechanisms, layered:
    is at least diagnosable); that deployment shape is out of scope and
    documented here rather than half-solved.
 
-2. Snapshot fences (``parquet_census`` / ``snapshot_read`` /
-   ``fence``) — compactions read an EXPLICIT file-list snapshot of the
-   artifact and re-census immediately before the swap; a census change
-   means some writer bypassed the lock, and the compaction aborts
-   loudly (``ConcurrentMutationError``, staging dir removed, artifact
-   untouched) instead of swapping in a rewrite that silently drops the
-   bypasser's rows.  Detection for the discipline the lock can't
-   enforce.
+2. Two publish rules, and no others:
+
+   - ``next_generation`` publishes a NEW GENERATION of the whole mount
+     (``refresh`` in both modes, ``split_cell``, ``merge_cells``):
+     ``<mount>__next`` is a hardlink tree of every entry the op does not
+     rewrite, the op writes its new pieces and manifest into it, and a
+     fence + two directory renames swap it in.  Readers see the old
+     generation or the new one; a failure before the renames leaves the
+     live mount untouched; a crash between them leaves ``<mount>__old``,
+     which the next lock acquisition renames back.
+   - ``_swap_dirs`` replaces ONE artifact in place (the compactions and
+     ``append_rows``' text statistics): the old directory is renamed
+     aside, the new one renamed in, the aside deleted.  A crash between
+     the renames leaves ``<artifact>__old``, which the next lock
+     acquisition renames back.
+
+   The manifest itself is only ever written by
+   ``artifacts.save_manifest`` (temp file + ``os.replace``), so it is
+   never half-written and never written through a hardlink.
+
+3. Snapshot fences (``parquet_census`` / ``snapshot_read`` /
+   ``fence`` / ``mount_state_fence``) — compactions read an EXPLICIT
+   file-list snapshot of the artifact and re-census immediately before
+   the swap, and a new generation re-checks the manifest and tombstones
+   it was built from; a change means some writer bypassed the lock, and
+   the op aborts loudly (``ConcurrentMutationError``, staging removed,
+   live mount untouched) instead of publishing a rewrite that silently
+   drops the bypasser's rows.  Detection for the discipline the lock
+   can't enforce.
 
 Reference parity note: the reference engine is a single-process
 in-memory service (``eu/smartdatalake/simsearch/coordinator``) whose
@@ -41,9 +63,11 @@ this module does.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
+import shutil
 import socket
 import threading
 import time
@@ -54,10 +78,10 @@ __all__ = [
     "fence",
     "locked",
     "manifest_bytes",
-    "manifest_fence",
     "mount_state_fence",
     "mount_state_token",
     "mount_write_lock",
+    "next_generation",
     "parquet_census",
     "plant_lock",
     "restore_crashed_swap",
@@ -65,6 +89,8 @@ __all__ = [
 ]
 
 LOCK_NAME = ".write_lock"
+#: suffix of the previous copy while a swap is between its renames
+ASIDE = "__old"
 #: default seconds a second writer waits before giving up — sized for
 #: "a compaction or refresh is ahead of me", not for interactive use
 DEFAULT_TIMEOUT = 600.0
@@ -90,6 +116,13 @@ class ConcurrentMutationError(RuntimeError):
 
 def _lock_path(mount_dir: str) -> str:
     return os.path.join(os.path.realpath(mount_dir), LOCK_NAME)
+
+
+def _payload(op: str) -> bytes:
+    """The lock file's content: who holds it, for what, since when."""
+    return json.dumps(
+        {"pid": os.getpid(), "host": socket.gethostname(), "op": op, "ts": time.time()}
+    ).encode()
 
 
 def _read_holder(lock_path: str) -> dict:
@@ -183,6 +216,10 @@ class mount_write_lock:
         self._key: tuple[str, int] | None = None
 
     def __enter__(self) -> "mount_write_lock":
+        # BEFORE makedirs: a crashed whole-mount swap leaves the live
+        # directory missing, and creating it empty would hide the intact
+        # old generation
+        restore_crashed_swap(self.mount_dir)
         if self.makedirs:  # mount-time ops lock a dir they create
             os.makedirs(self.mount_dir, exist_ok=True)
         real = os.path.realpath(self.mount_dir)
@@ -221,21 +258,11 @@ class mount_write_lock:
                             ) from None
                         fd = None
                     else:
-                        os.write(
-                            fd,
-                            json.dumps(
-                                {
-                                    "pid": os.getpid(),
-                                    "host": socket.gethostname(),
-                                    "op": self.op,
-                                    "ts": time.time(),
-                                }
-                            ).encode(),
-                        )
+                        os.write(fd, _payload(self.op))
                         os.close(fd)
                         _HELD[key] = 1
                         self._key = key
-                        return self
+                        break
             # contended: decide stale vs wait OUTSIDE the guard, but with
             # a FRESH in-process ownership check at decision time — a
             # stale holder_here from before the payload read could judge
@@ -273,6 +300,14 @@ class mount_write_lock:
                     f"{self.timeout:.1f}s ({self.op!r} gave up)"
                 )
             time.sleep(_POLL)
+        # the per-artifact dual runs only now: just the holder knows no
+        # lock-respecting _swap_dirs is between its renames
+        try:
+            _restore_asides(self.mount_dir)
+        except BaseException:
+            self.__exit__(None, None, None)
+            raise
+        return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
         key = self._key
@@ -335,12 +370,12 @@ def snapshot_read(spark, path: str, files: frozenset):
 
 
 def restore_crashed_swap(mount_dir: str) -> None:
-    """If a previous whole-mount two-rename swap (refresh, split_cell,
-    merge_cells) crashed between its renames, the live directory is
-    missing but the old generation is intact under ``<mount>__old`` —
-    restore it.  Must run BEFORE lock acquisition: the lock file lives
-    inside the mount directory, which does not exist in this crash
-    state.  Two racing restorers are benign — exactly one rename
+    """If a previous ``next_generation`` swap crashed between its two
+    renames, the live directory is missing but the old generation is
+    intact under ``<mount>__old`` — restore it.  Runs at the top of every
+    lock acquisition, BEFORE the lock file is created: the lock file
+    lives inside the mount directory, which does not exist in this
+    crash state.  Two racing restorers are benign — exactly one rename
     succeeds.
 
     A LIVE swapper mid-window looks identical from the filesystem, so
@@ -350,7 +385,7 @@ def restore_crashed_swap(mount_dir: str) -> None:
     acquisition path's missing-dir grace ride the window out.  A
     foreign-host holder is trusted while its timestamp is fresh (the
     same single-submit-host model as the lock itself; review r14)."""
-    old = mount_dir.rstrip("/") + "__old"
+    old = mount_dir.rstrip("/") + ASIDE
     if os.path.isdir(mount_dir) or not os.path.isdir(old):
         return
     h = _read_holder(os.path.join(old, LOCK_NAME))
@@ -370,25 +405,106 @@ def restore_crashed_swap(mount_dir: str) -> None:
             raise
 
 
+def _restore_asides(mount_dir: str) -> None:
+    """Rename back every ``<artifact>__old`` whose ``<artifact>`` is
+    missing — the state a crash between ``_swap_dirs``' two renames
+    leaves.  An aside next to a live artifact is the swap's own
+    leftover and is removed by the next swap of that artifact."""
+    for name in os.listdir(mount_dir):
+        if name.endswith(ASIDE) and not os.path.lexists(
+            os.path.join(mount_dir, name[: -len(ASIDE)])
+        ):
+            os.rename(
+                os.path.join(mount_dir, name),
+                os.path.join(mount_dir, name[: -len(ASIDE)]),
+            )
+
+
 def plant_lock(mount_dir: str, op: str) -> None:
     """Write THIS thread's lock payload into ``mount_dir`` directly (no
     O_EXCL).  Only valid for a directory the caller privately owns that
-    is about to be renamed into a locked mount's place: the full
-    refresh plants its lock into ``<mount>__next`` so the swap carries
-    an owned lock file into position atomically — without it the
-    rename discards the held lock file and the rest of the critical
-    section (e.g. auto_maintain's compactions) runs without
+    is about to be renamed into a locked mount's place:
+    ``next_generation`` plants the lock into ``<mount>__next`` so the
+    swap carries an owned lock file into position atomically — without
+    it the rename discards the held lock file and the rest of the
+    critical section (e.g. auto_maintain's compactions) runs without
     cross-process exclusion (review r14)."""
-    with open(os.path.join(mount_dir, LOCK_NAME), "w") as f:
-        json.dump(
-            {
-                "pid": os.getpid(),
-                "host": socket.gethostname(),
-                "op": op,
-                "ts": time.time(),
-            },
-            f,
-        )
+    with open(os.path.join(mount_dir, LOCK_NAME), "wb") as f:
+        f.write(_payload(op))
+
+
+def _hardlink_tree(src: str, dst: str, skip: set[str]) -> None:
+    """Hardlink-copy a mount directory into ``dst``, skipping the
+    ``skip`` set of top-relative paths (files or whole directories).
+    Artifact files are immutable (every writer writes NEW files and
+    swaps, the manifest is replaced, never rewritten), so hardlinks are
+    safe and the copy is O(metadata) — no data bytes move regardless of
+    mount size."""
+    for root, dirs, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        relp = "" if rel == "." else rel
+        dirs[:] = [d for d in dirs if os.path.join(relp, d) not in skip]
+        os.makedirs(os.path.join(dst, relp) if relp else dst, exist_ok=True)
+        for f in files:
+            fp = os.path.join(relp, f) if relp else f
+            if fp in skip:
+                continue
+            os.link(os.path.join(root, f), os.path.join(dst, fp))
+
+
+@contextlib.contextmanager
+def next_generation(mount_dir: str, op: str, token: tuple, rewrite):
+    """``with next_generation(mount_dir, op, token, rewrite) as nxt:`` —
+    the one way a new mount generation becomes visible (module
+    docstring, rule 1); runs under the mount write lock.  ``nxt``
+    hardlinks every live entry not named in ``rewrite`` (top-relative
+    paths); the caller writes the new pieces and
+    ``artifacts.save_manifest(nxt, ...)``.  A clean exit fences against
+    ``token`` (``mount_state_token`` taken before the caller read the
+    live mount), plants the held lock and swaps by two renames; any
+    exception removes ``nxt`` and leaves the live mount untouched."""
+    base = mount_dir.rstrip("/")
+    nxt, old = base + "__next", base + ASIDE
+    for debris in (nxt, old):  # a crashed earlier publish left these
+        if os.path.isdir(debris):
+            shutil.rmtree(debris)
+    try:
+        _hardlink_tree(mount_dir, nxt, skip=set(rewrite) | {LOCK_NAME})
+        yield nxt
+        mount_state_fence(mount_dir, token, op)
+        plant_lock(nxt, op)
+    except BaseException:
+        shutil.rmtree(nxt, ignore_errors=True)
+        raise
+    os.rename(mount_dir, old)
+    os.rename(nxt, mount_dir)
+    shutil.rmtree(old)
+
+
+def _swap_dirs(
+    tmp: str, path: str, census: frozenset | None = None, op: str = "swap"
+) -> None:
+    """Replace ONE artifact directory with ``tmp`` (module docstring,
+    rule 2; ADVICE r13): move the old copy aside, move the new one in,
+    then delete the aside — every intermediate state keeps one complete
+    copy on disk, and ``_restore_asides`` repairs a crash between the
+    renames.  Runs under the mount write lock.  With the ``census`` a
+    rewrite was read from, the live artifact is fenced first and ``tmp``
+    is removed if the fence fails."""
+    if census is not None:
+        try:
+            fence(path, census, op)
+        except ConcurrentMutationError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+    aside = path + ASIDE
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)  # stale aside from a prior crashed swap
+    if os.path.isdir(path):
+        shutil.move(path, aside)
+    shutil.move(tmp, path)
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)
 
 
 def manifest_bytes(mount_dir: str) -> bytes:
@@ -402,18 +518,6 @@ def manifest_bytes(mount_dir: str) -> bytes:
             return f.read()
     except FileNotFoundError:
         return b""
-
-
-def manifest_fence(mount_dir: str, before: bytes, op: str) -> None:
-    """Raise ``ConcurrentMutationError`` if the mount manifest changed
-    since ``before`` — called immediately before a refresh publishes."""
-    if manifest_bytes(mount_dir) != before:
-        raise ConcurrentMutationError(
-            f"{op}: manifest of {mount_dir!r} changed since the retrain "
-            "began — a writer bypassed the mount write lock; aborting "
-            "before publication so its rows are not dropped from the "
-            "new generation"
-        )
 
 
 #: the tombstone artifacts a DELETE mutates without touching the manifest

@@ -20,26 +20,25 @@ deleted documents' mass — matching the reference, whose delete removes
 rows from SERVING but does not re-derive global statistics until the next
 mount; a compaction remount is the honest path to reclaiming them.
 
-Rewrites are write-new-then-swap (never overwrite-in-place a table the
-new plan is reading): the merged table lands in ``<name>__tmp`` and is
-atomically swapped in — the same versioned-table discipline a 100 TB
-deployment uses.
-
-Rebalance (r14): ``split_cell`` halves an IVF cell that drifting
-appends grew past the skew budget; ``merge_cells`` folds dust cells
-(shrunk by deletes + compaction, or fully emptied) into their nearest
-sibling.  Both reconstruct only the affected rows from their PQ codes,
-re-encode against the new centroid with the unchanged shared codebooks,
-and publish a whole-mount hardlink tree by two-rename swap — atomic to
-lock-free readers, O(hot/dust rows) data movement, crash-restored by
-``lock.restore_crashed_swap``.
+Publication follows the two rules of ``mount/lock.py`` and no others.
+Single-artifact rewrites (the compactions, ``append_rows``' text
+statistics) land in ``<name>__tmp`` and replace the live directory by
+the rename-aside swap (``lock._swap_dirs``), never overwriting in place
+a table the new plan is reading.  Rebalance (r14) publishes a new
+generation: ``split_cell`` halves an IVF cell that drifting appends
+grew past the skew budget; ``merge_cells`` folds dust cells (shrunk by
+deletes + compaction, or fully emptied) into their nearest sibling.
+Both reconstruct only the affected rows from their PQ codes, re-encode
+against the new centroid with the unchanged shared codebooks, and write
+the new centroids, cells and manifest into ``lock.next_generation`` —
+atomic to lock-free readers, O(hot/dust rows) data movement, every
+untouched file a hardlink of the old generation's.  Every manifest
+write goes through ``artifacts.save_manifest``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,18 +48,15 @@ from simsearch_spark.mount.artifacts import (
     load_centroid_map,
     load_codebooks,
     load_manifest,
+    save_manifest,
 )
 from simsearch_spark.mount.lock import (
-    LOCK_NAME,
-    ConcurrentMutationError,
-    fence,
+    _swap_dirs,
     locked,
-    mount_state_fence,
     mount_state_token,
     mount_write_lock,
+    next_generation,
     parquet_census,
-    plant_lock,
-    restore_crashed_swap,
     snapshot_read,
 )
 from simsearch_spark.operators.kmeans import nearest_center, probe_cells
@@ -156,24 +152,6 @@ def should_compact(spark: SparkSession, mount_dir: str) -> bool:
         or s["max_files_per_cell"] > COMPACT_FILES_PER_CELL
         or s["max_files_per_dedup_dir"] > COMPACT_FILES_PER_CELL
     )
-
-
-def _swap_dirs(tmp: str, path: str) -> None:
-    """Crash-safe directory swap (ADVICE r13): the old artifact is moved
-    ASIDE (one rename), the new one moved into place (one rename), and
-    only then is the aside copy deleted — every intermediate state keeps
-    at least one complete copy on disk.  A crash between the renames
-    leaves ``path`` missing but ``path__old`` intact (recoverable by
-    hand or by the stale-aside sweep below); the previous
-    rmtree-then-move shape had a window where BOTH copies were gone."""
-    aside = path + "__old"
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)  # stale aside from a prior crashed swap
-    if os.path.isdir(path):
-        shutil.move(path, aside)
-    shutil.move(tmp, path)
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)
 
 
 def _swap_in(df: DataFrame, path: str) -> None:
@@ -375,8 +353,7 @@ def append_rows(
             os.path.join(mount_dir, "lm_vocab"),
         )
 
-    with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    save_manifest(mount_dir, manifest)
     return manifest
 
 
@@ -466,18 +443,12 @@ def compact_codes(spark: SparkSession, mount_dir: str) -> int:
     # a petabyte deployment would repartition(n, "cell") to keep
     # intra-cell parallelism; the trigger is COMPACT_FILES_PER_CELL)
     live.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    try:
-        fence(codes_path, files0, "compact_codes")
-    except ConcurrentMutationError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _swap_dirs(tmp, codes_path)  # rename-aside swap, no both-gone window
+    _swap_dirs(tmp, codes_path, files0, "compact_codes")  # fenced
     after = int(spark.read.parquet(codes_path).count())
     if has_tombstones:
         _clear_tombstone_files(tomb_path, tomb_files0)
     manifest["counts"]["n_vectors"] = after
-    with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    save_manifest(mount_dir, manifest)
     return before - after
 
 
@@ -553,12 +524,7 @@ def compact_dedup(spark: SparkSession, mount_dir: str) -> int:
             .partitionBy(*part_cols)
             .parquet(tmp)
         )
-        try:
-            fence(path, files0, "compact_dedup")
-        except ConcurrentMutationError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        _swap_dirs(tmp, path)  # rename-aside swap (ADVICE r13)
+        _swap_dirs(tmp, path, files0, "compact_dedup")  # fenced
         reclaimed += before - len(parquet_census(path))
     if has_tombstones:
         # the shingle table holds exactly one row per live doc — refresh
@@ -566,8 +532,7 @@ def compact_dedup(spark: SparkSession, mount_dir: str) -> int:
         # (only the files THIS compaction consumed)
         manifest["dedup"]["n_docs"] = int(spark.read.parquet(sh_path).count())
         _clear_tombstone_files(tomb_path, tomb_files0)
-        with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        save_manifest(mount_dir, manifest)
     return reclaimed
 
 
@@ -647,24 +612,7 @@ def _decode_cell_expr(centroid: list[float], books: list[dict[int, list[float]]]
     return F.concat(*segs)
 
 
-def _hardlink_tree(src: str, dst: str, skip: set[str]) -> None:
-    """Hardlink-copy a mount directory into ``dst``, skipping the
-    ``skip`` set of top-relative paths (files or whole directories).
-    Artifact files are immutable here (every writer writes NEW files and
-    swaps), so hardlinks are safe and the copy is O(metadata) — no data
-    bytes move regardless of mount size."""
-    for root, dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        relp = "" if rel == "." else rel
-        dirs[:] = [d for d in dirs if os.path.join(relp, d) not in skip]
-        os.makedirs(os.path.join(dst, relp) if relp else dst, exist_ok=True)
-        for f in files:
-            fp = os.path.join(relp, f) if relp else f
-            if fp in skip:
-                continue
-            os.link(os.path.join(root, f), os.path.join(dst, fp))
-
-
+@locked("split_cell")
 def split_cell(
     spark: SparkSession,
     mount_dir: str,
@@ -686,35 +634,17 @@ def split_cell(
     mount's vector store — originals are not retained), 2-means-split
     with the deterministic lowest-id seeding the trainers use
     (``operators/kmeans.py``), re-encoded as residuals against their
-    child centroid with the UNCHANGED shared codebooks, and published by
-    a whole-mount hardlink tree + two-rename swap — the refresh
-    discipline, so lock-free readers see the old generation or the new
-    one, never a half-split cell, and a crash between the renames is
-    restored by ``restore_crashed_swap``.  Re-quantizing reconstructions
-    adds at most one quantization step of error to the split cell's ADC
-    distances; the exact rescore stage (serve-side) is unaffected.
+    child centroid with the UNCHANGED shared codebooks, and published as
+    a new generation (``lock.next_generation``), so lock-free readers
+    see the old generation or the new one, never a half-split cell.
+    Re-quantizing reconstructions adds at most one quantization step of
+    error to the split cell's ADC distances; the exact rescore stage
+    (serve-side) is unaffected.
 
     ``cell_id=None`` picks the ``should_split`` target (skew policy
     above) and returns ``{"split": False}`` when nothing is over budget.
     Returns a report dict; manifest gains a ``splits`` history entry and
     the updated ``n_cells``."""
-    restore_crashed_swap(mount_dir)  # BEFORE locking (lock.py docstring)
-    with mount_write_lock(mount_dir, "split_cell"):
-        return _split_cell_impl(
-            spark, mount_dir, cell_id, parts, factor, min_rows, iters, _sizes
-        )
-
-
-def _split_cell_impl(
-    spark: SparkSession,
-    mount_dir: str,
-    cell_id: int | None,
-    parts: int,
-    factor: float,
-    min_rows: int,
-    iters: int,
-    _sizes: dict[int, int] | None = None,
-) -> dict:
     # _sizes: precomputed cell counts, valid ONLY while the caller holds
     # the mount write lock for the whole decision+repair (auto_maintain's
     # sweep) - review r14, one universe scan per sweep instead of four
@@ -797,60 +727,37 @@ def _split_cell_impl(
             books,
         )
 
-        # publish: hardlink everything except the rewritten artifacts
-        # into <mount>__next, write the new pieces, fence, swap
-        nxt = mount_dir.rstrip("/") + "__next"
-        if os.path.isdir(nxt):
-            shutil.rmtree(nxt)
-        _hardlink_tree(
-            mount_dir,
-            nxt,
-            skip={
-                "manifest.json",
-                LOCK_NAME,
+        new_cents = [
+            (int(cid), [float(x) for x in vec])
+            for cid, vec in sorted(cmap.items())
+            if cid != cell_id
+        ] + [(int(c), child_map[c]) for c in child_ids]
+        manifest.setdefault("splits", []).append(
+            {
+                "cell": int(cell_id),
+                "children": [int(c) for c in child_ids],
+                "rows": int(sizes[cell_id]),
+                "part_rows": {
+                    str(child_base + i): part_counts[i] for i in part_counts
+                },
+            }
+        )
+        if "n_cells" in manifest.get("params", {}):
+            manifest["params"]["n_cells"] += parts - 1
+        with next_generation(
+            mount_dir, "split_cell", tok0,
+            rewrite={
                 "ivf_centroids",
                 os.path.join("pq_codes", f"cell={int(cell_id)}"),
             },
-        )
-        try:
-            new_cents = [
-                (int(cid), [float(x) for x in vec])
-                for cid, vec in sorted(cmap.items())
-                if cid != cell_id
-            ] + [(int(c), child_map[c]) for c in child_ids]
+        ) as nxt:
             spark.createDataFrame(
                 new_cents, "cluster_id int, centroid array<double>"
             ).write.mode("overwrite").parquet(os.path.join(nxt, "ivf_centroids"))
             recoded.repartition("cell").write.mode("append").partitionBy(
                 "cell"
             ).parquet(os.path.join(nxt, "pq_codes"))
-
-            manifest.setdefault("splits", []).append(
-                {
-                    "cell": int(cell_id),
-                    "children": [int(c) for c in child_ids],
-                    "rows": int(sizes[cell_id]),
-                    "part_rows": {
-                        str(child_base + i): part_counts[i] for i in part_counts
-                    },
-                }
-            )
-            if "n_cells" in manifest.get("params", {}):
-                manifest["params"]["n_cells"] += parts - 1
-            with open(os.path.join(nxt, "manifest.json"), "w") as f:
-                json.dump(manifest, f, indent=1, sort_keys=True)
-
-            mount_state_fence(mount_dir, tok0, "split_cell")
-            plant_lock(nxt, "split_cell")
-        except Exception:
-            shutil.rmtree(nxt, ignore_errors=True)
-            raise
-        old = mount_dir.rstrip("/") + "__old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(mount_dir, old)
-        os.rename(nxt, mount_dir)
-        shutil.rmtree(old)
+            save_manifest(nxt, manifest)
     finally:
         hot.unpersist()
     return {
@@ -910,6 +817,7 @@ def _pick_dust(sizes: dict[int, int], factor: float) -> list[int]:
     return dust[:MERGE_MAX_PER_SWEEP]
 
 
+@locked("merge_cells")
 def merge_cells(
     spark: SparkSession,
     mount_dir: str,
@@ -929,22 +837,10 @@ def merge_cells(
     position — standard IVF merge: decode correctness needs only that
     rows are encoded against the centroid their cell names, not that
     the centroid is the cell's exact mean).  Published exactly like
-    ``split_cell``: whole-mount hardlink tree + two-rename swap, fence,
-    planted lock; the dust cell ids are retired."""
-    restore_crashed_swap(mount_dir)  # BEFORE locking (lock.py docstring)
-    with mount_write_lock(mount_dir, "merge_cells"):
-        return _merge_cells_impl(spark, mount_dir, cell_ids, factor, _universe)
-
-
-def _merge_cells_impl(
-    spark: SparkSession,
-    mount_dir: str,
-    cell_ids: list[int] | None,
-    factor: float,
-    _universe: tuple | None = None,
-) -> dict:
+    ``split_cell``, as a new generation (``lock.next_generation``); the
+    dust cell ids are retired."""
     # _universe: precomputed (sizes, cmap), valid ONLY under the
-    # caller's held write lock (see _split_cell_impl)
+    # caller's held write lock (see split_cell)
     sizes, cmap = (
         _universe if _universe is not None else _cell_universe(spark, mount_dir)
     )
@@ -1005,16 +901,20 @@ def _merge_cells_impl(
         # and an empty frame cannot probe its PQ dimensions anyway
         recoded = None
 
-    nxt = mount_dir.rstrip("/") + "__next"
-    if os.path.isdir(nxt):
-        shutil.rmtree(nxt)
-    _hardlink_tree(
-        mount_dir,
-        nxt,
-        skip={"manifest.json", LOCK_NAME, "ivf_centroids"}
-        | {os.path.join("pq_codes", f"cell={c}") for c in cell_ids},
+    manifest.setdefault("merges", []).append(
+        {
+            "cells": cell_ids,
+            "into": {str(c): int(target_of[c]) for c in cell_ids},
+            "rows": {str(c): int(sizes[c]) for c in cell_ids},
+        }
     )
-    try:
+    if "n_cells" in manifest.get("params", {}):
+        manifest["params"]["n_cells"] -= len(cell_ids)
+    with next_generation(
+        mount_dir, "merge_cells", tok0,
+        rewrite={"ivf_centroids"}
+        | {os.path.join("pq_codes", f"cell={c}") for c in cell_ids},
+    ) as nxt:
         spark.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in sorted(survivors.items())],
             "cluster_id int, centroid array<double>",
@@ -1023,30 +923,7 @@ def _merge_cells_impl(
             recoded.repartition("cell").write.mode("append").partitionBy(
                 "cell"
             ).parquet(os.path.join(nxt, "pq_codes"))
-
-        manifest.setdefault("merges", []).append(
-            {
-                "cells": cell_ids,
-                "into": {str(c): int(target_of[c]) for c in cell_ids},
-                "rows": {str(c): int(sizes[c]) for c in cell_ids},
-            }
-        )
-        if "n_cells" in manifest.get("params", {}):
-            manifest["params"]["n_cells"] -= len(cell_ids)
-        with open(os.path.join(nxt, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-
-        mount_state_fence(mount_dir, tok0, "merge_cells")
-        plant_lock(nxt, "merge_cells")
-    except Exception:
-        shutil.rmtree(nxt, ignore_errors=True)
-        raise
-    old = mount_dir.rstrip("/") + "__old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(mount_dir, old)
-    os.rename(nxt, mount_dir)
-    shutil.rmtree(old)
+        save_manifest(nxt, manifest)
     return {
         "merged": True,
         "cells": cell_ids,
@@ -1157,8 +1034,7 @@ def stream_append_codes(
                 int(m.get("counts", {}).get("n_vectors", 0)) + n
             )
             m.setdefault("stream_state", {})[ck_key] = int(batch_id)
-            with open(os.path.join(mount_dir, "manifest.json"), "w") as f:
-                json.dump(m, f, indent=1, sort_keys=True)
+            save_manifest(mount_dir, m)
 
     writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
     if checkpoint_dir:

@@ -30,6 +30,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from simsearch_spark.functions.hashing import blank_text
+
 
 def kgram_hashes(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(id, gh): distinct k-gram hashes per document.
@@ -51,7 +53,7 @@ def kgram_hashes(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
         for pdf in batches:
             ids, texts = [], []
             for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None or t.strip() == "":
+                if blank_text(t):
                     continue
                 ids.append(doc_id)
                 texts.append(t)

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions import measures
-from simsearch_spark.functions.hashing import hamming64
+from simsearch_spark.functions.hashing import blank_text, hamming64
 from simsearch_spark.functions.text import doc_fingerprint
 from simsearch_spark.operators.setsim import jaccard_self_join
 
@@ -34,7 +34,7 @@ from simsearch_spark.operators.setsim import jaccard_self_join
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct n-word shingles (order-preserving token n-grams).  Token-set
     Jaccard saturates on small vocabularies; shingles keep word order and are
-    the standard dedup unit (MinHash over shingles).  NULL/whitespace-only
+    the standard dedup unit (MinHash over shingles).  NULL/space-only
     text yields the EMPTY shingle set (not [""]) — shared contract with the
     Arrow kernels, so empty documents reach the minhash sentinel instead of
     colliding on the hash of the empty string."""
@@ -70,7 +70,7 @@ def shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
         for pdf in batches:
             out = []
             for t in pdf[text_col]:
-                if t is None or t.strip() == "":
+                if blank_text(t):
                     out.append([])
                     continue
                 words = t.split(" ")
@@ -116,7 +116,7 @@ def simhash_frame(
         for pdf in batches:
             texts, nonempty = [], []
             for t in pdf[text_col]:
-                ok = t is not None and t.strip() != ""
+                ok = not blank_text(t)
                 nonempty.append(ok)
                 if ok:
                     texts.append(t)
@@ -167,7 +167,7 @@ def minhash_rows(
     char-fold hashing, the n permutation minima and band folding run
     fused over the whole list; the kernel of :func:`minhash_banded_frame`
     (one call per Arrow batch) and of the driver-resident dedup append
-    (one call per delta).  NULL/empty texts get the EMPTY shingle set and
+    (one call per delta).  NULL/space-only texts get the EMPTY shingle set and
     the PERM_MOD sentinel signature."""
     import numpy as np
 
@@ -192,7 +192,7 @@ def minhash_rows(
             out.append(acc)
         return out
 
-    nonempty = [t is not None and t.strip() != "" for t in texts]
+    nonempty = [not blank_text(t) for t in texts]
     # one batched char-fold over EVERY k-gram of every text (r15, guide
     # §4.2).  Duplicate shingles are hashed too: a permutation's MIN over
     # the k-gram multiset equals its min over the distinct set, so the
@@ -479,7 +479,7 @@ def minhash_lsh_pairs(
     recall/perf trade LSH exists for; same contract as every production
     minhash dedup).
 
-    NULL/whitespace-only documents are excluded from the candidate universe:
+    NULL/space-only documents are excluded from the candidate universe:
     they have no shingle content to be "near-duplicates" BY (m of them would
     otherwise bucket together and verify at jaccard 0/0); exact duplicates of
     empty documents are the exact tier's job (``exact_dedup_groups``).
@@ -603,7 +603,7 @@ def simhash_pairs(
     every row and its equi-join silently degenerates to the n² cross
     product (found in round-1 advice).
     """
-    # NULL/whitespace-only docs share one degenerate signature and would all
+    # NULL/space-only docs share one degenerate signature and would all
     # pair at hamming 0 — same exclusion contract as minhash_lsh_pairs
     df = df.where(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
     # fused pandas signature kernel (bit-identical to the column chain,

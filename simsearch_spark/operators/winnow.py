@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from simsearch_spark.functions.hashing import (
     batch_kgram_hashes as _batch_kgram_hashes,
+    blank_text,
 )
 
 #: position packing base for the rightmost-tie argmin composite key;
@@ -66,7 +67,7 @@ def winnow_fingerprints(
         for pdf in batches:
             ids, texts = [], []
             for doc_id, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None or t.strip() == "":
+                if blank_text(t):
                     continue
                 ids.append(doc_id)
                 texts.append(t)

@@ -465,12 +465,15 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toks.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("bpe_tokens")).alias("n_subwords"),
+        # NULL for a source whose documents hold no token at all
         F.round(
-            F.sum(F.aggregate(
-                F.transform(F.col("bpe_tokens"), F.length),
-                F.lit(0).cast("long"), lambda a, x: a + x,
-            )).cast("double")
-            / F.sum(F.size("bpe_tokens")),
+            F.try_divide(
+                F.sum(F.aggregate(
+                    F.transform(F.col("bpe_tokens"), F.length),
+                    F.lit(0).cast("long"), lambda a, x: a + x,
+                )).cast("double"),
+                F.sum(F.size("bpe_tokens")),
+            ),
             6,
         ).alias("chars_per_token"),
     )

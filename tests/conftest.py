@@ -41,7 +41,16 @@ def pytest_configure(config):
 SLOW_TESTS: dict[str, set[str] | None] = {
     "test_mount_audit.py": None,
     "test_mount_split.py": None,
-    "test_mount_lock.py": None,
+    "test_mount_lock.py": {
+        "test_mutators_respect_a_held_lock",
+        "test_compact_dedup_fence_aborts_on_bypassing_append",
+        "test_compact_dedup_clean_run_after_fence_abort",
+        "test_compact_racing_live_stream_loses_nothing",
+        "test_refresh_restores_crashed_swap_before_locking",
+        "test_full_refresh_keeps_held_lock_file",
+        "test_stream_sink_commits_fresh_manifest_counts",
+        "test_refresh_fence_catches_bypassing_delete",
+    },
     "test_langid.py": {
         "test_trigram_lang_classifies_each_seed_language",
         "test_v2_stopword_prefilter_decides_when_it_has_evidence",

@@ -91,7 +91,7 @@ def test_swap_dirs_never_leaves_zero_copies(tmp_path, monkeypatch):
     """ADVICE r13 #2: a crash between the two renames must leave BOTH the
     aside (old) copy and the tmp (new) copy on disk — and the retry must
     complete the swap, clearing the stale aside."""
-    from simsearch_spark.mount import maintain
+    from simsearch_spark.mount import lock
 
     path = str(tmp_path / "art")
     tmp = path + "__tmp"
@@ -102,7 +102,7 @@ def test_swap_dirs_never_leaves_zero_copies(tmp_path, monkeypatch):
     with open(os.path.join(tmp, "new.txt"), "w") as f:
         f.write("new")
 
-    orig_move = maintain.shutil.move
+    orig_move = lock.shutil.move
     calls = {"n": 0}
 
     def crashy_move(src, dst):
@@ -111,10 +111,10 @@ def test_swap_dirs_never_leaves_zero_copies(tmp_path, monkeypatch):
             raise OSError("injected crash between renames")
         return orig_move(src, dst)
 
-    monkeypatch.setattr(maintain.shutil, "move", crashy_move)
+    monkeypatch.setattr(lock.shutil, "move", crashy_move)
     with pytest.raises(OSError, match="injected crash"):
-        maintain._swap_dirs(tmp, path)
-    monkeypatch.setattr(maintain.shutil, "move", orig_move)
+        lock._swap_dirs(tmp, path)
+    monkeypatch.setattr(lock.shutil, "move", orig_move)
 
     # recoverable state: old content aside, new content still in tmp
     assert os.path.isfile(os.path.join(path + "__old", "old.txt"))
@@ -122,7 +122,7 @@ def test_swap_dirs_never_leaves_zero_copies(tmp_path, monkeypatch):
     assert not os.path.isdir(path)
 
     # retry completes: new content live, no aside, no tmp
-    maintain._swap_dirs(tmp, path)
+    lock._swap_dirs(tmp, path)
     assert os.path.isfile(os.path.join(path, "new.txt"))
     assert not os.path.isdir(path + "__old")
     assert not os.path.isdir(tmp)

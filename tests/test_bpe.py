@@ -181,6 +181,15 @@ def test_mounted_encode_matches_python_reference(spark, sf_dir, tmp_path, fixtur
     expected = {int(i): docs_[0] for i, docs_ in by_id.items()}
     assert got == expected
 
+    # a group whose documents hold no token has no chars-per-token
+    from simsearch_spark.mount.bpe import bpe_encode_stats
+
+    blank = spark.createDataFrame(
+        [("w", "\t"), ("w", "\n"), ("x", "the")], "source string, text string"
+    )
+    stats = {tuple(r)[0]: tuple(r)[1:] for r in bpe_encode_stats(spark, d, blank).collect()}
+    assert stats["w"] == (2, 0, None) and stats["x"][1] > 0
+
 
 def test_encode_mounted_equals_selfcontained(spark, sf_dir):
     """The registry query bpe_encode_mounted is row-identical to the

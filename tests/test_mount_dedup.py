@@ -743,6 +743,24 @@ def test_driver_path_equals_large_path(spark, small_mount, monkeypatch):
     assert hit == hit_large and [i for i, _j in hit] == [3]
 
 
+def test_tab_and_newline_only_texts_have_shingles(spark, small_mount, monkeypatch):
+    """SQL's trim strips spaces only, so tab- and newline-only texts pass
+    every dedup filter; each kernel must give them their one shingle, so
+    two equal ones verify as a jaccard-1 pair instead of a 0/0 — in the
+    batch operator and on both append paths."""
+    d, _texts_ = small_mount
+    docs = spark.createDataFrame(
+        [(5000, "\t"), (5001, "\t"), (5002, "\n"), (5003, "\n"), (5004, "\t\n")],
+        "doc_id bigint, text string",
+    )
+    want = [(5000, 5001, 1.0), (5002, 5003, 1.0)]
+    batch = minhash_lsh_pairs(docs, "doc_id", "text", MINHASH_T, N_HASHES, N_BANDS)
+    assert _rows(batch) == want
+    assert _both_paths(
+        monkeypatch, lambda: _rows(dedup_append(spark, d, docs, update=False))
+    ) == (want, want)
+
+
 def test_driver_path_string_ids(spark, tmp_path, monkeypatch):
     """String ids order in Python as least/greatest order them in Spark."""
     from simsearch_spark.mount.serve import serve_dedup_lookup

@@ -5,7 +5,7 @@ read-rewrite-swap racing an append destroys the appended files; a
 refresh retrain-and-swap racing an append drops the delta from the new
 generation; a blanket tombstone rmtree racing a delete resurrects the
 deleted doc.  The advisory write lock is the prevention mechanism, the
-snapshot/manifest fences are the bypass detectors — both are exercised
+snapshot/mount-state fences are the bypass detectors — both are exercised
 here with real artifacts, not mocks of the logic under test.
 """
 
@@ -23,9 +23,9 @@ from simsearch_spark.mount.lock import (
     ConcurrentMutationError,
     MountLockTimeout,
     fence,
-    manifest_bytes,
-    manifest_fence,
+    mount_state_token,
     mount_write_lock,
+    next_generation,
     parquet_census,
 )
 
@@ -134,18 +134,6 @@ def test_parquet_census_and_fence(tmp_path):
         fence(str(d), before, "compact_test")
 
 
-def test_manifest_fence(tmp_path):
-    d = str(tmp_path)
-    with open(os.path.join(d, "manifest.json"), "w") as f:
-        json.dump({"counts": {"n_vectors": 1}}, f)
-    b0 = manifest_bytes(d)
-    manifest_fence(d, b0, "refresh")  # unchanged: passes
-    with open(os.path.join(d, "manifest.json"), "w") as f:
-        json.dump({"counts": {"n_vectors": 2}}, f)
-    with pytest.raises(ConcurrentMutationError, match="manifest"):
-        manifest_fence(d, b0, "refresh")
-
-
 def test_clear_tombstone_files_is_precise(tmp_path):
     from simsearch_spark.mount.maintain import _clear_tombstone_files
 
@@ -165,6 +153,107 @@ def test_clear_tombstone_files_is_precise(tmp_path):
     # on emptiness, so an even-later tombstone keeps the dir alive)
     _clear_tombstone_files(str(d), parquet_census(str(d)))
     assert not os.path.exists(d)
+
+
+# ------------------------------------------------------ publish rules
+
+
+def test_lock_acquisition_restores_crashed_artifact_swap(tmp_path, monkeypatch):
+    """A crash between ``_swap_dirs``' two renames leaves ``<artifact>``
+    missing and ``<artifact>__old`` intact; the next lock acquisition
+    renames the aside back.  An aside beside a live artifact is the
+    swap's own leftover and is left for the next swap of it."""
+    d = tmp_path / "m"
+    (d / "pq_codes").mkdir(parents=True)
+    (d / "pq_codes" / "a.parquet").write_bytes(b"old")
+    (d / "pq_codes__tmp").mkdir()
+    (d / "pq_codes__tmp" / "b.parquet").write_bytes(b"new")
+    (d / "bm25_df").mkdir()
+    (d / "bm25_df__old").mkdir()
+
+    real_move = shutil.move
+    calls = []
+
+    def crash_second_move(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash between renames")
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_second_move)
+    with pytest.raises(OSError, match="between renames"):
+        lockmod._swap_dirs(str(d / "pq_codes__tmp"), str(d / "pq_codes"))
+    monkeypatch.undo()
+    assert not (d / "pq_codes").exists() and (d / "pq_codes__old").is_dir()
+
+    with mount_write_lock(str(d), "compact_codes"):
+        assert (d / "pq_codes" / "a.parquet").read_bytes() == b"old"
+        assert not (d / "pq_codes__old").exists()
+        assert (d / "bm25_df").is_dir() and (d / "bm25_df__old").is_dir()
+
+
+def test_next_generation_publishes_or_leaves_live_mount(tmp_path):
+    """``next_generation`` links what it keeps, removes its tree on any
+    exception or fence failure, and on success swaps the new generation
+    in with the held lock planted; the manifest written into the tree
+    replaces the hardlinked one instead of writing through it."""
+    from simsearch_spark.mount.artifacts import load_manifest, save_manifest
+
+    d = str(tmp_path / "m")
+    os.makedirs(os.path.join(d, "keep"))
+    os.makedirs(os.path.join(d, "redo"))
+    (tmp_path / "m" / "keep" / "a.parquet").write_bytes(b"k")
+    (tmp_path / "m" / "redo" / "b.parquet").write_bytes(b"old")
+    save_manifest(d, {"version": 1, "generation": 0})
+    keep = os.path.join(d, "keep", "a.parquet")
+    ino = os.stat(keep).st_ino
+    lp = os.path.join(d, lockmod.LOCK_NAME)
+
+    with mount_write_lock(d, "op"):
+        tok = mount_state_token(d)
+        with pytest.raises(RuntimeError, match="trainer"):
+            with next_generation(d, "op", tok, {"redo"}) as nxt:
+                assert os.path.samefile(os.path.join(nxt, "keep", "a.parquet"), keep)
+                assert not os.path.exists(os.path.join(nxt, "redo"))
+                assert not os.path.exists(os.path.join(nxt, lockmod.LOCK_NAME))
+                raise RuntimeError("trainer failed")
+        assert not os.path.exists(d + "__next")
+        assert os.listdir(os.path.join(d, "redo")) == ["b.parquet"]
+
+        with pytest.raises(ConcurrentMutationError):
+            with next_generation(d, "op", tok, {"redo"}) as nxt:
+                save_manifest(d, {"version": 1, "generation": 0, "x": 1})
+        assert not os.path.exists(d + "__next")
+        save_manifest(d, {"version": 1, "generation": 0})
+
+        tok = mount_state_token(d)
+        with next_generation(d, "op", tok, {"redo"}) as nxt:
+            os.makedirs(os.path.join(nxt, "redo"))
+            (tmp_path / "m__next" / "redo" / "c.parquet").write_bytes(b"new")
+            save_manifest(nxt, {"version": 1, "generation": 1})
+            assert load_manifest(d)["generation"] == 0  # not written through
+        assert load_manifest(d)["generation"] == 1
+        assert os.stat(keep).st_ino == ino
+        assert os.listdir(os.path.join(d, "redo")) == ["c.parquet"]
+        assert json.load(open(lp))["pid"] == os.getpid()
+        assert not os.path.exists(d + "__next") and not os.path.exists(d + "__old")
+    assert not os.path.exists(lp)
+
+
+def _tree_digest(mount_dir):
+    """sha256 over every path and byte of a mount, lock file excluded."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for root, _dirs, files in sorted(os.walk(mount_dir)):
+        for fn in sorted(files):
+            if fn == lockmod.LOCK_NAME:
+                continue
+            fp = os.path.join(root, fn)
+            h.update(os.path.relpath(fp, mount_dir).encode())
+            with open(fp, "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()
 
 
 # --------------------------------------------------- end-to-end with Spark
@@ -572,7 +661,7 @@ def test_refresh_fence_catches_bypassing_delete(spark, tmp_path, monkeypatch):
 
     def mount_dedup_then_delete(spark_, mdir, *a, **kw):
         out = real_mount_dedup(spark_, mdir, *a, **kw)
-        if mdir.endswith("__famnext"):
+        if mdir.endswith("__next"):
             # mid-retrain delete on the LIVE mount (re-entrant for this
             # thread, i.e. exactly what a bypassing writer produces)
             dedupmod.delete_docs(spark_, d, [docs.first()["doc_id"]])
@@ -583,7 +672,7 @@ def test_refresh_fence_catches_bypassing_delete(spark, tmp_path, monkeypatch):
         refresh(spark, d, sf_dir="", docs_frame=docs, families=["dedup"])
     # the live index is untouched and the late tombstone survived
     assert os.path.isdir(os.path.join(d, "dedup_tombstones"))
-    assert not os.path.isdir(d + "__famnext")
+    assert not os.path.isdir(d + "__next")
 
 
 def test_restore_crashed_swap_skips_live_swapper(tmp_path):
@@ -631,3 +720,67 @@ def test_restore_crashed_swap_skips_live_swapper(tmp_path):
         )
     restore_crashed_swap(d)
     assert not os.path.isdir(d) and os.path.isdir(old2)
+
+
+def test_interrupted_manifest_write_keeps_previous_manifest(
+    spark, dedup_mount, monkeypatch
+):
+    """A failure in the middle of dumping the manifest (a crashed
+    ``dedup_append`` commit) leaves the previous manifest loadable."""
+    from simsearch_spark.mount import load_manifest
+    from simsearch_spark.mount.dedup import dedup_append
+
+    before = load_manifest(dedup_mount)
+    real_dump = json.dump
+
+    def torn_dump(obj, f, **kw):
+        if isinstance(obj, dict) and "dedup" in obj:
+            f.write(json.dumps(obj, **kw)[:40])
+            raise OSError("injected failure mid-dump")
+        return real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    delta = spark.createDataFrame(
+        [(10**6, "a freshly crawled document that the mount has not seen")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(OSError, match="mid-dump"):
+        dedup_append(spark, dedup_mount, delta)
+    monkeypatch.undo()
+    assert load_manifest(dedup_mount) == before
+
+
+def test_family_refresh_failure_before_swap_keeps_live_mount(
+    spark, dedup_mount, monkeypatch
+):
+    """A failure after the dedup family is retrained but before the new
+    generation is swapped in leaves every live file byte-identical: no
+    artifact of the new generation is visible without its manifest."""
+    from simsearch_spark.mount import load_manifest, refresh
+    from simsearch_spark.sources.registry import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
+        "doc_id", "text"
+    )
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [(10**6, "one more document in the current corpus")],
+            "doc_id long, text string",
+        )
+    )
+    gen0 = load_manifest(dedup_mount).get("generation", 0)
+    before = _tree_digest(dedup_mount)
+    real_dump = json.dump
+
+    def failing_dump(obj, f, **kw):
+        if isinstance(obj, dict) and obj.get("generation") == gen0 + 1:
+            raise OSError("injected failure before the swap")
+        return real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="before the swap"):
+        refresh(spark, dedup_mount, sf_dir="", docs_frame=docs, families=["dedup"])
+    monkeypatch.undo()
+    assert _tree_digest(dedup_mount) == before
+    assert not os.path.exists(dedup_mount + "__next")
+    assert load_manifest(dedup_mount).get("generation", 0) == gen0

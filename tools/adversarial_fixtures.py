@@ -69,6 +69,13 @@ def build(src: str, dst: str) -> None:
         (maxid + 12,
          "cafe\u0301 and nai\u0308ve re\u0301sume\u0301 in the q\u0301 row",
          "en", "srcZ", 40),
+        # tab-only and newline-only texts: SQL's trim strips spaces only,
+        # so these pass the dedup filters and must get a non-empty
+        # shingle set in every kernel (two equal ones pair at jaccard 1)
+        (maxid + 13, "\t", "en", "srcW", 1),
+        (maxid + 14, "\t", "en", "srcW", 1),
+        (maxid + 15, "\n", "en", "srcW", 1),
+        (maxid + 16, "\n", "en", "srcW", 1),
     ]
     con.executemany("INSERT INTO d VALUES (?,?,?,?,?)", rows)
     con.execute(f"COPY d TO '{dst}/documents.parquet' (FORMAT PARQUET)")
