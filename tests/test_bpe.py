@@ -187,7 +187,10 @@ def test_mounted_encode_matches_python_reference(spark, sf_dir, tmp_path, fixtur
     blank = spark.createDataFrame(
         [("w", "\t"), ("w", "\n"), ("x", "the")], "source string, text string"
     )
-    stats = {tuple(r)[0]: tuple(r)[1:] for r in bpe_encode_stats(spark, d, blank).collect()}
+    stats = {
+        tuple(r)[0]: tuple(r)[1:]
+        for r in bpe_encode_stats(spark, d, blank).collect()
+    }
     assert stats["w"] == (2, 0, None) and stats["x"][1] > 0
 
 

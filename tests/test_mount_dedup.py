@@ -748,7 +748,7 @@ def test_tab_and_newline_only_texts_have_shingles(spark, small_mount, monkeypatc
     every dedup filter; each kernel must give them their one shingle, so
     two equal ones verify as a jaccard-1 pair instead of a 0/0 — in the
     batch operator and on both append paths."""
-    d, _texts_ = small_mount
+    d, _ = small_mount
     docs = spark.createDataFrame(
         [(5000, "\t"), (5001, "\t"), (5002, "\n"), (5003, "\n"), (5004, "\t\n")],
         "doc_id bigint, text string",
