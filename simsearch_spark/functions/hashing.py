@@ -165,6 +165,12 @@ def blank_text(t) -> bool:
     return t is None or t.strip(" ") == ""
 
 
+def nonblank_text(col: str) -> Column:
+    """Spark twin of :func:`blank_text`, negated: the filter that keeps
+    the rows of column ``col`` whose text is neither NULL nor space-only."""
+    return F.col(col).isNotNull() & (F.trim(F.col(col)) != "")
+
+
 def batch_kgram_hashes(texts: list, k: int):
     """Char-fold hashes of every token k-gram of every text, vectorized
     ACROSS the batch (r15, guide §4.2): every k-gram becomes a span of one

@@ -28,8 +28,8 @@ deployment pays once.  This package is that deployment shape:
   MinHash signature/band index and join each crawl delta against it at
   cost ∝ |delta| — (delta ↔ corpus) + (delta ↔ delta) near-dup pairs,
   parity-equal to the batch operator on the union corpus restricted to
-  delta-touching pairs, hot-bucket cap/salt policy intact across the
-  mounted boundary.
+  delta-touching pairs, hot-bucket cap intact across the mounted
+  boundary.
 - ``audit.audit_drift`` / ``audit.refresh`` (r12) close the frozen-
   artifact drift loop: measured recall@k of the mounted index on the
   most recent rows vs a brute-force arm, and a retrain-and-swap that

@@ -55,7 +55,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simsearch_spark.mount.lock import locked
+from simsearch_spark.mount.lock import locked, mount_state_token, next_generation
 
 MANIFEST_VERSION = 1
 
@@ -337,7 +337,7 @@ def _dedup_family_params(dedup_params: dict | None) -> dict:
     if dedup_params:
         allowed = {
             "id_col", "text_col", "threshold", "n_hashes", "bands",
-            "shingle_n", "seed", "bucket_cap", "hot_mode",
+            "shingle_n", "seed", "bucket_cap",
             # layout fan-outs: auto-derived from corpus size when absent
             # (r15); a refresh deliberately does NOT carry them so the
             # new generation re-sizes for the refreshed corpus
@@ -416,9 +416,6 @@ def mount(
             },
             "artifacts": FAMILY_ARTIFACTS["vector"] + FAMILY_ARTIFACTS["text"],
         }
-        os.makedirs(mount_dir, exist_ok=True)
-        save_manifest(mount_dir, manifest)
-
         if dedup:
             # the persisted MinHash signature/band index (mount/dedup.py) —
             # frozen hash family matching the declared dedup queries, so
@@ -426,13 +423,15 @@ def mount(
             # ``dedup_params`` overrides the family (a refresh passes the
             # OLD manifest's block through, so a regenerated mount never
             # silently reverts a custom family to defaults — r12)
-            from simsearch_spark.mount.dedup import mount_dedup
+            from simsearch_spark.mount.dedup import _build_dedup
 
-            manifest = mount_dedup(
-                spark, mount_dir, docs, **_dedup_family_params(dedup_params)
+            _add_family(
+                manifest, "dedup",
+                _build_dedup(spark, mount_dir, docs, **_dedup_family_params(dedup_params)),
             )
     finally:
         docs.unpersist()
+    save_manifest(mount_dir, manifest)
     return manifest
 
 
@@ -446,19 +445,39 @@ def load_manifest(mount_dir: str) -> dict:
     return m
 
 
-def _manifest_or_new(mount_dir: str) -> dict:
-    """The mount's manifest, or an empty one for a directory that a
-    single-family mount (``mount_dedup``, ``mount_bpe``) is creating."""
+def _add_family(manifest: dict, family: str, block: dict) -> None:
+    """Record a single-family trainer's manifest ``block`` (``dedup``,
+    ``bpe``) and list the family's artifacts."""
+    manifest[family] = block
+    manifest["artifacts"] += [
+        a for a in FAMILY_ARTIFACTS[family] if a not in manifest["artifacts"]
+    ]
+
+
+def _publish_family(mount_dir: str, family: str, build) -> dict:
+    """Train one family into a new mount generation and publish it
+    (``mount_dedup``, ``mount_bpe``; runs under their write lock):
+    ``build(out_dir)`` writes the family's artifacts into the
+    ``lock.next_generation`` tree and returns its manifest block, which
+    joins the live manifest — or a fresh one in a directory the trainer is
+    creating.  Readers see the old artifacts or the new ones; a failure
+    leaves the live mount untouched.  Returns the new manifest."""
+    token = mount_state_token(mount_dir)
     try:
-        return load_manifest(mount_dir)
+        manifest = load_manifest(mount_dir)
     except FileNotFoundError:
-        return {
+        manifest = {
             "version": MANIFEST_VERSION,
             "source": None,
             "params": {},
             "counts": {},
             "artifacts": [],
         }
+    rewrite = {*FAMILY_ARTIFACTS[family], "manifest.json"}
+    with next_generation(mount_dir, f"mount_{family}", token, rewrite) as nxt:
+        _add_family(manifest, family, build(nxt))
+        save_manifest(nxt, manifest)
+    return manifest
 
 
 def save_manifest(mount_dir: str, manifest: dict) -> None:

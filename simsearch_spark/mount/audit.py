@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from simsearch_spark.mount.artifacts import (
     FAMILY_ARTIFACTS,
+    _add_family,
     _dedup_family_params,
     _train_text_family,
     _train_vector_family,
@@ -45,7 +46,7 @@ from simsearch_spark.mount.artifacts import (
     mount,
     save_manifest,
 )
-from simsearch_spark.mount.bpe import mount_bpe
+from simsearch_spark.mount.bpe import _build_bpe
 from simsearch_spark.mount.lock import locked, mount_state_token, next_generation
 from simsearch_spark.sources.registry import load_table
 
@@ -573,7 +574,7 @@ def refresh(
     with next_generation(
         mount_dir, "refresh", tok0, rewrite=os.listdir(mount_dir)
     ) as nxt:
-        mount(
+        manifest = mount(
             spark, src, nxt,
             emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
         )
@@ -582,12 +583,11 @@ def refresh(
             # (mount() does not train it by default — mount_bpe is opt-in,
             # like mount_dedup was before it moved into mount's default set)
             bp = old_manifest["bpe"]
-            mount_bpe(
+            _add_family(manifest, "bpe", _build_bpe(
                 spark, nxt,
                 load_table(spark, src, "documents") if docs_frame is None else docs_frame,
                 text_col=bp["text_col"], n_merges=bp["n_merges"],
-            )
-        manifest = load_manifest(nxt)
+            ))
         n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
         n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
         _guard_shrink(n_new, n_old, "vectors", "the new generation", allow_shrink)
@@ -614,7 +614,7 @@ def _guard_shrink(
 #: (the layout fan-outs ``n_bkt``/``n_sbkt`` are deliberately re-derived)
 _DEDUP_CARRIED = (
     "id_col", "text_col", "threshold", "n_hashes", "bands", "shingle_n",
-    "seed", "bucket_cap", "hot_mode",
+    "seed", "bucket_cap",
 )
 
 
@@ -697,7 +697,7 @@ def _refresh_families(
     with next_generation(
         mount_dir, "refresh(families=...)", tok0, rewrite
     ) as nxt:
-        vparams = n_new = None
+        vparams = n_new = dd_block = bp_block = None
         if "vector" in families:
             emb = (
                 load_table(spark, src, "embeddings")
@@ -758,8 +758,8 @@ def _refresh_families(
                     # the live mount is untouched until publication)
                     txt_baseline = _sample_lm_stats(spark, nxt, docs)
                 if "dedup" in families:
-                    # resolved per call, so a wrapped mount_dedup is seen
-                    from simsearch_spark.mount.dedup import mount_dedup
+                    # resolved per call, so a wrapped _build_dedup is seen
+                    from simsearch_spark.mount.dedup import _build_dedup
 
                     dpf = _dedup_family_params(mount_kwargs.get("dedup_params"))
                     if mount_kwargs.get("dedup_reestimate"):
@@ -779,20 +779,20 @@ def _refresh_families(
                         )
                         dpf["n_hashes"] = mp.n_hashes
                         dpf["bands"] = mp.bands
-                    dd_manifest = mount_dedup(spark, nxt, docs, **dpf)
+                    dd_block = _build_dedup(spark, nxt, docs, **dpf)
                     _guard_shrink(
-                        int(dd_manifest["dedup"]["n_docs"]),
+                        int(dd_block["n_docs"]),
                         int(old_manifest.get("dedup", {}).get("n_docs", 0)),
                         "docs", "the new dedup index", allow_shrink,
                     )
                 if "bpe" in families:
                     bp = old_manifest["bpe"]
-                    bp_manifest = mount_bpe(
+                    bp_block = _build_bpe(
                         spark, nxt, docs,
                         text_col=bp["text_col"], n_merges=bp["n_merges"],
                     )
                     if (
-                        int(bp_manifest["bpe"]["n_learned"]) == 0
+                        int(bp_block["n_learned"]) == 0
                         and int(bp.get("n_learned", 0)) > 0
                     ):
                         # a frame so degenerate it learned NO merges must
@@ -810,9 +810,12 @@ def _refresh_families(
             finally:
                 docs.unpersist()
 
-        # the trainers' own manifest blocks (dedup, bpe) are already in
-        # the tree's manifest, which started as the live one
+        # the tree's manifest started as the live one
         manifest = load_manifest(nxt)
+        if dd_block is not None:
+            _add_family(manifest, "dedup", dd_block)
+        if bp_block is not None:
+            _add_family(manifest, "bpe", bp_block)
         if "vector" in families:
             manifest["params"].update(vparams)
             manifest["counts"]["n_vectors"] = int(n_new)

@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simsearch_spark.mount.lock import locked
-from simsearch_spark.mount.artifacts import (
-    _manifest_or_new,
-    _write,
-    load_manifest,
-    save_manifest,
-)
+from simsearch_spark.mount.artifacts import _publish_family, _write, load_manifest
 
 __all__ = [
     "mount_bpe",
@@ -130,31 +125,42 @@ def audit_bpe(
 
 
 @locked("mount_bpe", makedirs=True)
-def mount_bpe(
+def mount_bpe(spark: SparkSession, mount_dir: str, docs: DataFrame, **params) -> dict:
+    """Learn BPE rules from ``docs`` and persist them as the
+    ``bpe_merges`` artifact with the training parameters frozen in the
+    manifest — the tokenizer dual of ``mount_dedup``, and like it
+    published as one new mount generation (``lock.next_generation``);
+    ``params`` takes the keyword parameters of :func:`_build_bpe`.
+    Returns the manifest."""
+    return _publish_family(
+        mount_dir, "bpe", lambda out_dir: _build_bpe(spark, out_dir, docs, **params)
+    )
+
+
+def _build_bpe(
     spark: SparkSession,
-    mount_dir: str,
+    out_dir: str,
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int | None = None,
 ) -> dict:
-    """Learn ``n_merges`` BPE rules from ``docs`` and persist them as the
-    ``bpe_merges`` artifact (merge_rank, left, right, pair_count) with
-    the training parameters frozen in the manifest — the tokenizer dual
-    of ``mount_dedup``.  Default ``n_merges`` is the declared-query
-    budget (``queries.vocab.BPE_MERGES``) so a default mount's encode is
-    parity-equal to the self-contained ``bpe_token_stats`` query."""
+    """Learn ``n_merges`` BPE rules from ``docs``, write them into
+    ``out_dir`` as ``bpe_merges`` (merge_rank, left, right, pair_count)
+    and return the manifest's ``bpe`` block.  Default ``n_merges`` is the
+    declared-query budget (``queries.vocab.BPE_MERGES``) so a default
+    mount's encode is parity-equal to the self-contained
+    ``bpe_token_stats`` query."""
     from simsearch_spark.operators.bpe import learn_bpe_merges
     from simsearch_spark.queries.vocab import BPE_MERGES
 
     n = int(BPE_MERGES if n_merges is None else n_merges)
-    os.makedirs(mount_dir, exist_ok=True)
     live = docs.where(F.col(text_col).isNotNull())
     merges = learn_bpe_merges(live, text_col, n)
     _write(
         spark.createDataFrame(
             merges, "merge_rank int, left string, right string, pair_count long"
         ),
-        os.path.join(mount_dir, "bpe_merges"),
+        os.path.join(out_dir, "bpe_merges"),
     )
     # training-time compression baseline (r14): chars-per-token of the
     # frozen merges on a bounded deterministic sample of the TRAINING
@@ -163,17 +169,12 @@ def mount_bpe(
     # a falling ratio means the merges no longer fit the incoming
     # distribution (new language, new boilerplate) — tokenizer drift.
     baseline = _sample_cpt(spark, live, text_col, merges, AUDIT_SAMPLE_N)
-    manifest = _manifest_or_new(mount_dir)
-    manifest["bpe"] = {
+    return {
         "text_col": text_col,
         "n_merges": n,
         "n_learned": len(merges),  # < n_merges only on pair-exhausted corpora
         "baseline_cpt": baseline,  # chars/token on the training sample
     }
-    if "bpe_merges" not in manifest.get("artifacts", []):
-        manifest.setdefault("artifacts", []).append("bpe_merges")
-    save_manifest(mount_dir, manifest)
-    return manifest
 
 
 def load_merges(spark: SparkSession, mount_dir: str) -> list[tuple[int, str, str, int]]:

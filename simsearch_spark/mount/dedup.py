@@ -9,7 +9,9 @@ The reference engine has no dedup (SURVEY.md §6 — LLM-pipeline surface);
 the batch semantics being made incremental are exactly
 ``operators/dedup.py minhash_lsh_pairs``.
 
-Artifacts (written by ``mount_dedup``, appended by ``dedup_append``):
+Artifacts (written by ``mount_dedup`` — or by ``mount()`` and ``refresh``,
+which build them into the generation they publish — appended by
+``dedup_append``):
 
 ==============  ===========================================  ==============
 artifact        schema                                       partitioning
@@ -37,14 +39,14 @@ and id types Python does not order as Spark does take ``_append_large``,
 the distributed path; tests/test_mount_dedup.py pins the two equal.
 
 The FROZEN-HASH contract: the manifest records (n_hashes, bands,
-shingle_n, seed, threshold, bucket_cap, hot_mode) at mount; every delta
-computes signatures with the SAME family, which makes the parity pin
-exact: ``minhash_lsh_pairs(base ∪ delta)`` restricted to pairs touching a
-delta id == ``mount_dedup(base)`` + ``dedup_append(delta)``
+shingle_n, seed, threshold, bucket_cap) at mount; every delta computes
+signatures with the SAME family, which makes the parity pin exact:
+``minhash_lsh_pairs(base ∪ delta)`` restricted to pairs touching a delta
+id == ``mount_dedup(base)`` + ``dedup_append(delta)``
 (tests/test_mount_dedup.py), split-invariant across delta batches, and
-the hot-bucket cap/salt policy holds ACROSS the mounted boundary (bucket
-size = base members + delta members, lowest-id selection identical to the
-batch operator's).
+the hot-bucket cap holds ACROSS the mounted boundary (bucket size = base
+members + delta members, lowest-id selection identical to the batch
+operator's).
 
 The EMBEDDING front (``dedup_embed_append``) needs no extra artifact:
 the mounted IVF codes table is already a cell-blocking index — delta
@@ -74,8 +76,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from simsearch_spark.functions.hashing import nonblank_text
 from simsearch_spark.mount.artifacts import (
-    _manifest_or_new,
+    _publish_family,
     _write,
     load_manifest,
     save_manifest,
@@ -83,10 +86,7 @@ from simsearch_spark.mount.artifacts import (
 from simsearch_spark.mount.lock import locked
 from simsearch_spark.operators.dedup import (
     LSH_BUCKET_CAP,
-    _bucket_key_expr,
     _cap_lsh_buckets,
-    _hot_bucket_rows,
-    _with_block_group,
     minhash_banded_frame,
     minhash_rows,
     verify_shingle_pairs,
@@ -157,10 +157,6 @@ MAX_HASH_PUSH_LITERALS = 128
 MAX_BASE_BAND_ROWS = 200_000
 
 
-def _text_ok(text_col: str):
-    return F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-
-
 @locked("delete_docs")
 def delete_docs(spark: SparkSession, mount_dir: str, doc_ids: list) -> None:
     """Tombstone mounted documents (r14 — the dedup dual of the vector
@@ -210,9 +206,22 @@ def _expl_frame(banded: DataFrame, id_col: str, n_bkt: int = N_BKT) -> DataFrame
 
 
 @locked("mount_dedup", makedirs=True)
-def mount_dedup(
+def mount_dedup(spark: SparkSession, mount_dir: str, docs: DataFrame, **family) -> dict:
+    """Build the persisted MinHash signature/band index for ``docs`` and
+    record the frozen hash family in the mount manifest; ``family`` takes
+    the keyword parameters of :func:`_build_dedup`.  The index and the
+    manifest are published as one new mount generation
+    (``lock.next_generation``), so a reader never sees a half-written
+    index and a failed build leaves the live mount untouched.  Returns
+    the manifest."""
+    return _publish_family(
+        mount_dir, "dedup", lambda out_dir: _build_dedup(spark, out_dir, docs, **family)
+    )
+
+
+def _build_dedup(
     spark: SparkSession,
-    mount_dir: str,
+    out_dir: str,
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -222,18 +231,16 @@ def mount_dedup(
     shingle_n: int = 3,
     seed: int = 42,
     bucket_cap: int | None = LSH_BUCKET_CAP,
-    hot_mode: str = "cap",
     n_bkt: int | None = None,
     n_sbkt: int | None = None,
 ) -> dict:
-    """Build the persisted MinHash signature/band index for ``docs`` and
-    record the frozen hash family in the mount manifest.  NULL/empty
+    """Write ``dedup_bands`` and ``dedup_shingles`` for ``docs`` into
+    ``out_dir`` and return the manifest's ``dedup`` block.  NULL/empty
     texts are excluded — the same candidate-universe contract as
-    ``minhash_lsh_pairs``."""
-    if hot_mode not in ("cap", "salt"):
-        raise ValueError(f"hot_mode {hot_mode!r} not in ('cap', 'salt')")
-    os.makedirs(mount_dir, exist_ok=True)
-    docs = docs.where(_text_ok(text_col))
+    ``minhash_lsh_pairs``.  ``out_dir`` is a directory the caller owns:
+    ``mount_dedup``'s next generation, or the one ``mount()`` or
+    ``refresh`` is building."""
+    docs = docs.where(nonblank_text(text_col))
     banded = minhash_banded_frame(
         docs, id_col, text_col, n_hashes, bands, shingle_n, seed
     ).persist()
@@ -249,11 +256,7 @@ def mount_dedup(
         # the doc count runs FIRST (it also materializes the persist, so
         # both writes read cache): the corpus size drives the auto
         # fan-outs, which must be fixed before either write plans its
-        # repartition.  The two artifact writes then overlap (guide §2.6)
-        # exactly as before.  Initial-build ordering is NOT the append
-        # commit-point concern (ADVICE r13): no idempotency probe reads a
-        # half-built mount because the manifest — the only discovery
-        # point — is written strictly after both writes return.
+        # repartition.  The two artifact writes then overlap (guide §2.6).
         n_docs = int(banded.count())
         # scale-adaptive layout (r15): directory counts track corpus size
         # — ~1k band rows / ~512 shingle rows per directory, pow-2, so a
@@ -270,7 +273,7 @@ def mount_dedup(
                 _expl_frame(banded, id_col, n_bkt)
                 .repartition("band_idx", "bkt")
                 .sortWithinPartitions("band_hash"),
-                os.path.join(mount_dir, "dedup_bands"),
+                os.path.join(out_dir, "dedup_bands"),
                 partition_by=["band_idx", "bkt"],
             )
 
@@ -281,7 +284,7 @@ def mount_dedup(
                 ).withColumn(
                     "sbkt", _sbkt(id_col, n_sbkt)
                 ).repartition("sbkt").sortWithinPartitions(id_col),
-                os.path.join(mount_dir, "dedup_shingles"),
+                os.path.join(out_dir, "dedup_shingles"),
                 partition_by="sbkt",
             )
 
@@ -293,10 +296,7 @@ def mount_dedup(
     finally:
         banded.unpersist()
 
-    # a dedup-only mount (text corpus without vector artifacts) is a
-    # legitimate deployment — start a fresh manifest when none exists
-    manifest = _manifest_or_new(mount_dir)
-    manifest["dedup"] = {
+    return {
         "id_col": id_col,
         # Spark's xxhash64 is TYPE-sensitive (int and long hash
         # differently), so the sbkt partition scheme is only reproducible
@@ -309,7 +309,6 @@ def mount_dedup(
         "shingle_n": int(shingle_n),
         "seed": int(seed),
         "bucket_cap": None if bucket_cap is None else int(bucket_cap),
-        "hot_mode": hot_mode,
         "n_docs": n_docs,
         # the partition fan-outs are layout, not semantics, but the
         # DIRECTORY-PRUNING predicates must be computed with the values
@@ -319,90 +318,38 @@ def mount_dedup(
         "n_bkt": int(n_bkt),
         "n_sbkt": int(n_sbkt),
     }
-    for a in ("dedup_bands", "dedup_shingles"):
-        if a not in manifest["artifacts"]:
-            manifest["artifacts"].append(a)
-    save_manifest(mount_dir, manifest)
-    return manifest
 
 
 def _delta_touching_candidates(
-    union_expl: DataFrame, id_col: str, cap: int | None, hot_mode: str
+    union_expl: DataFrame, id_col: str, cap: int | None
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs with at least one NEW (delta) member,
     over the union membership of the delta-touched buckets, under the
-    batch operator's hot-bucket policy.
+    batch operator's hot-bucket cap.
 
     ``union_expl`` carries (band_idx, band_hash, id, _new); bucket sizes
     computed here equal the batch-on-union sizes because the base side
     pulled EVERY base row of each touched bucket.  Pair generation is
-    asymmetric — delta rows on one side, the full (policy-filtered)
-    membership on the other — so volume tracks |delta|·bucket-size, never
+    asymmetric — delta rows on one side, the full (capped) membership on
+    the other — so volume tracks |delta|·bucket-size, never
     bucket-size²; ``least/greatest`` + distinct restores the batch
     operator's unordered-pair identity (delta-delta pairs generate twice,
     once per orientation)."""
     keys = ["band_idx", "band_hash"]
-    if hot_mode not in ("cap", "salt"):
-        raise ValueError(f"hot_mode {hot_mode!r} not in ('cap', 'salt')")
-    extra = None
-    if cap is None:
-        pass  # no cap → no hot buckets under either policy: plain join
-    elif hot_mode == "salt":
-        hot_rows = _hot_bucket_rows(union_expl, keys, int(cap))
-        if hot_rows:
-            hot_set = [
-                "\x00".join(str(r[c]) for c in keys) for r in hot_rows
-            ]
-            is_hot = _bucket_key_expr(keys).isin(hot_set)
-            hot = union_expl.where(is_hot)
-            union_expl = union_expl.where(~is_hot)
-            # blocked (salted) lane for hot buckets, delta-asymmetric:
-            # right side keeps its own xxhash64 block (≈cap rows per
-            # block), the delta left side replicates across the G right
-            # blocks — per-(bucket, block) task volume is |delta∩bucket|
-            # × O(cap), total the honest |delta|·n delta-touching pair
-            # volume, and no task is quadratic in the bucket.  The block
-            # assignment itself is the batch tier's, via the shared
-            # ``_with_block_group`` helper.
-            hg = _with_block_group(hot, keys, hot_rows, int(cap))
-            right = hg.select(
-                *keys,
-                F.col(id_col).alias("_id_o"),
-                F.pmod(F.xxhash64(F.col(id_col)), F.col("_g"))
-                .cast("int")
-                .alias("_br"),
-            )
-            left = hg.where(F.col("_new")).select(
-                *keys,
-                F.col(id_col).alias("_id_n"),
-                F.explode(F.sequence(F.lit(0), F.col("_g") - 1)).alias("_br"),
-            )
-            extra = (
-                left.join(right, [*keys, "_br"])
-                .where(F.col("_id_n") != F.col("_id_o"))
-                .select(
-                    F.least("_id_n", "_id_o").alias("id_a"),
-                    F.greatest("_id_n", "_id_o").alias("id_b"),
-                )
-            )
-    else:  # "cap"
-        union_expl = _cap_lsh_buckets(union_expl, keys, id_col, cap)
-
+    union_expl = _cap_lsh_buckets(union_expl, keys, id_col, cap)
     new_side = union_expl.where(F.col("_new")).select(
         *keys, F.col(id_col).alias("_id_n")
     )
     all_side = union_expl.select(*keys, F.col(id_col).alias("_id_o"))
-    cand = (
+    return (
         new_side.join(all_side, keys)
         .where(F.col("_id_n") != F.col("_id_o"))
         .select(
             F.least("_id_n", "_id_o").alias("id_a"),
             F.greatest("_id_n", "_id_o").alias("id_b"),
         )
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if extra is not None:
-        cand = cand.unionByName(extra)
-    return cand.dropDuplicates(["id_a", "id_b"])
 
 
 def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
@@ -612,7 +559,7 @@ def _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs):
         spark.conf.set(thr, "4096")
     delta = docs_delta.select(
         F.col(id_col).cast(id_dtype).alias(id_col), F.col(text_col)
-    ).where(_text_ok(text_col))
+    ).where(nonblank_text(text_col))
     # the fast-path gate: lim is sized so the delta's band keys
     # (lim·bands) stay within MAX_IN_LITERALS; overflow → distributed path
     lim = max(1, MAX_IN_LITERALS // max(1, int(dd["bands"])))
@@ -737,7 +684,7 @@ def _append_driver(
 
     # bucket membership = its base rows ∪ its new delta ids; the batch
     # operator's cap counts distinct members, and a bucket within the
-    # cap pairs exactly as uncapped (under either hot_mode)
+    # cap pairs exactly as uncapped
     members: dict = {}
     for i in new:
         for j, h in enumerate(bands[i]):
@@ -854,7 +801,7 @@ def _append_large(
                     )
                 )
                 cand = _delta_touching_candidates(
-                    union_expl, id_col, dd["bucket_cap"], dd["hot_mode"]
+                    union_expl, id_col, dd["bucket_cap"]
                 ).localCheckpoint(eager=True)
                 if tomb:
                     # tombstoned base docs drop from the pair stream

@@ -56,26 +56,6 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return acc
 
 
-def lsh_band_keys(vec: Column, planes: list[list[float]], band_bits: int) -> Column:
-    """array<long> of per-band sign-LSH keys: band j's key is the bucket of
-    plane slice [j·band_bits, (j+1)·band_bits) — value-identical to slicing
-    a packed ``lsh_bucket`` signature with shiftright/mask (bit i of a
-    bucket IS plane i), but with INDEPENDENT 63-bit-capped keys per band,
-    so total planes are unbounded.  This is what lets band_bits grow
-    ~log2(N) to any corpus size (operators/lshparams.py): the old
-    single-key packing capped bands·band_bits at 63, which stops the
-    candidates-per-row-flat discipline at ~32k rows."""
-    if band_bits < 1 or band_bits > 63:
-        raise ValueError(f"band_bits {band_bits} outside [1, 63]")
-    n_bands = max(1, len(planes) // band_bits)
-    return F.array(
-        *[
-            lsh_bucket(vec, planes[j * band_bits : (j + 1) * band_bits])
-            for j in range(n_bands)
-        ]
-    )
-
-
 def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, query_vec: list[float], k: int
 ) -> DataFrame:

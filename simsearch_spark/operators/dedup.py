@@ -10,11 +10,11 @@ machinery, SURVEY.md §7 step 7):
   Jaccard.  Candidate generation shuffles only (band_hash, id) pairs;
   verification touches candidate pairs, not the n² space.
 - simhash: 32-bit signature per doc, near-dup = hamming ≤ r.  Signature is a
-  pure map; the pair join is block-partitioned by signature prefix at scale.
+  pure map; candidates come from a pigeonhole equi-join on signature blocks.
 - n-gram Jaccard: the exact prefix-filtered set-similarity join
   (operators/setsim.py) over word shingles.
-- embedding cosine: near-dup by vector similarity; brute pairs locally,
-  LSH-bucketed (operators/ann.py) at scale.
+- embedding cosine: near-dup by vector similarity; an exact block-tiled pair
+  join (within k-means cells for SemDeDup, queries/cluster.py).
 
 All hash arithmetic uses the char-fold base hash (functions/hashing.py) so
 every tier is DuckDB-oracle-checkable.
@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from simsearch_spark.functions import measures
-from simsearch_spark.functions.hashing import blank_text, hamming64
+from simsearch_spark.functions.hashing import blank_text, hamming64, nonblank_text
 from simsearch_spark.functions.text import doc_fingerprint
 from simsearch_spark.operators.setsim import jaccard_self_join
 
@@ -260,11 +260,10 @@ def minhash_banded_frame(
     )
 
 
-#: hot-bucket guard (VERDICT r9 task 4): adaptive params keep RANDOM
-#: collisions flat, but an adversarial/skewed corpus (near-constant
-#: vectors, boilerplate shingles) can still put s >> cap members in one
-#: LSH bucket, whose s²/2 pairs would otherwise land in one quadratic
-#: task.  Each bucket therefore contributes pairs from at most this many
+#: hot-bucket guard (VERDICT r9 task 4): banding keeps RANDOM
+#: collisions flat, but an adversarial/skewed corpus (boilerplate
+#: shingles) can still put s >> cap members in one LSH bucket, whose
+#: s²/2 pairs would otherwise land in one quadratic task.  Each bucket therefore contributes pairs from at most this many
 #: members (its LOWEST ids — deterministic); overflow members are DROPPED
 #: from that bucket (MMDS drop-with-count practice: a cluster that large
 #: is boilerplate the exact tier owns; each member usually still pairs
@@ -278,34 +277,6 @@ LSH_BUCKET_CAP = 4096
 #: degenerate (>10⁴ buckets each holding >cap near-identical members has a
 #: quadratic ANSWER no guard can fix; the exact tier owns it)
 MAX_HOT_BUCKETS = 10_000
-
-
-def _hot_bucket_rows(
-    expl: DataFrame,
-    key_cols: list[str],
-    cap: int,
-    max_hot: int = MAX_HOT_BUCKETS,
-):
-    """The over-cap bucket keys WITH their sizes — ONE map-side-combinable
-    count, collected (driver-bounded by ``max_hot``; empty on every
-    healthy corpus)."""
-    hot_rows = (
-        expl.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .where(F.col("_bn") > int(cap))
-        .limit(max_hot + 1)
-        .collect()
-    )
-    if len(hot_rows) > max_hot:
-        raise ValueError(
-            f"_cap_lsh_buckets: more than {max_hot} buckets exceed cap={cap} "
-            "— the corpus is boilerplate-degenerate; run exact dedup first"
-        )
-    return hot_rows
-
-
-def _bucket_key_expr(key_cols: list[str]):
-    return F.concat_ws("\x00", *[F.col(c).cast("string") for c in key_cols])
 
 
 def _cap_lsh_buckets(
@@ -329,10 +300,21 @@ def _cap_lsh_buckets(
     per-bucket sort; healthy buckets never do."""
     if cap is None:
         return expl
-    hot_rows = _hot_bucket_rows(expl, key_cols, cap, max_hot)
+    hot_rows = (
+        expl.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("_bn"))
+        .where(F.col("_bn") > int(cap))
+        .limit(max_hot + 1)
+        .collect()
+    )
+    if len(hot_rows) > max_hot:
+        raise ValueError(
+            f"_cap_lsh_buckets: more than {max_hot} buckets exceed cap={cap} "
+            "— the corpus is boilerplate-degenerate; run exact dedup first"
+        )
     if not hot_rows:
         return expl
-    keyed = _bucket_key_expr(key_cols)
+    keyed = F.concat_ws("\x00", *[F.col(c).cast("string") for c in key_cols])
     hot_set = [
         "\x00".join(str(r[c]) for c in key_cols) for r in hot_rows
     ]
@@ -346,83 +328,6 @@ def _cap_lsh_buckets(
         .drop("_bucket_rn")
     )
     return healthy.unionByName(capped)
-
-
-def _with_block_group(
-    expl: DataFrame, key_cols: list[str], hot_rows, cap: int
-) -> DataFrame:
-    """Annotate each hot-bucket row with its block-group count
-    ``_g = ceil(n / cap)`` via a broadcast hkey→G map — the shared
-    boilerplate of the salted tiers (batch ``_salted_hot_candidates``
-    and the mounted delta-asymmetric lane, mount/dedup.py), factored so
-    the skew-join discipline cannot silently diverge between them."""
-    keyed = _bucket_key_expr(key_cols)
-    spark = expl.sparkSession
-    g_rows = [
-        (
-            "\x00".join(str(r[c]) for c in key_cols),
-            int(-(-int(r["_bn"]) // int(cap))),  # ceil(n / cap)
-        )
-        for r in hot_rows
-    ]
-    gdf = spark.createDataFrame(g_rows, "_hkey string, _g int")
-    return expl.withColumn("_hkey", keyed).join(F.broadcast(gdf), "_hkey")
-
-
-def _salted_hot_candidates(
-    expl: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    hot_rows,
-    cap: int,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs for the HOT buckets only, via a
-    BLOCKED (salted) self-join — the recall-preserving tier above the cap
-    (VERDICT r10 task 2; the MMDS skew-join discipline).
-
-    Every member of a hot bucket is assigned a deterministic block
-    ``xxhash64(id) mod G`` with ``G = ceil(n / cap)`` (per bucket, from
-    the already-collected sizes), and the bucket's pair space is
-    enumerated block-pair by block-pair: the left side replicates each row
-    across the G right-block lanes, the right side across the G
-    left-block lanes, and the join key carries (bucket, left_block,
-    right_block).  Each unordered pair lands in EXACTLY one (bi, bj) task
-    (the ``id_a < id_b`` filter keeps one orientation), so:
-
-    - recall is TOTAL — all n²/2 true candidate pairs of the bucket are
-      generated and go on to exact Jaccard verification ("verify across
-      salts"), where the cap tier dropped members;
-    - no single task is quadratic in the bucket — each (bucket, bi, bj)
-      join key holds ~cap left × ~cap right rows, i.e. O(cap²) pairs per
-      task, G² bounded tasks per bucket, instead of one n²/2 task;
-    - the assignment is a pure function of the id — split/partition/
-      arrival invariant, like every selection rule in this module.
-
-    The honest cost statement: total verified volume for a hot bucket is
-    still its true n²/2 candidates (that IS the recall the caller asked
-    for); what the salt buys is that no executor ever materializes the
-    bucket quadratically.  Replication factor is G per side — rows touched
-    scale n·G = n²/cap, strictly bounded by the pair volume itself."""
-    he = _with_block_group(expl, key_cols, hot_rows, cap)
-    own = F.pmod(F.xxhash64(F.col(id_col)), F.col("_g")).cast("int")
-    lanes = F.explode(F.sequence(F.lit(0), F.col("_g") - 1))
-    left = he.select(
-        *key_cols,
-        F.col(id_col).alias("id_a"),
-        own.alias("_bi"),
-        lanes.alias("_bj"),
-    )
-    right = he.select(
-        *key_cols,
-        F.col(id_col).alias("id_b"),
-        lanes.alias("_bi"),
-        own.alias("_bj"),
-    )
-    return (
-        left.join(right, [*key_cols, "_bi", "_bj"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -442,9 +347,7 @@ def minhash_lsh_pairs(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    auto_params: bool = False,
     bucket_cap: int | None = LSH_BUCKET_CAP,
-    hot_mode: str = "cap",
 ) -> DataFrame:
     """MinHash-LSH candidate pairs verified with exact shingle Jaccard.
 
@@ -453,24 +356,10 @@ def minhash_lsh_pairs(
     lowest-id members; a boilerplate cluster can no longer turn one bucket
     key into a quadratic join key.
 
-    hot_mode: what happens ABOVE the cap (VERDICT r10 task 2).
-    ``"cap"`` (default): drop-with-count — overflow members are dropped
-    from that bucket deterministically; recall inside hot buckets is
-    reduced, cost stays bounded.  ``"salt"``: the recall-preserving tier —
-    hot buckets keep EVERY member and enumerate their full pair space
-    through a blocked (salted) self-join (``_salted_hot_candidates``):
-    per-task volume O(cap²), total volume the bucket's honest n²/2
-    verified pairs.  Choose "salt" for boilerplate-heavy LEGITIMATE
-    corpora where the hot buckets' dups are wanted (web text with shared
-    templates); keep "cap" when a hot bucket is adversarial noise.
-    Batch-only — the streaming state keeps the cap contract.
-
-    auto_params=True sizes (n_hashes, bands) from the corpus via
-    ``operators/lshparams.py auto_minhash_params`` — the S-curve midpoint
-    matched to ``threshold`` with an N-driven rows-per-band floor that
-    suppresses random-pair band collisions as the corpus grows; one
-    bounded count() when enabled.  The fixed defaults (16, 4) remain the
-    small-corpus/registry contract.
+    The fixed (n_hashes, bands) defaults are the registry contract; a
+    caller sizing them from the corpus passes the values
+    ``operators/lshparams.py auto_minhash_params`` returns (as
+    ``refresh(dedup_reestimate=True)`` does).
 
     candidate generation: explode band hashes → groupBy-join on
     (band_index, band_hash) → distinct (a,b) pairs; verification: exact
@@ -484,12 +373,7 @@ def minhash_lsh_pairs(
     otherwise bucket together and verify at jaccard 0/0); exact duplicates of
     empty documents are the exact tier's job (``exact_dedup_groups``).
     """
-    df = df.where(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
-    if auto_params:
-        from simsearch_spark.operators.lshparams import auto_minhash_params
-
-        prm = auto_minhash_params(df.count(), float(threshold))
-        n_hashes, bands = prm.n_hashes, prm.bands
+    df = df.where(nonblank_text(text_col))
     # fused Arrow signature kernel (bit-identical to the
     # shingle→hash→sig→band column chain, equality-tested).
     # materialization barrier: the signature table is computed ONCE and
@@ -508,40 +392,15 @@ def minhash_lsh_pairs(
         F.col(id_col), F.posexplode("bands").alias("band_idx", "band_hash")
     ).persist()
     try:
-        keys = ["band_idx", "band_hash"]
-        if hot_mode not in ("cap", "salt"):
-            raise ValueError(f"hot_mode {hot_mode!r} not in ('cap', 'salt')")
-        if bucket_cap is None:
-            # no cap → no bucket is "hot" under either policy: plain join
-            hc, capped = None, expl
-        elif hot_mode == "salt":
-            # recall-preserving tier: hot buckets pay their true pair
-            # volume through the blocked self-join (no drop), healthy
-            # buckets keep the plain equi-join; one shared hot-key count
-            hot_rows = _hot_bucket_rows(expl, keys, int(bucket_cap))
-            if hot_rows:
-                hot_set = ["\x00".join(str(r[c]) for c in keys) for r in hot_rows]
-                is_hot = _bucket_key_expr(keys).isin(hot_set)
-                healthy = expl.where(~is_hot)
-                hc = _salted_hot_candidates(
-                    expl.where(is_hot), keys, id_col, hot_rows, int(bucket_cap)
-                )
-                capped = healthy
-            else:
-                hc, capped = None, expl
-        else:  # "cap"
-            hc = None
-            capped = _cap_lsh_buckets(expl, keys, id_col, bucket_cap)
+        capped = _cap_lsh_buckets(expl, ["band_idx", "band_hash"], id_col, bucket_cap)
         left = capped.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
         right = capped.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
         cand = (
             left.join(right, ["band_idx", "band_hash"])
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"])
         )
-        if hc is not None:
-            cand = cand.unionByName(hc)
-        cand = cand.dropDuplicates(["id_a", "id_b"])
         # Materialize the (bounded) verified pair set eagerly so the two
         # intermediate caches can be dropped HERE instead of accumulating
         # across a multi-query session (ADVICE r10 — leaked persists also
@@ -584,17 +443,15 @@ def simhash_pairs(
     max_hamming: int = 6,
     bits: int = 32,
     shingle_n: int = 3,
-    banded: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs: signature map + pair join with
     ``bit_count(a XOR b) <= r``.
 
-    banded=False: all-pairs join (exact, simple; fine to ~10⁴ rows/side).
-    banded=True: the scale path — split each signature into r+1 bit blocks;
-    by pigeonhole, hamming ≤ r forces at least one block to match exactly,
-    so candidates come from r+1 equi-joins on (block_idx, block_value) and
-    only candidates pay the bit_count verify.  Exact (no recall loss),
-    verified equal to the all-pairs join in tests.
+    Candidates come from a pigeonhole equi-join: each signature is split
+    into r+1 bit blocks, and hamming ≤ r forces at least one block to match
+    exactly, so candidates come from r+1 equi-joins on (block_idx,
+    block_value) and only candidates pay the bit_count verify.  Exact (no
+    recall loss), verified equal to the all-pairs join in tests.
 
     The blocks partition [0, bits) EXACTLY with variable widths
     (remainder spread over the first blocks).  A fixed ceil(bits/blocks)
@@ -603,59 +460,50 @@ def simhash_pairs(
     every row and its equi-join silently degenerates to the n² cross
     product (found in round-1 advice).
     """
+    n_blocks = max_hamming + 1
+    if bits < n_blocks:
+        # a zero-width block would mask to the constant 0 and equi-join
+        # every row against every row — the exact degeneration the
+        # variable-width partition exists to prevent
+        raise ValueError(
+            f"simhash_pairs needs bits >= max_hamming + 1 ({bits} < {n_blocks}); "
+            "widen the signature or lower max_hamming"
+        )
     # NULL/space-only docs share one degenerate signature and would all
     # pair at hamming 0 — same exclusion contract as minhash_lsh_pairs
-    df = df.where(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
+    df = df.where(nonblank_text(text_col))
     # fused pandas signature kernel (bit-identical to the column chain,
     # equality-tested); persist: computed once, read by both join sides
     sh = simhash_frame(df, id_col, text_col, bits, shingle_n).persist()
-    if banded:
-        n_blocks = max_hamming + 1
-        if bits < n_blocks:
-            # a zero-width block would mask to the constant 0 and equi-join
-            # every row against every row — the exact degeneration the
-            # variable-width partition exists to prevent
-            raise ValueError(
-                f"banded simhash needs bits >= max_hamming + 1 ({bits} < {n_blocks}); "
-                "use banded=False for radii that wide"
-            )
-        base_w, rem = divmod(bits, n_blocks)
-        widths = [base_w + 1] * rem + [base_w] * (n_blocks - rem)
-        offsets = [sum(widths[:i]) for i in range(n_blocks)]
-        blocks = F.array(
-            *[
-                F.shiftright(F.col("sig"), off).bitwiseAND(F.lit((1 << w) - 1))
-                for off, w in zip(offsets, widths)
-            ]
-        )
-        expl = sh.withColumn("blocks", blocks).select(
-            F.col(id_col), F.col("sig"), F.posexplode("blocks").alias("blk_idx", "blk_val")
-        )
-        left = expl.select(
-            F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "blk_idx", "blk_val"
-        )
-        right = expl.select(
-            F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"), "blk_idx", "blk_val"
-        )
-        # verify hamming BEFORE deduplicating: signatures already travel with
-        # the joined row, so the bit_count filter costs nothing extra and the
-        # dropDuplicates exchange then shuffles only ACCEPTED pairs (a few
-        # hundred) instead of every candidate (O(n²/2^width) rows)
-        return (
-            left.join(right, ["blk_idx", "blk_val"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
-            .where(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
+    base_w, rem = divmod(bits, n_blocks)
+    widths = [base_w + 1] * rem + [base_w] * (n_blocks - rem)
+    offsets = [sum(widths[:i]) for i in range(n_blocks)]
+    blocks = F.array(
+        *[
+            F.shiftright(F.col("sig"), off).bitwiseAND(F.lit((1 << w) - 1))
+            for off, w in zip(offsets, widths)
+        ]
+    )
+    expl = sh.withColumn("blocks", blocks).select(
+        F.col(id_col), F.col("sig"), F.posexplode("blocks").alias("blk_idx", "blk_val")
+    )
+    left = expl.select(
+        F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "blk_idx", "blk_val"
+    )
+    right = expl.select(
+        F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"), "blk_idx", "blk_val"
+    )
+    # verify hamming BEFORE deduplicating: signatures already travel with
+    # the joined row, so the bit_count filter costs nothing extra and the
+    # dropDuplicates exchange then shuffles only ACCEPTED pairs (a few
+    # hundred) instead of every candidate (O(n²/2^width) rows)
     return (
-        pairs.withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
+        left.join(right, ["blk_idx", "blk_val"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -695,12 +543,11 @@ def _clamp_block_rows(
 
 
 def _score_pair_group(pdf, loose: float, diagonal: bool):
-    """Shared numpy scoring kernel for one pair group (a block tile or an
-    LSH bucket): n·m dot products as ascending rank-1 updates
-    (``acc += A[:,j] ⊗ B[:,j]``), the SAME IEEE left-fold the JVM
-    ``aggregate(zip_with(...))`` and the DuckDB ``list_reduce`` oracle
-    evaluate — raw cosines are bit-identical across engines, so the
-    authoritative round-6 threshold can stay JVM-side."""
+    """Numpy scoring kernel for one block tile: n·m dot products as
+    ascending rank-1 updates (``acc += A[:,j] ⊗ B[:,j]``), the SAME IEEE
+    left-fold the JVM ``aggregate(zip_with(...))`` and the DuckDB
+    ``list_reduce`` oracle evaluate — raw cosines are bit-identical across
+    engines, so the authoritative round-6 threshold can stay JVM-side."""
     import numpy as np
     import pandas as pd
 
@@ -757,232 +604,6 @@ def _score_pair_group(pdf, loose: float, diagonal: bool):
     return pd.DataFrame({"id_a": lo, "id_b": hi, "cos_raw": cos})
 
 
-def embedding_cosine_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.9,
-    blocked: bool = True,
-    block_rows: int = 4096,
-    n_rows: int | None = None,
-    pruned: bool = False,
-    n_planes: int = 16,
-    band_bits: int = 4,
-    planes_seed: int = 7,
-    center: bool = False,
-    auto_params: bool = False,
-    bucket_cap: int | None = LSH_BUCKET_CAP,
-    task_mem_bytes: int = PAIR_KERNEL_TASK_BYTES,
-) -> DataFrame:
-    """Embedding near-dup pairs by cosine ≥ threshold.
-
-    bucket_cap (pruned route only): hot-bucket guard (``LSH_BUCKET_CAP``)
-    — each (band_idx, band_key) bucket scores at most its ``cap``
-    lowest-id members, so an adversarial near-constant corpus (every sign
-    bit equal → one bucket) is bounded at cap²/2 pairs in a cap-row task
-    instead of one quadratic straggler.  Overflow members are dropped from
-    that bucket (drop-with-count; see LSH_BUCKET_CAP).
-
-    blocked=True (default): distributed block-tiled pair join.  Rows are
-    hashed into B ≈ n/block_rows blocks; each unordered block pair (p ≤ q)
-    is one ``applyInPandas`` group scored by the shared numpy kernel
-    (`_score_pair_group` — bit-identical fold across engines).  Driver
-    memory is O(1); executor memory per task is O(block_rows·dim +
-    block_rows²).  Each row is shuffled B times (block-nested-loop
-    replication) — EXACT, the declared-query path.
-
-    pruned=True: the corpus-scale route — banded sign-LSH candidate
-    pruning COMPOSED with the same scoring kernel.  Each row gets an
-    `n_planes`-bit hyperplane signature (operators/ann.py LCG planes);
-    the signature is split into ``n_planes // band_bits`` bands and a pair
-    is scored only when it agrees exactly on at least one band (the
-    MinHash-LSH banding construction applied to sign bits).  Shuffle moves
-    (band_idx, band_key, id, vec) — bands× replication instead of blocks×,
-    and random pairs are pruned at rate ≈ 1-(1-2^-band_bits)^bands while
-    a cos-s pair survives with p = 1-acos(s)/π per plane, band recall
-    1-(1-p^band_bits)^bands.  RECALL-LOSSY like MinHash LSH: tune
-    n_planes/band_bits to the threshold (defaults suit thresholds ≥0.9;
-    low thresholds need wider probes).  A pair matching several bands is
-    scored per band group with an identical raw cosine, so the final
-    ``distinct()`` is exact.  Hot buckets (near-identical corpora) bound
-    by band_key cardinality; tile the bucket interior with the blocked
-    kernel if a single key overflows a task.
-
-    blocked=False (and not pruned): pure column-expression pair join (the
-    cross-engine reference path; kept for equality testing).
-
-    n_rows: optional row-count hint for sizing the block tiling.  At corpus
-    scale the pre-count is itself a full scan before any work — pass
-    catalog/statistics counts (or any upper bound; block sizing only needs
-    the right magnitude) to skip it.  Default: one bounded count().
-
-    Norms are always precomputed per row (never per pair) JVM-side with the
-    same fold as the oracle.
-    """
-    # cast float vectors to double ONCE here: the pair stage must not
-    # re-cast element-wise for every pair
-    normed = df.select(
-        F.col(id_col),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-        measures.l2_norm(F.col(vec_col)).alias("nrm"),
-    ).persist()
-    # pre-filter margin must cover the round-half-width: raw cosines in
-    # [threshold - 5e-7, threshold) round UP to the threshold and must
-    # survive to the authoritative round-6 filter (ADVICE r01)
-    loose = float(threshold) - 1e-6
-
-    if center and not pruned:
-        raise ValueError(
-            "center=True only affects the pruned sign-LSH route's hashing; "
-            "the blocked/plain paths score raw vectors and need no centering"
-        )
-    if pruned:
-        from simsearch_spark.operators.ann import lcg_hyperplanes, lsh_band_keys
-
-        # planes are generated for the table's vector width (1-row probe)
-        first = df.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            return df.sparkSession.createDataFrame([], "id_a long, id_b long, cos_sim double")
-        dim = int(first.d)
-        if auto_params:
-            # mount-time sizing profile (operators/lshparams.py): band_bits
-            # ~log2(N) keeps random candidates-per-row flat; bands widened
-            # for recall ≥0.95 at the threshold.  One bounded count when no
-            # statistics hint is passed (same contract as the block tiling)
-            from simsearch_spark.operators.lshparams import auto_sign_lsh_params
-
-            n_est = n_rows if n_rows is not None else df.count()
-            prm = auto_sign_lsh_params(n_est, float(threshold))
-            n_planes, band_bits = prm.n_planes, prm.band_bits
-        planes = lcg_hyperplanes(dim, n_planes, seed=planes_seed)
-        n_bands = max(1, n_planes // band_bits)
-        hash_vec = F.col("v")
-        if center:
-            # ONE-SIDED data (e.g. non-negative luminance/count features)
-            # collapses sign-LSH: every vector lives in one orthant, so a
-            # random hyperplane through the origin gives near-constant
-            # signs and a handful of hot buckets — measured 6 s → 208 s at
-            # 10× on image features (quadratic bucket interiors).  Subtract
-            # the corpus per-dimension mean BEFORE hashing only: buckets
-            # balance (~50/50 signs), while SCORING stays on the raw
-            # vectors so the cosine semantics are untouched.  Candidate
-            # recall becomes heuristic rather than p=1-θ/π exact — the
-            # planted-pair recall test pins it for the image route.
-            mean_row = normed.agg(
-                F.array(*[F.avg(F.col("v")[i]) for i in range(dim)]).alias("m")
-            ).first()
-            # avg() is NULL for an empty frame or an all-NULL dimension;
-            # centering by 0.0 there degrades to plain sign-LSH instead of
-            # raising TypeError on the driver (bounded-behavior contract)
-            mean_lit = F.lit(
-                [float(x) if x is not None else 0.0 for x in mean_row["m"]]
-            )
-            hash_vec = F.zip_with(F.col("v"), mean_lit, lambda x, m: x - m)
-        # per-band INDEPENDENT 63-bit keys (ann.py lsh_band_keys) — value-
-        # identical to slicing one packed signature when bands·band_bits
-        # ≤ 63 (bit i of a bucket is plane i), and the construction that
-        # lets band_bits keep growing ~log2(N) past the old single-key cap
-        # (auto_sign_lsh_params sizes it; SCALE.md r9)
-        keys = lsh_band_keys(hash_vec, planes, band_bits)
-        tagged = normed.withColumn("keys", keys)
-        banded = tagged.select(
-            F.col(id_col).alias("rid"),
-            "v",
-            "nrm",
-            F.posexplode("keys").alias("band_idx", "band_key"),
-        )
-
-        def score_bucket(pdf):
-            # hot-bucket cap applied INSIDE the kernel: the groupBy already
-            # delivers the whole bucket to one task, so truncating to the
-            # cap LOWEST rids here kills the quadratic pair work with ZERO
-            # extra plan passes (a pre-pass count/window costs a full
-            # re-hash of the corpus on this front — measured 1.4×).  The
-            # residual exposure is the O(s·dim) group materialization of a
-            # pathological bucket, vs the O(s·dim + s²) task it replaces.
-            if bucket_cap is not None and len(pdf) > bucket_cap:
-                pdf = pdf.sort_values("rid").head(bucket_cap)
-            return _score_pair_group(pdf, loose, diagonal=True)
-
-        raw = banded.groupBy("band_idx", "band_key").applyInPandas(
-            score_bucket, "id_a long, id_b long, cos_raw double"
-        )
-        return (
-            raw.distinct()  # identical raw cosine in every matching band
-            .withColumn("cos_sim", F.round("cos_raw", 6))
-            .where(F.col("cos_sim") >= float(threshold))
-            .select("id_a", "id_b", "cos_sim")
-        )
-
-    if blocked:
-        # bounded driver work: ONE scalar (row count) sizes the tiling —
-        # skipped entirely when the caller passes a statistics-based hint
-        if n_rows is None:
-            n_rows = normed.count()
-        # auto-clamp the tile edge to the per-task memory budget from the
-        # vector width (one 1-row probe; VERDICT r13 task 4) — a wide
-        # embedding would otherwise push the kernel's working set past
-        # what a small-executor cluster can hold
-        probe = df.select(F.size(vec_col).alias("d")).first()
-        dim = int(probe.d) if probe is not None and probe.d is not None else 0
-        block_rows = _clamp_block_rows(block_rows, dim, task_mem_bytes)
-        n_blocks = max(1, -(-n_rows // int(block_rows)))
-        blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
-        tagged = normed.withColumn("blk", blk)
-        # row with block b joins tile (pa=b, pb=q) as side A for q ≥ b, and
-        # tile (pa=p, pb=b) as side B for p < b — every unordered row pair
-        # lands in exactly one tile (diagonal tiles carry side A only)
-        side_a = tagged.select(
-            F.col("blk").alias("pa"),
-            F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("pb"),
-            F.lit("a").alias("side"),
-            F.col(id_col).alias("rid"),
-            "v",
-            "nrm",
-        )
-        side_b = tagged.where(F.col("blk") > 0).select(
-            F.explode(F.sequence(F.lit(0), F.col("blk") - 1)).alias("pa"),
-            F.col("blk").alias("pb"),
-            F.lit("b").alias("side"),
-            F.col(id_col).alias("rid"),
-            "v",
-            "nrm",
-        )
-        tiles = side_a.unionByName(side_b)
-
-        def score_tile(pdf):
-            # diagonal is a property of the tile COORDINATES, never of side-b
-            # emptiness: an off-diagonal tile whose q-block happens to be
-            # empty must stay empty, not re-score block p against itself
-            # (that would duplicate every pair tile (p,p) already emitted).
-            # Diagonal tiles carry side A only, so diagonal=True scoring the
-            # whole group is exactly the old a-vs-a case.
-            diagonal = bool(len(pdf) and pdf["pa"].iat[0] == pdf["pb"].iat[0])
-            return _score_pair_group(pdf, loose, diagonal=diagonal)
-
-        raw = tiles.groupBy("pa", "pb").applyInPandas(
-            score_tile, "id_a long, id_b long, cos_raw double"
-        )
-        return (
-            raw.withColumn("cos_sim", F.round("cos_raw", 6))
-            .where(F.col("cos_sim") >= float(threshold))
-            .select("id_a", "id_b", "cos_sim")
-        )
-
-    a = normed.select(F.col(id_col).alias("id_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
-    b = normed.select(F.col(id_col).alias("id_b"), F.col("v").alias("v_b"), F.col("nrm").alias("n_b"))
-    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    denom = F.col("n_a") * F.col("n_b")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        measures.dot_product(F.col("v_a"), F.col("v_b")) / denom
-    )
-    return (
-        pairs.withColumn("cos_sim", F.round(cos, 6))
-        .where(F.col("cos_sim") >= float(threshold))
-        .select("id_a", "id_b", "cos_sim")
-    )
-
-
 def clustered_cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -992,28 +613,36 @@ def clustered_cosine_pairs(
     block_rows: int = 4096,
     task_mem_bytes: int = PAIR_KERNEL_TASK_BYTES,
 ) -> DataFrame:
-    """Within-cluster cosine near-dup pairs — the SemDeDup pair stage.
+    """Within-cluster cosine near-dup pairs — the SemDeDup pair stage and,
+    over one cluster, :func:`embedding_cosine_pairs`.
 
     Semantically ``a JOIN b ON cluster AND id_a < id_b WHERE cos ≥ t``,
     but the physical plan survives scale where the naive cluster-keyed
     self-join does not: a plain ``join(b, cluster_col)`` shuffles the
     corpus onto k reducers (maximal skew by construction when k is small)
     and materializes O((N/k)²) pairs per reducer.  Here each cluster is
-    independently block-tiled exactly like `embedding_cosine_pairs`
-    blocked=True — per-cluster block count Bc = ceil(|c|/block_rows), the
-    shuffle key is (cluster, pa, pb) with Σ Bc² keys, and every task
-    scores at most block_rows² pairs regardless of how fat its cluster
-    is.  Per-cluster sizes come from ONE k-row aggregate broadcast back.
+    independently block-tiled: rows hash into Bc = ceil(|c|/block_rows)
+    blocks by ``xxhash64(id)``, each unordered block pair (p ≤ q) is one
+    ``applyInPandas`` group keyed (cluster, pa, pb) — Σ Bc² keys — and
+    every task scores at most block_rows² pairs regardless of how fat its
+    cluster is.  Each row is shuffled Bc times (block-nested-loop
+    replication); driver memory is O(1), executor memory per task
+    O(block_rows·dim + block_rows²).  Per-cluster sizes come from ONE
+    k-row aggregate broadcast back.  Norms are computed per row (never
+    per pair) JVM-side with the same fold as the oracle.
 
-    Scoring reuses `_score_pair_group`, so raw cosines are bit-identical
-    to the JVM/DuckDB fold and the result set equals the naive join's —
-    equality-tested in tests/test_cluster.py."""
+    Scoring is `_score_pair_group`, so raw cosines are bit-identical to
+    the JVM/DuckDB fold and the result set equals the naive join's —
+    equality-tested in tests/test_cluster.py and tests/test_dedup_ann.py."""
     normed = df.select(
         F.col(cluster_col).alias("cl"),
         F.col(id_col).alias("rid"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
         measures.l2_norm(F.col(vec_col)).alias("nrm"),
     )
+    # pre-filter margin must cover the round-half-width: raw cosines in
+    # [threshold - 5e-7, threshold) round UP to the threshold and must
+    # survive to the authoritative round-6 filter (ADVICE r01)
     loose = float(threshold) - 1e-6
     # auto-clamp the tile edge to the per-task budget from the vector
     # width before the per-cluster block counts are derived (r13 task 4)
@@ -1029,6 +658,9 @@ def clustered_cosine_pairs(
     tagged = normed.join(F.broadcast(sizes), "cl").withColumn(
         "blk", F.pmod(F.xxhash64(F.col("rid")), F.col("nb")).cast("int")
     )
+    # row with block b joins tile (pa=b, pb=q) as side A for q ≥ b, and
+    # tile (pa=p, pb=b) as side B for p < b — every unordered row pair
+    # lands in exactly one tile (diagonal tiles carry side A only)
     side_a = tagged.select(
         "cl",
         F.col("blk").alias("pa"),
@@ -1050,6 +682,10 @@ def clustered_cosine_pairs(
     tiles = side_a.unionByName(side_b)
 
     def score_tile(pdf):
+        # diagonal is a property of the tile COORDINATES, never of side-b
+        # emptiness: an off-diagonal tile whose q-block happens to be
+        # empty must stay empty, not re-score block p against itself
+        # (that would duplicate every pair tile (p,p) already emitted)
         diagonal = bool(len(pdf) and pdf["pa"].iat[0] == pdf["pb"].iat[0])
         return _score_pair_group(pdf, loose, diagonal=diagonal)
 
@@ -1060,6 +696,25 @@ def clustered_cosine_pairs(
         raw.withColumn("cos_sim", F.round("cos_raw", 6))
         .where(F.col("cos_sim") >= float(threshold))
         .select("id_a", "id_b", "cos_sim")
+    )
+
+
+def embedding_cosine_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float = 0.9,
+    block_rows: int = 4096,
+    task_mem_bytes: int = PAIR_KERNEL_TASK_BYTES,
+) -> DataFrame:
+    """Embedding near-dup pairs by cosine ≥ threshold, EXACT: the
+    block-tiled pair join of :func:`clustered_cosine_pairs` over one
+    cluster holding every row (B = ceil(n/block_rows) blocks, B(B+1)/2
+    tiles).  The scale route for corpora past tiling is the k-means-cell
+    blocking of ``semdedup`` / ``mount.dedup_embed_append``."""
+    return clustered_cosine_pairs(
+        df.select(id_col, vec_col, F.lit(0).alias("_cl")),
+        id_col, vec_col, "_cl", threshold, block_rows, task_mem_bytes,
     )
 
 

@@ -116,9 +116,9 @@ def pivot_knn(
     k: int,
     pivots: list | None = None,
     metric: str = "euclidean",
-    prune: bool = True,
 ) -> DataFrame:
-    """Exact k-NN with optional pivot pruning.
+    """Exact k-NN, pivot-pruned when ``pivots`` are given (a plain scan
+    without them).
 
     Two passes when pruning: (1) TakeOrdered on the cheap lower bound to get a
     conservative radius estimate from k-th *exact* distance of the lb-top
@@ -131,7 +131,7 @@ def pivot_knn(
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     exact_dist = dist_fn(F.col(vec_col), qv)
 
-    if not prune or not pivots:
+    if not pivots:
         return (
             df.withColumn("dist", exact_dist)
             .orderBy(F.col("dist").asc(), F.col(id_col).asc())
@@ -139,7 +139,9 @@ def pivot_knn(
         )
 
     if metric != "euclidean":
-        raise NotImplementedError("pruned path implemented for euclidean; use prune=False")
+        raise NotImplementedError(
+            "pruned path implemented for euclidean; pass no pivots for other metrics"
+        )
     embedded = embed_distances(df, vec_col, pivots, metric)
     lb = embedding_lower_bound(len(pivots), query_embedding(pivots, query_vec))
     with_lb = embedded.withColumn("lb", lb)

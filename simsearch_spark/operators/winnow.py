@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from simsearch_spark.functions.hashing import (
     batch_kgram_hashes as _batch_kgram_hashes,
     blank_text,
+    nonblank_text,
 )
 
 #: position packing base for the rightmost-tie argmin composite key;
@@ -167,9 +168,7 @@ def passage_removal(
     # the cut join — without this the winnowing Arrow kernel re-runs (and
     # the corpus re-scans) once per consumer (r8 plan audit: 16 scans → 6)
     fps = winnow_fingerprints(docs, id_col, text_col, k, w).persist()
-    base = docs.where(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-    )
+    base = docs.where(nonblank_text(text_col))
     toks = base.select(
         F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("wlist")
     )

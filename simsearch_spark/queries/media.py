@@ -979,8 +979,7 @@ def q_media_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters), features come from the REAL decode path
     (``extract_pixel_features``), and near-dup pairs from the distributed
     block-tiled cosine kernel (``embedding_cosine_pairs``, the same EXACT
-    path dedup_embed_cosine declared; the recall-lossy sign-LSH route over
-    these image features is equality-tested in tests/test_png.py).
+    path dedup_embed_cosine declared).
 
     CROSS-CODEC recall (r10): the group's re-encode member (mem 1) now
     stores the identical pixels as a GIF89a instead of a refiltered PNG —
@@ -991,8 +990,8 @@ def q_media_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: synth/decode/featurize are row-local Arrow batches (no
     shuffle until the pair stage); the pair stage is the block-tiled
-    BNL join with O(block²) bounded tasks — swap ``pruned=True`` for the
-    banded sign-LSH candidate route when the corpus outgrows tiling."""
+    BNL join with O(block²) bounded tasks — past tiling, block by k-means
+    cell first (``semdedup``'s ``clustered_cosine_pairs``)."""
     from simsearch_spark.multimodal.binary import extract_pixel_features
     from simsearch_spark.multimodal.gif import encode_gif
     from simsearch_spark.multimodal.png import encode_png

@@ -283,10 +283,8 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM comps WHERE doc_id != component)
 # -----------------------------------------------------------------------------
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # banded=True is the scale path (pigeonhole equi-join, exact — no
-    # crossJoin in the plan); the all-pairs join stays as the test oracle
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, "doc_id", "text", SIMHASH_R, SIMHASH_BITS, banded=True)
+    return simhash_pairs(docs, "doc_id", "text", SIMHASH_R, SIMHASH_BITS)
 
 
 def _simhash_oracle() -> str:

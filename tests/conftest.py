@@ -66,12 +66,8 @@ SLOW_TESTS: dict[str, set[str] | None] = {
         "test_compact_dedup_collapses_append_debris",
         "test_stream_dedup_append_equals_batch",
     },
-    "test_dedup_ann.py": {
-        "test_embed_cosine_nrows_hint_equals_counted",
-        "test_cc_driver_tier_equals_distributed_tier",
-    },
+    "test_dedup_ann.py": {"test_cc_driver_tier_equals_distributed_tier"},
     "test_review_r12.py": {"test_refresh_crash_recovery_and_shrink_guard"},
-    "test_lshparams.py": {"test_auto_pruned_pairs_recover_planted_dups"},
     "test_advice_r11.py": {
         "test_append_rows_duplicate_ids_are_noops",
         "test_stream_append_replay_is_idempotent",

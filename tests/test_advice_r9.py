@@ -9,8 +9,6 @@ advisor described:
    substitution must be guarded against a second occurrence.
 3. ann.py valid_embeddings — finite doubles in (1e308, DBL_MAX] are valid;
    only exact NaN/Inf are structural errors.
-4. dedup.py embedding_cosine_pairs(center=True) — a NULL per-dimension
-   mean (all-NULL dim) must degrade to 0.0-centering, not TypeError.
 """
 
 import math
@@ -76,19 +74,3 @@ def test_valid_embeddings_keeps_huge_finite_doubles(spark):
     )
     kept = sorted(r.id for r in valid_embeddings(df, "embedding").collect())
     assert kept == [1, 4]
-
-
-def test_center_pairs_null_dimension_mean_is_bounded(spark):
-    """An all-NULL dimension makes avg(v[i]) NULL; pre-fix float(None)
-    raised TypeError on the driver.  Post-fix the mean falls back to 0.0
-    for that dimension and the call completes."""
-    from simsearch_spark.operators.dedup import embedding_cosine_pairs
-
-    df = spark.createDataFrame(
-        [(1, [1.0, None]), (2, [0.9, None]), (3, [-1.0, None])],
-        "id long, embedding array<double>",
-    )
-    pairs = embedding_cosine_pairs(
-        df, "id", "embedding", 0.9, pruned=True, center=True
-    )
-    pairs.collect()  # must not raise

@@ -90,9 +90,9 @@ def test_pivot_pruned_knn_equals_unpruned(spark, sf_dir):
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 5).first().embedding]
     pivots = select_pivots_farthest_point(emb, "vec_id", "embedding", n_pivots=4)
     plain = [(r.vec_id, round(r.dist, 9)) for r in
-             pivot_knn(emb, "vec_id", "embedding", qvec, 8, prune=False).collect()]
+             pivot_knn(emb, "vec_id", "embedding", qvec, 8).collect()]
     pruned = [(r.vec_id, round(r.dist, 9)) for r in
-              pivot_knn(emb, "vec_id", "embedding", qvec, 8, pivots=pivots, prune=True).collect()]
+              pivot_knn(emb, "vec_id", "embedding", qvec, 8, pivots=pivots).collect()]
     assert plain == pruned
     assert plain[0][0] == 5  # query point is its own nearest neighbour
 

@@ -10,8 +10,33 @@ from simsearch_spark.operators.dedup import (
     simhash_pairs,
     word_shingles,
 )
+from simsearch_spark.functions import measures
+from simsearch_spark.functions.hashing import hamming64
 from simsearch_spark.operators.setsim import jaccard_self_join, jaccard_self_join_naive
 from simsearch_spark.sources.registry import load_table
+
+
+def _cosine_pairs_oracle(df, id_col, vec_col, threshold):
+    """All-pairs cosine join in column expressions — the cross-engine
+    reference the block-tiled ``embedding_cosine_pairs`` must equal."""
+    normed = df.select(
+        F.col(id_col),
+        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+        measures.l2_norm(F.col(vec_col)).alias("nrm"),
+    )
+    a = normed.select(F.col(id_col).alias("id_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
+    b = normed.select(F.col(id_col).alias("id_b"), F.col("v").alias("v_b"), F.col("nrm").alias("n_b"))
+    denom = F.col("n_a") * F.col("n_b")
+    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
+        measures.dot_product(F.col("v_a"), F.col("v_b")) / denom
+    )
+    return (
+        a.crossJoin(b)
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos_sim", F.round(cos, 6))
+        .where(F.col("cos_sim") >= float(threshold))
+        .select("id_a", "id_b", "cos_sim")
+    )
 
 
 def test_word_shingles(spark):
@@ -108,12 +133,24 @@ def test_ivf_topk_rejects_wrong_length_query(spark):
 
 
 def test_simhash_banded_equals_allpairs(spark, sf_dir):
-    """Pigeonhole banding is a pruning strategy, never a semantic: banded and
-    all-pairs simhash joins must produce identical pair sets."""
+    """Pigeonhole banding is a pruning strategy, never a semantic: the
+    banded simhash join must produce the all-pairs join's pair set."""
+    from simsearch_spark.functions.hashing import nonblank_text
+    from simsearch_spark.operators.dedup import simhash_frame
+
     docs = load_table(spark, sf_dir, "documents")
-    allp = {(r.id_a, r.id_b, r.hamming) for r in simhash_pairs(docs, "doc_id", "text", 6).collect()}
-    band = {(r.id_a, r.id_b, r.hamming)
-            for r in simhash_pairs(docs, "doc_id", "text", 6, banded=True).collect()}
+    sh = simhash_frame(docs.where(nonblank_text("text")), "doc_id", "text", 32)
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
+    allp = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in a.crossJoin(b)
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
+        .where(F.col("hamming") <= 6)
+        .collect()
+    }
+    band = {(r.id_a, r.id_b, r.hamming) for r in simhash_pairs(docs, "doc_id", "text", 6).collect()}
     assert allp == band and allp
 
 
@@ -122,9 +159,9 @@ def test_embed_cosine_blocked_equals_column_expr(spark, sf_dir):
     pair sets AND rounded values must match exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
     fast = sorted(tuple(r) for r in
-                  embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45, blocked=True).collect())
+                  embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45).collect())
     slow = sorted(tuple(r) for r in
-                  embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45, blocked=False).collect())
+                  _cosine_pairs_oracle(emb, "vec_id", "embedding", 0.45).collect())
     assert fast == slow and fast
 
 
@@ -135,9 +172,9 @@ def test_embed_cosine_tiled_multiblock_equals_column_expr(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     tiled = sorted(tuple(r) for r in
                    embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45,
-                                          blocked=True, block_rows=16).collect())
+                                          block_rows=16).collect())
     slow = sorted(tuple(r) for r in
-                  embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45, blocked=False).collect())
+                  _cosine_pairs_oracle(emb, "vec_id", "embedding", 0.45).collect())
     assert tiled == slow and tiled
 
 
@@ -225,10 +262,9 @@ def test_embed_cosine_empty_block_tiles_no_duplicates(spark):
     for br in (1, 2, 3):
         tiled = sorted(tuple(r) for r in
                        embedding_cosine_pairs(emb, "vec_id", "embedding", 0.5,
-                                              blocked=True, block_rows=br).collect())
+                                              block_rows=br).collect())
         plain = sorted(tuple(r) for r in
-                       embedding_cosine_pairs(emb, "vec_id", "embedding", 0.5,
-                                              blocked=False).collect())
+                       _cosine_pairs_oracle(emb, "vec_id", "embedding", 0.5).collect())
         assert tiled == plain, br
 
 
@@ -254,55 +290,16 @@ def test_minhash_banded_frame_equals_column_chain(spark, sf_dir):
     assert col_fn == kernel
 
 
-def test_embed_cosine_nrows_hint_equals_counted(spark, sf_dir):
-    """Passing a statistics-based row-count hint must only change tiling
-    geometry, never the result set — and an over-estimate is safe (block
-    sizing needs magnitude, not exactness)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = sorted(map(tuple,
-                  embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45,
-                                         block_rows=64).collect()))
-    hinted = sorted(map(tuple,
-                    embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45,
-                                           block_rows=64, n_rows=10_000).collect()))
-    assert hinted == base and len(base) > 0
-
-
-def test_embed_cosine_pruned_subset_and_planted_recall(spark, sf_dir):
-    """pruned=True (banded sign-LSH candidates -> shared exact kernel) must
-    emit a SUBSET of the exact pairs with identical cosines (no false
-    positives — every candidate is exact-scored), and on planted
-    high-similarity duplicates the default banding recovers every pair."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = {(r.id_a, r.id_b): r.cos_sim for r in
-             embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45).collect()}
-    pruned = {(r.id_a, r.id_b): r.cos_sim for r in
-              embedding_cosine_pairs(emb, "vec_id", "embedding", 0.45,
-                                     pruned=True).collect()}
-    assert set(pruned).issubset(set(exact))
-    assert all(exact[k] == v for k, v in pruned.items())
-
-    # planted near-dups at the threshold the defaults are tuned for (>=0.9):
-    # base vectors plus tiny perturbations -> cos ~ 0.999
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    rows = []
-    vid = 0
-    for g in range(20):
-        base = rng.randn(16)
-        for _dup in range(2):
-            v = base + 0.01 * rng.randn(16)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact_p = {(r.id_a, r.id_b) for r in
-               embedding_cosine_pairs(df, "vec_id", "embedding", 0.9).collect()}
-    pruned_p = {(r.id_a, r.id_b) for r in
-                embedding_cosine_pairs(df, "vec_id", "embedding", 0.9,
-                                       pruned=True).collect()}
-    assert len(exact_p) >= 20  # every planted twin pair is above threshold
-    assert pruned_p == exact_p
+def test_embed_cosine_leaves_no_cached_relation(spark):
+    """The pair operator caches nothing: a call (and its collect) leaves
+    the session's CacheManager as empty as it found it."""
+    rows = [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(50)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    assert embedding_cosine_pairs(emb, "vec_id", "embedding", 0.9).collect()
+    assert cache.isEmpty()
 
 
 def test_hash_dedup_excludes_empty_docs(spark):
@@ -323,7 +320,7 @@ def test_hash_dedup_excludes_empty_docs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mh = [(r.id_a, r.id_b) for r in minhash_lsh_pairs(df, "doc_id", "text", 0.7).collect()]
     assert mh == [(1, 2)]
-    sh = [(r.id_a, r.id_b) for r in simhash_pairs(df, "doc_id", "text", 3, banded=True).collect()]
+    sh = [(r.id_a, r.id_b) for r in simhash_pairs(df, "doc_id", "text", 3).collect()]
     assert (1, 2) in sh and all(a not in (3, 4, 5) and b not in (3, 4, 5) for a, b in sh)
     # the exact tier still collapses the empty family where it belongs:
     # "" and "   " normalize to fingerprint 0 (one group); NULL text keeps a
@@ -490,9 +487,7 @@ def test_pair_kernel_block_rows_clamped_to_task_budget(spark):
         df, "vec_id", "embedding", threshold=0.95,
         block_rows=1_000_000, task_mem_bytes=tiny_budget,
     )
-    want = embedding_cosine_pairs(
-        df, "vec_id", "embedding", threshold=0.95, blocked=False,
-    )
+    want = _cosine_pairs_oracle(df, "vec_id", "embedding", 0.95)
     rows_of = lambda d: sorted(tuple(r) for r in d.collect())
     assert rows_of(got) == rows_of(want)
     assert len(rows_of(got)) > 0

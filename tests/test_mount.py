@@ -313,7 +313,7 @@ def test_served_pivot_knn_equals_operator_and_brute(spark, sf_dir, mount_dir):
     ]
     brute = [
         (r.vec_id, round(r.dist, 9))
-        for r in pivot_knn(emb, "vec_id", "embedding", qvec, k, prune=False).collect()
+        for r in pivot_knn(emb, "vec_id", "embedding", qvec, k).collect()
     ]
     assert served == pruned == brute and len(served) == k
 

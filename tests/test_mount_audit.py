@@ -134,17 +134,15 @@ def test_refresh_carries_custom_dedup_family(
     to the module defaults (which would change every later dedup_append)."""
     base, _delta = corpus
     d = str(tmp_path_factory.mktemp("audit3") / "m")
-    custom = {"n_hashes": 8, "bands": 2, "threshold": 0.9, "hot_mode": "salt"}
+    custom = {"n_hashes": 8, "bands": 2, "threshold": 0.9}
     mount(spark, "", d, emb_frame=base, docs_frame=docs_stub,
           dedup_params=custom)
     dd0 = load_manifest(d)["dedup"]
-    assert (dd0["n_hashes"], dd0["bands"], dd0["threshold"], dd0["hot_mode"]) == (
-        8, 2, 0.9, "salt",
-    )
+    assert (dd0["n_hashes"], dd0["bands"], dd0["threshold"]) == (8, 2, 0.9)
     refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs_stub)
     dd1 = load_manifest(d)["dedup"]
-    for k in ("n_hashes", "bands", "threshold", "hot_mode", "seed",
-              "shingle_n", "bucket_cap"):
+    for k in ("n_hashes", "bands", "threshold", "seed", "shingle_n",
+              "bucket_cap"):
         assert dd1[k] == dd0[k], k
     # unknown keys are rejected loudly, not silently dropped (n_bkt became
     # a legitimate explicit-layout override in r15, so the probe key here

@@ -96,21 +96,18 @@ def test_dedup_append_idempotent(spark, sf_dir, tmp_path):
     assert len(first) > 0
 
 
-@pytest.mark.parametrize("hot_mode", ["cap", "salt"])
-def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode, monkeypatch):
+def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, monkeypatch):
     """A boilerplate cluster SPANNING base and delta: bucket size is the
-    base+delta membership, and the cap (lowest-id keep) / salt (blocked
-    full recall) policies match the batch operator on the union exactly.
+    base+delta membership, and the cap (lowest-id keep) matches the batch
+    operator on the union exactly.
 
     With cap=6 and a 10-member cluster (6 base + 4 delta), cap keeps each
     over-cap bucket's six lowest ids — recall drops wherever a bucket
     overflowed (members can still pair through their under-cap bands,
-    the documented drop-with-count semantics) — while salt keeps every
-    member and recovers ALL 6·4 + C(4,2) delta-touching cluster pairs.
-    Either way the incremental result must equal the batch-on-union
-    operator under the SAME policy.  Distinct tail words keep the planted
-    cluster's jaccard above threshold while unrelated filler stays
-    below."""
+    the documented drop-with-count semantics).  The incremental result
+    must equal the batch-on-union operator under the same cap.  Distinct
+    tail words keep the planted cluster's jaccard above threshold while
+    unrelated filler stays below."""
     boiler = "the quick brown fox jumps over the lazy dog again and again "
     rows = []
     for i in range(10):  # planted cluster: ids 0..5 base, 6..9 delta
@@ -123,10 +120,10 @@ def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode, mo
     delta_ids = [r.doc_id for r in delta.select("doc_id").collect()]
 
     cap = 6
-    d = str(tmp_path / f"m_hot_{hot_mode}")
+    d = str(tmp_path / "m_hot")
     mount_dedup(
         spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS,
-        bucket_cap=cap, hot_mode=hot_mode,
+        bucket_cap=cap,
     )
     # the delta is small, but its over-cap buckets route it from the
     # driver path to the capped distributed path
@@ -137,19 +134,14 @@ def test_hot_bucket_policy_across_mounted_boundary(spark, tmp_path, hot_mode, mo
     monkeypatch.setattr(md, "_append_large", lambda *a: large_calls.append(1) or orig(*a))
     got = _rows(dedup_append(spark, d, delta))
     assert large_calls == [1]
-    want = _rows(
-        _batch_restricted(docs, delta_ids, bucket_cap=cap, hot_mode=hot_mode)
-    )
+    want = _rows(_batch_restricted(docs, delta_ids, bucket_cap=cap))
     assert got == want
     cluster_pairs = [
         (a, b) for a, b, _j in got if a < 10 and b < 10
     ]
-    if hot_mode == "salt":
-        # full recall: every delta-touching pair of the 10-member cluster
-        assert len(cluster_pairs) == 6 * 4 + 6  # cross + C(4,2)
-    else:
-        # cap: recall inside over-cap buckets is reduced, never increased
-        assert 0 < len(cluster_pairs) < 6 * 4 + 6
+    # recall inside over-cap buckets is reduced, never increased: fewer
+    # than all 6·4 + C(4,2) delta-touching cluster pairs
+    assert 0 < len(cluster_pairs) < 6 * 4 + 6
 
 
 def test_mount_builds_dedup_artifacts_by_default(spark, sf_dir, tmp_path):
@@ -382,6 +374,56 @@ def test_maintenance_stats_on_dedup_only_mount(spark, sf_dir, tmp_path):
     stats = maintenance_stats(spark, d)
     assert stats["n_vectors"] == 0
     assert should_compact(spark, d) in (False, True)  # no crash
+
+
+def test_failed_remount_leaves_live_index_untouched(spark, sf_dir, tmp_path, monkeypatch):
+    """``mount_dedup`` on an existing mount publishes a new generation: a
+    failure in its second artifact write leaves every live artifact file
+    and the manifest byte-identical, with no staging tree behind."""
+    import os
+    import threading
+
+    import simsearch_spark.mount.dedup as md
+
+    docs = load_table(spark, sf_dir, "documents")
+    d = str(tmp_path / "m_pub")
+    mount_dedup(spark, d, docs.where(F.col("doc_id") < 40))
+
+    def snapshot():
+        out = {}
+        for root, _dirs, files in os.walk(d):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, d)] = fh.read()
+        return out
+
+    before = snapshot()
+    calls, guard, real_write = [], threading.Lock(), md._write
+
+    def write_then_fail(*a, **kw):
+        with guard:
+            calls.append(1)
+            n = len(calls)
+        if n == 2:
+            raise OSError("disk full")
+        return real_write(*a, **kw)
+
+    monkeypatch.setattr(md, "_write", write_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        mount_dedup(spark, d, docs.where(F.col("doc_id") < 80))
+    assert len(calls) == 2
+    assert snapshot() == before
+    assert not os.path.exists(d + "__next")
+
+
+def test_hot_mode_is_not_a_family_key():
+    """The dedup family has one hot-bucket policy (the cap): a
+    ``hot_mode`` override is rejected like any unknown key."""
+    from simsearch_spark.mount.artifacts import _dedup_family_params
+
+    with pytest.raises(ValueError, match="not settable"):
+        _dedup_family_params({"hot_mode": "salt"})
 
 
 def test_serve_dedup_lookup_equals_batch_restricted(spark, sf_dir, tmp_path):

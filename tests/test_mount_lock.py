@@ -657,17 +657,17 @@ def test_refresh_fence_catches_bypassing_delete(spark, tmp_path, monkeypatch):
         spark, d, docs, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS
     )
 
-    real_mount_dedup = dedupmod.mount_dedup
+    real_build_dedup = dedupmod._build_dedup
 
-    def mount_dedup_then_delete(spark_, mdir, *a, **kw):
-        out = real_mount_dedup(spark_, mdir, *a, **kw)
-        if mdir.endswith("__next"):
+    def build_dedup_then_delete(spark_, out_dir, *a, **kw):
+        out = real_build_dedup(spark_, out_dir, *a, **kw)
+        if out_dir.endswith("__next"):
             # mid-retrain delete on the LIVE mount (re-entrant for this
             # thread, i.e. exactly what a bypassing writer produces)
             dedupmod.delete_docs(spark_, d, [docs.first()["doc_id"]])
         return out
 
-    monkeypatch.setattr(dedupmod, "mount_dedup", mount_dedup_then_delete)
+    monkeypatch.setattr(dedupmod, "_build_dedup", build_dedup_then_delete)
     with pytest.raises(ConcurrentMutationError, match="tombstones|manifest"):
         refresh(spark, d, sf_dir="", docs_frame=docs, families=["dedup"])
     # the live index is untouched and the late tombstone survived

@@ -443,62 +443,6 @@ def test_media_image_dedup_planted_recall(spark):
             assert x // 3 == y // 3, f"cross-group false positive ({x},{y})"
 
 
-def test_media_image_dedup_pruned_lsh_route(spark):
-    """The corpus-scale banded sign-LSH candidate route over the SAME image
-    features: a subset of the exact blocked pairs (identical scoring kernel
-    downstream) with high recall on the planted near-dups — fixed LCG
-    hyperplanes make the outcome deterministic."""
-    from simsearch_spark.multimodal.binary import extract_pixel_features
-    from simsearch_spark.operators.dedup import embedding_cosine_pairs
-    from simsearch_spark.queries.media import IMG_DEDUP_T
-
-    feats = extract_pixel_features(_image_dedup_media(spark)).persist()
-    blocked = {
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in embedding_cosine_pairs(
-            feats, "media_id", "embedding", IMG_DEDUP_T
-        ).collect()
-    }
-    pruned = {
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in embedding_cosine_pairs(
-            feats, "media_id", "embedding", IMG_DEDUP_T, pruned=True
-        ).collect()
-    }
-    assert pruned <= blocked
-    assert len(blocked) == 60  # 20 planted triangles
-    assert len(pruned) / len(blocked) >= 0.9
-
-
-def test_media_image_dedup_centered_lsh_route(spark):
-    """center=True (mean-center before hashing only) is the scale fix for
-    one-sided luminance features — it must stay a SUBSET of the exact
-    blocked pairs with high planted recall, and centering must not change
-    any emitted cosine (scoring stays on raw vectors)."""
-    from simsearch_spark.multimodal.binary import extract_pixel_features
-    from simsearch_spark.operators.dedup import embedding_cosine_pairs
-    from simsearch_spark.queries.media import IMG_DEDUP_T
-
-    feats = extract_pixel_features(_image_dedup_media(spark)).persist()
-    blocked = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in embedding_cosine_pairs(
-            feats, "media_id", "embedding", IMG_DEDUP_T
-        ).collect()
-    }
-    centered = {
-        (r.id_a, r.id_b): r.cos_sim
-        for r in embedding_cosine_pairs(
-            feats, "media_id", "embedding", IMG_DEDUP_T,
-            pruned=True, n_planes=32, band_bits=8, center=True,
-        ).collect()
-    }
-    assert set(centered) <= set(blocked)
-    assert len(centered) / len(blocked) >= 0.9
-    for k, v in centered.items():
-        assert blocked[k] == v  # identical scoring kernel on raw vectors
-
-
 def test_media_shot_boundaries_planted_structure(spark, sf_dir):
     """Every planted shot boundary (frame_idx divisible by 3) is detected
     and nothing else: intra-shot drift is 1, inter-shot jumps ≥ 88."""

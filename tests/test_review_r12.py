@@ -1,6 +1,6 @@
 """Regression tests for the r12 self-review findings: tombstone
-resurrect rejection, stream-pairs write-if-absent, salt+no-cap
-validity, delta id-dtype normalization, refresh crash recovery and
+resurrect rejection, stream-pairs write-if-absent, an uncapped mount,
+delta id-dtype normalization, refresh crash recovery and
 shrink guard."""
 
 from __future__ import annotations
@@ -89,10 +89,9 @@ def test_stream_pairs_write_if_absent(spark, sf_dir, tmp_path):
         stream_dedup_append(spark, d2, stream, pairs_dir)
 
 
-def test_salt_mode_with_no_cap_is_plain_join(spark, sf_dir, tmp_path):
-    """hot_mode='salt' with bucket_cap=None must behave exactly like the
-    uncapped plain join (no bucket is hot), batch AND incremental —
-    previously it raised a misleading ValueError on every append."""
+def test_uncapped_mount_is_plain_join(spark, sf_dir, tmp_path):
+    """A mount with bucket_cap=None appends exactly the uncapped batch
+    join's delta-touching pairs (no bucket is hot)."""
     from simsearch_spark.operators.dedup import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 350)
@@ -102,20 +101,12 @@ def test_salt_mode_with_no_cap_is_plain_join(spark, sf_dir, tmp_path):
             docs, "doc_id", "text", MINHASH_T, N_HASHES, N_BANDS, bucket_cap=None
         ).collect()
     )
-    salted = sorted(
-        tuple(r)
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", MINHASH_T, N_HASHES, N_BANDS,
-            bucket_cap=None, hot_mode="salt",
-        ).collect()
-    )
-    assert salted == plain
 
-    d = str(tmp_path / "m_saltnone")
+    d = str(tmp_path / "m_nocap")
     base = docs.where(F.col("doc_id") < 250)
     mount_dedup(
         spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS,
-        bucket_cap=None, hot_mode="salt",
+        bucket_cap=None,
     )
     got = dedup_append(spark, d, docs.where(F.col("doc_id") >= 250))
     ids = [r.doc_id for r in docs.where(F.col("doc_id") >= 250).select("doc_id").collect()]

@@ -109,93 +109,15 @@ def replicate(root: str, factor: int) -> str:
     return out
 
 
-def _image_dedup_pruned(spark, sf_dir: str) -> int:
-    from simsearch_spark.multimodal.binary import extract_pixel_features
-    from simsearch_spark.operators.dedup import embedding_cosine_pairs
-    from simsearch_spark.queries.media import IMG_DEDUP_T
-
-    # reuse the declared query's synth+featurize front half by rebuilding it
-    # against this sf_dir, but swap the exact blocked pair stage for the
-    # banded sign-LSH route — the 100×-scale candidate path
-    import pandas as pd
-
-    import simsearch_spark.queries.media as media_mod
-    from simsearch_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(batches):
-        from simsearch_spark.multimodal.png import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                px, ft = media_mod._img_pixels(int(d))
-                payloads.append(encode_png(4, 4, 1, px, filter_types=ft))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "kind": "image",
-                 "payload": payloads, "mime": "image/png"}
-            )
-
-    m = docs.mapInPandas(synth, "media_id long, kind string, payload binary, mime string")
-    feats = extract_pixel_features(m)
-    # Banding must be sized to the corpus — band keys prune RANDOM pairs at
-    # a fixed rate ≈ bands·2^-band_bits, so band_bits must grow ~log2(N) to
-    # keep candidate volume linear (at fixed bits the candidate set is
-    # Θ(N²·2^-bits): measured 146 s / 2e9 scored pairs at 100× with 8-bit
-    # bands).  8 bits to ~100k rows, 16 bits beyond: buckets stay
-    # O(N/2^bits) rows and true near-dups (cos ≥ 0.999, p=0.99/plane)
-    # keep recall ≥ 0.999 over 4 bands.  center=True mean-centers before
-    # hashing: one-sided luminance features otherwise share an orthant and
-    # collapse into hot buckets (measured 6 s → 208 s at 10×).
-    n = docs.count()
-    bb = 8 if n <= 100_000 else 15  # 4 bands; 60 planes ≤ the 63-bit key cap
-    return embedding_cosine_pairs(
-        feats, "media_id", "embedding", IMG_DEDUP_T,
-        pruned=True, n_planes=4 * bb, band_bits=bb, center=True, n_rows=n,
-    ).count()
-
-
-def _auto_sign_candidates(spark, sf_dir: str) -> int:
-    from pyspark.sql import functions as F
-
-    from simsearch_spark.operators.ann import lcg_hyperplanes, lsh_band_keys
-    from simsearch_spark.operators.lshparams import auto_sign_lsh_params
-    from simsearch_spark.sources.registry import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    prm = auto_sign_lsh_params(n, 0.99)
-    dim = len(emb.select("embedding").first()["embedding"])
-    planes = lcg_hyperplanes(dim, prm.n_planes, seed=7)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    expl = emb.select(
-        F.col("vec_id").alias("doc"),
-        F.posexplode(lsh_band_keys(v, planes, prm.band_bits)).alias("band_idx", "band_hash"),
-    ).persist()
-    left = expl.select(F.col("doc").alias("id_a"), "band_idx", "band_hash")
-    right = expl.select(F.col("doc").alias("id_b"), "band_idx", "band_hash")
-    cand = (
-        left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    expl.unpersist()
-    return cand
-
-
 def _auto_minhash_candidates(spark, sf_dir: str) -> int:
     from pyspark.sql import functions as F
 
+    from simsearch_spark.functions.hashing import nonblank_text
     from simsearch_spark.operators.dedup import minhash_banded_frame
     from simsearch_spark.operators.lshparams import auto_minhash_params
     from simsearch_spark.sources.registry import load_table
 
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-    )
+    docs = load_table(spark, sf_dir, "documents").where(nonblank_text("text"))
     prm = auto_minhash_params(docs.count(), 0.7)
     banded = minhash_banded_frame(
         docs, "doc_id", "text", prm.n_hashes, prm.bands
@@ -441,13 +363,6 @@ def probes(spark, sf_dir: str):
         "media_frame_pixel_stats": lambda: q_media_frame_pixel_stats(
             spark, sf_dir
         ).count(),
-        # the image-dedup pipeline at its declared SCALE path: row-local
-        # synth→decode→featurize, then banded sign-LSH candidate pairs
-        # (pruned=True — the blocked exact tiling is the small-corpus path;
-        # its pair count is quadratic by construction).  Dup structure
-        # replicates linearly: replica doc_ids land in fresh groups whose
-        # avalanche-hashed pixels decorrelate from every other group.
-        "media_image_dedup_lsh": lambda: _image_dedup_pruned(spark, sf_dir),
         # winnowing is a row-local Arrow kernel (linear); the cut joins are
         # keyed on fp / doc — suffix-decorrelated replicas share no
         # fingerprints, so the shared-fp table and cut volume replicate
@@ -467,13 +382,11 @@ def probes(spark, sf_dir: str):
         "corpus_curation_pipeline": lambda: CORPUS_QUERIES[
             "corpus_curation_pipeline"
         ][0](spark, sf_dir).agg(F.sum("n_tokens") + F.count(F.lit(1))).first()[0],
-        # ADAPTIVE LSH sizing (operators/lshparams.py): candidate PAIRS
+        # ADAPTIVE MinHash sizing (operators/lshparams.py): candidate PAIRS
         # under auto params must stay ~flat PER ROW as N grows — the probe
-        # counts distinct band-join candidates on both fronts; divide rows
-        # by the corpus size across factors to read the flatness claim
-        # (fixed params are Θ(N²·2^-bits): the r8 finding these profiles
-        # exist to fix)
-        "auto_sign_candidates": lambda: _auto_sign_candidates(spark, sf_dir),
+        # counts distinct band-join candidates; divide rows by the corpus
+        # size across factors to read the flatness claim (fixed params are
+        # Θ(N²·2^-bits): the r8 finding the profile exists to fix)
         "auto_minhash_candidates": lambda: _auto_minhash_candidates(spark, sf_dir),
         # the distributed exact-quantile threshold stage in ISOLATION (the
         # r8 'weak' fix, operators/quantile.py): p90 over a continuous
