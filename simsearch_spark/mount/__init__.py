@@ -32,13 +32,12 @@ deployment pays once.  This package is that deployment shape:
   boundary.
 - ``audit.audit_drift`` / ``audit.refresh`` (r12) close the frozen-
   artifact drift loop: measured recall@k of the mounted index on the
-  most recent rows vs a brute-force arm, and a retrain-and-swap that
-  atomically replaces the artifact generation without interrupting
+  most recent rows vs a brute-force arm, and a retrain whose new
+  generation one manifest commit publishes without interrupting
   serving.  r14 makes refresh FAMILY-GRANULAR
   (``refresh(families=["vector"|"text"|"dedup"|"bpe"])``): drift is
-  usually localized, so only the drifted family retrains — one
-  whole-generation swap, untouched families hardlinked and
-  byte-identical (``lock.next_generation``) — and
+  usually localized, so only the drifted family retrains — one commit,
+  untouched families keeping their directories byte-identical — and
   ``audit.audit_dedup`` adds the dedup dual of the drift audit (measured
   LSH recall on a bounded sample, with ``dedup_reestimate=True`` re-
   sizing the banding from the current corpus).
@@ -64,6 +63,12 @@ deployment pays once.  This package is that deployment shape:
   (``audit_dedup`` LSH recall + index integrity), bpe (``audit_bpe``
   compression ratio), text (``audit_text`` LM perplexity + bigram
   coverage vs the mount-time baselines).
+
+Publication (``lock.py``, ``artifacts.py``): every artifact version is
+written once into a new directory, ``artifacts.save_manifest`` under the
+write lock is the only commit, and readers resolve every path through
+one manifest snapshot per call; GC inside the commit keeps what the
+previous commit retired and collects the rest.
 
 Parity contract (tests/test_mount.py): every serve-side operator must
 reproduce its self-contained declared query EXACTLY (same rows, same

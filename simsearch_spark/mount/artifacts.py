@@ -30,8 +30,14 @@ bm25_df/global      (term, df) / (n_docs, avgdl)              corpus token
 tombstones          (vec_id)                                  maintain.delete
 ==================  ========================================  ============
 
-``manifest.json`` records the training parameters and row counts so a
-serve process can validate compatibility before reading anything.
+``manifest.json`` records the training parameters, the row counts, and
+— the mount's one commit point — every artifact's live directories and
+schema.  Each artifact version is written once into a new directory that
+is never renamed; ``save_manifest`` under the write lock publishes, and
+GC deletes what the last two manifests do not name (``Snapshot``, the
+layout note above it).  Readers take one ``snapshot`` per call and
+resolve every path through it; nothing else in the package names an
+artifact directory.
 
 Scale notes: ``pq_codes`` is written ``partitionBy("cell")`` so the serve
 path's cell predicate is DIRECTORY pruning — probed cells' files are the
@@ -50,14 +56,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import threading
+import uuid
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simsearch_spark.mount.lock import locked, mount_state_token, next_generation
+from simsearch_spark.mount.lock import ConcurrentMutationError, holds_lock, locked
 
-MANIFEST_VERSION = 1
+#: 2: every artifact lives in write-once version directories that the
+#: manifest names (version-1 mounts are rejected: re-mount them)
+MANIFEST_VERSION = 2
 
 #: pivots selected at mount (the reference defaults to a handful per
 #: attribute; 8 matches the operators/pivot.py test contract)
@@ -65,10 +76,10 @@ N_PIVOTS = 8
 
 #: artifact families for INCREMENTAL refresh (VERDICT r13 task 1): drift
 #: is usually localized to one family, and at 100 TB the full
-#: retrain-and-swap is the engine's most expensive lifecycle job —
-#: ``refresh(families=[...])`` regenerates only the drifted family,
-#: write-new-then-swap at family granularity, leaving the other
-#: families' artifacts byte-identical.
+#: retrain is the engine's most expensive lifecycle job —
+#: ``refresh(families=[...])`` regenerates only the drifted family in
+#: new versions and commits them, leaving the other families' artifacts
+#: byte-identical (the same directories).
 FAMILY_ARTIFACTS: dict[str, list[str]] = {
     "vector": ["ivf_centroids", "pq_codebooks", "pq_codes", "pivots",
                "pivot_embedded"],
@@ -81,6 +92,8 @@ FAMILY_ARTIFACTS: dict[str, list[str]] = {
 __all__ = [
     "mount",
     "FAMILY_ARTIFACTS",
+    "Snapshot",
+    "snapshot",
     "load_manifest",
     "save_manifest",
     "load_centroid_map",
@@ -118,22 +131,12 @@ def encode_residual_codes(
     )
 
 
-def _write(
-    df: DataFrame, path: str, partition_by: str | list[str] | None = None
-) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        cols = [partition_by] if isinstance(partition_by, str) else partition_by
-        w = w.partitionBy(*cols)
-    w.parquet(path)
-
-
 def _train_vector_family(
-    spark: SparkSession, emb: DataFrame, train: DataFrame, out_dir: str
+    spark: SparkSession, emb: DataFrame, train: DataFrame, snap: "Snapshot"
 ) -> tuple[dict, int]:
     """Train and persist the VECTOR artifact family (IVF centroids,
     residual PQ codebooks, the cell-partitioned codes table, pivots and
-    the pivot distance embedding) into ``out_dir``.  ``emb`` should
+    the pivot distance embedding) as new versions in ``snap``.  ``emb`` should
     arrive persisted — the trainers make several passes over it.
     Returns ``(params_fragment, n_vectors)`` for the manifest."""
     from simsearch_spark.queries.cluster import PQ_ITERS, PQ_KSUB, PQ_M, PQ_TRAIN_N
@@ -154,18 +157,18 @@ def _train_vector_family(
     # the five artifact writes and the vector count are independent jobs
     # over the persisted emb/driver-resident training output — overlap
     # them so later jobs back-fill each write's straggler tail (guide
-    # §2.6; the manifest, the mount's only discovery point, is written by
-    # the caller strictly after every future resolves)
+    # §2.6; the manifest, the mount's only discovery point, is committed
+    # by the caller strictly after every future resolves)
     def write_centroids():
-        _write(
+        snap.write(
             spark.createDataFrame(
                 sorted(cmap.items()), "cluster_id int, centroid array<double>"
             ),
-            os.path.join(out_dir, "ivf_centroids"),
+            "ivf_centroids",
         )
 
     def write_codebooks():
-        _write(
+        snap.write(
             spark.createDataFrame(
                 [
                     (j, int(cid), [float(x) for x in vec])
@@ -174,7 +177,7 @@ def _train_vector_family(
                 ],
                 "j int, cluster_id int, centroid array<double>",
             ),
-            os.path.join(out_dir, "pq_codebooks"),
+            "pq_codebooks",
         )
 
     def write_codes():
@@ -186,11 +189,7 @@ def _train_vector_family(
         # COMPACT_FILES_PER_CELL trigger measures append debris, not the
         # writer's shuffle spray; a petabyte mount would repartition(n,
         # "cell") to keep intra-cell file parallelism
-        _write(
-            codes.repartition("cell"),
-            os.path.join(out_dir, "pq_codes"),
-            partition_by="cell",
-        )
+        snap.write(codes.repartition("cell"), "pq_codes", partition_by=["cell"])
 
     def write_pivot_artifacts():
         # pivot artifacts — the reference's own mount-time V-path
@@ -205,7 +204,7 @@ def _train_vector_family(
         )
 
         pivots = select_pivots_farthest_point(train, "vec_id", "embedding", N_PIVOTS)
-        _write(
+        snap.write(
             spark.createDataFrame(
                 [
                     (pos, int(pid), [float(x) for x in vec])
@@ -213,13 +212,13 @@ def _train_vector_family(
                 ],
                 "pos int, pivot_id long, vector array<double>",
             ),
-            os.path.join(out_dir, "pivots"),
+            "pivots",
         )
-        _write(
+        snap.write(
             embed_distances(emb, "embedding", pivots).select(
                 "vec_id", *[f"emb_{i}" for i in range(len(pivots))]
             ),
-            os.path.join(out_dir, "pivot_embedded"),
+            "pivot_embedded",
         )
 
     with ThreadPoolExecutor(max_workers=4) as ex:
@@ -247,10 +246,11 @@ def _train_text_family(
     spark: SparkSession,
     docs: DataFrame,
     profiles: dict[str, dict[str, int]] | None,
-    out_dir: str,
+    snap: "Snapshot",
 ) -> list[str]:
     """Train and persist the TEXT artifact family (language-ID profiles,
-    LM bigram/context/vocab tables, BM25 stats) into ``out_dir``.
+    LM bigram/context/vocab tables, BM25 stats) as new versions in
+    ``snap``.
     ``docs`` must already be text-notnull-filtered and should arrive
     persisted — the trainers make several passes and the dedup trainer
     shares the same read.  Returns the lane-ordered language list."""
@@ -260,7 +260,7 @@ def _train_text_family(
 
     prof = PROFILES if profiles is None else profiles
     langs = _langs_of(profiles)
-    _write(
+    snap.write(
         spark.createDataFrame(
             [
                 (lane, lang, tri, int(w))
@@ -269,7 +269,7 @@ def _train_text_family(
             ],
             "lane int, lang string, tri string, w long",
         ),
-        os.path.join(out_dir, "langid_profiles"),
+        "langid_profiles",
     )
 
     from concurrent.futures import ThreadPoolExecutor
@@ -283,16 +283,16 @@ def _train_text_family(
         )
         # the six LM/BM25 artifact writes are independent aggregations
         # over the persisted bgc/docs frames — overlap them (guide §2.6;
-        # the manifest is written by the caller after every write lands)
+        # the manifest is committed by the caller after every write lands)
         jobs = [
-            (cb, "lm_bigrams", None),
-            (cu, "lm_ctx", None),
-            (vocab, "lm_vocab", None),
+            (cb, "lm_bigrams"),
+            (cu, "lm_ctx"),
+            (vocab, "lm_vocab"),
             # the distinct token set behind lm_vocab's count —
             # countDistinct is not mergeable from counts alone, so
             # appends re-derive v from the merged token set
             # (maintain.append_rows)
-            (docs.select(F.explode(toks).alias("tok")).distinct(), "lm_tokens", None),
+            (docs.select(F.explode(toks).alias("tok")).distinct(), "lm_tokens"),
             (
                 tdocs.select(
                     "doc_id", F.explode(F.array_distinct("toks")).alias("term")
@@ -300,7 +300,6 @@ def _train_text_family(
                 .groupBy("term")
                 .agg(F.count(F.lit(1)).alias("df")),
                 "bm25_df",
-                None,
             ),
             (
                 tdocs.agg(
@@ -309,16 +308,12 @@ def _train_text_family(
                     F.sum(F.size("toks").cast("long")).alias("sum_dl"),
                 ),
                 "bm25_global",
-                None,
             ),
         ]
         with ThreadPoolExecutor(max_workers=4) as ex:
             futs = [
-                ex.submit(
-                    inheritable_thread_target(spark)(_write),
-                    frame, os.path.join(out_dir, name), part,
-                )
-                for frame, name, part in jobs
+                ex.submit(inheritable_thread_target(spark)(snap.write), frame, name)
+                for frame, name in jobs
             ]
             for f in futs:
                 f.result()
@@ -363,7 +358,7 @@ def mount(
     dedup_params: dict | None = None,
 ) -> dict:
     """Train and persist the full artifact set from the corpus at
-    ``sf_dir``; returns the manifest (also written to
+    ``sf_dir``; returns the manifest (also committed to
     ``mount_dir/manifest.json``).
 
     ``train_frame``: the embeddings frame the IVF centroids and residual
@@ -378,7 +373,33 @@ def mount(
     The training is structured as per-FAMILY trainers (vector / text /
     dedup, ``FAMILY_ARTIFACTS``) sharing one persisted corpus read per
     table, so ``audit.refresh(families=[...])`` can regenerate a single
-    drifted family without re-paying the others (VERDICT r13 task 1)."""
+    drifted family without re-paying the others (VERDICT r13 task 1).
+    Re-mounting a directory writes a new generation beside the live one
+    and commits it; the previous manifest is neither read nor needed."""
+    snap = Snapshot(spark, mount_dir)
+    _mount_into(
+        spark, snap, sf_dir, train_frame=train_frame, profiles=profiles,
+        emb_frame=emb_frame, docs_frame=docs_frame, dedup=dedup,
+        dedup_params=dedup_params,
+    )
+    snap.commit()
+    return snap.manifest
+
+
+def _mount_into(
+    spark: SparkSession,
+    snap: "Snapshot",
+    sf_dir: str,
+    train_frame: DataFrame | None = None,
+    profiles: dict[str, dict[str, int]] | None = None,
+    emb_frame: DataFrame | None = None,
+    docs_frame: DataFrame | None = None,
+    dedup: bool = True,
+    dedup_params: dict | None = None,
+) -> dict:
+    """``mount``'s body: train every family into new versions of
+    ``snap``, whose manifest starts empty, and fill the manifest in
+    without committing it (``refresh`` adds to it first)."""
     from simsearch_spark.sources.registry import load_table
 
     emb = (
@@ -386,7 +407,7 @@ def mount(
     ).persist()
     train = emb if train_frame is None else train_frame
     try:
-        vparams, n_vectors = _train_vector_family(spark, emb, train, mount_dir)
+        vparams, n_vectors = _train_vector_family(spark, emb, train, snap)
     finally:
         emb.unpersist()
 
@@ -397,16 +418,16 @@ def mount(
         .persist()
     )
     try:
-        langs = _train_text_family(spark, docs, profiles, mount_dir)
+        langs = _train_text_family(spark, docs, profiles, snap)
         # text-family drift baseline (r14): the mounted LM's mean
         # log-perplexity on a bounded sample of its own training corpus —
         # audit_text compares current data against it
         from simsearch_spark.mount.audit import _sample_lm_stats
 
-        txt_stats = _sample_lm_stats(spark, mount_dir, docs)
+        txt_stats = _sample_lm_stats(spark, snap, docs)
 
-        manifest = {
-            "version": MANIFEST_VERSION,
+        manifest = snap.manifest
+        manifest.update({
             "source": os.path.abspath(sf_dir),
             "params": {**vparams, "langs": langs},
             "counts": {"n_vectors": n_vectors},
@@ -415,7 +436,7 @@ def mount(
                 "baseline_coverage": txt_stats["coverage"],
             },
             "artifacts": FAMILY_ARTIFACTS["vector"] + FAMILY_ARTIFACTS["text"],
-        }
+        })
         if dedup:
             # the persisted MinHash signature/band index (mount/dedup.py) —
             # frozen hash family matching the declared dedup queries, so
@@ -427,22 +448,11 @@ def mount(
 
             _add_family(
                 manifest, "dedup",
-                _build_dedup(spark, mount_dir, docs, **_dedup_family_params(dedup_params)),
+                _build_dedup(spark, snap, docs, **_dedup_family_params(dedup_params)),
             )
     finally:
         docs.unpersist()
-    save_manifest(mount_dir, manifest)
     return manifest
-
-
-def load_manifest(mount_dir: str) -> dict:
-    with open(os.path.join(mount_dir, "manifest.json")) as f:
-        m = json.load(f)
-    if m.get("version") != MANIFEST_VERSION:
-        raise ValueError(
-            f"mount manifest version {m.get('version')} != {MANIFEST_VERSION}"
-        )
-    return m
 
 
 def _add_family(manifest: dict, family: str, block: dict) -> None:
@@ -454,54 +464,264 @@ def _add_family(manifest: dict, family: str, block: dict) -> None:
     ]
 
 
-def _publish_family(mount_dir: str, family: str, build) -> dict:
-    """Train one family into a new mount generation and publish it
-    (``mount_dedup``, ``mount_bpe``; runs under their write lock):
-    ``build(out_dir)`` writes the family's artifacts into the
-    ``lock.next_generation`` tree and returns its manifest block, which
-    joins the live manifest — or a fresh one in a directory the trainer is
-    creating.  Readers see the old artifacts or the new ones; a failure
-    leaves the live mount untouched.  Returns the new manifest."""
-    token = mount_state_token(mount_dir)
+def _publish_family(spark: SparkSession, mount_dir: str, family: str, build) -> dict:
+    """Train one family and commit it (``mount_dedup``, ``mount_bpe``;
+    runs under their write lock): ``build(snap)`` writes new versions of
+    the family's artifacts and returns its manifest block, which joins
+    the live manifest — or a fresh one in a directory the trainer is
+    creating.  Returns the new manifest."""
+    snap = snapshot(spark, mount_dir, missing_ok=True)
+    _add_family(snap.manifest, family, build(snap))
+    snap.commit()
+    return snap.manifest
+
+
+# ---------------------------------------------------------------- layout
+#
+# <mount>/manifest.json             the one commit point (save_manifest)
+# <mount>/<artifact>/version=<id>/  written once, never renamed
+#
+# The manifest's "dirs" map names each artifact's live entries, paths
+# under <mount>/<artifact>: a version directory, or one partition of one
+# (split_cell/merge_cells retire a cell without rewriting the rest).
+# Its "schemas" map holds the DDL each artifact was written with, so a
+# read infers nothing.  ``version`` is a partition column of every
+# artifact, which keeps one basePath per artifact and with it the cell /
+# bkt / sbkt directory pruning; readers drop it.
+
+_VERSION = "version"
+MANIFEST = "manifest.json"
+
+
+def _empty_manifest() -> dict:
+    return {
+        "version": MANIFEST_VERSION,
+        "source": None,
+        "params": {},
+        "counts": {},
+        "artifacts": [],
+        "dirs": {},
+        "schemas": {},
+    }
+
+
+def _ddl(schema) -> str:
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
+
+
+def _raw_manifest(mount_dir: str) -> bytes:
+    """The manifest's bytes; empty when there is none."""
     try:
-        manifest = load_manifest(mount_dir)
+        with open(os.path.join(mount_dir, MANIFEST), "rb") as f:
+            return f.read()
     except FileNotFoundError:
-        manifest = {
-            "version": MANIFEST_VERSION,
-            "source": None,
-            "params": {},
-            "counts": {},
-            "artifacts": [],
-        }
-    rewrite = {*FAMILY_ARTIFACTS[family], "manifest.json"}
-    with next_generation(mount_dir, f"mount_{family}", token, rewrite) as nxt:
-        _add_family(manifest, family, build(nxt))
-        save_manifest(nxt, manifest)
-    return manifest
+        return b""
 
 
-def save_manifest(mount_dir: str, manifest: dict) -> None:
-    """The ONE writer of ``manifest.json``: dump to a sibling temp file,
-    then ``os.replace`` it over the old one.  A reader, or a crash
-    mid-dump, sees the previous manifest or the new one, never a
-    truncated one; and inside a ``lock.next_generation`` tree the
-    hardlinked previous manifest is replaced, never written through."""
-    path = os.path.join(mount_dir, "manifest.json")
+def _parse_manifest(raw: bytes, mount_dir: str) -> dict:
+    m = json.loads(raw)
+    if m.get("version") != MANIFEST_VERSION or "dirs" not in m:
+        raise ValueError(
+            f"mount {mount_dir!r} has a version-{m.get('version')} manifest "
+            f"that names no artifact directories; this engine reads version "
+            f"{MANIFEST_VERSION} — re-mount the corpus into a new directory"
+        )
+    return m
+
+
+class Snapshot:
+    """One read of a mount's manifest.  Every artifact path a call
+    touches resolves through it, so the call sees exactly one commit,
+    whatever publishes meanwhile: GC keeps the directories a snapshot
+    names through the next commit.  A writer records new versions in
+    ``manifest`` (read-your-writes: ``read`` sees them) and commits."""
+
+    def __init__(self, spark: SparkSession, mount_dir: str, raw: bytes | None = None):
+        self.spark = spark
+        self.mount_dir = mount_dir
+        #: the committed bytes this snapshot was read from (the commit
+        #: fence); None for a generation that replaces whatever is there
+        self.raw = raw
+        self.manifest = _parse_manifest(raw, mount_dir) if raw else _empty_manifest()
+        self._record = threading.Lock()  # trainers write from thread pools
+
+    def _root(self, name: str) -> str:
+        return os.path.join(self.mount_dir, name)
+
+    def has(self, name: str) -> bool:
+        return bool(self.manifest["dirs"].get(name))
+
+    def paths(self, name: str) -> list[str]:
+        """The artifact's live directories."""
+        return [os.path.join(self._root(name), e) for e in self.manifest["dirs"].get(name, [])]
+
+    def read(self, name: str) -> DataFrame:
+        """The artifact as one relation over its live directories, with
+        the recorded schema (no inference job); partitions are discovered
+        under one base, so partition predicates prune directories."""
+        return (
+            self.spark.read.schema(f"{self.manifest['schemas'][name]}, `{_VERSION}` string")
+            .option("basePath", self._root(name))
+            .parquet(*self.paths(name))
+            .drop(_VERSION)
+        )
+
+    def write(
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None,
+        append: bool = False,
+    ) -> None:
+        """Write ``df`` once into a new version directory of ``name`` and
+        record it: ``append`` adds the directory to the artifact's list,
+        otherwise the directory replaces the list (a rewrite)."""
+        v = f"{_VERSION}={uuid.uuid4().hex}"
+        w = df.write.mode("errorifexists")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(os.path.join(self._root(name), v))
+        with self._record:
+            dirs = self.manifest["dirs"]
+            if append and dirs.get(name):
+                dirs[name] = dirs[name] + [v]
+            else:
+                dirs[name] = [v]
+                self.manifest["schemas"][name] = _ddl(df.schema)
+
+    def drop(self, name: str) -> None:
+        """Name no version of ``name`` any more (tombstones a compaction
+        consumed, a retrain's horizon)."""
+        self.manifest["dirs"].pop(name, None)
+        self.manifest["schemas"].pop(name, None)
+
+    def drop_partitions(self, name: str, key: str, values) -> None:
+        """Stop naming ``name``'s ``key=<value>`` partitions: a version
+        directory holding one is replaced in the list by its other
+        partitions.  Nothing is rewritten; the files go when GC retires
+        the whole version."""
+        gone = {f"{key}={v}" for v in values}
+        kept = []
+        for e in self.manifest["dirs"].get(name, []):
+            if "/" in e:
+                if e.split("/", 1)[1] not in gone:
+                    kept.append(e)
+                continue
+            parts = sorted(os.listdir(os.path.join(self._root(name), e)))
+            if gone.isdisjoint(parts):
+                kept.append(e)
+            else:
+                kept += [
+                    f"{e}/{p}" for p in parts
+                    if p.startswith(key + "=") and p not in gone
+                ]
+        self.manifest["dirs"][name] = kept
+
+    def file_counts(self, name: str) -> dict[str, int]:
+        """Parquet files per partition directory ("cell=3",
+        "band_idx=0/bkt=5"; "." unpartitioned), summed over the live
+        directories — the compaction trigger's unit (no Spark job)."""
+        out: dict[str, int] = {}
+        for e in self.manifest["dirs"].get(name, []):
+            top = os.path.join(self._root(name), e.split("/", 1)[0])
+            for root, _dirs, files in os.walk(os.path.join(self._root(name), e)):
+                n = sum(1 for f in files if f.endswith(".parquet"))
+                if n:
+                    key = os.path.relpath(root, top)
+                    out[key] = out.get(key, 0) + n
+        return out
+
+    def commit(self) -> None:
+        """Publish ``manifest`` (``save_manifest``, fenced against the
+        commit this snapshot was read from)."""
+        save_manifest(self.mount_dir, self.manifest, expect=self.raw)
+        self.raw = _raw_manifest(self.mount_dir)
+
+
+def snapshot(spark: SparkSession, mount_dir: str, missing_ok: bool = False) -> Snapshot:
+    """The mount's current commit.  ``missing_ok``: a directory without
+    a manifest yields an empty one (a trainer creating the mount)."""
+    raw = _raw_manifest(mount_dir)
+    if not raw and not missing_ok:
+        raise FileNotFoundError(f"no mount manifest in {mount_dir!r}")
+    return Snapshot(spark, mount_dir, raw)
+
+
+def _snap(spark: SparkSession, where) -> Snapshot:
+    """``where`` — a snapshot, or a mount directory to take one of."""
+    return where if isinstance(where, Snapshot) else snapshot(spark, where)
+
+
+def load_manifest(mount_dir: str) -> dict:
+    raw = _raw_manifest(mount_dir)
+    if not raw:
+        raise FileNotFoundError(f"no mount manifest in {mount_dir!r}")
+    return _parse_manifest(raw, mount_dir)
+
+
+def _named(manifest: dict) -> set[tuple[str, str]]:
+    return {
+        (name, e.split("/", 1)[0])
+        for name, entries in manifest.get("dirs", {}).items()
+        for e in entries
+    }
+
+
+def save_manifest(mount_dir: str, manifest: dict, expect: bytes | None = None) -> None:
+    """The ONE commit point of a mount; runs under its write lock.
+
+    With ``expect`` (the bytes the writer's snapshot read), a different
+    live manifest means a writer bypassed the lock, and the commit is
+    refused (``ConcurrentMutationError``) so its mutation is not
+    silently dropped.  The manifest is dumped to a sibling temp file and
+    ``os.replace``d over the old one: a reader, or a crash mid-dump, sees
+    the previous manifest or the new one.  Then GC deletes every version
+    directory that neither this manifest nor the previous one names:
+    what the previous commit retired survives this one, so a reader's
+    snapshot outlives at least one further commit, and the debris of a
+    crashed op — never named — is collected here."""
+    if not holds_lock(mount_dir):
+        raise RuntimeError(f"save_manifest outside the write lock of {mount_dir!r}")
+    old = _raw_manifest(mount_dir)
+    if expect is not None and old != expect:
+        raise ConcurrentMutationError(
+            f"the manifest of {mount_dir!r} changed since this op's "
+            "snapshot — a writer bypassed the mount write lock; refusing "
+            "to commit over its mutation"
+        )
+    path = os.path.join(mount_dir, MANIFEST)
     with open(path + ".tmp", "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     os.replace(path + ".tmp", path)
+    prev = json.loads(old) if old else {}
+    _collect(mount_dir, _named(manifest) | _named(prev))
 
 
-def load_centroid_map(spark: SparkSession, mount_dir: str) -> dict[int, list[float]]:
-    """cluster_id -> round-6-pinned centroid (bounded: n_cells · dim)."""
-    rows = spark.read.parquet(os.path.join(mount_dir, "ivf_centroids")).collect()
+def _collect(mount_dir: str, keep: set[tuple[str, str]]) -> None:
+    """GC: remove every ``<artifact>/version=*`` directory not in
+    ``keep``, and artifact directories left empty."""
+    for name in os.listdir(mount_dir):
+        root = os.path.join(mount_dir, name)
+        if not os.path.isdir(root):
+            continue
+        gone = [
+            v for v in os.listdir(root)
+            if v.startswith(_VERSION + "=") and (name, v) not in keep
+        ]
+        for v in gone:
+            shutil.rmtree(os.path.join(root, v), ignore_errors=True)
+        if gone and not os.listdir(root):
+            os.rmdir(root)
+
+
+def load_centroid_map(spark: SparkSession, mount_dir) -> dict[int, list[float]]:
+    """cluster_id -> round-6-pinned centroid (bounded: n_cells · dim).
+    ``mount_dir`` may be a ``Snapshot`` (so may the other loaders')."""
+    rows = _snap(spark, mount_dir).read("ivf_centroids").collect()
     return {int(r["cluster_id"]): [float(x) for x in r["centroid"]] for r in rows}
 
 
-def load_codebooks(spark: SparkSession, mount_dir: str) -> list[dict[int, list[float]]]:
+def load_codebooks(spark: SparkSession, mount_dir) -> list[dict[int, list[float]]]:
     """The residual PQ codebooks in ``pq_train``'s shape (bounded:
     m · ksub · dsub)."""
-    rows = spark.read.parquet(os.path.join(mount_dir, "pq_codebooks")).collect()
+    rows = _snap(spark, mount_dir).read("pq_codebooks").collect()
     m = 1 + max(int(r["j"]) for r in rows)
     books: list[dict[int, list[float]]] = [{} for _ in range(m)]
     for r in rows:
@@ -509,20 +729,20 @@ def load_codebooks(spark: SparkSession, mount_dir: str) -> list[dict[int, list[f
     return books
 
 
-def load_pivots(spark: SparkSession, mount_dir: str) -> list:
+def load_pivots(spark: SparkSession, mount_dir) -> list:
     """The mounted pivot set in ``select_pivots_farthest_point``'s
     [(id, vector)] shape, selection order restored (bounded: p · dim)."""
-    rows = spark.read.parquet(os.path.join(mount_dir, "pivots")).collect()
+    rows = _snap(spark, mount_dir).read("pivots").collect()
     return [
         (int(r["pivot_id"]), [float(x) for x in r["vector"]])
         for r in sorted(rows, key=lambda r: int(r["pos"]))
     ]
 
 
-def load_profiles(spark: SparkSession, mount_dir: str) -> dict[str, dict[str, int]]:
+def load_profiles(spark: SparkSession, mount_dir) -> dict[str, dict[str, int]]:
     """Language-ID profiles with the lane order restored (bounded:
     langs · k rows)."""
-    rows = spark.read.parquet(os.path.join(mount_dir, "langid_profiles")).collect()
+    rows = _snap(spark, mount_dir).read("langid_profiles").collect()
     by_lane: dict[int, str] = {}
     tris: dict[str, dict[str, int]] = {}
     for r in rows:

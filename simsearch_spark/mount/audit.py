@@ -1,4 +1,4 @@
-"""Artifact drift audit + retrain-and-swap refresh (VERDICT r11 task 2).
+"""Artifact drift audit + retrain-and-commit refresh (VERDICT r11 task 2).
 
 The frozen-artifact contract (``maintain.append_rows``) assigns appended
 vectors to the EXISTING IVF cells and encodes them with the EXISTING
@@ -14,13 +14,11 @@ This module closes the operational loop:
   counts.  At 100 TB the brute arm runs against a corpus sample; here the
   corpus IS probe-sized.
 - ``refresh``: retrain every artifact (or only the drifted families)
-  from the CURRENT corpus into a new generation and atomically swap it
-  in (``lock.next_generation``) with a manifest ``generation`` bump.
-  Serving is never interrupted: a serve that loaded artifacts before the
-  swap finishes on the old generation (loads are bounded collects), the
-  next serve sees the new one.  On an object store this is a
-  manifest-pointer swap; on a local filesystem it is two directory
-  renames.
+  from the CURRENT corpus into new versions and commit them with one
+  manifest write and a ``generation`` bump.  Serving is never
+  interrupted: a serve resolves every read through the manifest snapshot
+  it took, whose directories GC keeps through the next commit; the next
+  serve sees the new generation.
 
 The degradation→refresh→recovery loop is pinned by
 tests/test_mount_audit.py on a planted drifted delta (the
@@ -28,8 +26,6 @@ mixture-of-Gaussians machinery from tests/test_ann_recall.py).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,15 +35,15 @@ from simsearch_spark.mount.artifacts import (
     FAMILY_ARTIFACTS,
     _add_family,
     _dedup_family_params,
+    _empty_manifest,
+    _mount_into,
     _train_text_family,
     _train_vector_family,
-    load_manifest,
     load_profiles,
-    mount,
-    save_manifest,
+    snapshot,
 )
 from simsearch_spark.mount.bpe import _build_bpe
-from simsearch_spark.mount.lock import locked, mount_state_token, next_generation
+from simsearch_spark.mount.lock import locked
 from simsearch_spark.sources.registry import load_table
 
 __all__ = ["audit_drift", "audit_dedup", "audit_text", "auto_maintain", "refresh"]
@@ -266,8 +262,8 @@ def audit_dedup(
     "index_integrity_mismatches", "est_recall_at_threshold"}``
     — ``recall`` is None when the sample contains no true pairs (report,
     not an error: a dup-free sample is a healthy outcome)."""
-    manifest = load_manifest(mount_dir)
-    dd = manifest.get("dedup")
+    snap = snapshot(spark, mount_dir)
+    dd = snap.manifest.get("dedup")
     if not dd:
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col = dd["id_col"]
@@ -275,7 +271,7 @@ def audit_dedup(
     bands = int(dd["bands"])
     n_hashes = int(dd["n_hashes"])
 
-    sh = spark.read.parquet(os.path.join(mount_dir, "dedup_shingles"))
+    sh = snap.read("dedup_shingles")
     srows = content_sample(
         sh.select(F.col(id_col), F.col("shingles")), id_col, sample_n
     ).collect()
@@ -335,7 +331,7 @@ def audit_dedup(
     expected = {i: _doc_bands(sets[i]) for i in ids}
     hashes = sorted({h for bs in expected.values() for h in bs})
     bkts = sorted({h % n_bkt for h in hashes})
-    reader = spark.read.parquet(os.path.join(mount_dir, "dedup_bands")).where(
+    reader = snap.read("dedup_bands").where(
         F.col("bkt").isin(bkts)
     )
     if len(hashes) <= MAX_IN_LITERALS:
@@ -401,13 +397,13 @@ def content_sample(df: DataFrame, key_col: str, sample_n: int) -> DataFrame:
 
 def _sample_lm_stats(
     spark: SparkSession,
-    art_dir: str,
+    snap,
     docs: DataFrame,
     text_col: str = "text",
     sample_n: int = 256,
 ) -> dict:
     """Mean bigram-LM log-perplexity AND bigram coverage of the LM
-    tables under ``art_dir`` over the ``sample_n`` docs of lowest
+    tables ``snap`` names over the ``sample_n`` docs of lowest
     ``xxhash64(text)`` (``content_sample``).  ``docs`` must carry
     ``doc_id`` + ``text_col`` (the documents shape; a non-default
     ``text_col`` is aliased to the ``text`` column the LM machinery
@@ -432,9 +428,9 @@ def _sample_lm_stats(
     )
     bgc = lm_doc_bigrams(sample).persist()
     try:
-        cb = spark.read.parquet(os.path.join(art_dir, "lm_bigrams"))
-        cu = spark.read.parquet(os.path.join(art_dir, "lm_ctx"))
-        vocab = spark.read.parquet(os.path.join(art_dir, "lm_vocab"))
+        cb = snap.read("lm_bigrams")
+        cu = snap.read("lm_ctx")
+        vocab = snap.read("lm_vocab")
         scored = lm_score(sample, bgc, cb, cu, vocab)
         row = (
             scored.where(F.col("n_bigrams") > 0)
@@ -485,13 +481,13 @@ def audit_text(
     ``{"log_ppl", "coverage", "baseline_ppl", "baseline_coverage",
     "ppl_ratio": float|None, "coverage_ratio": float|None, "sample_n"}``
     — ratios are None on pre-baseline mounts (report, not an error)."""
-    manifest = load_manifest(mount_dir)
-    if not os.path.isdir(os.path.join(mount_dir, "lm_bigrams")):
+    snap = snapshot(spark, mount_dir)
+    if not snap.has("lm_bigrams"):
         raise ValueError("mount has no text artifacts — run mount() first")
-    ta = manifest.get("text_audit") or {}
+    ta = snap.manifest.get("text_audit") or {}
     base_ppl = ta.get("baseline_ppl")
     base_cov = ta.get("baseline_coverage")
-    cur = _sample_lm_stats(spark, mount_dir, docs, text_col, sample_n)
+    cur = _sample_lm_stats(spark, snap, docs, text_col, sample_n)
 
     def _ratio(val, base):
         # a ratio exists only when BOTH sides carry signal; a zero base
@@ -521,8 +517,8 @@ def refresh(
     families: list[str] | None = None,
     **mount_kwargs,
 ) -> dict:
-    """Retrain artifacts from the CURRENT corpus and atomically swap the
-    new generation in.  ``emb_frame``/``docs_frame`` name the current
+    """Retrain artifacts from the CURRENT corpus and commit the new
+    generation.  ``emb_frame``/``docs_frame`` name the current
     corpus (base + all appended rows — the mount stores codes, not raw
     vectors); default re-reads the manifest's source tables, which is
     only correct when nothing was appended — a retrain frame that COVERS
@@ -540,28 +536,25 @@ def refresh(
     families — drift is usually localized (the audit names the family),
     and at 100 TB a full retrain re-pays the entire corpus for artifacts
     that did not drift.  Every artifact of an untouched family is
-    byte-identical afterwards (the same inodes), and the manifest
+    byte-identical afterwards (the same directories), and the manifest
     generation still advances.  Both modes carry the mounted language-ID
     profiles and dedup hash family unless the caller passes new ones.
 
-    Crash discipline: both modes publish through
-    ``lock.next_generation`` — the retrain writes into a sibling
-    directory (a hardlink tree of what it keeps), and the new
-    generation becomes visible by two directory renames, all families
-    and the manifest at once (an object store swaps a manifest pointer
-    instead).  A failure before the renames — a guard, a fence, an
-    exception in a trainer — leaves the live mount untouched.  A crash
-    between the renames leaves ``<mount>__old`` holding the intact
-    previous generation, which the next lock acquisition on the mount
-    restores, so no crash point loses a generation or mixes two."""
+    Crash discipline: both modes write every retrained artifact into new
+    version directories and publish them, all families and the manifest
+    at once, by one fenced ``save_manifest`` (mount/lock.py).  A failure
+    before the commit — a guard, the fence, an exception in a trainer —
+    leaves the live mount untouched; the unnamed new directories are
+    collected by the next commit.  No crash point loses a generation or
+    mixes two."""
     allow_shrink = bool(mount_kwargs.pop("allow_shrink", False))
-    old_manifest = load_manifest(mount_dir)
-    tok0 = mount_state_token(mount_dir)  # refresh fence snapshot (mount/lock.py)
+    snap = snapshot(spark, mount_dir)
+    old_manifest = snap.manifest
     src = sf_dir if sf_dir is not None else old_manifest["source"]
     if families is not None:
         return _refresh_families(
-            spark, mount_dir, src, old_manifest, list(families),
-            emb_frame, docs_frame, allow_shrink, mount_kwargs, tok0,
+            spark, snap, src, list(families),
+            emb_frame, docs_frame, allow_shrink, mount_kwargs,
         )
     if "dedup_reestimate" in mount_kwargs:
         raise ValueError(
@@ -569,30 +562,29 @@ def refresh(
             "refresh regenerates the index with the carried hash family"
         )
     mount_kwargs = _carry_mounted(
-        spark, mount_dir, old_manifest, mount_kwargs, FAMILY_ARTIFACTS
+        spark, snap, old_manifest, mount_kwargs, FAMILY_ARTIFACTS
     )
-    with next_generation(
-        mount_dir, "refresh", tok0, rewrite=os.listdir(mount_dir)
-    ) as nxt:
-        manifest = mount(
-            spark, src, nxt,
-            emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
-        )
-        if old_manifest.get("bpe"):
-            # carry the frozen-tokenizer artifact into the new generation
-            # (mount() does not train it by default — mount_bpe is opt-in,
-            # like mount_dedup was before it moved into mount's default set)
-            bp = old_manifest["bpe"]
-            _add_family(manifest, "bpe", _build_bpe(
-                spark, nxt,
-                load_table(spark, src, "documents") if docs_frame is None else docs_frame,
-                text_col=bp["text_col"], n_merges=bp["n_merges"],
-            ))
-        n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
-        n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
-        _guard_shrink(n_new, n_old, "vectors", "the new generation", allow_shrink)
-        manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
-        save_manifest(nxt, manifest)
+    # the new generation names none of the live artifacts (tombstones
+    # included); the commit still fences against the snapshot read above
+    snap.manifest = _empty_manifest()
+    manifest = _mount_into(
+        spark, snap, src, emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
+    )
+    if old_manifest.get("bpe"):
+        # carry the frozen-tokenizer artifact into the new generation
+        # (mount() does not train it by default — mount_bpe is opt-in,
+        # like mount_dedup was before it moved into mount's default set)
+        bp = old_manifest["bpe"]
+        _add_family(manifest, "bpe", _build_bpe(
+            spark, snap,
+            load_table(spark, src, "documents") if docs_frame is None else docs_frame,
+            text_col=bp["text_col"], n_merges=bp["n_merges"],
+        ))
+    n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
+    n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
+    _guard_shrink(n_new, n_old, "vectors", "the new generation", allow_shrink)
+    manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
+    snap.commit()
     return manifest
 
 
@@ -620,7 +612,7 @@ _DEDUP_CARRIED = (
 
 def _carry_mounted(
     spark: SparkSession,
-    mount_dir: str,
+    snap,
     old_manifest: dict,
     mount_kwargs: dict,
     families,
@@ -631,12 +623,8 @@ def _carry_mounted(
     family or profile set to the module defaults (self-review r12,
     review r14)."""
     kw = dict(mount_kwargs)
-    if (
-        "text" in families
-        and kw.get("profiles") is None
-        and os.path.isdir(os.path.join(mount_dir, "langid_profiles"))
-    ):
-        kw["profiles"] = load_profiles(spark, mount_dir)
+    if "text" in families and kw.get("profiles") is None and snap.has("langid_profiles"):
+        kw["profiles"] = load_profiles(spark, snap)
     dd = old_manifest.get("dedup")
     if "dedup" in families and kw.get("dedup_params") is None and dd:
         kw["dedup_params"] = {k: dd[k] for k in _DEDUP_CARRIED if k in dd}
@@ -645,23 +633,25 @@ def _carry_mounted(
 
 def _refresh_families(
     spark: SparkSession,
-    mount_dir: str,
+    snap,
     src: str,
-    old_manifest: dict,
     families: list[str],
     emb_frame: DataFrame | None,
     docs_frame: DataFrame | None,
     allow_shrink: bool,
     mount_kwargs: dict,
-    tok0: tuple,
 ) -> dict:
     """Family-granular refresh (VERDICT r13 task 1): retrain only the
-    named families into the ``next_generation`` tree, whose every other
-    entry is a hardlink of the live mount, and publish it with one swap.
-    Untouched families' artifacts are never rewritten — byte-identical
-    across the refresh (pinned in tests/test_mount_audit.py).  A vector
-    retrain does not keep ``tombstones``: it is the compaction horizon,
-    exactly as the full refresh."""
+    named families into new versions of ``snap`` and commit them with
+    one manifest write.  Untouched families keep their directories —
+    byte-identical across the refresh (pinned in
+    tests/test_mount_audit.py).  A vector retrain does not keep
+    ``tombstones``: it is the compaction horizon, exactly as the full
+    refresh."""
+    # the retrain's writes only touch the dirs/schemas maps, so the
+    # guards below read the snapshot's counts and blocks until the
+    # manifest edits at the end
+    old_manifest = snap.manifest
     unknown = set(families) - set(FAMILY_ARTIFACTS)
     if unknown:
         raise ValueError(
@@ -689,154 +679,148 @@ def _refresh_families(
         raise ValueError("dedup_reestimate=True requires 'dedup' in families")
 
     mount_kwargs = _carry_mounted(
-        spark, mount_dir, old_manifest, mount_kwargs, families
+        spark, snap, old_manifest, mount_kwargs, families
     )
-    rewrite = {a for fam in families for a in FAMILY_ARTIFACTS[fam]}
+    vparams = n_new = dd_block = bp_block = None
     if "vector" in families:
-        rewrite.add("tombstones")
-    with next_generation(
-        mount_dir, "refresh(families=...)", tok0, rewrite
-    ) as nxt:
-        vparams = n_new = dd_block = bp_block = None
-        if "vector" in families:
-            emb = (
-                load_table(spark, src, "embeddings")
-                if emb_frame is None
-                else emb_frame
-            ).persist()
-            train = mount_kwargs.get("train_frame")
-            try:
-                vparams, n_new = _train_vector_family(
-                    spark, emb, emb if train is None else train, nxt
-                )
-            finally:
-                emb.unpersist()
-            n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
-            _guard_shrink(
-                n_new, n_old, "vectors", "the new generation", allow_shrink
+        emb = (
+            load_table(spark, src, "embeddings")
+            if emb_frame is None
+            else emb_frame
+        ).persist()
+        train = mount_kwargs.get("train_frame")
+        try:
+            vparams, n_new = _train_vector_family(
+                spark, emb, emb if train is None else train, snap
             )
+        finally:
+            emb.unpersist()
+        n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
+        _guard_shrink(
+            n_new, n_old, "vectors", "the new generation", allow_shrink
+        )
 
-        langs = None
-        if {"text", "dedup", "bpe"} & set(families):
-            # ONE persisted documents read shared by both trainers — the
-            # same discipline mount() itself follows
-            docs = (
-                (
-                    load_table(spark, src, "documents")
-                    if docs_frame is None
-                    else docs_frame
-                )
-                .where(F.col("text").isNotNull())
-                .persist()
+    langs = None
+    if {"text", "dedup", "bpe"} & set(families):
+        # ONE persisted documents read shared by both trainers — the
+        # same discipline mount() itself follows
+        docs = (
+            (
+                load_table(spark, src, "documents")
+                if docs_frame is None
+                else docs_frame
             )
-            try:
-                if "text" in families:
-                    # EARLY coverage pre-check (review r14): reject an
-                    # obviously-shrunk frame before paying the retrain
-                    # (docs is persisted — the count is cheap); the
-                    # post-train bm25 comparison below stays the
-                    # authoritative guard
-                    n_txt_old = _bm25_ndocs(spark, mount_dir)
-                    _guard_shrink(
-                        int(docs.count()), n_txt_old, "docs",
-                        "the text artifacts", allow_shrink,
-                    )
-                    langs = _train_text_family(
-                        spark, docs, mount_kwargs.get("profiles"), nxt
-                    )
-                    # coverage guard (review r14): the text artifacts
-                    # derive from the docs frame — a retrain that covers
-                    # fewer docs than the mounted bm25_global silently
-                    # drops appended docs from every LM/BM25 table, the
-                    # same failure the vector/dedup guards reject
-                    _guard_shrink(
-                        _bm25_ndocs(spark, nxt), n_txt_old, "docs",
-                        "the text artifacts", allow_shrink,
-                    )
-                    # re-baseline the drift audit on the NEW tables +
-                    # the corpus they trained on (scored from nxt —
-                    # the live mount is untouched until publication)
-                    txt_baseline = _sample_lm_stats(spark, nxt, docs)
-                if "dedup" in families:
-                    # resolved per call, so a wrapped _build_dedup is seen
-                    from simsearch_spark.mount.dedup import _build_dedup
+            .where(F.col("text").isNotNull())
+            .persist()
+        )
+        try:
+            if "text" in families:
+                # EARLY coverage pre-check (review r14): reject an
+                # obviously-shrunk frame before paying the retrain
+                # (docs is persisted — the count is cheap); the
+                # post-train bm25 comparison below stays the
+                # authoritative guard
+                n_txt_old = _bm25_ndocs(snap)
+                _guard_shrink(
+                    int(docs.count()), n_txt_old, "docs",
+                    "the text artifacts", allow_shrink,
+                )
+                langs = _train_text_family(
+                    spark, docs, mount_kwargs.get("profiles"), snap
+                )
+                # coverage guard (review r14): the text artifacts
+                # derive from the docs frame — a retrain that covers
+                # fewer docs than the mounted bm25_global silently
+                # drops appended docs from every LM/BM25 table, the
+                # same failure the vector/dedup guards reject
+                _guard_shrink(
+                    _bm25_ndocs(snap), n_txt_old, "docs",
+                    "the text artifacts", allow_shrink,
+                )
+                # re-baseline the drift audit on the NEW tables +
+                # the corpus they trained on (``snap`` reads its own
+                # writes; the live mount is untouched until the commit)
+                txt_baseline = _sample_lm_stats(spark, snap, docs)
+            if "dedup" in families:
+                # resolved per call, so a wrapped _build_dedup is seen
+                from simsearch_spark.mount.dedup import _build_dedup
 
-                    dpf = _dedup_family_params(mount_kwargs.get("dedup_params"))
-                    if mount_kwargs.get("dedup_reestimate"):
-                        # re-size the banding from the CURRENT corpus at
-                        # the mounted threshold (VERDICT r13 task 3): a
-                        # shifted shingle distribution degrades recall at
-                        # the frozen (bands, rows) — audit_dedup detects
-                        # it, this re-estimation restores it.  The hash
-                        # SEED and shingle width stay frozen; only the
-                        # S-curve sizing moves.
-                        from simsearch_spark.operators.lshparams import (
-                            auto_minhash_params,
-                        )
-
-                        mp = auto_minhash_params(
-                            int(docs.count()), float(dpf["threshold"])
-                        )
-                        dpf["n_hashes"] = mp.n_hashes
-                        dpf["bands"] = mp.bands
-                    dd_block = _build_dedup(spark, nxt, docs, **dpf)
-                    _guard_shrink(
-                        int(dd_block["n_docs"]),
-                        int(old_manifest.get("dedup", {}).get("n_docs", 0)),
-                        "docs", "the new dedup index", allow_shrink,
+                dpf = _dedup_family_params(mount_kwargs.get("dedup_params"))
+                if mount_kwargs.get("dedup_reestimate"):
+                    # re-size the banding from the CURRENT corpus at
+                    # the mounted threshold (VERDICT r13 task 3): a
+                    # shifted shingle distribution degrades recall at
+                    # the frozen (bands, rows) — audit_dedup detects
+                    # it, this re-estimation restores it.  The hash
+                    # SEED and shingle width stay frozen; only the
+                    # S-curve sizing moves.
+                    from simsearch_spark.operators.lshparams import (
+                        auto_minhash_params,
                     )
-                if "bpe" in families:
-                    bp = old_manifest["bpe"]
-                    bp_block = _build_bpe(
-                        spark, nxt, docs,
-                        text_col=bp["text_col"], n_merges=bp["n_merges"],
-                    )
-                    if (
-                        int(bp_block["n_learned"]) == 0
-                        and int(bp.get("n_learned", 0)) > 0
-                    ):
-                        # a frame so degenerate it learned NO merges must
-                        # not replace a working tokenizer (review r14 —
-                        # the bpe analog of the doc-coverage guards).
-                        # Deliberately NOT bypassed by allow_shrink: a
-                        # 0-merge table is non-functional, not re-scoped;
-                        # mount_bpe directly if that is truly intended.
-                        raise ValueError(
-                            "refresh: retrain frame learned 0 BPE merges "
-                            "while the mounted table has "
-                            f"{bp['n_learned']} — pass docs_frame holding "
-                            "the CURRENT corpus (or allow_shrink=True)"
-                        )
-            finally:
-                docs.unpersist()
 
-        # the tree's manifest started as the live one
-        manifest = load_manifest(nxt)
-        if dd_block is not None:
-            _add_family(manifest, "dedup", dd_block)
-        if bp_block is not None:
-            _add_family(manifest, "bpe", bp_block)
-        if "vector" in families:
-            manifest["params"].update(vparams)
-            manifest["counts"]["n_vectors"] = int(n_new)
-        if "text" in families:
-            manifest["params"]["langs"] = langs
-            manifest["text_audit"] = {
-                "baseline_ppl": txt_baseline["log_ppl"],
-                "baseline_coverage": txt_baseline["coverage"],
-            }
-        manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
-        save_manifest(nxt, manifest)
+                    mp = auto_minhash_params(
+                        int(docs.count()), float(dpf["threshold"])
+                    )
+                    dpf["n_hashes"] = mp.n_hashes
+                    dpf["bands"] = mp.bands
+                dd_block = _build_dedup(spark, snap, docs, **dpf)
+                _guard_shrink(
+                    int(dd_block["n_docs"]),
+                    int(old_manifest.get("dedup", {}).get("n_docs", 0)),
+                    "docs", "the new dedup index", allow_shrink,
+                )
+            if "bpe" in families:
+                bp = old_manifest["bpe"]
+                bp_block = _build_bpe(
+                    spark, snap, docs,
+                    text_col=bp["text_col"], n_merges=bp["n_merges"],
+                )
+                if (
+                    int(bp_block["n_learned"]) == 0
+                    and int(bp.get("n_learned", 0)) > 0
+                ):
+                    # a frame so degenerate it learned NO merges must
+                    # not replace a working tokenizer (review r14 —
+                    # the bpe analog of the doc-coverage guards).
+                    # Deliberately NOT bypassed by allow_shrink: a
+                    # 0-merge table is non-functional, not re-scoped;
+                    # mount_bpe directly if that is truly intended.
+                    raise ValueError(
+                        "refresh: retrain frame learned 0 BPE merges "
+                        "while the mounted table has "
+                        f"{bp['n_learned']} — pass docs_frame holding "
+                        "the CURRENT corpus (or allow_shrink=True)"
+                    )
+        finally:
+            docs.unpersist()
+
+    manifest = snap.manifest
+    if "vector" in families:
+        snap.drop("tombstones")
+    if dd_block is not None:
+        _add_family(manifest, "dedup", dd_block)
+    if bp_block is not None:
+        _add_family(manifest, "bpe", bp_block)
+    if "vector" in families:
+        manifest["params"].update(vparams)
+        manifest["counts"]["n_vectors"] = int(n_new)
+    if "text" in families:
+        manifest["params"]["langs"] = langs
+        manifest["text_audit"] = {
+            "baseline_ppl": txt_baseline["log_ppl"],
+            "baseline_coverage": txt_baseline["coverage"],
+        }
+    manifest["generation"] = int(manifest.get("generation", 0)) + 1
+    snap.commit()
     return manifest
 
 
-def _bm25_ndocs(spark: SparkSession, d: str) -> int:
-    """The mounted text-family doc count (one 1-row read; 0 when the
-    directory is absent) — the coverage baseline for text refreshes."""
-    p = os.path.join(d, "bm25_global")
-    if not os.path.isdir(p):
+def _bm25_ndocs(snap) -> int:
+    """The text-family doc count ``snap`` names (one 1-row read; 0 when
+    there is none) — the coverage baseline for text refreshes."""
+    if not snap.has("bm25_global"):
         return 0
-    row = spark.read.parquet(p).first()
+    row = snap.read("bm25_global").first()
     return int(row["n_docs"]) if row else 0
 
 
@@ -897,11 +881,12 @@ def auto_maintain(
     ``{"audits": {...}, "refreshed": [...], "compacted": {...},
     "generation": int}`` — every number in it is re-derivable from the
     primitives, so the record is an audit log, not a new metric."""
-    manifest = load_manifest(mount_dir)
+    snap = snapshot(spark, mount_dir)
+    manifest = snap.manifest
     report: dict = {"audits": {}, "refreshed": [], "compacted": {}}
     to_refresh: list[str] = []
 
-    has_vector = os.path.isdir(os.path.join(mount_dir, "pq_codes"))
+    has_vector = snap.has("pq_codes")
     if has_vector and emb is not None:
         a = audit_drift(spark, mount_dir, emb, **(audit_kwargs or {}))
         report["audits"]["vector"] = {
@@ -938,7 +923,7 @@ def auto_maintain(
             to_refresh.append("bpe")
     if (
         docs_frame is not None
-        and os.path.isdir(os.path.join(mount_dir, "lm_bigrams"))
+        and snap.has("lm_bigrams")
         and (manifest.get("text_audit") or {}).get("baseline_coverage")
         is not None
     ):
@@ -991,7 +976,7 @@ def auto_maintain(
             or st["max_files_per_cell"] > COMPACT_FILES_PER_CELL
         ):
             report["compacted"]["codes_rows"] = compact_codes(spark, mount_dir)
-        if load_manifest(mount_dir).get("dedup") and (
+        if manifest.get("dedup") and (
             st["dedup_tombstone_fraction"] >= COMPACT_TOMBSTONE_FRACTION
             or st["max_files_per_dedup_dir"] > COMPACT_FILES_PER_CELL
         ):

@@ -22,13 +22,11 @@ into deltas encodes identically (split-invariance for free).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simsearch_spark.mount.artifacts import _publish_family, _snap, snapshot
 from simsearch_spark.mount.lock import locked
-from simsearch_spark.mount.artifacts import _publish_family, _write, load_manifest
 
 __all__ = [
     "mount_bpe",
@@ -98,8 +96,8 @@ def audit_bpe(
     flat in corpus size.  Returns ``{"cpt": float, "baseline_cpt":
     float|None, "ratio": float|None, "sample_n": int}`` — ``ratio`` is
     None for pre-baseline mounts (report, not an error)."""
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
+    snap = snapshot(spark, mount_dir)
+    bp = snap.manifest.get("bpe")
     if not bp:
         raise ValueError("mount has no BPE artifacts — run mount_bpe first")
     col = bp["text_col"] if text_col is None else text_col
@@ -107,7 +105,7 @@ def audit_bpe(
         spark,
         docs.where(F.col(col).isNotNull()),
         col,
-        load_merges(spark, mount_dir),
+        load_merges(spark, snap),
         sample_n,
     )
     base = bp.get("baseline_cpt")
@@ -129,23 +127,22 @@ def mount_bpe(spark: SparkSession, mount_dir: str, docs: DataFrame, **params) ->
     """Learn BPE rules from ``docs`` and persist them as the
     ``bpe_merges`` artifact with the training parameters frozen in the
     manifest — the tokenizer dual of ``mount_dedup``, and like it
-    published as one new mount generation (``lock.next_generation``);
-    ``params`` takes the keyword parameters of :func:`_build_bpe`.
-    Returns the manifest."""
+    published by one manifest commit; ``params`` takes the keyword
+    parameters of :func:`_build_bpe`.  Returns the manifest."""
     return _publish_family(
-        mount_dir, "bpe", lambda out_dir: _build_bpe(spark, out_dir, docs, **params)
+        spark, mount_dir, "bpe", lambda snap: _build_bpe(spark, snap, docs, **params)
     )
 
 
 def _build_bpe(
     spark: SparkSession,
-    out_dir: str,
+    snap,
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int | None = None,
 ) -> dict:
-    """Learn ``n_merges`` BPE rules from ``docs``, write them into
-    ``out_dir`` as ``bpe_merges`` (merge_rank, left, right, pair_count)
+    """Learn ``n_merges`` BPE rules from ``docs``, write them as a new
+    ``bpe_merges`` version of ``snap`` (merge_rank, left, right, pair_count)
     and return the manifest's ``bpe`` block.  Default ``n_merges`` is the
     declared-query budget (``queries.vocab.BPE_MERGES``) so a default
     mount's encode is parity-equal to the self-contained
@@ -156,11 +153,11 @@ def _build_bpe(
     n = int(BPE_MERGES if n_merges is None else n_merges)
     live = docs.where(F.col(text_col).isNotNull())
     merges = learn_bpe_merges(live, text_col, n)
-    _write(
+    snap.write(
         spark.createDataFrame(
             merges, "merge_rank int, left string, right string, pair_count long"
         ),
-        os.path.join(out_dir, "bpe_merges"),
+        "bpe_merges",
     )
     # training-time compression baseline (r14): chars-per-token of the
     # frozen merges on a bounded deterministic sample of the TRAINING
@@ -177,10 +174,11 @@ def _build_bpe(
     }
 
 
-def load_merges(spark: SparkSession, mount_dir: str) -> list[tuple[int, str, str, int]]:
+def load_merges(spark: SparkSession, mount_dir) -> list[tuple[int, str, str, int]]:
     """The mounted merge table in ``learn_bpe_merges``' return shape,
-    rank order restored (bounded: n_merges rows)."""
-    rows = spark.read.parquet(os.path.join(mount_dir, "bpe_merges")).collect()
+    rank order restored (bounded: n_merges rows); ``mount_dir`` may be a
+    ``Snapshot``."""
+    rows = _snap(spark, mount_dir).read("bpe_merges").collect()
     return [
         (int(r["merge_rank"]), str(r["left"]), str(r["right"]), int(r["pair_count"]))
         for r in sorted(rows, key=lambda r: int(r["merge_rank"]))
@@ -200,12 +198,12 @@ def serve_bpe_encode(
     ``text_col`` defaults to the column the merges were trained on."""
     from simsearch_spark.operators.bpe import apply_bpe
 
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
+    snap = _snap(spark, mount_dir)
+    bp = snap.manifest.get("bpe")
     if not bp:
         raise ValueError("mount has no BPE artifacts — run mount_bpe first")
     col = bp["text_col"] if text_col is None else text_col
-    return apply_bpe(docs, col, load_merges(spark, mount_dir), out_col=out_col)
+    return apply_bpe(docs, col, load_merges(spark, snap), out_col=out_col)
 
 
 def bpe_encode_stats(
@@ -222,13 +220,13 @@ def bpe_encode_stats(
     chars_per_token on new data means the merges no longer fit it).
     Same aggregate shape as the self-contained ``bpe_token_stats`` query,
     so a default mount over the training corpus is parity-equal to it."""
-    manifest = load_manifest(mount_dir)
-    bp = manifest.get("bpe")
+    snap = snapshot(spark, mount_dir)
+    bp = snap.manifest.get("bpe")
     if not bp:
         raise ValueError("mount has no BPE artifacts — run mount_bpe first")
     col = bp["text_col"] if text_col is None else text_col
     toks = serve_bpe_encode(
-        spark, mount_dir,
+        spark, snap,
         docs.where(F.col(col).isNotNull()).select(group_col, col),
         text_col=col,
     )

@@ -10,8 +10,8 @@ the batch semantics being made incremental are exactly
 ``operators/dedup.py minhash_lsh_pairs``.
 
 Artifacts (written by ``mount_dedup`` — or by ``mount()`` and ``refresh``,
-which build them into the generation they publish — appended by
-``dedup_append``):
+which build them into the generation they commit — appended by
+``dedup_append``, one new version directory per artifact per delta):
 
 ==============  ===========================================  ==============
 artifact        schema                                       partitioning
@@ -77,12 +77,7 @@ from pyspark.sql.types import (
 )
 
 from simsearch_spark.functions.hashing import nonblank_text
-from simsearch_spark.mount.artifacts import (
-    _publish_family,
-    _write,
-    load_manifest,
-    save_manifest,
-)
+from simsearch_spark.mount.artifacts import _publish_family, _snap, snapshot
 from simsearch_spark.mount.lock import locked
 from simsearch_spark.operators.dedup import (
     LSH_BUCKET_CAP,
@@ -168,30 +163,31 @@ def delete_docs(spark: SparkSession, mount_dir: str, doc_ids: list) -> None:
     drops as a replay, because the idempotency probe reads the
     still-present shingle rows — the same
     insert → delete → compact → reusable lifecycle as ``delete_ids``."""
-    manifest = load_manifest(mount_dir)
-    dd = manifest.get("dedup")
+    snap = snapshot(spark, mount_dir)
+    dd = snap.manifest.get("dedup")
     if not dd:
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col = dd["id_col"]
     id_dtype = dd.get("id_dtype")
     if not id_dtype:
-        id_dtype = dict(
-            spark.read.parquet(os.path.join(mount_dir, "dedup_shingles")).dtypes
-        )[id_col]
-    spark.createDataFrame(
-        [(i,) for i in doc_ids], f"{id_col} {id_dtype}"
-    ).write.mode("append").parquet(os.path.join(mount_dir, "dedup_tombstones"))
+        id_dtype = dict(snap.read("dedup_shingles").dtypes)[id_col]
+    snap.write(
+        spark.createDataFrame([(i,) for i in doc_ids], f"{id_col} {id_dtype}"),
+        "dedup_tombstones",
+        append=True,
+    )
+    snap.commit()
 
 
-def _dedup_tomb_ids(spark: SparkSession, mount_dir: str, id_col: str) -> set:
+def _dedup_tomb_ids(snap, id_col: str) -> set:
     """The tombstoned doc-id set — DRIVER-bounded by deletes since the
     last compaction (the ``delete_ids`` tombstone contract: compaction
     is the horizon that clears it)."""
-    p = os.path.join(mount_dir, "dedup_tombstones")
-    if not os.path.isdir(p):
+    if not snap.has("dedup_tombstones"):
         return set()
     return {
-        r[0] for r in spark.read.parquet(p).select(id_col).distinct().collect()
+        r[0]
+        for r in snap.read("dedup_tombstones").select(id_col).distinct().collect()
     }
 
 
@@ -210,18 +206,17 @@ def mount_dedup(spark: SparkSession, mount_dir: str, docs: DataFrame, **family) 
     """Build the persisted MinHash signature/band index for ``docs`` and
     record the frozen hash family in the mount manifest; ``family`` takes
     the keyword parameters of :func:`_build_dedup`.  The index and the
-    manifest are published as one new mount generation
-    (``lock.next_generation``), so a reader never sees a half-written
-    index and a failed build leaves the live mount untouched.  Returns
-    the manifest."""
+    manifest are published by one commit, so a reader never sees a
+    half-written index and a failed build leaves the live mount
+    untouched.  Returns the manifest."""
     return _publish_family(
-        mount_dir, "dedup", lambda out_dir: _build_dedup(spark, out_dir, docs, **family)
+        spark, mount_dir, "dedup", lambda snap: _build_dedup(spark, snap, docs, **family)
     )
 
 
 def _build_dedup(
     spark: SparkSession,
-    out_dir: str,
+    snap,
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -234,12 +229,11 @@ def _build_dedup(
     n_bkt: int | None = None,
     n_sbkt: int | None = None,
 ) -> dict:
-    """Write ``dedup_bands`` and ``dedup_shingles`` for ``docs`` into
-    ``out_dir`` and return the manifest's ``dedup`` block.  NULL/empty
-    texts are excluded — the same candidate-universe contract as
-    ``minhash_lsh_pairs``.  ``out_dir`` is a directory the caller owns:
-    ``mount_dedup``'s next generation, or the one ``mount()`` or
-    ``refresh`` is building."""
+    """Write new versions of ``dedup_bands`` and ``dedup_shingles`` for
+    ``docs`` into ``snap`` and return the manifest's ``dedup`` block.
+    NULL/empty texts are excluded — the same candidate-universe contract
+    as ``minhash_lsh_pairs``.  The caller commits: ``mount_dedup``,
+    ``mount()`` or ``refresh``."""
     docs = docs.where(nonblank_text(text_col))
     banded = minhash_banded_frame(
         docs, id_col, text_col, n_hashes, bands, shingle_n, seed
@@ -269,23 +263,23 @@ def _build_dedup(
             n_sbkt = _auto_fanout(n_docs, 512, 8, 4096)
 
         def write_bands():
-            _write(
+            snap.write(
                 _expl_frame(banded, id_col, n_bkt)
                 .repartition("band_idx", "bkt")
                 .sortWithinPartitions("band_hash"),
-                os.path.join(out_dir, "dedup_bands"),
+                "dedup_bands",
                 partition_by=["band_idx", "bkt"],
             )
 
         def write_shingles():
-            _write(
+            snap.write(
                 banded.select(
                     F.col(id_col), F.col("shingles")
                 ).withColumn(
                     "sbkt", _sbkt(id_col, n_sbkt)
                 ).repartition("sbkt").sortWithinPartitions(id_col),
-                os.path.join(out_dir, "dedup_shingles"),
-                partition_by="sbkt",
+                "dedup_shingles",
+                partition_by=["sbkt"],
             )
 
         with ThreadPoolExecutor(max_workers=2) as ex:
@@ -377,26 +371,6 @@ def _sbkts(spark: SparkSession, ids: list, id_field: StructField, n_sbkt: int) -
     return {r[0] for r in ids_local.select(_sbkt(id_field.name, n_sbkt)).collect()}
 
 
-#: the index artifacts' schemas, partition columns last (``mount_dedup``
-#: writes them; the id type is the manifest's ``id_dtype``)
-_INDEX_DDL = {
-    "dedup_bands": "band_hash bigint, `{id}` {t}, band_idx int, bkt int",
-    "dedup_shingles": "`{id}` {t}, shingles array<string>, sbkt int",
-}
-
-
-def _index_reader(spark: SparkSession, mount_dir: str, name: str, dd: dict):
-    """One dedup index artifact as a relation.  With the mounted id dtype
-    on record the schema is given, not inferred: inference reads a
-    parquet footer in a Spark job of its own, on every append."""
-    reader = spark.read
-    if dd.get("id_dtype"):
-        reader = reader.schema(
-            _INDEX_DDL[name].format(id=dd["id_col"], t=dd["id_dtype"])
-        )
-    return reader.parquet(os.path.join(mount_dir, name))
-
-
 def _pairs_frame(spark: SparkSession, rows: list, id_type) -> DataFrame:
     """(id_a, id_b, jaccard) from driver-verified rows; the rounding is
     Spark's own ``round`` (HALF_UP on the decimal expansion), folded over
@@ -411,87 +385,45 @@ def _pairs_frame(spark: SparkSession, rows: list, id_type) -> DataFrame:
     )
 
 
-def _update_index(
-    spark, mount_dir, manifest, expl_d, banded_d, id_col, n_new, n_sbkt
-) -> None:
-    """Append the delta's band/shingle rows and bump the manifest count.
-
-    COMMIT ORDERING (ADVICE r13): ``dedup_shingles`` is the idempotency
-    MARKER — the replay probe reads it — so its rows must become visible
-    only AFTER the band rows are durably in place.  The r13 shape
-    submitted both appends concurrently; if the shingles write landed
-    while the bands write failed (disk full, executor loss), a retry
-    classified the whole delta as a replay and the delta's LSH band rows
-    were permanently missing — near-duplicates against those docs were
-    silently never found.
-
-    The fix keeps the concurrency (the per-delta write floor stays the
-    max of the two jobs, not their sum): the shingle append COMPUTES
-    into a sibling staging directory alongside the bands append, and is
-    PUBLISHED — per-partition file renames, metadata-only — only once
-    the bands append has succeeded.  Failure at any point leaves the
-    marker artifact without the delta's ids, so a retry re-runs the full
-    append.  A retry after a bands-success/shingles-fail crash re-appends
-    the delta's band rows a second time; duplicate band rows never change
-    the PAIR stream (candidates de-duplicate), but they can inflate a
-    bucket's ROW count past the hot cap on the capped fallback path —
-    ``compact_dedup`` collapses them (full-row distinct at rewrite), so
-    run a compaction after a failed append to restore exact batch parity
-    in already-hot buckets (review r14)."""
-    import shutil
-    import uuid
-
-    bands_path = os.path.join(mount_dir, "dedup_bands")
-    sh_path = os.path.join(mount_dir, "dedup_shingles")
-    # sibling of dedup_shingles (NOT inside it — a foreign subdirectory
-    # would break the relation's sbkt= partition discovery)
-    sh_stage = sh_path + "__stage_" + uuid.uuid4().hex
+def _update_index(snap, expl_d, banded_d, id_col, n_new, n_sbkt) -> None:
+    """Append the delta's band and shingle rows as one new version
+    directory each (the two writes overlap), bump the manifest count,
+    and commit.  ``dedup_shingles`` is the idempotency MARKER — the
+    replay probe reads it — so the delta must never be marked mounted
+    without its band rows (ADVICE r13).  One commit names both
+    directories or neither: a failure in either write leaves the delta
+    un-mounted, and a retry re-runs the full append."""
 
     def wr_bands():
-        expl_d.repartition("band_idx", "bkt").sortWithinPartitions(
-            "band_hash"
-        ).write.mode("append").partitionBy("band_idx", "bkt").parquet(bands_path)
+        snap.write(
+            expl_d.repartition("band_idx", "bkt").sortWithinPartitions("band_hash"),
+            "dedup_bands",
+            partition_by=["band_idx", "bkt"],
+            append=True,
+        )
 
     def wr_shingles():
-        banded_d.select(F.col(id_col), F.col("shingles")).withColumn(
-            "sbkt", _sbkt(id_col, n_sbkt)
-        ).repartition("sbkt").sortWithinPartitions(id_col).write.mode(
-            "overwrite"
-        ).partitionBy("sbkt").parquet(sh_stage)
+        snap.write(
+            banded_d.select(F.col(id_col), F.col("shingles"))
+            .withColumn("sbkt", _sbkt(id_col, n_sbkt))
+            .repartition("sbkt")
+            .sortWithinPartitions(id_col),
+            "dedup_shingles",
+            partition_by=["sbkt"],
+            append=True,
+        )
 
-    try:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_b = ex.submit(inheritable_thread_target(spark)(wr_bands))
-            f_s = ex.submit(inheritable_thread_target(spark)(wr_shingles))
-            # bands first: its failure must abort BEFORE any publication.
-            # Both futures are always drained so no write outlives this
-            # call half-finished in the background.
-            exc = None
-            for fut in (f_b, f_s):
-                try:
-                    fut.result()
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    exc = exc or e
-            if exc is not None:
-                raise exc
-        # commit point: bands are durable — publish the staged shingle
-        # files into the live partition directories.  Spark part-file
-        # names embed a task UUID, so same-name collisions with prior
-        # appends cannot occur; checksum companions move alongside.
-        for sub in sorted(os.listdir(sh_stage)):
-            src = os.path.join(sh_stage, sub)
-            if not os.path.isdir(src):
-                continue  # _SUCCESS and its checksum
-            dst = os.path.join(sh_path, sub)
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                if fn == "_SUCCESS" or fn.startswith("._SUCCESS"):
-                    continue
-                os.replace(os.path.join(src, fn), os.path.join(dst, fn))
-    finally:
-        shutil.rmtree(sh_stage, ignore_errors=True)
-    manifest["dedup"]["n_docs"] = int(manifest["dedup"]["n_docs"]) + n_new
-    save_manifest(mount_dir, manifest)
+    # leaving the pool waits for both writes, so none outlives this call
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        futs = [
+            ex.submit(inheritable_thread_target(snap.spark)(fn))
+            for fn in (wr_bands, wr_shingles)
+        ]
+        for f in futs:
+            f.result()
+    dd = snap.manifest["dedup"]
+    dd["n_docs"] = int(dd["n_docs"]) + n_new
+    snap.commit()
 
 
 @locked("dedup_append")
@@ -535,12 +467,15 @@ def dedup_append(
 
 
 def _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs):
-    """``dedup_append``'s body, run under the caller's write lock.  Also
-    returns how many delta rows were already mounted (None past the
-    gate), which ``serve_dedup_lookup`` reads to reject a probe id that
-    collides with a mounted one."""
-    manifest = load_manifest(mount_dir)
-    dd = manifest.get("dedup")
+    """``dedup_append``'s body: every read — the idempotency probe, the
+    tombstones, the base bands and shingles — resolves through ONE
+    snapshot (``mount_dir`` may be one).  With ``update`` it runs under
+    the caller's write lock and commits; without, it writes nothing
+    (``serve_dedup_lookup``).  Also returns how many delta rows were
+    already mounted (None past the gate), which ``serve_dedup_lookup``
+    reads to reject a probe id that collides with a mounted one."""
+    snap = _snap(spark, mount_dir)
+    dd = snap.manifest.get("dedup")
     if not dd:
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col, text_col = dd["id_col"], dd["text_col"]
@@ -570,14 +505,14 @@ def _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs):
         # re-reads them from a local relation, never from the source
         delta = _local_frame(spark, rows, delta.schema)
     id_field = delta.schema[id_col]
-    # ONE relation per artifact: spark.read.parquet lists the directory
+    # ONE relation per artifact: spark.read.parquet lists the directories
     # when the relation is resolved, and every frame derived from the
     # same reader object shares that file index
-    sh_reader = _index_reader(spark, mount_dir, "dedup_shingles", dd)
+    sh_reader = snap.read("dedup_shingles")
     # tombstoned base docs (delete_docs, r14): excluded from every pair
     # result until compaction reclaims their index rows — driver-bounded
     # by deletes since the last compact
-    tomb = _dedup_tomb_ids(spark, mount_dir, id_col)
+    tomb = _dedup_tomb_ids(snap, id_col)
     ids = [r[0] for r in rows]
     out = None
     # duplicate and NULL delta ids keep the distributed path's join semantics
@@ -588,41 +523,39 @@ def _dedup_delta(spark, mount_dir, docs_delta, update, on_pairs):
         and None not in ids
     ):
         out = _append_driver(
-            spark, mount_dir, manifest, ids, [r[1] for r in rows],
+            spark, snap, ids, [r[1] for r in rows],
             id_field, sh_reader, tomb, update, on_pairs,
         )
     if out is None:
         out = _append_large(
-            spark, mount_dir, manifest, delta, id_field, sh_reader, tomb,
-            update, on_pairs,
+            spark, snap, delta, id_field, sh_reader, tomb, update, on_pairs,
         )
     pairs, n_new = out
     return pairs, (len(rows) - n_new if small else None)
 
 
-def _commit(spark, mount_dir, manifest, pairs, banded_d, expl_d, n_new, update, on_pairs):
+def _commit(snap, pairs, banded_d, expl_d, n_new, update, on_pairs):
     """The shared tail: hand the pairs to ``on_pairs``, then append the
-    new rows to the index (the ADVICE r13 ordering is _update_index's)."""
+    new rows to the index and commit (``_update_index``)."""
     if on_pairs is not None:
         on_pairs(pairs)
     if update:
-        dd = manifest["dedup"]
+        dd = snap.manifest["dedup"]
         _update_index(
-            spark, mount_dir, manifest, expl_d, banded_d, dd["id_col"], n_new,
+            snap, expl_d, banded_d, dd["id_col"], n_new,
             int(dd.get("n_sbkt", N_SBKT)),
         )
     return pairs, n_new
 
 
 def _append_driver(
-    spark, mount_dir, manifest, ids, texts, id_field, sh_reader, tomb,
-    update, on_pairs,
+    spark, snap, ids, texts, id_field, sh_reader, tomb, update, on_pairs,
 ):
     """The driver-resident append of a gated delta (``dedup_append``
     docstring).  Returns (pairs, n_new), or None when a touched bucket is
     over the hot cap or the base band rows overflow their guard — the
     capped distributed path owns those."""
-    dd = manifest["dedup"]
+    dd = snap.manifest["dedup"]
     id_col = id_field.name
     n_bkt = int(dd.get("n_bkt", N_BKT))
     n_sbkt = int(dd.get("n_sbkt", N_SBKT))
@@ -648,7 +581,7 @@ def _append_driver(
     # plan time than they prune and the broadcast key join alone bounds
     # the scan.  TakeOrdered collects in ONE job (a bare limit-collect
     # runs up to four as it scales its partition count up)
-    base = _index_reader(spark, mount_dir, "dedup_bands", dd).where(
+    base = snap.read("dedup_bands").where(
         F.col("bkt").isin(sorted({h % n_bkt for h in hashes}))
     )
     if len(hashes) <= MAX_HASH_PUSH_LITERALS:
@@ -746,20 +679,20 @@ def _append_driver(
         ]),
     )
     return _commit(
-        spark, mount_dir, manifest, pairs, banded_d,
-        _expl_frame(banded_d, id_col, n_bkt), len(new), update, on_pairs,
+        snap, pairs, banded_d, _expl_frame(banded_d, id_col, n_bkt), len(new),
+        update, on_pairs,
     )
 
 
 def _append_large(
-    spark, mount_dir, manifest, delta, id_field, sh_reader, tomb, update, on_pairs,
+    spark, snap, delta, id_field, sh_reader, tomb, update, on_pairs,
 ):
     """The distributed append for deltas past the fast-path gate (and the
     driver path's fallbacks): no literal In pushdowns (a giant literal In
     costs more in planning than it prunes — measured: an 18k-hash delta
     took the append from ~6 s to ~30 s), shuffle-join probe when the key
     set would strain the driver broadcast.  Returns (pairs, n_new)."""
-    dd = manifest["dedup"]
+    dd = snap.manifest["dedup"]
     id_col = id_field.name
     n_bkt = int(dd.get("n_bkt", N_BKT))
     n_sbkt = int(dd.get("n_sbkt", N_SBKT))
@@ -784,9 +717,7 @@ def _append_large(
                 bkts = sorted(
                     {r[0] for r in expl_d.select("bkt").distinct().collect()}
                 )
-                base = _index_reader(
-                    spark, mount_dir, "dedup_bands", dd
-                ).where(F.col("bkt").isin(bkts))
+                base = snap.read("dedup_bands").where(F.col("bkt").isin(bkts))
                 probe = (
                     F.broadcast(keys_d)
                     if n_keys_bound <= MAX_BROADCAST_KEYS
@@ -861,8 +792,7 @@ def _append_large(
                 cand, sh, id_col, dd["threshold"]
             ).localCheckpoint(eager=True)
             return _commit(
-                spark, mount_dir, manifest, pairs, banded_d, expl_d, n_new,
-                update, on_pairs,
+                snap, pairs, banded_d, expl_d, n_new, update, on_pairs,
             )
         finally:
             expl_d.unpersist()
@@ -891,17 +821,12 @@ def stream_dedup_append(
     BATCH-KEYED directory, WRITE-IF-ABSENT — the ``on_pairs`` hook runs
     BEFORE any index update, so a batch directory with a ``_SUCCESS``
     marker always holds the batch's FULL pair set and is never
-    overwritten (a replay after a crash mid-way through the shingle
-    append would otherwise recompute only the residual ids' pairs and
-    clobber the committed file).  The index updates are id-anti-joined
-    (re-appends are no-ops), so a full replay recomputes identical pairs
-    (index untouched) or skips as an all-duplicate delta.  A crash
-    INSIDE the two index appends can leave duplicate band rows for the
-    half-written batch; their only effect is redundant candidates that
-    ``dropDuplicates`` absorbs — pair correctness is unaffected.
+    overwritten.  Each batch's index update is one manifest commit, so
+    a replay either recomputes identical pairs (nothing was committed)
+    or skips as an all-duplicate delta, leaving the pairs in place.
 
     Returns the started ``StreamingQuery`` (``availableNow`` trigger)."""
-    if not load_manifest(mount_dir).get("dedup"):
+    if not snapshot(spark, mount_dir).manifest.get("dedup"):
         # fail synchronously, not inside the Nth micro-batch
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
 
@@ -952,9 +877,11 @@ def dedup_embed_append(
     from simsearch_spark.functions.measures import cosine_similarity
     from simsearch_spark.mount.artifacts import load_centroid_map
     from simsearch_spark.mount.maintain import _assign_cells, _drop_existing_ids
+    from simsearch_spark.mount.serve import read_codes
 
-    cmap = load_centroid_map(spark, mount_dir)
-    delta = _drop_existing_ids(spark, mount_dir, emb_delta, id_col)
+    snap = snapshot(spark, mount_dir)
+    cmap = load_centroid_map(spark, snap)
+    delta = _drop_existing_ids(snap, emb_delta, id_col)
     delta = _assign_cells(delta, id_col, vec_col, cmap).select(
         F.col(id_col), F.col(vec_col), F.col("__cell").alias("cell")
     ).localCheckpoint(eager=True)
@@ -965,18 +892,11 @@ def dedup_embed_append(
             f"id_b {dict(emb_delta.dtypes)[id_col]}, cos_sim double"
         )
 
-    codes_path = os.path.join(mount_dir, "pq_codes")
     base_ids = (
-        spark.read.parquet(codes_path)
+        read_codes(spark, snap)
         .where(F.col("cell").isin(cells))
         .select(F.col("vec_id").alias(id_col), "cell")
     )
-    tomb_path = os.path.join(mount_dir, "tombstones")
-    if os.path.isdir(tomb_path):
-        tomb = spark.read.parquet(tomb_path).select(
-            F.col("vec_id").alias(id_col)
-        ).distinct()
-        base_ids = base_ids.join(F.broadcast(tomb), id_col, "left_anti")
     base_side = base_ids.join(
         emb_base.select(F.col(id_col), F.col(vec_col)), id_col
     ).select(

@@ -20,20 +20,19 @@ deleted documents' mass — matching the reference, whose delete removes
 rows from SERVING but does not re-derive global statistics until the next
 mount; a compaction remount is the honest path to reclaiming them.
 
-Publication follows the two rules of ``mount/lock.py`` and no others.
-Single-artifact rewrites (the compactions, ``append_rows``' text
-statistics) land in ``<name>__tmp`` and replace the live directory by
-the rename-aside swap (``lock._swap_dirs``), never overwriting in place
-a table the new plan is reading.  Rebalance (r14) publishes a new
-generation: ``split_cell`` halves an IVF cell that drifting appends
-grew past the skew budget; ``merge_cells`` folds dust cells (shrunk by
-deletes + compaction, or fully emptied) into their nearest sibling.
-Both reconstruct only the affected rows from their PQ codes, re-encode
-against the new centroid with the unchanged shared codebooks, and write
-the new centroids, cells and manifest into ``lock.next_generation`` —
-atomic to lock-free readers, O(hot/dust rows) data movement, every
-untouched file a hardlink of the old generation's.  Every manifest
-write goes through ``artifacts.save_manifest``.
+Publication follows the one rule of ``mount/lock.py``: every op reads
+one snapshot, writes new version directories, and commits the manifest
+(``artifacts.save_manifest``).  Appends and deletes add one directory to
+their artifact; the compactions and ``append_rows``' text statistics
+replace the artifact's list.  Rebalance (r14): ``split_cell`` halves an
+IVF cell that drifting appends grew past the skew budget;
+``merge_cells`` folds dust cells (shrunk by deletes + compaction, or
+fully emptied) into their nearest sibling.  Both reconstruct only the
+affected rows from their PQ codes, re-encode against the new centroid
+with the unchanged shared codebooks, append them as a new codes version
+and retire the old cells' partitions from the manifest's list
+(``Snapshot.drop_partitions``) — O(hot/dust rows) data movement, every
+untouched file the same file.
 """
 
 from __future__ import annotations
@@ -44,21 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simsearch_spark.mount.artifacts import (
+    _snap,
     encode_residual_codes,
     load_centroid_map,
     load_codebooks,
-    load_manifest,
-    save_manifest,
+    snapshot,
 )
-from simsearch_spark.mount.lock import (
-    _swap_dirs,
-    locked,
-    mount_state_token,
-    mount_write_lock,
-    next_generation,
-    parquet_census,
-    snapshot_read,
-)
+from simsearch_spark.mount.lock import locked, mount_write_lock
 from simsearch_spark.operators.kmeans import nearest_center, probe_cells
 
 __all__ = [
@@ -92,41 +83,39 @@ COMPACT_FILES_PER_CELL = 16
 
 def maintenance_stats(spark: SparkSession, mount_dir: str) -> dict:
     """Bounded maintenance counters: live/tombstoned row counts from the
-    manifest + one tombstone count, and the parquet file census of the
-    codes table (os.walk — no Spark job)."""
-    manifest = load_manifest(mount_dir)
+    manifest + one tombstone count, and the parquet file counts per
+    partition directory of the live versions (os.walk — no Spark job)."""
+    snap = snapshot(spark, mount_dir)
+    manifest = snap.manifest
     # a dedup-only mount (mount_dedup on a fresh directory) has no vector
     # artifacts — report zero vectors instead of a bare KeyError
     n_vectors = int(manifest.get("counts", {}).get("n_vectors", 0))
-    tomb_path = os.path.join(mount_dir, "tombstones")
     n_tomb = (
-        int(spark.read.parquet(tomb_path).select("vec_id").distinct().count())
-        if os.path.isdir(tomb_path)
+        int(snap.read("tombstones").select("vec_id").distinct().count())
+        if snap.has("tombstones")
         else 0
     )
-    codes_path = os.path.join(mount_dir, "pq_codes")
-    per_cell: dict[str, int] = {}
-    for root, _dirs, files in os.walk(codes_path):
-        n = sum(1 for f in files if f.endswith(".parquet"))
-        if n and os.path.basename(root).startswith("cell="):
-            per_cell[os.path.basename(root)] = n
+    per_cell = {
+        k: n for k, n in snap.file_counts("pq_codes").items()
+        if k.startswith("cell=")
+    }
     # the dedup artifacts fragment the same way (every append adds one
-    # file per touched band/shingle directory) — census them too (r13)
-    max_dedup = 0
-    for art in ("dedup_bands", "dedup_shingles"):
-        p = os.path.join(mount_dir, art)
-        for root, _dirs, files in os.walk(p):
-            n = sum(1 for f in files if f.endswith(".parquet"))
-            if n > max_dedup:
-                max_dedup = n
+    # file per touched band/shingle directory) — count them too (r13)
+    max_dedup = max(
+        (
+            n
+            for art in ("dedup_bands", "dedup_shingles")
+            for n in snap.file_counts(art).values()
+        ),
+        default=0,
+    )
     # dedup tombstones (delete_docs, r14) accumulate dead rows every
     # probe re-subtracts — same budget mechanics as the vector side
-    dt_path = os.path.join(mount_dir, "dedup_tombstones")
     dd = manifest.get("dedup") or {}
     n_dtomb = 0
-    if os.path.isdir(dt_path) and dd:
+    if snap.has("dedup_tombstones") and dd:
         n_dtomb = int(
-            spark.read.parquet(dt_path).select(dd["id_col"]).distinct().count()
+            snap.read("dedup_tombstones").select(dd["id_col"]).distinct().count()
         )
     n_docs_dd = int(dd.get("n_docs", 0))
     return {
@@ -152,12 +141,6 @@ def should_compact(spark: SparkSession, mount_dir: str) -> bool:
         or s["max_files_per_cell"] > COMPACT_FILES_PER_CELL
         or s["max_files_per_dedup_dir"] > COMPACT_FILES_PER_CELL
     )
-
-
-def _swap_in(df: DataFrame, path: str) -> None:
-    tmp = path + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    _swap_dirs(tmp, path)
 
 
 def _check_cells_known(
@@ -198,20 +181,16 @@ def _assign_cells(
     return emb.withColumn("__cell", nearest_center(F.col(vec_col), cmap)["id"])
 
 
-def _drop_existing_ids(
-    spark: SparkSession, mount_dir: str, delta: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join a delta against the ids already in the codes table, so a
-    re-submitted row can never land twice (duplicate code rows would be
-    returned twice in ADC candidates).  Reads ONLY the id column of the
-    codes parquet (column-pruned scan) and broadcasts nothing — the codes
-    side is the big side, so the delta probes it as a left-anti join."""
-    codes_path = os.path.join(mount_dir, "pq_codes")
-    if not os.path.isdir(codes_path):
+def _drop_existing_ids(snap, delta: DataFrame, id_col: str) -> DataFrame:
+    """Anti-join a delta against the ids already in ``snap``'s codes
+    table, so a re-submitted row can never land twice (duplicate code
+    rows would be returned twice in ADC candidates).  Reads ONLY the id
+    column of the codes parquet (column-pruned scan) and broadcasts
+    nothing — the codes side is the big side, so the delta probes it as
+    a left-anti join."""
+    if not snap.has("pq_codes"):
         return delta
-    existing = spark.read.parquet(codes_path).select(
-        F.col("vec_id").alias(id_col)
-    )
+    existing = snap.read("pq_codes").select(F.col("vec_id").alias(id_col))
     return delta.join(existing, id_col, "left_anti")
 
 
@@ -233,19 +212,19 @@ def append_rows(
     exists in the codes table — re-submitting a delta is then a no-op
     instead of creating duplicate code rows (ADVICE r11).  Disjoint-id
     appends are unaffected."""
-    manifest = load_manifest(mount_dir)
+    snap = snapshot(spark, mount_dir)
+    manifest = snap.manifest
 
     if emb_delta is not None:
-        cmap = load_centroid_map(spark, mount_dir)
-        books = load_codebooks(spark, mount_dir)
+        cmap = load_centroid_map(spark, snap)
+        books = load_codebooks(spark, snap)
         # a TOMBSTONED id still occupies its code row until compaction,
         # so the dedup anti-join below would silently drop a re-insert —
         # and accepting it would leave two rows for one id.  Fail loudly:
         # the id lifecycle is insert → delete → compact_codes → reusable
         # (review r12; one broadcast count, only when tombstones exist)
-        tomb_path = os.path.join(mount_dir, "tombstones")
-        if os.path.isdir(tomb_path):
-            tomb = spark.read.parquet(tomb_path).select("vec_id").distinct()
+        if snap.has("tombstones"):
+            tomb = snap.read("tombstones").select("vec_id").distinct()
             n_dead = (
                 emb_delta.select(F.col(id_col).alias("vec_id"))
                 .join(F.broadcast(tomb), "vec_id")
@@ -258,10 +237,7 @@ def append_rows(
                     "it (insert -> delete -> compact -> reusable)"
                 )
         if dedup_ids:
-            emb_delta = _drop_existing_ids(spark, mount_dir, emb_delta, id_col)
-        # count BEFORE the append — the anti-join plan reads the codes
-        # parquet, so evaluating it after the write would see (and drop)
-        # the rows this call just appended
+            emb_delta = _drop_existing_ids(snap, emb_delta, id_col)
         n_new = int(emb_delta.count())
         if n_new > 0:  # a fully-duplicate delta dedupes to empty: no-op
             if cell_col in emb_delta.columns:
@@ -273,9 +249,7 @@ def append_rows(
                     "__cell",
                 )
             codes = encode_residual_codes(delta, id_col, vec_col, cell, cmap, books)
-            codes.write.mode("append").partitionBy("cell").parquet(
-                os.path.join(mount_dir, "pq_codes")
-            )
+            snap.write(codes, "pq_codes", partition_by=["cell"], append=True)
         manifest["counts"]["n_vectors"] += n_new
 
     if docs_delta is not None:
@@ -288,10 +262,10 @@ def append_rows(
 
         # BM25: integer-exact merges (df sums, doc count, Σdl; avgdl is the
         # exact integer Σdl over the exact count — identical to F.avg over
-        # the union because integer doubles below 2^53 sum exactly)
-        p_df = os.path.join(mount_dir, "bm25_df")
+        # the union because integer doubles below 2^53 sum exactly); each
+        # merged table is a rewrite: a new version replaces the list
         merged_df = (
-            spark.read.parquet(p_df)
+            snap.read("bm25_df")
             .unionByName(
                 tdocs.select(
                     "doc_id", F.explode(F.array_distinct("toks")).alias("term")
@@ -302,58 +276,55 @@ def append_rows(
             .groupBy("term")
             .agg(F.sum("df").alias("df"))
         )
-        _swap_in(merged_df, p_df)
+        snap.write(merged_df, "bm25_df")
 
-        p_g = os.path.join(mount_dir, "bm25_global")
-        g = spark.read.parquet(p_g).first()
+        g = snap.read("bm25_global").first()
         d = tdocs.agg(
             F.count(F.lit(1)).alias("n"), F.sum(F.size("toks").cast("long")).alias("s")
         ).first()
         n_docs = int(g["n_docs"]) + int(d["n"] or 0)
         sum_dl = int(g["sum_dl"]) + int(d["s"] or 0)
-        _swap_in(
+        snap.write(
             spark.createDataFrame(
                 [(n_docs, (sum_dl / n_docs) if n_docs else 0.0, sum_dl)],
                 "n_docs long, avgdl double, sum_dl long",
             ),
-            p_g,
+            "bm25_global",
         )
 
         # LM: bigram/context count sums; vocab re-derived from the merged
         # distinct token set (countDistinct is not mergeable from counts)
         bgc = lm_doc_bigrams(docs).persist()
         try:
-            p_cb = os.path.join(mount_dir, "lm_bigrams")
-            _swap_in(
-                spark.read.parquet(p_cb)
+            snap.write(
+                snap.read("lm_bigrams")
                 .unionByName(bgc.groupBy("ngram").agg(F.sum("m").alias("cb")))
                 .groupBy("ngram")
                 .agg(F.sum("cb").alias("cb")),
-                p_cb,
+                "lm_bigrams",
             )
-            p_cu = os.path.join(mount_dir, "lm_ctx")
-            _swap_in(
-                spark.read.parquet(p_cu)
+            snap.write(
+                snap.read("lm_ctx")
                 .unionByName(bgc.groupBy("ctx").agg(F.sum("m").alias("cu")))
                 .groupBy("ctx")
                 .agg(F.sum("cu").alias("cu")),
-                p_cu,
+                "lm_ctx",
             )
         finally:
             bgc.unpersist()
-        p_tok = os.path.join(mount_dir, "lm_tokens")
-        merged_tokens = (
-            spark.read.parquet(p_tok)
+        snap.write(
+            snap.read("lm_tokens")
             .unionByName(docs.select(F.explode(toks).alias("tok")))
-            .distinct()
+            .distinct(),
+            "lm_tokens",
         )
-        _swap_in(merged_tokens, p_tok)
-        _swap_in(
-            spark.read.parquet(p_tok).agg(F.count(F.lit(1)).alias("v")),
-            os.path.join(mount_dir, "lm_vocab"),
+        # read-your-writes: the count reads the merged token set
+        snap.write(
+            snap.read("lm_tokens").agg(F.count(F.lit(1)).alias("v")),
+            "lm_vocab",
         )
 
-    save_manifest(mount_dir, manifest)
+    snap.commit()
     return manifest
 
 
@@ -365,174 +336,132 @@ def delete_ids(spark: SparkSession, mount_dir: str, vec_ids: list[int]) -> None:
     reference's delete semantics).  A deleted id is NOT reusable until
     compaction (``append_rows`` rejects it loudly) — the id lifecycle is
     insert → delete → compact → reusable."""
-    load_manifest(mount_dir)  # validate it IS a mount before writing into it
-    spark.createDataFrame(
-        [(int(i),) for i in vec_ids], "vec_id long"
-    ).write.mode("append").parquet(os.path.join(mount_dir, "tombstones"))
-
-
-def _clear_tombstone_files(tomb_path: str, files: frozenset) -> None:
-    """Remove exactly the tombstone files the compaction consumed; a
-    delete that landed mid-compaction (lock bypass) keeps its file — its
-    rows stay excluded at read time and are reclaimed by the NEXT
-    compaction, instead of being resurrected by a blanket rmtree.  The
-    directory itself is removed with ``os.rmdir`` — atomic on emptiness
-    — never a census-then-rmtree, whose window would destroy a late
-    tombstone all the same (review r14)."""
-    for f in files:
-        fp = os.path.join(tomb_path, f)
-        for victim in (
-            fp,
-            os.path.join(
-                os.path.dirname(fp), "." + os.path.basename(fp) + ".crc"
-            ),
-        ):
-            try:
-                os.unlink(victim)
-            except FileNotFoundError:
-                pass
-    for marker in ("_SUCCESS", "._SUCCESS.crc"):
-        try:
-            os.unlink(os.path.join(tomb_path, marker))
-        except FileNotFoundError:
-            pass
-    try:
-        os.rmdir(tomb_path)  # succeeds only if truly empty
-    except OSError:
-        pass  # a late tombstone (or its write debris) landed — keep it
+    snap = snapshot(spark, mount_dir)  # validates it IS a mount
+    snap.write(
+        spark.createDataFrame([(int(i),) for i in vec_ids], "vec_id long"),
+        "tombstones",
+        append=True,
+    )
+    snap.commit()
 
 
 @locked("compact_codes")
 def compact_codes(spark: SparkSession, mount_dir: str) -> int:
     """Reclaim tombstoned rows: rewrite the codes table minus the
-    tombstone set (write-new-then-swap, still ``partitionBy(cell)``) and
-    clear the tombstones.  Served results are unchanged by construction
-    (``read_codes`` subtracted the set already) — compaction only stops
-    every future scan from re-paying the anti-join and the dead bytes.
-    Runs under the mount write lock with a snapshot fence (mount/lock.py):
-    the rewrite reads an explicit file-list snapshot and refuses the swap
-    if the census changed underneath it.  Returns the number of rows
-    reclaimed."""
-    manifest = load_manifest(mount_dir)
-    tomb_path = os.path.join(mount_dir, "tombstones")
-    tomb_files0 = (
-        parquet_census(tomb_path) if os.path.isdir(tomb_path) else frozenset()
-    )
-    has_tombstones = bool(tomb_files0)
-    if not has_tombstones:
-        # no dead rows — rewrite only if append debris fragmented the
-        # table (file compaction is the trigger's other budget, r12)
-        if maintenance_stats(spark, mount_dir)["max_files_per_cell"] <= 1:
-            return 0
-    codes_path = os.path.join(mount_dir, "pq_codes")
-    files0 = parquet_census(codes_path)
-    codes = snapshot_read(spark, codes_path, files0)
+    tombstone set as ONE new version (still ``partitionBy(cell)``) and
+    stop naming the tombstones.  Served results are unchanged by
+    construction (``read_codes`` subtracted the set already) —
+    compaction only stops every future scan from re-paying the anti-join
+    and the dead bytes, and bounds the list of live directories appends
+    grow.  Runs under the mount write lock; its commit is fenced
+    (mount/lock.py), so a lock-bypassing writer aborts it instead of
+    losing rows.  Returns the number of rows reclaimed."""
+    snap = snapshot(spark, mount_dir)
+    has_tombstones = snap.has("tombstones")
+    if (
+        not has_tombstones
+        and max(snap.file_counts("pq_codes").values(), default=0) <= 1
+        and len(snap.paths("pq_codes")) <= 1
+    ):
+        # no dead rows and no append debris (file compaction is the
+        # trigger's other budget, r12): nothing to rewrite
+        return 0
+    codes = snap.read("pq_codes")
     if has_tombstones:
-        tomb = (
-            snapshot_read(spark, tomb_path, tomb_files0)
-            .select("vec_id")
-            .distinct()
-        )
+        tomb = snap.read("tombstones").select("vec_id").distinct()
         live = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
     else:
         live = codes
     before = int(codes.count())
-    tmp = codes_path + "__tmp"
     # repartition ON the partition column: compaction also collapses the
     # file debris many small appends left behind (one file per cell —
     # a petabyte deployment would repartition(n, "cell") to keep
     # intra-cell parallelism; the trigger is COMPACT_FILES_PER_CELL)
-    live.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    _swap_dirs(tmp, codes_path, files0, "compact_codes")  # fenced
-    after = int(spark.read.parquet(codes_path).count())
-    if has_tombstones:
-        _clear_tombstone_files(tomb_path, tomb_files0)
-    manifest["counts"]["n_vectors"] = after
-    save_manifest(mount_dir, manifest)
+    snap.write(live.repartition("cell"), "pq_codes", partition_by=["cell"])
+    after = int(snap.read("pq_codes").count())
+    snap.drop("tombstones")
+    snap.manifest["counts"]["n_vectors"] = after
+    snap.commit()
     return before - after
 
 
 @locked("compact_dedup")
 def compact_dedup(spark: SparkSession, mount_dir: str) -> int:
     """Collapse the dedup index's append debris (r13) and reclaim
-    tombstoned documents (r14): every ``dedup_append`` adds one parquet
-    file per touched band/shingle directory, so at production cadence
-    the per-directory file count — and with it the probe's footer-open
-    cost — grows linearly in appends; ``delete_docs`` tombstones
-    additionally leave dead band/shingle rows every probe re-subtracts.
-    Rewrite both artifacts write-new-then-swap with the MOUNT-time
-    layout (one file per directory, rows sorted so point predicates skip
-    row groups) MINUS the tombstoned ids, then clear the tombstones and
-    refresh the manifest doc count.  Served results are unchanged by
-    construction (the pair streams subtracted the set already) —
-    compaction only stops future probes from re-paying the anti-filter
-    and the dead bytes, and makes deleted ids reusable.  Returns the
-    number of parquet files reclaimed; 0 when neither artifact is
-    fragmented and nothing is tombstoned.
+    tombstoned documents (r14): every ``dedup_append`` adds one version
+    with one parquet file per touched band/shingle directory, so at
+    production cadence the per-directory file count — and with it the
+    probe's footer-open cost — grows linearly in appends;
+    ``delete_docs`` tombstones additionally leave dead band/shingle rows
+    every probe re-subtracts.  Rewrite each fragmented artifact as ONE
+    new version with the MOUNT-time layout (one file per directory, rows
+    sorted so point predicates skip row groups) MINUS the tombstoned
+    ids, stop naming the tombstones and refresh the manifest doc count.
+    Served results are unchanged by construction (the pair streams
+    subtracted the set already) — compaction only stops future probes
+    from re-paying the anti-filter and the dead bytes, and makes deleted
+    ids reusable.  Returns the number of parquet files reclaimed; 0 when
+    neither artifact is fragmented and nothing is tombstoned.
 
-    Runs under the mount write lock; each rewrite reads an explicit
-    file-list snapshot and fences the swap (mount/lock.py), so an
-    append racing a lock-bypassing compaction aborts the compaction
-    instead of silently losing the appended rows."""
-    manifest = load_manifest(mount_dir)
+    Runs under the mount write lock; its commit is fenced
+    (mount/lock.py), so an append racing a lock-bypassing compaction
+    aborts the compaction instead of silently losing the appended
+    rows."""
+    snap = snapshot(spark, mount_dir)
+    manifest = snap.manifest
     if not manifest.get("dedup"):
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col = manifest["dedup"]["id_col"]
-    tomb_path = os.path.join(mount_dir, "dedup_tombstones")
-    tomb_files0 = (
-        parquet_census(tomb_path) if os.path.isdir(tomb_path) else frozenset()
-    )
-    has_tombstones = bool(tomb_files0)
+    has_tombstones = snap.has("dedup_tombstones")
     tomb = (
-        snapshot_read(spark, tomb_path, tomb_files0).select(id_col).distinct()
+        snap.read("dedup_tombstones").select(id_col).distinct()
         if has_tombstones
         else None
     )
 
     reclaimed = 0
-    bands_path = os.path.join(mount_dir, "dedup_bands")
-    sh_path = os.path.join(mount_dir, "dedup_shingles")
+    rewrote = False
     plans = [
-        (bands_path, ["band_idx", "bkt"], "band_hash"),
-        (sh_path, ["sbkt"], id_col),
+        ("dedup_bands", ["band_idx", "bkt"], "band_hash"),
+        ("dedup_shingles", ["sbkt"], id_col),
     ]
-    for path, part_cols, sort_col in plans:
-        files0 = parquet_census(path)
-        before = len(files0)
-        n_dirs = len({os.path.dirname(f) for f in files0})
-        if before <= n_dirs and not has_tombstones:
-            continue  # already one file per directory, no dead rows
-        live = snapshot_read(spark, path, files0)
+    for name, part_cols, sort_col in plans:
+        counts = snap.file_counts(name)
+        before = sum(counts.values())
+        if (
+            before <= len(counts)
+            and len(snap.paths(name)) <= 1
+            and not has_tombstones
+        ):
+            continue  # one version, one file per directory, no dead rows
+        live = snap.read(name)
         if tomb is not None:
             live = live.join(F.broadcast(tomb), id_col, "left_anti")
-        # collapse duplicate rows (r14): a dedup_append retried after a
-        # bands-success/shingles-fail crash re-appends its band rows; the
-        # duplicates are pair-stream-invisible (pairs dedupe) but can
-        # inflate hot-bucket ROW counts past the cap — compaction is
-        # where they heal.  One row per doc in the shingle table; full-
-        # row distinct for bands (rows are value-identical per key).
+        # collapse duplicate rows (r14): a delta carrying one id twice
+        # appends its band rows twice; the duplicates are
+        # pair-stream-invisible (pairs dedupe) but can inflate hot-bucket
+        # ROW counts past the cap — compaction is where they heal.  One
+        # row per doc in the shingle table; full-row distinct for bands
+        # (rows are value-identical per key).
         live = (
             live.dropDuplicates([id_col])
-            if path == sh_path
+            if name == "dedup_shingles"
             else live.dropDuplicates()
         )
-        tmp = path + "__tmp"
-        (
-            live.repartition(*part_cols)
-            .sortWithinPartitions(sort_col)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp)
+        snap.write(
+            live.repartition(*part_cols).sortWithinPartitions(sort_col),
+            name,
+            partition_by=part_cols,
         )
-        _swap_dirs(tmp, path, files0, "compact_dedup")  # fenced
-        reclaimed += before - len(parquet_census(path))
+        reclaimed += before - sum(snap.file_counts(name).values())
+        rewrote = True
     if has_tombstones:
         # the shingle table holds exactly one row per live doc — refresh
-        # the manifest count from it, then clear the tombstone horizon
-        # (only the files THIS compaction consumed)
-        manifest["dedup"]["n_docs"] = int(spark.read.parquet(sh_path).count())
-        _clear_tombstone_files(tomb_path, tomb_files0)
-        save_manifest(mount_dir, manifest)
+        # the manifest count from it, then stop naming the tombstones
+        manifest["dedup"]["n_docs"] = int(snap.read("dedup_shingles").count())
+        snap.drop("dedup_tombstones")
+    if rewrote:
+        snap.commit()
     return reclaimed
 
 
@@ -547,16 +476,14 @@ SPLIT_SKEW_FACTOR = 4.0
 SPLIT_MIN_ROWS = 256
 
 
-def cell_sizes(spark: SparkSession, mount_dir: str) -> dict[int, int]:
+def cell_sizes(spark: SparkSession, mount_dir) -> dict[int, int]:
     """Per-cell row counts of the codes table — one column-pruned scan
     over the partition column only (the footers carry the counts; no
-    data pages are read)."""
-    path = os.path.join(mount_dir, "pq_codes")
-    if not os.path.isdir(path):
+    data pages are read).  ``mount_dir`` may be a ``Snapshot``."""
+    snap = _snap(spark, mount_dir)
+    if not snap.has("pq_codes"):
         return {}
-    rows = (
-        spark.read.parquet(path).groupBy("cell").count().collect()
-    )
+    rows = snap.read("pq_codes").groupBy("cell").count().collect()
     return {int(r["cell"]): int(r["count"]) for r in rows}
 
 
@@ -634,9 +561,10 @@ def split_cell(
     mount's vector store — originals are not retained), 2-means-split
     with the deterministic lowest-id seeding the trainers use
     (``operators/kmeans.py``), re-encoded as residuals against their
-    child centroid with the UNCHANGED shared codebooks, and published as
-    a new generation (``lock.next_generation``), so lock-free readers
-    see the old generation or the new one, never a half-split cell.
+    child centroid with the UNCHANGED shared codebooks, appended as a new
+    codes version while the hot cell's partitions leave the manifest's
+    list — one commit, so lock-free readers see the old cell or its
+    children, never a half-split cell.
     Re-quantizing reconstructions adds at most one quantization step of
     error to the split cell's ADC distances; the exact rescore stage
     (serve-side) is unaffected.
@@ -648,7 +576,8 @@ def split_cell(
     # _sizes: precomputed cell counts, valid ONLY while the caller holds
     # the mount write lock for the whole decision+repair (auto_maintain's
     # sweep) - review r14, one universe scan per sweep instead of four
-    sizes = _sizes if _sizes is not None else cell_sizes(spark, mount_dir)
+    snap = snapshot(spark, mount_dir)
+    sizes = _sizes if _sizes is not None else cell_sizes(spark, snap)
     if cell_id is None:
         cell_id = _pick_hot(sizes, factor, min_rows)
         if cell_id is None:
@@ -658,10 +587,9 @@ def split_cell(
     if parts < 2:
         raise ValueError("split_cell: parts must be >= 2")
 
-    tok0 = mount_state_token(mount_dir)
-    manifest = load_manifest(mount_dir)
-    cmap = load_centroid_map(spark, mount_dir)
-    books = load_codebooks(spark, mount_dir)
+    manifest = snap.manifest
+    cmap = load_centroid_map(spark, snap)
+    books = load_codebooks(spark, snap)
     if cell_id not in cmap:
         raise ValueError(f"split_cell: cell {cell_id} has no centroid")
 
@@ -670,9 +598,8 @@ def split_cell(
         assign_clusters,
     )
 
-    codes_path = os.path.join(mount_dir, "pq_codes")
     hot = (
-        spark.read.parquet(codes_path)
+        snap.read("pq_codes")
         .where(F.col("cell") == int(cell_id))
         .select(
             "vec_id",
@@ -744,20 +671,16 @@ def split_cell(
         )
         if "n_cells" in manifest.get("params", {}):
             manifest["params"]["n_cells"] += parts - 1
-        with next_generation(
-            mount_dir, "split_cell", tok0,
-            rewrite={
-                "ivf_centroids",
-                os.path.join("pq_codes", f"cell={int(cell_id)}"),
-            },
-        ) as nxt:
-            spark.createDataFrame(
-                new_cents, "cluster_id int, centroid array<double>"
-            ).write.mode("overwrite").parquet(os.path.join(nxt, "ivf_centroids"))
-            recoded.repartition("cell").write.mode("append").partitionBy(
-                "cell"
-            ).parquet(os.path.join(nxt, "pq_codes"))
-            save_manifest(nxt, manifest)
+        snap.write(
+            spark.createDataFrame(new_cents, "cluster_id int, centroid array<double>"),
+            "ivf_centroids",
+        )
+        snap.drop_partitions("pq_codes", "cell", [int(cell_id)])
+        snap.write(
+            recoded.repartition("cell"), "pq_codes", partition_by=["cell"],
+            append=True,
+        )
+        snap.commit()
     finally:
         hot.unpersist()
     return {
@@ -785,8 +708,9 @@ def _cell_universe(
     rows were all deleted and compacted away has no codes partition but
     still occupies a probe slot (review r14: the exact waste the merge
     policy exists to reclaim, so it must be visible to it)."""
-    cmap = load_centroid_map(spark, mount_dir)
-    counted = cell_sizes(spark, mount_dir)
+    snap = _snap(spark, mount_dir)
+    cmap = load_centroid_map(spark, snap)
+    counted = cell_sizes(spark, snap)
     return {c: counted.get(c, 0) for c in cmap}, cmap
 
 
@@ -837,12 +761,12 @@ def merge_cells(
     position — standard IVF merge: decode correctness needs only that
     rows are encoded against the centroid their cell names, not that
     the centroid is the cell's exact mean).  Published exactly like
-    ``split_cell``, as a new generation (``lock.next_generation``); the
-    dust cell ids are retired."""
+    ``split_cell``, by one commit; the dust cell ids are retired."""
     # _universe: precomputed (sizes, cmap), valid ONLY under the
     # caller's held write lock (see split_cell)
+    snap = snapshot(spark, mount_dir)
     sizes, cmap = (
-        _universe if _universe is not None else _cell_universe(spark, mount_dir)
+        _universe if _universe is not None else _cell_universe(spark, snap)
     )
     if cell_ids is None:
         cell_ids = _pick_dust(sizes, factor)
@@ -858,9 +782,8 @@ def merge_cells(
             f"{MERGE_MAX_PER_SWEEP} (plan-size bound); call again for the rest"
         )
 
-    tok0 = mount_state_token(mount_dir)
-    manifest = load_manifest(mount_dir)
-    books = load_codebooks(spark, mount_dir)
+    manifest = snap.manifest
+    books = load_codebooks(spark, snap)
     survivors = {c: v for c, v in cmap.items() if c not in set(cell_ids)}
     if not survivors:
         return {"merged": False, "reason": "no surviving cell to merge into"}
@@ -869,10 +792,7 @@ def merge_cells(
     # bounded centroid set, by the probe routing rule itself
     target_of = {c: probe_cells(survivors, cmap[c], 1)[0] for c in cell_ids}
 
-    codes_path = os.path.join(mount_dir, "pq_codes")
-    dust = spark.read.parquet(codes_path).where(
-        F.col("cell").isin(cell_ids)
-    )
+    dust = snap.read("pq_codes").where(F.col("cell").isin(cell_ids))
     # per-cell decode (each dust cell reconstructs with ITS centroid),
     # then the target id — both bounded when-chains over the dust set
     recon = None
@@ -910,20 +830,20 @@ def merge_cells(
     )
     if "n_cells" in manifest.get("params", {}):
         manifest["params"]["n_cells"] -= len(cell_ids)
-    with next_generation(
-        mount_dir, "merge_cells", tok0,
-        rewrite={"ivf_centroids"}
-        | {os.path.join("pq_codes", f"cell={c}") for c in cell_ids},
-    ) as nxt:
+    snap.write(
         spark.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in sorted(survivors.items())],
             "cluster_id int, centroid array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(nxt, "ivf_centroids"))
-        if recoded is not None:
-            recoded.repartition("cell").write.mode("append").partitionBy(
-                "cell"
-            ).parquet(os.path.join(nxt, "pq_codes"))
-        save_manifest(nxt, manifest)
+        ),
+        "ivf_centroids",
+    )
+    snap.drop_partitions("pq_codes", "cell", cell_ids)
+    if recoded is not None:
+        snap.write(
+            recoded.repartition("cell"), "pq_codes", partition_by=["cell"],
+            append=True,
+        )
+    snap.commit()
     return {
         "merged": True,
         "cells": cell_ids,
@@ -947,17 +867,18 @@ def stream_append_codes(
     Structured-Streaming dual of ``append_rows``.
 
     The artifacts load ONCE at query start and are REVALIDATED per batch
-    by one O(files) census of the centroid artifact — a ``split_cell`` /
+    against the manifest's centroid version — a ``split_cell`` /
     ``merge_cells`` / ``refresh`` between micro-batches retires or
     retrains centroid ids, and encoding with the stream-start map would
     write rows into a cell no reader probes; the reload itself only
-    happens when the census changes.  Each micro-batch assigns/encodes
+    happens when the version changes.  Each micro-batch assigns/encodes
     with the same codegen expressions as the batch path and appends its
     partitioned code rows.  Because encoding is
     a pure row-local function of the frozen artifacts, the final codes
     table is IDENTICAL for any micro-batch split of any arrival order
     (pinned in tests/test_mount.py).  The manifest count is refreshed on
-    each batch commit.
+    each batch commit; each batch adds one codes version, which
+    ``compact_codes`` folds back into one.
 
     REPLAY SAFETY (ADVICE r11): ``foreachBatch`` is at-least-once — a
     batch retried after a crash arrives again (same batch_id), and a
@@ -976,12 +897,10 @@ def stream_append_codes(
     Returns the started ``StreamingQuery``; pass ``availableNow`` triggers
     through the caller's ``writeStream`` conventions by awaiting it.
     """
-    manifest = load_manifest(mount_dir)
-    cmap = load_centroid_map(spark, mount_dir)
-    books = load_codebooks(spark, mount_dir)
-    codes_path = os.path.join(mount_dir, "pq_codes")
-    cent_path = os.path.join(mount_dir, "ivf_centroids")
-    cent_tok = parquet_census(cent_path)
+    snap = snapshot(spark, mount_dir)
+    cmap = load_centroid_map(spark, snap)
+    books = load_codebooks(spark, snap)
+    cent_tok = snap.manifest["dirs"]["ivf_centroids"]
     ck_key = (
         os.path.basename(os.path.normpath(checkpoint_dir))
         if checkpoint_dir
@@ -990,21 +909,22 @@ def stream_append_codes(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal cmap, books, cent_tok
-        # each micro-batch is one critical section: a concurrent
-        # compaction between this batch's id-probe and its append would
-        # otherwise drop the appended files in its swap
+        # each micro-batch is one critical section: a compaction
+        # between this batch's id-probe and its commit would otherwise
+        # drop the appended version from its rewrite
         with mount_write_lock(mount_dir, "stream_append_codes"):
-            # revalidate the closure artifacts per batch (one O(files)
-            # census, no reload on the common path): a split_cell /
-            # merge_cells / refresh between micro-batches RETIRES or
-            # RETRAINS centroid ids — encoding this batch with the
-            # stream-start map would write rows into a cell no reader
-            # probes (silent invisibility) or decode against a centroid
-            # the rows were not encoded with
-            tok = parquet_census(cent_path)
+            snap = snapshot(spark, mount_dir)
+            # revalidate the closure artifacts per batch (a list compare,
+            # no reload on the common path): a split_cell / merge_cells /
+            # refresh between micro-batches RETIRES or RETRAINS centroid
+            # ids — encoding this batch with the stream-start map would
+            # write rows into a cell no reader probes (silent
+            # invisibility) or decode against a centroid the rows were
+            # not encoded with
+            tok = snap.manifest["dirs"]["ivf_centroids"]
             if tok != cent_tok:
-                cmap = load_centroid_map(spark, mount_dir)
-                books = load_codebooks(spark, mount_dir)
+                cmap = load_centroid_map(spark, snap)
+                books = load_codebooks(spark, snap)
                 cent_tok = tok
             if cell_col in batch_df.columns:
                 delta, cell = batch_df, cell_col
@@ -1013,8 +933,8 @@ def stream_append_codes(
                     _assign_cells(batch_df, id_col, vec_col, cmap),
                     "__cell",
                 )
-            delta = _drop_existing_ids(spark, mount_dir, delta, id_col)
-            n = int(delta.count())  # count BEFORE the append (see append_rows)
+            delta = _drop_existing_ids(snap, delta, id_col)
+            n = int(delta.count())
             if n > 0:
                 if cell == cell_col:
                     # validate AFTER the replay anti-join (review r14): a
@@ -1022,19 +942,22 @@ def stream_append_codes(
                     # dedupes to empty and must stay a no-op, not kill
                     # the stream
                     _check_cells_known(delta, cell, cmap, "stream_append_codes")
-                encode_residual_codes(
-                    delta, id_col, vec_col, cell, cmap, books
-                ).write.mode("append").partitionBy("cell").parquet(codes_path)
-            # reload the manifest INSIDE the critical section: a
-            # compaction interleaved between micro-batches rewrites the
-            # counts, and committing the stream-start closure copy would
-            # erase its reclaim (review r14)
-            m = load_manifest(mount_dir)
+                snap.write(
+                    encode_residual_codes(delta, id_col, vec_col, cell, cmap, books),
+                    "pq_codes",
+                    partition_by=["cell"],
+                    append=True,
+                )
+            # the counts come from THIS batch's snapshot: a compaction
+            # interleaved between micro-batches rewrote them, and
+            # committing the stream-start copy would erase its reclaim
+            # (review r14)
+            m = snap.manifest
             m["counts"]["n_vectors"] = (
                 int(m.get("counts", {}).get("n_vectors", 0)) + n
             )
             m.setdefault("stream_state", {})[ck_key] = int(batch_id)
-            save_manifest(mount_dir, m)
+            snap.commit()
 
     writer = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True)
     if checkpoint_dir:

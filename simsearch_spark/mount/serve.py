@@ -24,16 +24,16 @@ independent of corpus size and of training cost.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simsearch_spark.mount.artifacts import (
+    _snap,
     load_centroid_map,
     load_codebooks,
     load_pivots,
     load_profiles,
+    snapshot,
 )
 
 __all__ = [
@@ -65,15 +65,16 @@ def serve_dedup_lookup(
     ``-1`` for numeric id columns); a collision with a mounted id would
     silently read as "no duplicates" (the replay guard drops mounted
     ids), so collisions are rejected loudly — pass a fresh id if the
-    corpus legitimately uses the default."""
+    corpus legitimately uses the default.
+
+    A read like every serve: one manifest snapshot, no write lock —
+    with ``update=False`` the append body writes nothing."""
     from pyspark.sql.types import DataType
 
-    from simsearch_spark.mount.artifacts import load_manifest
     from simsearch_spark.mount.dedup import _dedup_delta, _local_frame
-    from simsearch_spark.mount.lock import mount_write_lock
 
-    manifest = load_manifest(mount_dir)
-    dd = manifest.get("dedup")
+    snap = snapshot(spark, mount_dir)
+    dd = snap.manifest.get("dedup")
     if not dd:
         raise ValueError("mount has no dedup artifacts — run mount_dedup first")
     id_col, text_col = dd["id_col"], dd["text_col"]
@@ -88,8 +89,7 @@ def serve_dedup_lookup(
         spark, [(probe_id, text)],
         DataType.fromDDL(f"{id_col} {id_dtype}, {text_col} string"),
     )
-    with mount_write_lock(mount_dir, "dedup_append"):
-        pairs, n_mounted = _dedup_delta(spark, mount_dir, delta, False, None)
+    pairs, n_mounted = _dedup_delta(spark, snap, delta, False, None)
     # the append's own idempotency probe found the probe id mounted
     if n_mounted:
         raise ValueError(
@@ -104,14 +104,15 @@ def serve_dedup_lookup(
     )
 
 
-def read_codes(spark: SparkSession, mount_dir: str) -> DataFrame:
-    """The encoded corpus minus tombstones (maintain.delete_ids).  The
+def read_codes(spark: SparkSession, mount_dir) -> DataFrame:
+    """The encoded corpus minus tombstones (maintain.delete_ids), both
+    from one snapshot (``mount_dir`` may be a ``Snapshot``).  The
     tombstone subtraction is a broadcast anti-join on the bounded delete
     set — serve plans stay scan-shaped."""
-    codes = spark.read.parquet(os.path.join(mount_dir, "pq_codes"))
-    tomb_path = os.path.join(mount_dir, "tombstones")
-    if os.path.isdir(tomb_path):
-        tomb = spark.read.parquet(tomb_path).select("vec_id").distinct()
+    snap = _snap(spark, mount_dir)
+    codes = snap.read("pq_codes")
+    if snap.has("tombstones"):
+        tomb = snap.read("tombstones").select("vec_id").distinct()
         codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
     return codes
 
@@ -142,12 +143,13 @@ def serve_ivfpq_topk(
     from simsearch_spark.operators.kmeans import _lit_vec, probe_cells
     from simsearch_spark.operators.pq import cell_adc
 
-    cmap = load_centroid_map(spark, mount_dir)
-    books = load_codebooks(spark, mount_dir)
+    snap = snapshot(spark, mount_dir)
+    cmap = load_centroid_map(spark, snap)
+    books = load_codebooks(spark, snap)
     qv = [float(x) for x in query_vec]
     probe_ids = probe_cells(cmap, qv, n_probe)
 
-    codes = read_codes(spark, mount_dir).where(F.col("cell").isin(probe_ids))
+    codes = read_codes(spark, snap).where(F.col("cell").isin(probe_ids))
     adc = cell_adc(books, cmap, qv, probe_ids, "cell")
     cand = (
         codes.select(F.col(id_col), adc.alias("adc_dist"))
@@ -205,13 +207,14 @@ def serve_ivfpq_multi_topk(
     from simsearch_spark.operators.kmeans import probe_cells
     from simsearch_spark.operators.pq import cell_luts
 
-    cmap = load_centroid_map(spark, mount_dir)
-    books = load_codebooks(spark, mount_dir)
+    snap = snapshot(spark, mount_dir)
+    cmap = load_centroid_map(spark, snap)
+    books = load_codebooks(spark, snap)
     qs = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
     probes = {qid: probe_cells(cmap, qv, n_probe) for qid, qv in qs}
     union_cells = sorted({c for ps in probes.values() for c in ps})
 
-    codes = read_codes(spark, mount_dir).where(F.col("cell").isin(union_cells))
+    codes = read_codes(spark, snap).where(F.col("cell").isin(union_cells))
     # the per-(query, cell) residual LUTs, built once driver-side — the
     # same `cell_luts` constants the literal `cell_adc` path indexes, so
     # the Arrow kernel below is float-identical to the Q-sized when-chain
@@ -347,9 +350,10 @@ def serve_pivot_knn(
     from simsearch_spark.operators.kmeans import _lit_vec
     from simsearch_spark.operators.pivot import embedding_lower_bound, query_embedding
 
-    pivots = load_pivots(spark, mount_dir)
+    snap = snapshot(spark, mount_dir)
+    pivots = load_pivots(spark, snap)
     qv = [float(x) for x in query_vec]
-    embd = spark.read.parquet(os.path.join(mount_dir, "pivot_embedded"))
+    embd = snap.read("pivot_embedded")
     with_lb = embd.withColumn(
         "lb", embedding_lower_bound(len(pivots), query_embedding(pivots, qv))
     )
@@ -402,11 +406,12 @@ def serve_bm25_topk(
     one-pass operator counts them."""
     from simsearch_spark.operators.bm25 import bm25_idf, bm25_score_topk
 
-    g = spark.read.parquet(os.path.join(mount_dir, "bm25_global")).first()
+    snap = snapshot(spark, mount_dir)
+    g = snap.read("bm25_global").first()
     n_docs, avgdl = int(g["n_docs"]), float(g["avgdl"] or 0.0)
     terms = sorted(set(query_tokens))
     df_rows = (
-        spark.read.parquet(os.path.join(mount_dir, "bm25_df"))
+        snap.read("bm25_df")
         .where(F.col("term").isin(terms))
         .collect()
     )
@@ -441,8 +446,9 @@ def serve_lm_perplexity(
     integer pinning and all)."""
     from simsearch_spark.queries.vocab import lm_doc_bigrams, lm_score
 
+    snap = snapshot(spark, mount_dir)
     bgc = lm_doc_bigrams(docs)
-    cb = spark.read.parquet(os.path.join(mount_dir, "lm_bigrams"))
-    cu = spark.read.parquet(os.path.join(mount_dir, "lm_ctx"))
-    vocab = spark.read.parquet(os.path.join(mount_dir, "lm_vocab"))
+    cb = snap.read("lm_bigrams")
+    cu = snap.read("lm_ctx")
+    vocab = snap.read("lm_vocab")
     return lm_score(docs, bgc, cb, cu, vocab)

@@ -46,7 +46,6 @@ SLOW_TESTS: dict[str, set[str] | None] = {
         "test_compact_dedup_fence_aborts_on_bypassing_append",
         "test_compact_dedup_clean_run_after_fence_abort",
         "test_compact_racing_live_stream_loses_nothing",
-        "test_refresh_restores_crashed_swap_before_locking",
         "test_full_refresh_keeps_held_lock_file",
         "test_stream_sink_commits_fresh_manifest_counts",
         "test_refresh_fence_catches_bypassing_delete",
@@ -117,3 +116,25 @@ def spark_prop(spark):
     """Session-scoped alias for hypothesis tests (function-scoped fixtures
     trip hypothesis' health checks)."""
     return spark
+
+
+@pytest.fixture(scope="session")
+def live_files(spark):
+    """``live_files(mount_dir)``: {mount-relative path: bytes} of the
+    manifest and of every file under the directories it names — what a
+    reader can see; unnamed debris is not part of it."""
+    from simsearch_spark.mount.artifacts import snapshot
+
+    def read(mount_dir):
+        snap = snapshot(spark, mount_dir)
+        out = {"manifest.json": snap.raw}
+        for name in snap.manifest["dirs"]:
+            for top in snap.paths(name):
+                for root, _dirs, files in os.walk(top):
+                    for f in files:
+                        p = os.path.join(root, f)
+                        with open(p, "rb") as fh:
+                            out[os.path.relpath(p, mount_dir)] = fh.read()
+        return out
+
+    return read

@@ -23,6 +23,7 @@ from simsearch_spark.mount import (
     load_manifest,
     mount,
 )
+from simsearch_spark.mount.artifacts import snapshot
 from simsearch_spark.sources.registry import load_table
 
 
@@ -61,13 +62,13 @@ def test_append_rows_duplicate_ids_are_noops(spark, sf_dir, tmp_path):
     n_base = load_manifest(d)["counts"]["n_vectors"]
 
     append_rows(spark, d, emb_delta=delta)  # 150..199 overlap the base
-    codes = spark.read.parquet(f"{d}/pq_codes")
+    codes = snapshot(spark, d).read("pq_codes")
     assert codes.count() == 260  # 0..259, overlap not duplicated
     assert codes.groupBy("vec_id").count().where("count > 1").count() == 0
     assert load_manifest(d)["counts"]["n_vectors"] == n_base + 60
 
     append_rows(spark, d, emb_delta=delta)  # full re-submission: no-op
-    codes = spark.read.parquet(f"{d}/pq_codes")
+    codes = snapshot(spark, d).read("pq_codes")
     assert codes.count() == 260
     assert load_manifest(d)["counts"]["n_vectors"] == n_base + 60
 
@@ -103,13 +104,13 @@ def test_stream_append_replay_is_idempotent(spark, sf_dir, tmp_path):
 
     run_stream()
     n1 = load_manifest(d)["counts"]["n_vectors"]
-    rows1 = spark.read.parquet(f"{d}/pq_codes").count()
+    rows1 = snapshot(spark, d).read("pq_codes").count()
     assert n1 == emb.count() and rows1 == n1
 
     # wipe the checkpoint: the next run replays every batch from scratch
     shutil.rmtree(str(tmp_path / "ckpt"))
     run_stream()
     assert load_manifest(d)["counts"]["n_vectors"] == n1
-    codes = spark.read.parquet(f"{d}/pq_codes")
+    codes = snapshot(spark, d).read("pq_codes")
     assert codes.count() == rows1
     assert codes.groupBy("vec_id").count().where("count > 1").count() == 0

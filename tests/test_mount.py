@@ -189,9 +189,11 @@ def test_append_equals_union_mount(spark, sf_dir, tmp_path):
     )
 
     # the mergeable statistics merged EXACTLY (integer sums / set unions)
+    from simsearch_spark.mount.artifacts import snapshot
+
     for t in ("bm25_df", "bm25_global", "lm_bigrams", "lm_ctx", "lm_vocab"):
-        inc = _rows(spark.read.parquet(f"{m_inc}/{t}"))
-        full = _rows(spark.read.parquet(f"{m_all}/{t}"))
+        inc = _rows(snapshot(spark, m_inc).read(t))
+        full = _rows(snapshot(spark, m_all).read(t))
         assert inc == full, t
 
 
@@ -273,9 +275,9 @@ def test_compaction_reclaims_tombstones_serving_unchanged(spark, sf_dir, tmp_pat
     n0 = load_manifest(d)["counts"]["n_vectors"]
     assert compact_codes(spark, d) == len(victims)
     assert load_manifest(d)["counts"]["n_vectors"] == n0 - len(victims)
-    import os
+    from simsearch_spark.mount.artifacts import snapshot
 
-    assert not os.path.isdir(f"{d}/tombstones")
+    assert not snapshot(spark, d).has("tombstones")
     # serving is unchanged by construction; the anti-join just disappears
     compacted = _rows(
         serve_ivfpq_topk(spark, d, emb, qvec, K, n_probe=N_PROBE, rerank=RERANK)
@@ -364,8 +366,10 @@ def test_stream_append_equals_batch_append(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(180)
 
-    a = _rows(spark.read.parquet(f"{m_batch}/pq_codes"))
-    b = _rows(spark.read.parquet(f"{m_stream}/pq_codes"))
+    from simsearch_spark.mount.artifacts import snapshot
+
+    a = _rows(snapshot(spark, m_batch).read("pq_codes"))
+    b = _rows(snapshot(spark, m_stream).read("pq_codes"))
     assert a == b and len(a) == emb.count()
     assert (
         load_manifest(m_stream)["counts"]["n_vectors"]

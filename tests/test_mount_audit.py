@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from simsearch_spark.mount import append_rows, audit_drift, load_manifest, mount, refresh
+from simsearch_spark.mount.artifacts import snapshot
 
 DIM = 64
 K = 10
@@ -96,9 +97,10 @@ def test_drift_degrades_refresh_restores(spark, corpus, docs_stub, tmp_path_fact
 def test_refresh_preserves_serving_and_is_crash_safe(
     spark, corpus, docs_stub, tmp_path_factory
 ):
-    """Serving works across the swap, answers stay exact for undrifted
-    data, and a half-finished earlier refresh (__next debris) is cleaned
-    up rather than poisoning the next one."""
+    """Serving works across the refresh, answers stay exact for
+    undrifted data, and a half-finished earlier refresh (an unnamed
+    version directory) is collected rather than poisoning the next
+    one."""
     import os
 
     from simsearch_spark.mount.serve import serve_ivfpq_topk
@@ -112,11 +114,12 @@ def test_refresh_preserves_serving_and_is_crash_safe(
         tuple(r) for r in serve_ivfpq_topk(spark, d, base, qvec, K, n_probe=4, rerank=60).collect()
     )
 
-    os.makedirs(d + "__next", exist_ok=True)  # crashed-refresh debris
-    with open(d + "__next/garbage", "w") as f:
+    debris = os.path.join(d, "pq_codes", "version=crashed")  # crashed-refresh debris
+    os.makedirs(debris)
+    with open(os.path.join(debris, "garbage"), "w") as f:
         f.write("x")
     refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs_stub, dedup=False)
-    assert not os.path.isdir(d + "__next") and not os.path.isdir(d + "__old")
+    assert not os.path.isdir(debris)
 
     after = sorted(
         tuple(r) for r in serve_ivfpq_topk(spark, d, base, qvec, K, n_probe=4, rerank=60).collect()
@@ -199,15 +202,15 @@ def test_degenerate_corpus_sample_rejected(spark, corpus, docs_stub, tmp_path_fa
         audit_drift(spark, d, base, sample_n=4, k=K, corpus_sample_n=K - 1)
 
 
-def _digest_artifacts(mount_dir, names):
-    """sha256 over every byte of each named artifact directory — the
-    byte-identity pin for untouched families."""
+def _digest_artifacts(spark, mount_dir, names):
+    """sha256 over every byte of each named artifact's live directories —
+    the byte-identity pin for untouched families."""
     import hashlib
     import os
 
     h = hashlib.sha256()
-    for name in names:
-        p = os.path.join(mount_dir, name)
+    snap = snapshot(spark, mount_dir)
+    for p in (p for name in names for p in snap.paths(name)):
         for root, _dirs, files in sorted(os.walk(p)):
             for fn in sorted(files):
                 fp = os.path.join(root, fn)
@@ -236,7 +239,7 @@ def test_family_refresh_vector_only(spark, corpus, docs_stub, tmp_path_factory):
     assert drifted["recall_at_k"] <= healthy["recall_at_k"] - 0.2
 
     untouched = FAMILY_ARTIFACTS["text"] + FAMILY_ARTIFACTS["dedup"]
-    before = _digest_artifacts(d, untouched)
+    before = _digest_artifacts(spark, d, untouched)
     gen0 = load_manifest(d).get("generation", 0)
 
     man = refresh(spark, d, sf_dir="", emb_frame=union, families=["vector"])
@@ -249,7 +252,7 @@ def test_family_refresh_vector_only(spark, corpus, docs_stub, tmp_path_factory):
     assert restored["recall_at_k"] >= healthy["recall_at_k"] - 0.05
 
     # the LM/BM25/langid/dedup artifacts were never rewritten
-    assert _digest_artifacts(d, untouched) == before
+    assert _digest_artifacts(spark, d, untouched) == before
     # and the dedup mount still works end-to-end after the family swap
     extra = spark.createDataFrame(
         [(100, "document number 3 with some words")], "doc_id long, text string"
@@ -276,7 +279,7 @@ def test_family_refresh_dedup_only(spark, corpus, docs_stub, tmp_path_factory):
         )
     )
     untouched = FAMILY_ARTIFACTS["vector"] + FAMILY_ARTIFACTS["text"]
-    before = _digest_artifacts(d, untouched)
+    before = _digest_artifacts(spark, d, untouched)
     gen0 = load_manifest(d).get("generation", 0)
 
     man = refresh(spark, d, sf_dir="", docs_frame=docs2, families=["dedup"])
@@ -285,7 +288,7 @@ def test_family_refresh_dedup_only(spark, corpus, docs_stub, tmp_path_factory):
     assert dd1["n_docs"] == 21  # the current corpus, not the old one
     for key in ("n_hashes", "bands", "threshold", "seed", "shingle_n"):
         assert dd1[key] == dd0[key], key  # family carried, not reverted
-    assert _digest_artifacts(d, untouched) == before
+    assert _digest_artifacts(spark, d, untouched) == before
 
 
 def test_family_refresh_guards(spark, corpus, docs_stub, tmp_path_factory):
@@ -434,7 +437,7 @@ def test_auto_maintain_refreshes_only_drifted_family(
 
     append_rows(spark, d, emb_delta=delta.select("vec_id", "embedding"))
     untouched = FAMILY_ARTIFACTS["text"] + FAMILY_ARTIFACTS["dedup"]
-    before = _digest_artifacts(d, untouched)
+    before = _digest_artifacts(spark, d, untouched)
     gen0 = load_manifest(d).get("generation", 0)
 
     dry = auto_maintain(spark, d, emb=union, audit_kwargs=ak, dry_run=True)
@@ -445,7 +448,7 @@ def test_auto_maintain_refreshes_only_drifted_family(
     assert rep["refreshed"] == ["vector"]
     assert rep["generation"] == gen0 + 1
     assert rep["audits"]["vector"]["recall_at_k"] < 0.8  # the trigger
-    assert _digest_artifacts(d, untouched) == before  # dedup/text untouched
+    assert _digest_artifacts(spark, d, untouched) == before  # dedup/text untouched
 
     after = auto_maintain(spark, d, emb=union, audit_kwargs=ak)
     assert after["refreshed"] == []  # recovered — the loop converges
@@ -538,23 +541,24 @@ def test_auto_maintain_integrity_trigger(spark, docs_stub, tmp_path):
 
 
 def test_compact_dedup_collapses_duplicate_band_rows(spark, docs_stub, tmp_path):
-    """Review r14: duplicate band rows (the bands-success/shingles-fail
-    retry residue) are collapsed by compaction — full-row distinct."""
-    import os
-
+    """Review r14: duplicate band rows (a delta carrying an id twice)
+    are collapsed by compaction — full-row distinct."""
+    from simsearch_spark.mount import mount_write_lock
     from simsearch_spark.mount.dedup import mount_dedup
     from simsearch_spark.mount.maintain import compact_dedup
 
     d = str(tmp_path / "m_dupband")
     mount_dedup(spark, d, docs_stub)
-    bp = os.path.join(d, "dedup_bands")
-    rows = spark.read.parquet(bp)
+    snap = snapshot(spark, d)
+    rows = snap.read("dedup_bands")
     n_distinct = rows.distinct().count()
-    # simulate the retry residue: every band row appended a second time
-    rows.write.mode("append").partitionBy("band_idx", "bkt").parquet(bp)
-    assert spark.read.parquet(bp).count() == 2 * n_distinct
+    # every band row appended a second time, as a committed version
+    with mount_write_lock(d, "test"):
+        snap.write(rows, "dedup_bands", partition_by=["band_idx", "bkt"], append=True)
+        snap.commit()
+    assert snapshot(spark, d).read("dedup_bands").count() == 2 * n_distinct
     compact_dedup(spark, d)
-    after = spark.read.parquet(bp)
+    after = snapshot(spark, d).read("dedup_bands")
     assert after.count() == n_distinct == after.distinct().count()
 
 
@@ -595,10 +599,10 @@ def test_audit_text_drift_loop(spark, corpus, tmp_path):
     assert bad["coverage_ratio"] is not None and bad["coverage_ratio"] < 0.7, bad
 
     untouched = FAMILY_ARTIFACTS["vector"]
-    before = _digest_artifacts(d, untouched)
+    before = _digest_artifacts(spark, d, untouched)
     rep = auto_maintain(spark, d, docs_frame=drifted)
     assert rep["refreshed"] == ["text"]
-    assert _digest_artifacts(d, untouched) == before  # vector untouched
+    assert _digest_artifacts(spark, d, untouched) == before  # vector untouched
 
     good = audit_text(spark, d, drifted)
     assert good["coverage_ratio"] is not None and good["coverage_ratio"] >= 0.95, good

@@ -11,11 +11,13 @@ holding ACROSS the mounted boundary, and idempotent under re-submission.
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from simsearch_spark.mount.artifacts import snapshot
 from simsearch_spark.mount.dedup import dedup_append, mount_dedup
 from simsearch_spark.operators.dedup import minhash_lsh_pairs
 from simsearch_spark.queries.pipeline import MINHASH_T, N_BANDS, N_HASHES
@@ -87,12 +89,12 @@ def test_dedup_append_idempotent(spark, sf_dir, tmp_path):
     mount_dedup(spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS)
     first = _rows(dedup_append(spark, d, delta))
     n1 = load_manifest(d)["dedup"]["n_docs"]
-    bands_rows = spark.read.parquet(f"{d}/dedup_bands").count()
+    bands_rows = snapshot(spark, d).read("dedup_bands").count()
 
     again = dedup_append(spark, d, delta)
     assert again.count() == 0
     assert load_manifest(d)["dedup"]["n_docs"] == n1
-    assert spark.read.parquet(f"{d}/dedup_bands").count() == bands_rows
+    assert snapshot(spark, d).read("dedup_bands").count() == bands_rows
     assert len(first) > 0
 
 
@@ -177,7 +179,7 @@ def test_dedup_append_base_scan_is_directory_pruned(spark, sf_dir, tmp_path):
 
     spark.catalog.clearCache()
     plan = (
-        spark.read.parquet(f"{d}/dedup_bands")
+        snapshot(spark, d).read("dedup_bands")
         .where(F.col("bkt").isin([0, 1, 2]))
         ._jdf.queryExecution()
         .executedPlan()
@@ -235,7 +237,7 @@ def test_stream_dedup_append_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
     n1 = load_manifest(m_s)["dedup"]["n_docs"]
     assert n1 == load_manifest(m_one)["dedup"]["n_docs"]
-    bands_rows = spark.read.parquet(f"{m_s}/dedup_bands").count()
+    bands_rows = snapshot(spark, m_s).read("dedup_bands").count()
 
     # full replay: wipe the checkpoint, stream the same source again
     shutil.rmtree(str(tmp_path / "ckpt"))
@@ -248,7 +250,7 @@ def test_stream_dedup_append_equals_batch(spark, sf_dir, tmp_path):
     )
     assert got2 == want
     assert load_manifest(m_s)["dedup"]["n_docs"] == n1
-    assert spark.read.parquet(f"{m_s}/dedup_bands").count() == bands_rows
+    assert snapshot(spark, m_s).read("dedup_bands").count() == bands_rows
 
 
 def test_dedup_embed_append_same_cell_parity(spark, sf_dir, tmp_path):
@@ -321,14 +323,14 @@ def test_dedup_embed_append_same_cell_parity(spark, sf_dir, tmp_path):
     assert got_t == [p for p in got if p[0] != victim and p[1] != victim]
 
     # update=True appends the delta's codes once; a re-submission is empty
-    n0 = spark.read.parquet(f"{d}/pq_codes").count()
+    n0 = snapshot(spark, d).read("pq_codes").count()
     pairs = dedup_embed_append(spark, d, delta, emb, threshold=T, update=True)
     assert pairs.count() == len(got_t)
-    n1 = spark.read.parquet(f"{d}/pq_codes").count()
+    n1 = snapshot(spark, d).read("pq_codes").count()
     assert n1 == n0 + delta.count()
     again = dedup_embed_append(spark, d, delta, emb, threshold=T, update=True)
     assert again.count() == 0
-    assert spark.read.parquet(f"{d}/pq_codes").count() == n1
+    assert snapshot(spark, d).read("pq_codes").count() == n1
 
 
 def test_fanouts_frozen_in_manifest(spark, sf_dir, tmp_path, monkeypatch):
@@ -376,30 +378,23 @@ def test_maintenance_stats_on_dedup_only_mount(spark, sf_dir, tmp_path):
     assert should_compact(spark, d) in (False, True)  # no crash
 
 
-def test_failed_remount_leaves_live_index_untouched(spark, sf_dir, tmp_path, monkeypatch):
-    """``mount_dedup`` on an existing mount publishes a new generation: a
+def test_failed_remount_leaves_live_index_untouched(
+    spark, sf_dir, tmp_path, monkeypatch, live_files
+):
+    """``mount_dedup`` on an existing mount commits a new generation: a
     failure in its second artifact write leaves every live artifact file
-    and the manifest byte-identical, with no staging tree behind."""
-    import os
+    and the manifest byte-identical, and the next commit collects the
+    unnamed debris."""
     import threading
 
-    import simsearch_spark.mount.dedup as md
+    from simsearch_spark.mount import artifacts
 
     docs = load_table(spark, sf_dir, "documents")
     d = str(tmp_path / "m_pub")
     mount_dedup(spark, d, docs.where(F.col("doc_id") < 40))
 
-    def snapshot():
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, d)] = fh.read()
-        return out
-
-    before = snapshot()
-    calls, guard, real_write = [], threading.Lock(), md._write
+    before = live_files(d)
+    calls, guard, real_write = [], threading.Lock(), artifacts.Snapshot.write
 
     def write_then_fail(*a, **kw):
         with guard:
@@ -409,12 +404,17 @@ def test_failed_remount_leaves_live_index_untouched(spark, sf_dir, tmp_path, mon
             raise OSError("disk full")
         return real_write(*a, **kw)
 
-    monkeypatch.setattr(md, "_write", write_then_fail)
+    monkeypatch.setattr(artifacts.Snapshot, "write", write_then_fail)
     with pytest.raises(OSError, match="disk full"):
         mount_dedup(spark, d, docs.where(F.col("doc_id") < 80))
+    monkeypatch.undo()
     assert len(calls) == 2
-    assert snapshot() == before
-    assert not os.path.exists(d + "__next")
+    assert live_files(d) == before
+    mount_dedup(spark, d, docs.where(F.col("doc_id") < 40))
+    n_dirs = sum(
+        len(os.listdir(os.path.join(d, a))) for a in ("dedup_bands", "dedup_shingles")
+    )
+    assert n_dirs == 4  # the two live generations; the debris is gone
 
 
 def test_hot_mode_is_not_a_family_key():
@@ -570,9 +570,7 @@ def test_delete_docs_lifecycle(spark, tmp_path):
     # compaction reclaims the dead rows, clears the horizon, refreshes
     # the count — and the id becomes reusable
     compact_dedup(spark, d)
-    import os
-
-    assert not os.path.isdir(os.path.join(d, "dedup_tombstones"))
+    assert not snapshot(spark, d).has("dedup_tombstones")
     from simsearch_spark.mount import load_manifest
 
     assert load_manifest(d)["dedup"]["n_docs"] == 3  # 1, 3, 50
@@ -688,8 +686,8 @@ def test_auto_fanout_scales_with_corpus(spark, sf_dir, tmp_path):
     dd = man["dedup"]
     # 300 docs -> both fan-outs at the floor, and the on-disk layout agrees
     assert dd["n_bkt"] == 8 and dd["n_sbkt"] == 8
-    import os
-    sdirs = [x for x in os.listdir(f"{d}/dedup_shingles") if x.startswith("sbkt=")]
+    sdirs = snapshot(spark, d).file_counts("dedup_shingles")
+    assert all(x.startswith("sbkt=") for x in sdirs)
     assert 0 < len(sdirs) <= 8
     assert load_manifest(d)["dedup"]["n_sbkt"] == 8
 
@@ -854,10 +852,10 @@ def test_driver_path_tombstones_and_index_rows(spark, tmp_path, monkeypatch):
 
     def index(d):
         return (
-            sorted(tuple(r) for r in spark.read.parquet(f"{d}/dedup_bands").collect()),
+            sorted(tuple(r) for r in snapshot(spark, d).read("dedup_bands").collect()),
             sorted(
                 (r[0], tuple(r[1]), r[2])
-                for r in spark.read.parquet(f"{d}/dedup_shingles").collect()
+                for r in snapshot(spark, d).read("dedup_shingles").collect()
             ),
             load_manifest(d)["dedup"]["n_docs"],
         )

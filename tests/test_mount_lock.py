@@ -1,12 +1,12 @@
 """Concurrent-mutator safety of the mount lifecycle (mount/lock.py, r14).
 
 The races these pin are real at production cadence: a compaction's
-read-rewrite-swap racing an append destroys the appended files; a
-refresh retrain-and-swap racing an append drops the delta from the new
-generation; a blanket tombstone rmtree racing a delete resurrects the
-deleted doc.  The advisory write lock is the prevention mechanism, the
-snapshot/mount-state fences are the bypass detectors — both are exercised
-here with real artifacts, not mocks of the logic under test.
+read-rewrite-commit racing an append drops the appended rows; a refresh
+retrain racing an append or a delete drops it from the new generation.
+The advisory write lock is the prevention mechanism, the commit's
+manifest fence is the bypass detector, and GC inside the commit is the
+crash recovery — all exercised here with real artifacts, not mocks of
+the logic under test.
 """
 
 import json
@@ -17,16 +17,14 @@ import threading
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from simsearch_spark.mount import lock as lockmod
+from simsearch_spark.mount.artifacts import load_manifest, save_manifest, snapshot
 from simsearch_spark.mount.lock import (
     ConcurrentMutationError,
     MountLockTimeout,
-    fence,
-    mount_state_token,
     mount_write_lock,
-    next_generation,
-    parquet_census,
 )
 
 
@@ -118,142 +116,82 @@ def test_lock_missing_mount_dir_is_loud(tmp_path):
             pass
 
 
-# ------------------------------------------------------------- fence units
+# ---------------------------------------------- the one rule, no Spark
 
 
-def test_parquet_census_and_fence(tmp_path):
-    d = tmp_path / "art"
-    (d / "bkt=0").mkdir(parents=True)
-    (d / "bkt=0" / "a.parquet").write_bytes(b"x")
-    (d / "bkt=0" / "_SUCCESS").write_bytes(b"")
-    before = parquet_census(str(d))
-    assert before == frozenset({"bkt=0/a.parquet"})
-    fence(str(d), before, "noop")  # unchanged: passes
-    (d / "bkt=0" / "b.parquet").write_bytes(b"y")
-    with pytest.raises(ConcurrentMutationError, match="bypassed"):
-        fence(str(d), before, "compact_test")
+def _version(d, name, tag):
+    """A stand-in for a written version directory of ``name``."""
+    v = f"version={tag}"
+    os.makedirs(os.path.join(d, name, v))
+    with open(os.path.join(d, name, v, "part-0.parquet"), "wb") as f:
+        f.write(tag.encode())
+    return v
 
 
-def test_clear_tombstone_files_is_precise(tmp_path):
-    from simsearch_spark.mount.maintain import _clear_tombstone_files
-
-    d = tmp_path / "tombstones"
-    d.mkdir()
-    (d / "old.parquet").write_bytes(b"x")
-    (d / ".old.parquet.crc").write_bytes(b"c")
-    (d / "_SUCCESS").write_bytes(b"")
-    consumed = parquet_census(str(d))
-    # a late delete lands AFTER the compaction's snapshot
-    (d / "late.parquet").write_bytes(b"y")
-    _clear_tombstone_files(str(d), consumed)
-    assert os.path.exists(d / "late.parquet")  # never resurrected
-    assert not os.path.exists(d / "old.parquet")
-    assert not os.path.exists(d / ".old.parquet.crc")
-    # nothing late: the directory itself is cleared (os.rmdir — atomic
-    # on emptiness, so an even-later tombstone keeps the dir alive)
-    _clear_tombstone_files(str(d), parquet_census(str(d)))
-    assert not os.path.exists(d)
+def _manifest(dirs):
+    return {"version": 2, "dirs": dirs, "schemas": {n: "x int" for n in dirs}}
 
 
-# ------------------------------------------------------ publish rules
-
-
-def test_lock_acquisition_restores_crashed_artifact_swap(tmp_path, monkeypatch):
-    """A crash between ``_swap_dirs``' two renames leaves ``<artifact>``
-    missing and ``<artifact>__old`` intact; the next lock acquisition
-    renames the aside back.  An aside beside a live artifact is the
-    swap's own leftover and is left for the next swap of it."""
-    d = tmp_path / "m"
-    (d / "pq_codes").mkdir(parents=True)
-    (d / "pq_codes" / "a.parquet").write_bytes(b"old")
-    (d / "pq_codes__tmp").mkdir()
-    (d / "pq_codes__tmp" / "b.parquet").write_bytes(b"new")
-    (d / "bm25_df").mkdir()
-    (d / "bm25_df__old").mkdir()
-
-    real_move = shutil.move
-    calls = []
-
-    def crash_second_move(src, dst):
-        calls.append(src)
-        if len(calls) == 2:
-            raise OSError("injected crash between renames")
-        return real_move(src, dst)
-
-    monkeypatch.setattr(shutil, "move", crash_second_move)
-    with pytest.raises(OSError, match="between renames"):
-        lockmod._swap_dirs(str(d / "pq_codes__tmp"), str(d / "pq_codes"))
-    monkeypatch.undo()
-    assert not (d / "pq_codes").exists() and (d / "pq_codes__old").is_dir()
-
-    with mount_write_lock(str(d), "compact_codes"):
-        assert (d / "pq_codes" / "a.parquet").read_bytes() == b"old"
-        assert not (d / "pq_codes__old").exists()
-        assert (d / "bm25_df").is_dir() and (d / "bm25_df__old").is_dir()
-
-
-def test_next_generation_publishes_or_leaves_live_mount(tmp_path):
-    """``next_generation`` links what it keeps, removes its tree on any
-    exception or fence failure, and on success swaps the new generation
-    in with the held lock planted; the manifest written into the tree
-    replaces the hardlinked one instead of writing through it."""
-    from simsearch_spark.mount.artifacts import load_manifest, save_manifest
-
-    d = str(tmp_path / "m")
-    os.makedirs(os.path.join(d, "keep"))
-    os.makedirs(os.path.join(d, "redo"))
-    (tmp_path / "m" / "keep" / "a.parquet").write_bytes(b"k")
-    (tmp_path / "m" / "redo" / "b.parquet").write_bytes(b"old")
-    save_manifest(d, {"version": 1, "generation": 0})
-    keep = os.path.join(d, "keep", "a.parquet")
-    ino = os.stat(keep).st_ino
-    lp = os.path.join(d, lockmod.LOCK_NAME)
-
+def test_commit_fence_refuses_a_bypassed_manifest(tmp_path):
+    """A commit compares the live manifest with the bytes its snapshot
+    read: a commit that landed in between (a writer that bypassed the
+    lock) makes it refuse, leaving the bypasser's manifest live."""
+    d = str(tmp_path)
     with mount_write_lock(d, "op"):
-        tok = mount_state_token(d)
-        with pytest.raises(RuntimeError, match="trainer"):
-            with next_generation(d, "op", tok, {"redo"}) as nxt:
-                assert os.path.samefile(os.path.join(nxt, "keep", "a.parquet"), keep)
-                assert not os.path.exists(os.path.join(nxt, "redo"))
-                assert not os.path.exists(os.path.join(nxt, lockmod.LOCK_NAME))
-                raise RuntimeError("trainer failed")
-        assert not os.path.exists(d + "__next")
-        assert os.listdir(os.path.join(d, "redo")) == ["b.parquet"]
-
-        with pytest.raises(ConcurrentMutationError):
-            with next_generation(d, "op", tok, {"redo"}) as nxt:
-                save_manifest(d, {"version": 1, "generation": 0, "x": 1})
-        assert not os.path.exists(d + "__next")
-        save_manifest(d, {"version": 1, "generation": 0})
-
-        tok = mount_state_token(d)
-        with next_generation(d, "op", tok, {"redo"}) as nxt:
-            os.makedirs(os.path.join(nxt, "redo"))
-            (tmp_path / "m__next" / "redo" / "c.parquet").write_bytes(b"new")
-            save_manifest(nxt, {"version": 1, "generation": 1})
-            assert load_manifest(d)["generation"] == 0  # not written through
-        assert load_manifest(d)["generation"] == 1
-        assert os.stat(keep).st_ino == ino
-        assert os.listdir(os.path.join(d, "redo")) == ["c.parquet"]
-        assert json.load(open(lp))["pid"] == os.getpid()
-        assert not os.path.exists(d + "__next") and not os.path.exists(d + "__old")
-    assert not os.path.exists(lp)
+        save_manifest(d, _manifest({"pq_codes": [_version(d, "pq_codes", "a")]}))
+        snap = snapshot(None, d)
+        snap.commit()  # unchanged underneath: passes
+        bypass = _manifest({"pq_codes": [_version(d, "pq_codes", "b")]})
+        save_manifest(d, bypass)
+        snap.manifest["counts"] = {"n_vectors": 1}
+        with pytest.raises(ConcurrentMutationError, match="bypassed"):
+            snap.commit()
+        assert snapshot(None, d).manifest == bypass
 
 
-def _tree_digest(mount_dir):
-    """sha256 over every path and byte of a mount, lock file excluded."""
-    import hashlib
+def test_commit_publishes_or_leaves_live_mount(tmp_path):
+    """The one publish rule end to end on the filesystem: an op that
+    fails before its commit leaves the manifest and every live file
+    untouched; a commit keeps what the previous commit named (a reader's
+    snapshot survives one further commit) and collects everything else —
+    the retired generation after that, and a crashed op's debris."""
+    d = str(tmp_path)
+    with pytest.raises(RuntimeError, match="write lock"):
+        save_manifest(d, _manifest({}))
+    with mount_write_lock(d, "op"):
+        a = _version(d, "pq_codes", "a")
+        save_manifest(d, _manifest({"pq_codes": [a]}))
+        reader = snapshot(None, d)
+        raw = reader.raw
 
-    h = hashlib.sha256()
-    for root, _dirs, files in sorted(os.walk(mount_dir)):
-        for fn in sorted(files):
-            if fn == lockmod.LOCK_NAME:
-                continue
-            fp = os.path.join(root, fn)
-            h.update(os.path.relpath(fp, mount_dir).encode())
-            with open(fp, "rb") as f:
-                h.update(f.read())
-    return h.hexdigest()
+        _version(d, "pq_codes", "crashed")  # written, never committed
+        assert snapshot(None, d).raw == raw
+
+        b = _version(d, "pq_codes", "b")
+        save_manifest(d, _manifest({"pq_codes": [b]}))
+        # the reader's directory survives the commit that retired it;
+        # the crashed op's debris does not
+        assert [os.path.basename(p) for p in reader.paths("pq_codes")] == [a]
+        assert sorted(os.listdir(os.path.join(d, "pq_codes"))) == [a, b]
+
+        c = _version(d, "pq_codes", "c")
+        save_manifest(d, _manifest({"pq_codes": [b, c]}))
+        assert sorted(os.listdir(os.path.join(d, "pq_codes"))) == [b, c]
+        save_manifest(d, _manifest({}))
+        save_manifest(d, _manifest({}))
+        assert not os.path.exists(os.path.join(d, "pq_codes"))
+
+
+def test_parent_layout_mount_is_rejected(tmp_path):
+    """A manifest without the directory map is a mount in the previous
+    layout: every reader and writer refuses it and says to re-mount."""
+    d = str(tmp_path)
+    with open(os.path.join(d, "manifest.json"), "w") as f:
+        json.dump({"version": 1, "artifacts": ["pq_codes"]}, f)
+    with pytest.raises(ValueError, match="re-mount"):
+        snapshot(None, d)
+    with pytest.raises(ValueError, match="re-mount"):
+        load_manifest(d)
 
 
 # --------------------------------------------------- end-to-end with Spark
@@ -304,71 +242,63 @@ def test_mutators_respect_a_held_lock(spark, dedup_mount, monkeypatch):
 def test_compact_dedup_fence_aborts_on_bypassing_append(
     spark, dedup_mount, monkeypatch
 ):
-    """A writer that bypasses the lock and appends a band file while a
-    compaction is rewriting must abort the compaction BEFORE the swap —
-    artifact untouched, staging cleaned, the bypasser's file intact."""
-    import simsearch_spark.mount.maintain as maintain
+    """A writer that bypasses the lock and commits an append while a
+    compaction is rewriting must abort the compaction at its commit —
+    the bypasser's commit stays live, nothing it appended is lost."""
+    from simsearch_spark.mount import artifacts
+    from simsearch_spark.mount.dedup import dedup_append
+    from simsearch_spark.mount.maintain import compact_dedup
 
-    bands = os.path.join(dedup_mount, "dedup_bands")
-    # force the rewrite: fragment one band directory (debris > 1 file/dir)
-    some_dir = next(
-        root
-        for root, _d, files in os.walk(bands)
-        if any(f.endswith(".parquet") for f in files)
+    delta = spark.createDataFrame(
+        [(10**6, "a freshly crawled document that the mount has not seen")],
+        "doc_id long, text string",
     )
-    src = next(f for f in os.listdir(some_dir) if f.endswith(".parquet"))
-    shutil.copy(
-        os.path.join(some_dir, src), os.path.join(some_dir, "frag-" + src)
-    )
+    # force the rewrite: a second band version (one more live directory)
+    dedup_append(spark, dedup_mount, delta.withColumn("doc_id", F.lit(10**6 + 1)))
 
-    real_snapshot = maintain.snapshot_read
+    real_write = artifacts.Snapshot.write
     bypass = {"done": False}
 
-    def snapshot_then_bypass(spark_, path, files):
-        df = real_snapshot(spark_, path, files)
-        if path == bands and not bypass["done"]:
-            # the bypassing append lands AFTER the snapshot was censused
-            shutil.copy(
-                os.path.join(some_dir, src),
-                os.path.join(some_dir, "bypass-" + src),
-            )
+    def write_then_bypass(self, df, name, *a, **kw):
+        real_write(self, df, name, *a, **kw)
+        if name == "dedup_bands" and not bypass["done"]:
+            # the bypassing append commits AFTER the compaction's
+            # snapshot (re-entrant for this thread: exactly what a
+            # lock-bypassing writer produces)
             bypass["done"] = True
-        return df
+            dedup_append(spark, dedup_mount, delta)
 
-    monkeypatch.setattr(maintain, "snapshot_read", snapshot_then_bypass)
-    before_files = parquet_census(bands)
-    with pytest.raises(ConcurrentMutationError, match="dedup_bands|census"):
-        maintain.compact_dedup(spark, dedup_mount)
-    assert not os.path.isdir(bands + "__tmp")  # staging cleaned
-    bypass_rel = os.path.relpath(
-        os.path.join(some_dir, "bypass-" + src), bands
-    )
-    # artifact untouched: exactly the pre-compaction files PLUS the
-    # bypasser's append — nothing swapped away, nothing lost
-    assert parquet_census(bands) == before_files | {bypass_rel}
-    assert os.path.exists(os.path.join(some_dir, "bypass-" + src))
+    monkeypatch.setattr(artifacts.Snapshot, "write", write_then_bypass)
+    with pytest.raises(ConcurrentMutationError, match="bypassed"):
+        compact_dedup(spark, dedup_mount)
+    monkeypatch.undo()
+    # the bypasser's commit is the live one: its rows are mounted
+    sh = snapshot(spark, dedup_mount).read("dedup_shingles")
+    assert sh.where(F.col("doc_id") == 10**6).count() == 1
+    assert compact_dedup(spark, dedup_mount) >= 1  # the next run succeeds
+    sh = snapshot(spark, dedup_mount).read("dedup_shingles")
+    assert sh.where(F.col("doc_id") == 10**6).count() == 1
 
 
 def test_compact_dedup_clean_run_after_fence_abort(spark, dedup_mount):
-    """The fence abort is recoverable: the next (properly locked)
-    compaction succeeds and the pair stream is unchanged."""
-    import simsearch_spark.mount.maintain as maintain
-    from simsearch_spark.mount.serve import serve_dedup_lookup
+    """Duplicate band rows in a live version are collapsed by the next
+    compaction, and it reclaims the extra file."""
+    from simsearch_spark.mount.maintain import compact_dedup
 
-    bands = os.path.join(dedup_mount, "dedup_bands")
     some_dir = next(
         root
-        for root, _d, files in os.walk(bands)
+        for top in snapshot(spark, dedup_mount).paths("dedup_bands")
+        for root, _d, files in os.walk(top)
         if any(f.endswith(".parquet") for f in files)
     )
     src = next(f for f in os.listdir(some_dir) if f.endswith(".parquet"))
     shutil.copy(
         os.path.join(some_dir, src), os.path.join(some_dir, "frag-" + src)
     )
-    reclaimed = maintain.compact_dedup(spark, dedup_mount)
+    reclaimed = compact_dedup(spark, dedup_mount)
     assert reclaimed >= 1
     # duplicate band rows from the copied file were collapsed
-    bdf = spark.read.parquet(bands)
+    bdf = snapshot(spark, dedup_mount).read("dedup_bands")
     assert bdf.count() == bdf.distinct().count()
 
 
@@ -501,29 +431,11 @@ def vec_frames(spark):
     return emb, docs
 
 
-def test_refresh_restores_crashed_swap_before_locking(
-    spark, vec_frames, tmp_path
-):
-    """Review r14: a refresh crashed between its two renames leaves only
-    <mount>__old; the restore must run BEFORE lock acquisition (the lock
-    file lives inside the missing mount_dir) or it is unreachable."""
-    from simsearch_spark.mount import load_manifest, mount, refresh
-
-    emb, docs = vec_frames
-    d = str(tmp_path / "m")
-    mount(spark, "", d, emb_frame=emb, docs_frame=docs, dedup=False)
-    gen0 = load_manifest(d).get("generation", 0)
-    os.rename(d, d + "__old")  # the exact crash state
-    refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs, dedup=False)
-    assert os.path.isdir(d) and not os.path.isdir(d + "__old")
-    assert load_manifest(d)["generation"] == gen0 + 1
-    assert not os.path.exists(os.path.join(d, lockmod.LOCK_NAME))
-
-
 def test_full_refresh_keeps_held_lock_file(spark, vec_frames, tmp_path):
-    """Review r14: the full refresh's whole-directory swap must carry an
-    OWNED lock file into place (plant_lock into __next), so the rest of
-    an auto_maintain critical section keeps cross-process exclusion."""
+    """Review r14: a full refresh inside a held lock leaves the OWNED
+    lock file in place (publishing never moves the mount directory), so
+    the rest of an auto_maintain critical section keeps cross-process
+    exclusion."""
     from simsearch_spark.mount import mount, refresh
 
     emb, docs = vec_frames
@@ -534,7 +446,7 @@ def test_full_refresh_keeps_held_lock_file(spark, vec_frames, tmp_path):
         refresh(
             spark, d, sf_dir="", emb_frame=emb, docs_frame=docs, dedup=False
         )
-        assert os.path.exists(lp), "swap discarded the held lock file"
+        assert os.path.exists(lp), "refresh discarded the held lock file"
         assert json.load(open(lp))["pid"] == os.getpid()
     assert not os.path.exists(lp)
 
@@ -556,46 +468,6 @@ def test_break_stale_is_single_winner_and_restores_live(tmp_path):
         json.dump(live, f)
     lockmod._break_stale(lp, stale)  # judged on the OLD payload
     assert json.load(open(lp)) == live  # live lock restored intact
-
-
-def test_waiter_survives_missing_dir_window(tmp_path):
-    """Review r14 (twice): a CROSS-PROCESS waiter — the only kind that
-    actually polls ``os.open`` into FileNotFoundError; a same-process
-    waiter takes the held-by-this-process branch — must retry through a
-    refresh swap's two-rename window.  The holder keeps the lock LONGER
-    than _DIR_GRACE before opening the window, so the original
-    anchored-at-start grace deadline would already be spent and the
-    waiter would die; the fix measures the grace from when the dir was
-    last seen."""
-    import sys
-
-    d = str(tmp_path / "m")
-    os.makedirs(d)
-    child = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            "import os, sys, time; sys.path.insert(0, '/root/repo');"
-            "from simsearch_spark.mount.lock import mount_write_lock;"
-            f"d = {d!r};"
-            "l = mount_write_lock(d, 'refresh'); l.__enter__();"
-            "print('HELD', flush=True);"
-            "time.sleep(3.0);"  # waiter contends longer than _DIR_GRACE
-            "os.rename(d, d + '__aside');"  # the swap window opens
-            "time.sleep(1.0);"
-            "os.rename(d + '__aside', d);"
-            "l.__exit__(None, None, None)",
-        ],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        assert child.stdout.readline().strip() == "HELD"
-        with mount_write_lock(d, "append", timeout=20.0):
-            pass  # acquired despite polling through the missing-dir window
-    finally:
-        child.kill()
-        child.wait()
 
 
 def test_stream_sink_commits_fresh_manifest_counts(
@@ -635,16 +507,16 @@ def test_stream_sink_commits_fresh_manifest_counts(
         assert load_manifest(d)["counts"]["n_vectors"] == n0 - 3
     q.awaitTermination(300)
 
-    n_rows = spark.read.parquet(os.path.join(d, "pq_codes")).count()
+    n_rows = snapshot(spark, d).read("pq_codes").count()
     assert n_rows == n0 - 3 + 10
     # the buggy closure commit would record n0 + 10, erasing the reclaim
     assert load_manifest(d)["counts"]["n_vectors"] == n_rows
 
 
 def test_refresh_fence_catches_bypassing_delete(spark, tmp_path, monkeypatch):
-    """Review r14: the refresh fence compares tombstone censuses too — a
-    delete landing during a dedup-family retrain aborts publication
-    instead of being resurrected by the new generation."""
+    """Review r14: a delete commits a manifest, so the refresh's commit
+    fence sees it — a delete landing during a dedup-family retrain aborts
+    publication instead of being resurrected by the new generation."""
     import simsearch_spark.mount.dedup as dedupmod
     from simsearch_spark.mount import refresh
     from simsearch_spark.mount.dedup import mount_dedup
@@ -659,67 +531,18 @@ def test_refresh_fence_catches_bypassing_delete(spark, tmp_path, monkeypatch):
 
     real_build_dedup = dedupmod._build_dedup
 
-    def build_dedup_then_delete(spark_, out_dir, *a, **kw):
-        out = real_build_dedup(spark_, out_dir, *a, **kw)
-        if out_dir.endswith("__next"):
-            # mid-retrain delete on the LIVE mount (re-entrant for this
-            # thread, i.e. exactly what a bypassing writer produces)
-            dedupmod.delete_docs(spark_, d, [docs.first()["doc_id"]])
+    def build_dedup_then_delete(spark_, snap, *a, **kw):
+        out = real_build_dedup(spark_, snap, *a, **kw)
+        # mid-retrain delete on the LIVE mount (re-entrant for this
+        # thread, i.e. exactly what a bypassing writer produces)
+        dedupmod.delete_docs(spark_, d, [docs.first()["doc_id"]])
         return out
 
     monkeypatch.setattr(dedupmod, "_build_dedup", build_dedup_then_delete)
     with pytest.raises(ConcurrentMutationError, match="tombstones|manifest"):
         refresh(spark, d, sf_dir="", docs_frame=docs, families=["dedup"])
     # the live index is untouched and the late tombstone survived
-    assert os.path.isdir(os.path.join(d, "dedup_tombstones"))
-    assert not os.path.isdir(d + "__next")
-
-
-def test_restore_crashed_swap_skips_live_swapper(tmp_path):
-    """Review r14: a LIVE swapper between its two renames looks like a
-    crash from the filesystem; the old generation's travelling lock file
-    (live same-host pid) must stop the restorer from resurrecting the
-    old generation under the swapper's feet."""
-    import socket
-
-    from simsearch_spark.mount.lock import restore_crashed_swap
-
-    d = str(tmp_path / "m")
-    old = d + "__old"
-    os.makedirs(old)
-    with open(os.path.join(old, lockmod.LOCK_NAME), "w") as f:
-        json.dump(
-            {"pid": os.getpid(), "host": socket.gethostname(),
-             "op": "refresh", "ts": time.time()},
-            f,
-        )
-    restore_crashed_swap(d)
-    assert not os.path.isdir(d) and os.path.isdir(old)  # left alone
-
-    # a DEAD holder is a genuine crash: restore proceeds
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    with open(os.path.join(old, lockmod.LOCK_NAME), "w") as f:
-        json.dump(
-            {"pid": proc.pid, "host": socket.gethostname(),
-             "op": "refresh", "ts": time.time()},
-            f,
-        )
-    restore_crashed_swap(d)
-    assert os.path.isdir(d) and not os.path.isdir(old)
-
-    # a FRESH foreign-host holder is trusted (possibly live, no pid
-    # signal across hosts): left alone
-    old2 = d + "__old"
-    os.rename(d, old2)
-    with open(os.path.join(old2, lockmod.LOCK_NAME), "w") as f:
-        json.dump(
-            {"pid": 1, "host": "some-other-host",
-             "op": "refresh", "ts": time.time()},
-            f,
-        )
-    restore_crashed_swap(d)
-    assert not os.path.isdir(d) and os.path.isdir(old2)
+    assert snapshot(spark, d).has("dedup_tombstones")
 
 
 def test_interrupted_manifest_write_keeps_previous_manifest(
@@ -751,10 +574,10 @@ def test_interrupted_manifest_write_keeps_previous_manifest(
 
 
 def test_family_refresh_failure_before_swap_keeps_live_mount(
-    spark, dedup_mount, monkeypatch
+    spark, dedup_mount, monkeypatch, live_files
 ):
-    """A failure after the dedup family is retrained but before the new
-    generation is swapped in leaves every live file byte-identical: no
+    """A failure after the dedup family is retrained but before its
+    commit leaves the manifest and every live file byte-identical: no
     artifact of the new generation is visible without its manifest."""
     from simsearch_spark.mount import load_manifest, refresh
     from simsearch_spark.sources.registry import load_table
@@ -769,7 +592,7 @@ def test_family_refresh_failure_before_swap_keeps_live_mount(
         )
     )
     gen0 = load_manifest(dedup_mount).get("generation", 0)
-    before = _tree_digest(dedup_mount)
+    before = live_files(dedup_mount)
     real_dump = json.dump
 
     def failing_dump(obj, f, **kw):
@@ -781,6 +604,5 @@ def test_family_refresh_failure_before_swap_keeps_live_mount(
     with pytest.raises(OSError, match="before the swap"):
         refresh(spark, dedup_mount, sf_dir="", docs_frame=docs, families=["dedup"])
     monkeypatch.undo()
-    assert _tree_digest(dedup_mount) == before
-    assert not os.path.exists(dedup_mount + "__next")
+    assert live_files(dedup_mount) == before
     assert load_manifest(dedup_mount).get("generation", 0) == gen0

@@ -6,12 +6,12 @@ runaway partition.  ``split_cell`` is the targeted repair between
 ``append_rows`` (frozen artifacts) and ``refresh(families=['vector'])``
 (full retrain): reconstruct ONLY the hot cell from its PQ codes,
 deterministic 2-means, re-encode against the child centroids with the
-unchanged shared codebooks, publish via hardlink-tree + two-rename swap.
+unchanged shared codebooks, publish by one manifest commit.
 
 Pins: row/id conservation, untouched cells byte-identical (same inode —
-the hardlink proof that no data moved), serve-side top-k preserved,
-no-op policies (balanced, degenerate), append routing to the children,
-crash-swap restore, and the auto_maintain wiring.
+the proof that no data moved), serve-side top-k preserved, no-op
+policies (balanced, degenerate), append routing to the children, and
+the auto_maintain wiring.
 """
 
 import os
@@ -19,7 +19,7 @@ import os
 import pytest
 
 from simsearch_spark.mount import lock as lockmod
-from simsearch_spark.mount.artifacts import load_manifest, mount
+from simsearch_spark.mount.artifacts import load_manifest, mount, snapshot
 from simsearch_spark.mount.maintain import (
     append_rows,
     cell_sizes,
@@ -67,27 +67,40 @@ def _mounted(spark, skewed, tmp_path, name):
     return d
 
 
-def _inode_map(path):
+def _inode_map(spark, d):
+    """Live codes files, keyed by their path inside the version
+    directory ("cell=1/part-….parquet"), to their inode."""
     out = {}
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                fp = os.path.join(root, f)
-                out[os.path.relpath(fp, path)] = os.stat(fp).st_ino
+    for p in snapshot(spark, d).paths("pq_codes"):
+        top = p.split("/cell=")[0]
+        for root, _dirs, files in os.walk(p):
+            for f in files:
+                if f.endswith(".parquet"):
+                    fp = os.path.join(root, f)
+                    out[os.path.relpath(fp, top)] = os.stat(fp).st_ino
     return out
+
+
+def _ids(spark, d):
+    return {
+        r["vec_id"]
+        for r in snapshot(spark, d).read("pq_codes").select("vec_id").collect()
+    }
+
+
+def _cents(spark, d):
+    return {
+        int(r["cluster_id"])
+        for r in snapshot(spark, d).read("ivf_centroids").collect()
+    }
 
 
 def test_split_conserves_rows_ids_and_hardlinks(spark, skewed, tmp_path):
     emb, docs, _ = skewed
     d = _mounted(spark, skewed, tmp_path, "m1")
     before = cell_sizes(spark, d)
-    ids_before = {
-        r["vec_id"]
-        for r in spark.read.parquet(os.path.join(d, "pq_codes"))
-        .select("vec_id")
-        .collect()
-    }
-    inodes_before = _inode_map(os.path.join(d, "pq_codes"))
+    ids_before = _ids(spark, d)
+    inodes_before = _inode_map(spark, d)
 
     assert should_split(spark, d, factor=2.0, min_rows=1) == 0
     rep = split_cell(spark, d, factor=2.0, min_rows=1)
@@ -98,34 +111,25 @@ def test_split_conserves_rows_ids_and_hardlinks(spark, skewed, tmp_path):
     assert after[1] == before[1] and after[2] == before[2]
     assert after[3] + after[4] == before[0]
     assert min(after[3], after[4]) > 0
-    ids_after = {
-        r["vec_id"]
-        for r in spark.read.parquet(os.path.join(d, "pq_codes"))
-        .select("vec_id")
-        .collect()
-    }
+    ids_after = _ids(spark, d)
     assert ids_after == ids_before
 
-    # untouched cells are HARDLINKS of the old generation's files — the
-    # publish moved zero data bytes for them
-    inodes_after = _inode_map(os.path.join(d, "pq_codes"))
+    # untouched cells are the old generation's very files — the publish
+    # moved zero data bytes for them
+    inodes_after = _inode_map(spark, d)
     for rel, ino in inodes_before.items():
         if rel.startswith("cell=1/") or rel.startswith("cell=2/"):
             assert inodes_after[rel] == ino
 
     # centroid artifact and manifest agree with the new cell set
-    cents = {
-        int(r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(d, "ivf_centroids")).collect()
-    }
+    cents = _cents(spark, d)
     assert cents == {1, 2, 3, 4}
     man = load_manifest(d)
     assert man["params"]["n_cells"] == 4
     assert man["splits"][0]["cell"] == 0
     assert sorted(man["splits"][0]["children"]) == [3, 4]
-    # the swap did not leak a lock file or debris dirs
+    # the op did not leak its lock file
     assert not os.path.exists(os.path.join(d, lockmod.LOCK_NAME))
-    assert not os.path.isdir(d + "__next") and not os.path.isdir(d + "__old")
 
 
 def test_split_preserves_served_topk(spark, skewed, tmp_path):
@@ -207,14 +211,6 @@ def test_append_after_split_routes_to_children(spark, skewed, tmp_path):
     assert (sizes1[3] + sizes1[4]) - (sizes0[3] + sizes0[4]) == 8
 
 
-def test_split_restores_crashed_swap_first(spark, skewed, tmp_path):
-    d = _mounted(spark, skewed, tmp_path, "m6")
-    os.rename(d, d + "__old")  # the exact crash state of a prior swap
-    rep = split_cell(spark, d, factor=2.0, min_rows=1)
-    assert rep["split"] is True
-    assert os.path.isdir(d) and not os.path.isdir(d + "__old")
-
-
 def test_auto_maintain_splits_hot_cell(spark, skewed, tmp_path):
     from simsearch_spark.mount.audit import auto_maintain
 
@@ -248,13 +244,8 @@ def test_merge_folds_dust_into_nearest_and_hardlinks(spark, skewed, tmp_path):
 
     d = _mounted(spark, skewed, tmp_path, "mm1")
     before = cell_sizes(spark, d)  # {0: 80, 1: 10, 2: 10}
-    ids_before = {
-        r["vec_id"]
-        for r in spark.read.parquet(os.path.join(d, "pq_codes"))
-        .select("vec_id")
-        .collect()
-    }
-    inodes_before = _inode_map(os.path.join(d, "pq_codes"))
+    ids_before = _ids(spark, d)
+    inodes_before = _inode_map(spark, d)
 
     assert should_merge(spark, d, factor=2.0) == [1, 2]
     rep = merge_cells(spark, d, factor=2.0)
@@ -263,16 +254,11 @@ def test_merge_folds_dust_into_nearest_and_hardlinks(spark, skewed, tmp_path):
 
     after = cell_sizes(spark, d)
     assert after == {0: 100}
-    ids_after = {
-        r["vec_id"]
-        for r in spark.read.parquet(os.path.join(d, "pq_codes"))
-        .select("vec_id")
-        .collect()
-    }
+    ids_after = _ids(spark, d)
     assert ids_after == ids_before
-    # the target cell's ORIGINAL files are hardlinks (untouched); the
+    # the target cell's ORIGINAL files are untouched (same inodes); the
     # moved rows arrived as NEW files alongside them
-    inodes_after = _inode_map(os.path.join(d, "pq_codes"))
+    inodes_after = _inode_map(spark, d)
     for rel, ino in inodes_before.items():
         if rel.startswith("cell=0/"):
             assert inodes_after[rel] == ino
@@ -280,10 +266,7 @@ def test_merge_folds_dust_into_nearest_and_hardlinks(spark, skewed, tmp_path):
         1 for r in inodes_before if r.startswith("cell=0/")
     )
 
-    cents = {
-        int(r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(d, "ivf_centroids")).collect()
-    }
+    cents = _cents(spark, d)
     assert cents == {0}
     man = load_manifest(d)
     assert man["params"]["n_cells"] == 1
@@ -301,7 +284,7 @@ def test_merge_preserves_served_topk(spark, skewed, tmp_path):
     # rows the merge moves
     cold_center = [
         float(x)
-        for x in spark.read.parquet(os.path.join(d, "ivf_centroids"))
+        for x in snapshot(spark, d).read("ivf_centroids")
         .where("cluster_id = 1")
         .collect()[0]["centroid"]
     ]
@@ -429,10 +412,7 @@ def test_zero_row_cell_is_mergeable(spark, skewed, tmp_path):
     assert 1 in should_merge(spark, d, factor=2.0)
     rep = merge_cells(spark, d, cell_ids=[1], factor=2.0)
     assert rep["merged"] and rep["rows"] == {1: 0}
-    cents = {
-        int(r["cluster_id"])
-        for r in spark.read.parquet(os.path.join(d, "ivf_centroids")).collect()
-    }
+    cents = _cents(spark, d)
     assert 1 not in cents
     assert sum(cell_sizes(spark, d).values()) == 90
 

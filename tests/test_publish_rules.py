@@ -1,12 +1,16 @@
-"""Every mount mutator publishes through the rules of ``mount/lock.py``.
+"""Every mount mutator publishes through the one rule of ``mount/lock.py``:
+write new version directories, then commit the manifest.
 
-Two static checks over the product package, so that no mutator grows a
-private swap or a private manifest writer again:
+Three static checks over the product package, so that no mutator grows a
+private publish path again:
 
 - only ``mount/artifacts.py``, the owner of ``save_manifest``, opens
   ``manifest.json`` for writing;
-- only ``mount/lock.py`` names the next-generation directory suffixes
-  (``__next``, ``__famnext``) outside a docstring.
+- only ``mount/artifacts.py`` builds a path from an artifact name, so
+  every read and write resolves through a manifest snapshot;
+- no module under ``mount/`` renames, moves or ``rmtree``s anything,
+  except GC (``artifacts._collect``) and the lock's single-winner
+  stale-lock claim (``lock._break_stale``, which renames the lock file).
 
 Pure ``ast``, no Spark.
 """
@@ -17,9 +21,28 @@ import ast
 from pathlib import Path
 
 PACKAGE_DIR = Path(__file__).resolve().parent.parent / "simsearch_spark"
-MANIFEST_OWNER = PACKAGE_DIR / "mount" / "artifacts.py"
-SWAP_OWNER = PACKAGE_DIR / "mount" / "lock.py"
-GENERATION_SUFFIXES = ("__next", "__famnext")
+MOUNT_DIR = PACKAGE_DIR / "mount"
+MANIFEST_OWNER = MOUNT_DIR / "artifacts.py"
+#: (module, function) pairs allowed to rename, move or rmtree
+MOVERS = {("artifacts.py", "_collect"), ("lock.py", "_break_stale")}
+MOVE_CALLS = {"rename", "move", "rmtree"}
+
+
+def _artifact_names() -> set[str]:
+    """Every artifact name: ``FAMILY_ARTIFACTS``' literal values plus the
+    two tombstone artifacts."""
+    tree = ast.parse(MANIFEST_OWNER.read_text())
+    for node in ast.walk(tree):
+        target = getattr(node, "target", None)
+        if isinstance(node, ast.AnnAssign) and getattr(target, "id", "") == "FAMILY_ARTIFACTS":
+            names = {n.value for n in ast.walk(node.value) if isinstance(n, ast.Constant)}
+            return {n for n in names if isinstance(n, str)} - {
+                "vector", "text", "dedup", "bpe"
+            } | {"tombstones", "dedup_tombstones"}
+    raise AssertionError("FAMILY_ARTIFACTS literal not found")
+
+
+ARTIFACTS = _artifact_names()
 
 
 def _strings(node: ast.AST) -> list[str]:
@@ -68,26 +91,50 @@ def manifest_writes(source: str) -> list[int]:
     ]
 
 
-def generation_names(source: str) -> list[int]:
-    """Line numbers of non-docstring string constants that name a
-    next-generation directory suffix."""
+def artifact_paths(source: str) -> list[int]:
+    """Line numbers of path expressions built from an artifact name:
+    ``os.path.join(..., "<artifact>", ...)``, and a ``"/<artifact>"``
+    piece of an f-string or a ``+`` concatenation."""
     tree = ast.parse(source)
-    docstrings = set()
+    out = []
     for node in ast.walk(tree):
-        if isinstance(
-            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "join"
+            and ast.unparse(node.func.value) == "os.path"
+            and any(
+                isinstance(a, ast.Constant) and a.value in ARTIFACTS
+                for a in node.args
+            )
         ):
-            first = node.body[0] if node.body else None
-            if isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant):
-                docstrings.add(id(first.value))
-    return [
-        node.lineno
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Constant)
-        and isinstance(node.value, str)
-        and id(node) not in docstrings
-        and any(s in node.value for s in GENERATION_SUFFIXES)
-    ]
+            out.append(node.lineno)
+        elif isinstance(node, (ast.JoinedStr, ast.BinOp)) and any(
+            f"/{name}" in s for s in _strings(node) for name in ARTIFACTS
+        ):
+            out.append(node.lineno)
+    return sorted(set(out))
+
+
+def moves_outside(source: str, module: str) -> list[int]:
+    """Line numbers of ``*.rename``/``*.move``/``*.rmtree`` calls (or a
+    bare ``rmtree``) outside the allowed ``MOVERS`` functions."""
+    tree = ast.parse(source)
+    out = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in MOVE_CALLS and (module, fn) not in MOVERS:
+                out.append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return sorted(out)
 
 
 def _product_files() -> list[Path]:
@@ -103,11 +150,20 @@ def test_only_save_manifest_writes_the_manifest():
     assert bad == {}
 
 
-def test_only_lock_names_a_next_generation_directory():
+def test_only_artifacts_names_an_artifact_directory():
     bad = {
         str(p.relative_to(PACKAGE_DIR)): lines
         for p in _product_files()
-        if p != SWAP_OWNER and (lines := generation_names(p.read_text()))
+        if p != MANIFEST_OWNER and (lines := artifact_paths(p.read_text()))
+    }
+    assert bad == {}
+
+
+def test_no_rename_move_or_rmtree_outside_gc():
+    bad = {
+        p.name: lines
+        for p in sorted(MOUNT_DIR.glob("*.py"))
+        if (lines := moves_outside(p.read_text(), p.name))
     }
     assert bad == {}
 
@@ -120,5 +176,23 @@ def test_checks_catch_the_private_shapes():
     assert manifest_writes(direct) == [1]
     assert manifest_writes(aliased) == [2]
     assert manifest_writes(read) == []
-    swap = 'def f(d):\n    """Stages in d__next."""\n    return d + "__famnext"\n'
-    assert generation_names(swap) == [3]
+
+    joined = 'p = os.path.join(mount_dir, "pq_codes")\n'
+    fstring = 'spark.read.parquet(f"{d}/dedup_bands")\n'
+    concat = 'path = d + "/tombstones"\n'
+    by_name = 'p = os.path.join(self.mount_dir, name)\n'
+    assert artifact_paths(joined) == [1]
+    assert artifact_paths(fstring) == [1]
+    assert artifact_paths(concat) == [1]
+    assert artifact_paths(by_name) == []
+
+    swap = (
+        "def _swap_dirs(tmp, path):\n"
+        "    shutil.move(path, path + '__old')\n"
+        "    os.rename(tmp, path)\n"
+        "    shutil.rmtree(path + '__old')\n"
+    )
+    gc = "def _collect(d):\n    shutil.rmtree(d)\n"
+    assert moves_outside(swap, "lock.py") == [2, 3, 4]
+    assert moves_outside(gc, "artifacts.py") == []
+    assert moves_outside(gc, "maintain.py") == [2]

@@ -143,22 +143,36 @@ def test_delta_id_dtype_normalized_to_mounted(spark, sf_dir, tmp_path):
     assert again.count() == 0
 
 
-def test_refresh_crash_recovery_and_shrink_guard(spark, sf_dir, docs_stub, tmp_path):
-    """A refresh that crashed between its two renames leaves __old
-    intact; the next refresh restores it and proceeds.  A retrain frame
-    covering fewer vectors than mounted is rejected (appended rows would
-    silently vanish) unless allow_shrink=True."""
+def test_refresh_crash_recovery_and_shrink_guard(
+    spark, sf_dir, docs_stub, tmp_path, monkeypatch
+):
+    """A refresh that crashed before its commit leaves the live
+    generation in place; the next refresh proceeds and collects the
+    crashed one's directories.  A retrain frame covering fewer vectors
+    than mounted is rejected (appended rows would silently vanish)
+    unless allow_shrink=True."""
+    from simsearch_spark.mount import artifacts
+
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 150)
     d = str(tmp_path / "m")
     mount(spark, "", d, emb_frame=emb, docs_frame=docs_stub, dedup=False)
     n0 = load_manifest(d)["counts"]["n_vectors"]
+    live0 = set(os.listdir(os.path.join(d, "pq_codes")))
 
-    # simulate the crash window: mount_dir renamed away, __next absent
-    os.rename(d, d + "__old")
+    def crash(*_a, **_kw):
+        raise OSError("crash before the commit")
+
+    monkeypatch.setattr(artifacts, "save_manifest", crash)
+    with pytest.raises(OSError, match="before the commit"):
+        refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub, dedup=False)
+    monkeypatch.undo()
+    assert "generation" not in load_manifest(d)
+    debris = set(os.listdir(os.path.join(d, "pq_codes"))) - live0
+    assert len(debris) == 1
     man = refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub, dedup=False)
     assert man["generation"] == 1
     assert load_manifest(d)["counts"]["n_vectors"] == n0
-    assert not os.path.isdir(d + "__old") and not os.path.isdir(d + "__next")
+    assert not debris & set(os.listdir(os.path.join(d, "pq_codes")))
 
     # shrink guard
     smaller = emb.where(F.col("vec_id") < 100)

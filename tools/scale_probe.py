@@ -267,13 +267,14 @@ def _dedup_mount_prepare(spark, sf_dir: str) -> str:
     mounted dedup index over everything except the fixed probe delta."""
     from pyspark.sql import functions as F
 
+    from simsearch_spark.mount.artifacts import snapshot
     from simsearch_spark.mount.dedup import mount_dedup
     from simsearch_spark.queries.pipeline import MINHASH_T, N_BANDS, N_HASHES
     from simsearch_spark.sources.registry import load_table
 
     d = os.path.join(sf_dir, "_dedup_mount")
     cutoff = _dedup_cutoff(spark, sf_dir)
-    if os.path.isdir(os.path.join(d, "dedup_bands")):
+    if snapshot(spark, d, missing_ok=True).has("dedup_bands"):
         return d
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") > cutoff)
