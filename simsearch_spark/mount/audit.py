@@ -561,9 +561,7 @@ def refresh(
             "dedup_reestimate=True requires families=['dedup'] — a full "
             "refresh regenerates the index with the carried hash family"
         )
-    mount_kwargs = _carry_mounted(
-        spark, snap, old_manifest, mount_kwargs, FAMILY_ARTIFACTS
-    )
+    mount_kwargs = _carry_mounted(spark, snap, mount_kwargs, FAMILY_ARTIFACTS)
     # the new generation names none of the live artifacts (tombstones
     # included); the commit still fences against the snapshot read above
     snap.manifest = _empty_manifest()
@@ -613,7 +611,6 @@ _DEDUP_CARRIED = (
 def _carry_mounted(
     spark: SparkSession,
     snap,
-    old_manifest: dict,
     mount_kwargs: dict,
     families,
 ) -> dict:
@@ -625,7 +622,7 @@ def _carry_mounted(
     kw = dict(mount_kwargs)
     if "text" in families and kw.get("profiles") is None and snap.has("langid_profiles"):
         kw["profiles"] = load_profiles(spark, snap)
-    dd = old_manifest.get("dedup")
+    dd = snap.manifest.get("dedup")
     if "dedup" in families and kw.get("dedup_params") is None and dd:
         kw["dedup_params"] = {k: dd[k] for k in _DEDUP_CARRIED if k in dd}
     return kw
@@ -651,7 +648,7 @@ def _refresh_families(
     # the retrain's writes only touch the dirs/schemas maps, so the
     # guards below read the snapshot's counts and blocks until the
     # manifest edits at the end
-    old_manifest = snap.manifest
+    manifest = snap.manifest
     unknown = set(families) - set(FAMILY_ARTIFACTS)
     if unknown:
         raise ValueError(
@@ -659,13 +656,13 @@ def _refresh_families(
             f"choose from {sorted(FAMILY_ARTIFACTS)}"
         )
     if "dedup" in families and not (
-        old_manifest.get("dedup") or mount_kwargs.get("dedup_params")
+        manifest.get("dedup") or mount_kwargs.get("dedup_params")
     ):
         raise ValueError(
             "refresh(families=['dedup']) on a mount without dedup artifacts "
             "— run mount_dedup (or pass dedup_params) first"
         )
-    if "bpe" in families and not old_manifest.get("bpe"):
+    if "bpe" in families and not manifest.get("bpe"):
         raise ValueError(
             "refresh(families=['bpe']) on a mount without BPE artifacts "
             "— run mount_bpe first"
@@ -678,9 +675,7 @@ def _refresh_families(
     if mount_kwargs.get("dedup_reestimate") and "dedup" not in families:
         raise ValueError("dedup_reestimate=True requires 'dedup' in families")
 
-    mount_kwargs = _carry_mounted(
-        spark, snap, old_manifest, mount_kwargs, families
-    )
+    mount_kwargs = _carry_mounted(spark, snap, mount_kwargs, families)
     vparams = n_new = dd_block = bp_block = None
     if "vector" in families:
         emb = (
@@ -695,7 +690,7 @@ def _refresh_families(
             )
         finally:
             emb.unpersist()
-        n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
+        n_old = int(manifest.get("counts", {}).get("n_vectors", 0))
         _guard_shrink(
             n_new, n_old, "vectors", "the new generation", allow_shrink
         )
@@ -766,11 +761,11 @@ def _refresh_families(
                 dd_block = _build_dedup(spark, snap, docs, **dpf)
                 _guard_shrink(
                     int(dd_block["n_docs"]),
-                    int(old_manifest.get("dedup", {}).get("n_docs", 0)),
+                    int(manifest.get("dedup", {}).get("n_docs", 0)),
                     "docs", "the new dedup index", allow_shrink,
                 )
             if "bpe" in families:
-                bp = old_manifest["bpe"]
+                bp = manifest["bpe"]
                 bp_block = _build_bpe(
                     spark, snap, docs,
                     text_col=bp["text_col"], n_merges=bp["n_merges"],
@@ -794,7 +789,6 @@ def _refresh_families(
         finally:
             docs.unpersist()
 
-    manifest = snap.manifest
     if "vector" in families:
         snap.drop("tombstones")
     if dd_block is not None:

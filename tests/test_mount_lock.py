@@ -27,6 +27,8 @@ from simsearch_spark.mount.lock import (
     mount_write_lock,
 )
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 # ---------------------------------------------------------------- lock unit
 
@@ -313,7 +315,7 @@ def test_lock_cross_process_contention_and_death(tmp_path):
         [
             sys.executable,
             "-c",
-            "import sys, time; sys.path.insert(0, '/root/repo');"
+            f"import sys, time; sys.path.insert(0, {REPO_ROOT!r});"
             "from simsearch_spark.mount.lock import mount_write_lock;"
             f"l = mount_write_lock({d!r}, 'other-process'); l.__enter__();"
             "print('HELD', flush=True); time.sleep(60)",

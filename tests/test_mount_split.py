@@ -95,7 +95,7 @@ def _cents(spark, d):
     }
 
 
-def test_split_conserves_rows_ids_and_hardlinks(spark, skewed, tmp_path):
+def test_split_conserves_rows_ids_and_files(spark, skewed, tmp_path):
     emb, docs, _ = skewed
     d = _mounted(spark, skewed, tmp_path, "m1")
     before = cell_sizes(spark, d)
@@ -239,7 +239,7 @@ def test_auto_maintain_splits_hot_cell(spark, skewed, tmp_path):
 # ------------------------------------------------------------- merge dual
 
 
-def test_merge_folds_dust_into_nearest_and_hardlinks(spark, skewed, tmp_path):
+def test_merge_folds_dust_into_nearest_and_keeps_files(spark, skewed, tmp_path):
     from simsearch_spark.mount.maintain import merge_cells, should_merge
 
     d = _mounted(spark, skewed, tmp_path, "mm1")
