@@ -275,8 +275,9 @@ def stdout_line(cold, med, warm, sf_val, load_ratio=None) -> str:
     head — the rounds-stable core, re-verified every round by the oracle
     gates) are dropped first and counted in ``queries_omitted``, until
     the line fits.  ``omitted_sum`` closes the accounting: ``value`` ==
-    sum(queries) + omitted_sum, so the headline stays auditable from the
-    line alone.  Values keep 2 decimals deliberately — 1-decimal values
+    sum(queries) + omitted_sum to rounding (each side is rounded to 2
+    decimals on its own), so the headline stays auditable from the line
+    alone.  Values keep 2 decimals deliberately — 1-decimal values
     would fit ~5 further entries but quantize sub-second queries by up to
     ±17%, enough to flip the driver's >10% regressed/improved statuses
     on noise.  The complete untruncated record is the committed

@@ -40,7 +40,9 @@ deployment pays once.  This package is that deployment shape:
   untouched families keeping their directories byte-identical — and
   ``audit.audit_dedup`` adds the dedup dual of the drift audit (measured
   LSH recall on a bounded sample, with ``dedup_reestimate=True`` re-
-  sizing the banding from the current corpus).
+  sizing the banding from the current corpus).  ``mount()`` and
+  ``refresh`` train through one loop (``audit._train_families``): a
+  refresh with no families retrains every family the mount holds.
 - ``bpe.mount_bpe`` / ``bpe.serve_bpe_encode`` / ``bpe.bpe_encode_stats``
   (r14): the frozen-tokenizer artifact — the merge table trains once and
   persists; corpus-scale encode is the row-local Arrow kernel against

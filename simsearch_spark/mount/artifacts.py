@@ -357,9 +357,9 @@ def mount(
     dedup: bool = True,
     dedup_params: dict | None = None,
 ) -> dict:
-    """Train and persist the full artifact set from the corpus at
-    ``sf_dir``; returns the manifest (also committed to
-    ``mount_dir/manifest.json``).
+    """Train and persist the vector, text and (unless ``dedup=False``)
+    dedup artifact families from the corpus at ``sf_dir``; returns the
+    manifest (also committed to ``mount_dir/manifest.json``).
 
     ``train_frame``: the embeddings frame the IVF centroids and residual
     PQ codebooks are trained on (default: the corpus itself — which makes
@@ -368,97 +368,30 @@ def mount(
     language-ID profile dict (e.g. ``train_profiles`` output); default is
     the embedded seed profiles the declared queries use.  ``emb_frame`` /
     ``docs_frame`` override the corpus frames themselves (partial mounts,
-    the frozen-artifact append parity tests).
+    the frozen-artifact append parity tests).  ``dedup_params`` overrides
+    the frozen MinHash family of the dedup index.
 
-    The training is structured as per-FAMILY trainers (vector / text /
-    dedup, ``FAMILY_ARTIFACTS``) sharing one persisted corpus read per
-    table, so ``audit.refresh(families=[...])`` can regenerate a single
-    drifted family without re-paying the others (VERDICT r13 task 1).
-    Re-mounting a directory writes a new generation beside the live one
-    and commits it; the previous manifest is neither read nor needed."""
+    The families train through ``audit._train_families``, the loop
+    ``refresh`` runs too, here over an empty snapshot.  Re-mounting a
+    directory writes a new generation beside the live one and commits
+    it; the previous manifest is neither read nor needed."""
+    from simsearch_spark.mount.audit import _train_families
+
     snap = Snapshot(spark, mount_dir)
-    _mount_into(
-        spark, snap, sf_dir, train_frame=train_frame, profiles=profiles,
-        emb_frame=emb_frame, docs_frame=docs_frame, dedup=dedup,
+    _train_families(
+        spark, snap, sf_dir, ["vector", "text"] + (["dedup"] if dedup else []),
+        emb_frame, docs_frame, train_frame=train_frame, profiles=profiles,
         dedup_params=dedup_params,
     )
     snap.commit()
     return snap.manifest
 
 
-def _mount_into(
-    spark: SparkSession,
-    snap: "Snapshot",
-    sf_dir: str,
-    train_frame: DataFrame | None = None,
-    profiles: dict[str, dict[str, int]] | None = None,
-    emb_frame: DataFrame | None = None,
-    docs_frame: DataFrame | None = None,
-    dedup: bool = True,
-    dedup_params: dict | None = None,
-) -> dict:
-    """``mount``'s body: train every family into new versions of
-    ``snap``, whose manifest starts empty, and fill the manifest in
-    without committing it (``refresh`` adds to it first)."""
-    from simsearch_spark.sources.registry import load_table
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings") if emb_frame is None else emb_frame
-    ).persist()
-    train = emb if train_frame is None else train_frame
-    try:
-        vparams, n_vectors = _train_vector_family(spark, emb, train, snap)
-    finally:
-        emb.unpersist()
-
-    # ONE persisted documents read shared by the text AND dedup trainers
-    docs = (
-        (load_table(spark, sf_dir, "documents") if docs_frame is None else docs_frame)
-        .where(F.col("text").isNotNull())
-        .persist()
-    )
-    try:
-        langs = _train_text_family(spark, docs, profiles, snap)
-        # text-family drift baseline (r14): the mounted LM's mean
-        # log-perplexity on a bounded sample of its own training corpus —
-        # audit_text compares current data against it
-        from simsearch_spark.mount.audit import _sample_lm_stats
-
-        txt_stats = _sample_lm_stats(spark, snap, docs)
-
-        manifest = snap.manifest
-        manifest.update({
-            "source": os.path.abspath(sf_dir),
-            "params": {**vparams, "langs": langs},
-            "counts": {"n_vectors": n_vectors},
-            "text_audit": {
-                "baseline_ppl": txt_stats["log_ppl"],
-                "baseline_coverage": txt_stats["coverage"],
-            },
-            "artifacts": FAMILY_ARTIFACTS["vector"] + FAMILY_ARTIFACTS["text"],
-        })
-        if dedup:
-            # the persisted MinHash signature/band index (mount/dedup.py) —
-            # frozen hash family matching the declared dedup queries, so
-            # dedup_append deltas stay parity-equal to the batch operator.
-            # ``dedup_params`` overrides the family (a refresh passes the
-            # OLD manifest's block through, so a regenerated mount never
-            # silently reverts a custom family to defaults — r12)
-            from simsearch_spark.mount.dedup import _build_dedup
-
-            _add_family(
-                manifest, "dedup",
-                _build_dedup(spark, snap, docs, **_dedup_family_params(dedup_params)),
-            )
-    finally:
-        docs.unpersist()
-    return manifest
-
-
-def _add_family(manifest: dict, family: str, block: dict) -> None:
-    """Record a single-family trainer's manifest ``block`` (``dedup``,
-    ``bpe``) and list the family's artifacts."""
-    manifest[family] = block
+def _add_family(manifest: dict, family: str, block: dict | None = None) -> None:
+    """List ``family``'s artifacts in ``manifest`` and record the
+    family's manifest ``block`` (``dedup``, ``bpe``) when it has one."""
+    if block is not None:
+        manifest[family] = block
     manifest["artifacts"] += [
         a for a in FAMILY_ARTIFACTS[family] if a not in manifest["artifacts"]
     ]

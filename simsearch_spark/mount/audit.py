@@ -13,12 +13,14 @@ This module closes the operational loop:
   multi-query brute scan; returns the recall and the per-query hit
   counts.  At 100 TB the brute arm runs against a corpus sample; here the
   corpus IS probe-sized.
-- ``refresh``: retrain every artifact (or only the drifted families)
-  from the CURRENT corpus into new versions and commit them with one
-  manifest write and a ``generation`` bump.  Serving is never
+- ``refresh``: retrain the named families (default: every family the
+  mount holds) from the CURRENT corpus into new versions and commit them
+  with one manifest write and a ``generation`` bump.  Serving is never
   interrupted: a serve resolves every read through the manifest snapshot
   it took, whose directories GC keeps through the next commit; the next
   serve sees the new generation.
+- ``_train_families``: the one trainer of mount families, shared by
+  ``refresh`` and ``mount()`` (which runs it over an empty snapshot).
 
 The degradation→refresh→recovery loop is pinned by
 tests/test_mount_audit.py on a planted drifted delta (the
@@ -26,6 +28,8 @@ mixture-of-Gaussians machinery from tests/test_ann_recall.py).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,8 +39,6 @@ from simsearch_spark.mount.artifacts import (
     FAMILY_ARTIFACTS,
     _add_family,
     _dedup_family_params,
-    _empty_manifest,
-    _mount_into,
     _train_text_family,
     _train_vector_family,
     load_profiles,
@@ -83,28 +85,6 @@ def _brute_multi_topk(
     return out
 
 
-def _round6_half_up(arr):
-    """``F.round(col, 6)`` parity for a driver-resident numpy vector:
-    Spark rounds through ``BigDecimal.valueOf(double)`` — the shortest
-    decimal representation that round-trips to the same double — then
-    HALF_UP at scale 6.  ``Decimal(repr(x))`` is Python's identical
-    shortest round-trip decimal, so quantizing it HALF_UP cannot differ
-    from the engine arm by the 1 ulp the pure-float emulation allowed
-    (ADVICE r13).  Cost is a Python loop, bounded by the audit's sampled
-    universe (never corpus-sized)."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q6 = Decimal("0.000001")
-    return np.array(
-        [
-            float(Decimal(repr(float(c))).quantize(q6, rounding=ROUND_HALF_UP))
-            for c in arr
-        ],
-        dtype=np.float64,
-    )
-
-
 def _brute_local(
     rows, qs: list[tuple[int, list[float]]], k: int, id_col: str, vec_col: str
 ) -> dict[int, list[int]]:
@@ -112,6 +92,8 @@ def _brute_local(
     sampled arm) — numpy matrix product, same (round(cos, 6) desc, id
     asc) ordering as ``_brute_multi_topk``."""
     import numpy as np
+
+    from simsearch_spark.operators.pq import _round6_half_up
 
     ids = np.array([int(r[id_col]) for r in rows], dtype=np.int64)
     mat = np.array([[float(x) for x in r[vec_col]] for r in rows], dtype=np.float64)
@@ -121,14 +103,10 @@ def _brute_local(
         q = np.asarray(qv, dtype=np.float64)
         qn = float(np.sqrt((q * q).sum()))
         cos = (mat @ q) / (norms * qn)
-        # HALF_UP at 6 decimals, the engine-wide score contract.  Spark's
-        # round() on a double goes through BigDecimal.valueOf — i.e. the
-        # SHORTEST-DECIMAL representation of the exact double — so the
-        # floor(|x|·1e6+0.5) emulation could disagree by 1 ulp at
-        # 6-decimal representation boundaries (ADVICE r13).  Decimal(
-        # repr(x)) is Python's same shortest round-trip decimal; HALF_UP
-        # quantize over it is bit-for-bit the Spark contract.
-        cos = _round6_half_up(cos)
+        # HALF_UP at 6 decimals, the engine-wide score contract: bit for
+        # bit Spark's round(x, 6) (ADVICE r13).  A Python loop, bounded by
+        # the sampled universe (never corpus-sized).
+        cos = np.array([_round6_half_up(c) for c in cos], dtype=np.float64)
         order = np.lexsort((ids, -cos))[: int(k)]
         out[int(qid)] = [int(i) for i in ids[order]]
     return out
@@ -517,71 +495,80 @@ def refresh(
     families: list[str] | None = None,
     **mount_kwargs,
 ) -> dict:
-    """Retrain artifacts from the CURRENT corpus and commit the new
-    generation.  ``emb_frame``/``docs_frame`` name the current
+    """Retrain artifact families from the CURRENT corpus and commit the
+    new generation.  ``emb_frame``/``docs_frame`` name the current
     corpus (base + all appended rows — the mount stores codes, not raw
     vectors); default re-reads the manifest's source tables, which is
     only correct when nothing was appended — a retrain frame that COVERS
-    FEWER vectors than the manifest counts is rejected loudly
+    FEWER vectors or docs than the mount holds is rejected loudly
     (``allow_shrink=True`` in ``mount_kwargs`` overrides for deliberate
     re-scoping), because silently dropping appended rows from the new
     generation is exactly the failure the drift loop exists to prevent.
-    Returns the new manifest (``generation`` incremented; tombstones do
-    not carry over from a vector retrain — a retrain IS the compaction
-    horizon).
+    Returns the new manifest (``generation`` incremented).
 
-    ``families`` (VERDICT r13 task 1): ``None`` retrains EVERYTHING —
-    the whole-mount default.  A subset of ``FAMILY_ARTIFACTS`` keys
-    (``vector`` / ``text`` / ``dedup`` / ``bpe``) regenerates ONLY those
-    families — drift is usually localized (the audit names the family),
-    and at 100 TB a full retrain re-pays the entire corpus for artifacts
-    that did not drift.  Every artifact of an untouched family is
-    byte-identical afterwards (the same directories), and the manifest
-    generation still advances.  Both modes carry the mounted language-ID
-    profiles and dedup hash family unless the caller passes new ones.
+    ``families``: a subset of ``FAMILY_ARTIFACTS`` keys (``vector`` /
+    ``text`` / ``dedup`` / ``bpe``) to regenerate; ``None`` means every
+    family the mount holds.  Drift is usually localized (the audit names
+    the family), and at 100 TB a full retrain re-pays the entire corpus
+    for artifacts that did not drift.  Every artifact of an untouched
+    family is byte-identical afterwards (the same directories), and the
+    manifest generation still advances.  The mounted language-ID
+    profiles and dedup hash family carry over unless the caller passes
+    new ones.  A vector retrain drops the vector ``tombstones`` (a
+    retrain IS the compaction horizon); ``dedup_tombstones`` stay, since
+    the docs frame may still hold a deleted doc.  ``mount_kwargs`` takes
+    ``train_frame``, ``profiles``, ``dedup_params``, ``dedup_reestimate``
+    and ``allow_shrink``.
 
-    Crash discipline: both modes write every retrained artifact into new
-    version directories and publish them, all families and the manifest
-    at once, by one fenced ``save_manifest`` (mount/lock.py).  A failure
+    Crash discipline: every retrained artifact is written into new
+    version directories and published, all families and the manifest at
+    once, by one fenced ``save_manifest`` (mount/lock.py).  A failure
     before the commit — a guard, the fence, an exception in a trainer —
     leaves the live mount untouched; the unnamed new directories are
     collected by the next commit.  No crash point loses a generation or
     mixes two."""
     allow_shrink = bool(mount_kwargs.pop("allow_shrink", False))
+    bad_kw = set(mount_kwargs) - {
+        "train_frame", "profiles", "dedup_params", "dedup_reestimate",
+    }
+    if bad_kw:
+        raise ValueError(f"refresh does not accept {sorted(bad_kw)}")
     snap = snapshot(spark, mount_dir)
-    old_manifest = snap.manifest
-    src = sf_dir if sf_dir is not None else old_manifest["source"]
-    if families is not None:
-        return _refresh_families(
-            spark, snap, src, list(families),
-            emb_frame, docs_frame, allow_shrink, mount_kwargs,
-        )
-    if "dedup_reestimate" in mount_kwargs:
+    manifest = snap.manifest
+    if families is None:
+        families = [
+            f for f, arts in FAMILY_ARTIFACTS.items() if any(snap.has(a) for a in arts)
+        ]
+    unknown = set(families) - set(FAMILY_ARTIFACTS)
+    if unknown:
         raise ValueError(
-            "dedup_reestimate=True requires families=['dedup'] — a full "
-            "refresh regenerates the index with the carried hash family"
+            f"unknown artifact families {sorted(unknown)} — "
+            f"choose from {sorted(FAMILY_ARTIFACTS)}"
         )
-    mount_kwargs = _carry_mounted(spark, snap, mount_kwargs, FAMILY_ARTIFACTS)
-    # the new generation names none of the live artifacts (tombstones
-    # included); the commit still fences against the snapshot read above
-    snap.manifest = _empty_manifest()
-    manifest = _mount_into(
-        spark, snap, src, emb_frame=emb_frame, docs_frame=docs_frame, **mount_kwargs,
+    if "dedup" in families and not (
+        manifest.get("dedup") or mount_kwargs.get("dedup_params")
+    ):
+        raise ValueError(
+            "refresh(families=['dedup']) on a mount without dedup artifacts "
+            "— run mount_dedup (or pass dedup_params) first"
+        )
+    if "bpe" in families and not manifest.get("bpe"):
+        raise ValueError(
+            "refresh(families=['bpe']) on a mount without BPE artifacts "
+            "— run mount_bpe first"
+        )
+    if mount_kwargs.get("dedup_reestimate") and "dedup" not in families:
+        raise ValueError(
+            f"dedup_reestimate=True requires 'dedup' in families, got "
+            f"{sorted(families)} — refresh requires families=['dedup'] or a "
+            "mount holding a dedup index"
+        )
+    _train_families(
+        spark, snap, sf_dir if sf_dir is not None else manifest["source"],
+        families, emb_frame, docs_frame, allow_shrink,
+        **_carry_mounted(spark, snap, mount_kwargs, families),
     )
-    if old_manifest.get("bpe"):
-        # carry the frozen-tokenizer artifact into the new generation
-        # (mount() does not train it by default — mount_bpe is opt-in,
-        # like mount_dedup was before it moved into mount's default set)
-        bp = old_manifest["bpe"]
-        _add_family(manifest, "bpe", _build_bpe(
-            spark, snap,
-            load_table(spark, src, "documents") if docs_frame is None else docs_frame,
-            text_col=bp["text_col"], n_merges=bp["n_merges"],
-        ))
-    n_old = int(old_manifest.get("counts", {}).get("n_vectors", 0))
-    n_new = int(manifest.get("counts", {}).get("n_vectors", 0))
-    _guard_shrink(n_new, n_old, "vectors", "the new generation", allow_shrink)
-    manifest["generation"] = int(old_manifest.get("generation", 0)) + 1
+    manifest["generation"] = int(manifest.get("generation", 0)) + 1
     snap.commit()
     return manifest
 
@@ -628,65 +615,41 @@ def _carry_mounted(
     return kw
 
 
-def _refresh_families(
+def _train_families(
     spark: SparkSession,
     snap,
-    src: str,
+    src: str | None,
     families: list[str],
-    emb_frame: DataFrame | None,
-    docs_frame: DataFrame | None,
-    allow_shrink: bool,
-    mount_kwargs: dict,
-) -> dict:
-    """Family-granular refresh (VERDICT r13 task 1): retrain only the
-    named families into new versions of ``snap`` and commit them with
-    one manifest write.  Untouched families keep their directories —
-    byte-identical across the refresh (pinned in
-    tests/test_mount_audit.py).  A vector retrain does not keep
-    ``tombstones``: it is the compaction horizon, exactly as the full
-    refresh."""
+    emb_frame: DataFrame | None = None,
+    docs_frame: DataFrame | None = None,
+    allow_shrink: bool = False,
+    train_frame: DataFrame | None = None,
+    profiles: dict[str, dict[str, int]] | None = None,
+    dedup_params: dict | None = None,
+    dedup_reestimate: bool = False,
+) -> None:
+    """The one trainer of mount families: retrain ``families`` from the
+    corpus at ``src`` (or the given frames) into new versions of
+    ``snap`` and record them in its manifest, uncommitted.  ``mount``
+    runs it over an empty snapshot, ``refresh`` over the live one.
+    Untouched families keep their directories — byte-identical across a
+    refresh (pinned in tests/test_mount_audit.py).  The shrink guards
+    compare against what ``snap`` holds, so over an empty snapshot they
+    read nothing and launch no job."""
     # the retrain's writes only touch the dirs/schemas maps, so the
     # guards below read the snapshot's counts and blocks until the
     # manifest edits at the end
     manifest = snap.manifest
-    unknown = set(families) - set(FAMILY_ARTIFACTS)
-    if unknown:
-        raise ValueError(
-            f"unknown artifact families {sorted(unknown)} — "
-            f"choose from {sorted(FAMILY_ARTIFACTS)}"
-        )
-    if "dedup" in families and not (
-        manifest.get("dedup") or mount_kwargs.get("dedup_params")
-    ):
-        raise ValueError(
-            "refresh(families=['dedup']) on a mount without dedup artifacts "
-            "— run mount_dedup (or pass dedup_params) first"
-        )
-    if "bpe" in families and not manifest.get("bpe"):
-        raise ValueError(
-            "refresh(families=['bpe']) on a mount without BPE artifacts "
-            "— run mount_bpe first"
-        )
-    bad_kw = set(mount_kwargs) - {
-        "train_frame", "profiles", "dedup_params", "dedup_reestimate",
-    }
-    if bad_kw:
-        raise ValueError(f"refresh(families=...) does not accept {sorted(bad_kw)}")
-    if mount_kwargs.get("dedup_reestimate") and "dedup" not in families:
-        raise ValueError("dedup_reestimate=True requires 'dedup' in families")
-
-    mount_kwargs = _carry_mounted(spark, snap, mount_kwargs, families)
-    vparams = n_new = dd_block = bp_block = None
+    blocks: dict = {}
     if "vector" in families:
         emb = (
             load_table(spark, src, "embeddings")
             if emb_frame is None
             else emb_frame
         ).persist()
-        train = mount_kwargs.get("train_frame")
         try:
             vparams, n_new = _train_vector_family(
-                spark, emb, emb if train is None else train, snap
+                spark, emb, emb if train_frame is None else train_frame, snap
             )
         finally:
             emb.unpersist()
@@ -695,10 +658,8 @@ def _refresh_families(
             n_new, n_old, "vectors", "the new generation", allow_shrink
         )
 
-    langs = None
     if {"text", "dedup", "bpe"} & set(families):
-        # ONE persisted documents read shared by both trainers — the
-        # same discipline mount() itself follows
+        # ONE persisted documents read shared by every docs trainer
         docs = (
             (
                 load_table(spark, src, "documents")
@@ -714,34 +675,36 @@ def _refresh_families(
                 # obviously-shrunk frame before paying the retrain
                 # (docs is persisted — the count is cheap); the
                 # post-train bm25 comparison below stays the
-                # authoritative guard
+                # authoritative guard.  Both skip when the snapshot
+                # names no text family (0 docs to cover).
                 n_txt_old = _bm25_ndocs(snap)
-                _guard_shrink(
-                    int(docs.count()), n_txt_old, "docs",
-                    "the text artifacts", allow_shrink,
-                )
-                langs = _train_text_family(
-                    spark, docs, mount_kwargs.get("profiles"), snap
-                )
+                if n_txt_old:
+                    _guard_shrink(
+                        int(docs.count()), n_txt_old, "docs",
+                        "the text artifacts", allow_shrink,
+                    )
+                langs = _train_text_family(spark, docs, profiles, snap)
                 # coverage guard (review r14): the text artifacts
                 # derive from the docs frame — a retrain that covers
                 # fewer docs than the mounted bm25_global silently
                 # drops appended docs from every LM/BM25 table, the
                 # same failure the vector/dedup guards reject
-                _guard_shrink(
-                    _bm25_ndocs(snap), n_txt_old, "docs",
-                    "the text artifacts", allow_shrink,
-                )
-                # re-baseline the drift audit on the NEW tables +
-                # the corpus they trained on (``snap`` reads its own
-                # writes; the live mount is untouched until the commit)
+                if n_txt_old:
+                    _guard_shrink(
+                        _bm25_ndocs(snap), n_txt_old, "docs",
+                        "the text artifacts", allow_shrink,
+                    )
+                # the drift audit's baseline: the NEW tables' mean
+                # log-perplexity on a bounded sample of the corpus they
+                # trained on (``snap`` reads its own writes; the live
+                # mount is untouched until the commit)
                 txt_baseline = _sample_lm_stats(spark, snap, docs)
             if "dedup" in families:
                 # resolved per call, so a wrapped _build_dedup is seen
                 from simsearch_spark.mount.dedup import _build_dedup
 
-                dpf = _dedup_family_params(mount_kwargs.get("dedup_params"))
-                if mount_kwargs.get("dedup_reestimate"):
+                dpf = _dedup_family_params(dedup_params)
+                if dedup_reestimate:
                     # re-size the banding from the CURRENT corpus at
                     # the mounted threshold (VERDICT r13 task 3): a
                     # shifted shingle distribution degrades recall at
@@ -758,20 +721,20 @@ def _refresh_families(
                     )
                     dpf["n_hashes"] = mp.n_hashes
                     dpf["bands"] = mp.bands
-                dd_block = _build_dedup(spark, snap, docs, **dpf)
+                blocks["dedup"] = _build_dedup(spark, snap, docs, **dpf)
                 _guard_shrink(
-                    int(dd_block["n_docs"]),
+                    int(blocks["dedup"]["n_docs"]),
                     int(manifest.get("dedup", {}).get("n_docs", 0)),
                     "docs", "the new dedup index", allow_shrink,
                 )
             if "bpe" in families:
                 bp = manifest["bpe"]
-                bp_block = _build_bpe(
+                blocks["bpe"] = _build_bpe(
                     spark, snap, docs,
                     text_col=bp["text_col"], n_merges=bp["n_merges"],
                 )
                 if (
-                    int(bp_block["n_learned"]) == 0
+                    int(blocks["bpe"]["n_learned"]) == 0
                     and int(bp.get("n_learned", 0)) > 0
                 ):
                     # a frame so degenerate it learned NO merges must
@@ -789,13 +752,10 @@ def _refresh_families(
         finally:
             docs.unpersist()
 
+    if src is not None:
+        manifest["source"] = os.path.abspath(src)
     if "vector" in families:
         snap.drop("tombstones")
-    if dd_block is not None:
-        _add_family(manifest, "dedup", dd_block)
-    if bp_block is not None:
-        _add_family(manifest, "bpe", bp_block)
-    if "vector" in families:
         manifest["params"].update(vparams)
         manifest["counts"]["n_vectors"] = int(n_new)
     if "text" in families:
@@ -804,9 +764,9 @@ def _refresh_families(
             "baseline_ppl": txt_baseline["log_ppl"],
             "baseline_coverage": txt_baseline["coverage"],
         }
-    manifest["generation"] = int(manifest.get("generation", 0)) + 1
-    snap.commit()
-    return manifest
+    for family in FAMILY_ARTIFACTS:
+        if family in families:
+            _add_family(manifest, family, blocks.get(family))
 
 
 def _bm25_ndocs(snap) -> int:

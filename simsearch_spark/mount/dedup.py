@@ -817,13 +817,14 @@ def stream_dedup_append(
     sets equals one batch call on the concatenated delta
     (tests/test_mount_dedup.py pins it).
 
-    Replay discipline (at-least-once ``foreachBatch``): pairs write to a
-    BATCH-KEYED directory, WRITE-IF-ABSENT — the ``on_pairs`` hook runs
-    BEFORE any index update, so a batch directory with a ``_SUCCESS``
-    marker always holds the batch's FULL pair set and is never
-    overwritten.  Each batch's index update is one manifest commit, so
-    a replay either recomputes identical pairs (nothing was committed)
-    or skips as an all-duplicate delta, leaving the pairs in place.
+    Replay discipline (at-least-once ``foreachBatch``): pairs overwrite
+    a BATCH-KEYED directory from the ``on_pairs`` hook, which runs BEFORE
+    the batch's index update, and that update is one manifest commit.
+    A replayed batch whose commit never landed recomputes the identical
+    full pair set and rewrites it; one whose commit landed is an
+    all-duplicate delta, which never calls ``on_pairs``, so the directory
+    keeps the pairs the first run wrote (tests/test_review_r12.py crashes
+    a batch at both points).
 
     Returns the started ``StreamingQuery`` (``availableNow`` trigger)."""
     if not snapshot(spark, mount_dir).manifest.get("dedup"):
@@ -832,13 +833,10 @@ def stream_dedup_append(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tgt = os.path.join(pairs_dir, f"batch_id={int(batch_id)}")
-
-        def commit_pairs(p: DataFrame) -> None:
-            if os.path.exists(os.path.join(tgt, "_SUCCESS")):
-                return  # committed by a pre-crash run of this batch
-            p.write.mode("overwrite").parquet(tgt)
-
-        dedup_append(spark, mount_dir, batch_df, update=True, on_pairs=commit_pairs)
+        dedup_append(
+            spark, mount_dir, batch_df, update=True,
+            on_pairs=lambda p: p.write.mode("overwrite").parquet(tgt),
+        )
 
     writer = stream_docs.writeStream.foreachBatch(sink).trigger(availableNow=True)
     if checkpoint_dir:

@@ -67,7 +67,9 @@ def _round6_half_up(x: float) -> float:
     """Replicate ``F.round(col, 6)`` on doubles driver-side: Spark rounds
     ``BigDecimal(Double.toString(d))`` HALF_UP at scale 6, and
     ``Decimal(repr(x))`` is Python's identical shortest round-trip
-    decimal (the mount/audit.py ADVICE-r13 contract)."""
+    decimal — where ``floor(|x|·1e6 + 0.5)`` is 1 ulp off at
+    representation boundaries (ADVICE r13).  The one driver-side copy of
+    the rule: PQ training and the audit's sampled brute arm use it."""
     return float(Decimal(repr(float(x))).quantize(_Q6, rounding=ROUND_HALF_UP))
 
 

@@ -1,3 +1,3 @@
-from simsearch_spark.sources.registry import Mount, load_table, mount_catalog
+from simsearch_spark.sources.registry import load_table
 
-__all__ = ["Mount", "load_table", "mount_catalog"]
+__all__ = ["load_table"]

@@ -1,18 +1,16 @@
-"""Source mounting — the Spark analog of the reference's ``Coordinator.mount``.
+"""Fixture table reads — the source side of the reference's
+``Coordinator.mount``.
 
-Reference behavior (/root/reference, SURVEY.md §1.1/§3.3): each attribute is
+Reference behavior (SURVEY.md §1.1/§3.3): each attribute is
 "mounted" from a csv/jdbc/restapi source into an in-heap per-attribute map +
 index (``Coordinator.java:237-800``, ``manager/ingested/DataIngestor.java``).
 
-Spark-first rebuild: a *mount* is just registering a DataFrame as a temp view
-(or a saved table at scale).  Parquet is already columnar, so the reference's
-vertical decomposition into per-attribute maps is free; indexes are replaced
-by Catalyst's pushdown + TakeOrderedAndProject (SURVEY.md §4).  The mount
-keeps per-attribute metadata (key column, value column, operation/type) so the
-query layer can bind facets by attribute name, mirroring
-``manager/DatasetIdentifier.java:42-54`` without the UUID machinery.
+Spark-first rebuild: a source is a DataFrame read.  Parquet is already
+columnar, so the reference's vertical decomposition into per-attribute maps
+is free; indexes are replaced by Catalyst's pushdown + TakeOrderedAndProject
+(SURVEY.md §4), and the trained artifacts live in ``simsearch_spark.mount``.
 
-Scale note (100 TB): mounts should point at partitioned/bucketed Parquet or
+Scale note (100 TB): sources should point at partitioned/bucketed Parquet or
 Iceberg/Delta tables; ``load_table`` only issues ``spark.read`` so partition
 pruning and predicate pushdown reach the scan untouched.
 """
@@ -20,7 +18,6 @@ pruning and predicate pushdown reach the scan untouched.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,28 +34,6 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-@dataclass
-class Mount:
-    """One mounted attribute: the Spark analog of a DatasetIdentifier.
-
-    ``operation`` uses the reference vocabulary (``Coordinator.java:535-578``):
-    categorical_topk | textual_topk | numerical_topk | temporal_topk |
-    spatial_knn | pivot_based, plus the engine-side extensions
-    (vector_knn for embeddings).
-    """
-
-    table: str
-    key_column: str
-    value_columns: list[str]
-    operation: str
-    alias: str | None = None
-    options: dict = field(default_factory=dict)
-
-    @property
-    def name(self) -> str:
-        return self.alias or self.value_columns[0]
 
 
 def ensure_nanos_conf(spark: SparkSession) -> None:
@@ -117,12 +92,3 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     elif ts_dtype == "timestamp_ntz":
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def mount_catalog(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES) -> None:
-    """Register every fixture table as a temp view so SQL-side callers and the
-    similarity front-end resolve the same relations."""
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -85,19 +85,19 @@ def test_bands_failure_does_not_mark_delta_mounted(spark, sf_dir, tmp_path, monk
 
 
 def test_round6_half_up_matches_spark_round(spark):
-    """ADVICE r13 #3: the audit's driver-side rounding equals Spark's
+    """ADVICE r13 #3: the driver-side rounding equals Spark's
     round(x, 6) on adversarial representation-boundary values (where the
     old floor-emulation was 1 ulp off) and on a seeded random sweep."""
     import numpy as np
 
-    from simsearch_spark.mount.audit import _round6_half_up
+    from simsearch_spark.operators.pq import _round6_half_up
 
     # values where floor(|x|*1e6+0.5) and shortest-decimal HALF_UP differ
     boundary = [0.1250045, 0.1250325, 0.1250605, -0.1250045, -0.1250885]
     rng = np.random.default_rng(7)
     vals = boundary + [float(v) for v in rng.uniform(-1, 1, 200)]
 
-    got = _round6_half_up(np.array(vals))
+    got = [_round6_half_up(v) for v in vals]
     want = [
         r[0]
         for r in spark.createDataFrame([(v,) for v in vals], "x double")

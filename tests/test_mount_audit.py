@@ -83,7 +83,7 @@ def test_drift_degrades_refresh_restores(spark, corpus, docs_stub, tmp_path_fact
     # mixture — a production refresh re-clusters; _centroids6 is the
     # fixture's kmeans stand-in, same as mount)
     gen0 = load_manifest(d).get("generation", 0)
-    man = refresh(spark, d, sf_dir="", emb_frame=union, docs_frame=docs_stub, dedup=False)
+    man = refresh(spark, d, sf_dir="", emb_frame=union, docs_frame=docs_stub)
     assert man["generation"] == gen0 + 1
     assert load_manifest(d)["generation"] == gen0 + 1
 
@@ -118,7 +118,7 @@ def test_refresh_preserves_serving_and_is_crash_safe(
     os.makedirs(debris)
     with open(os.path.join(debris, "garbage"), "w") as f:
         f.write("x")
-    refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs_stub, dedup=False)
+    refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs_stub)
     assert not os.path.isdir(debris)
 
     after = sorted(
@@ -182,7 +182,7 @@ def test_sampled_audit_tracks_full_audit(spark, corpus, docs_stub, tmp_path_fact
     d_full, d_samp = both(union)
     # same detection decision as the exact arm: measurable degradation
     assert d_samp <= h_samp - 0.2, (h_samp, d_samp)
-    refresh(spark, d, sf_dir="", emb_frame=union, docs_frame=docs_stub, dedup=False)
+    refresh(spark, d, sf_dir="", emb_frame=union, docs_frame=docs_stub)
     r_full, r_samp = both(union)
     assert r_samp >= h_samp - 0.05 and r_samp >= d_samp + 0.2
     # agreement with the exact metric at every stage of the loop
@@ -656,7 +656,7 @@ def test_review_r14b_no_signal_and_guards(spark, corpus, tmp_path):
                 allow_shrink=True)  # degeneracy caught even past the hatch
 
     # full (families=None) refresh carries the custom profiles
-    refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs, dedup=False)
+    refresh(spark, d, sf_dir="", emb_frame=base, docs_frame=docs)
     assert load_profiles(spark, d) == custom_prof
 
     # non-default text column is aliased into the LM machinery

@@ -445,9 +445,7 @@ def test_full_refresh_keeps_held_lock_file(spark, vec_frames, tmp_path):
     mount(spark, "", d, emb_frame=emb, docs_frame=docs, dedup=False)
     lp = os.path.join(d, lockmod.LOCK_NAME)
     with mount_write_lock(d, "sweep"):
-        refresh(
-            spark, d, sf_dir="", emb_frame=emb, docs_frame=docs, dedup=False
-        )
+        refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs)
         assert os.path.exists(lp), "refresh discarded the held lock file"
         assert json.load(open(lp))["pid"] == os.getpid()
     assert not os.path.exists(lp)

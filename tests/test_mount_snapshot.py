@@ -12,7 +12,11 @@ retired — so:
   delta un-mounted, and a retry yields the batch pair set;
 - reads take no lock: a dedup lookup returns while a writer holds it;
 - a codes probe still scans only the probed cells' directories, across
-  appended versions and a split's partial entries.
+  appended versions and a split's partial entries;
+- ``mount()`` and ``refresh()`` train through one loop, so a full
+  refresh is a refresh of every mounted family: it keeps the dedup
+  tombstones, rejects a docs frame that covers fewer docs than mounted,
+  and adds no family the mount lacks.
 """
 
 from __future__ import annotations
@@ -34,8 +38,9 @@ from simsearch_spark.mount import (
     refresh,
 )
 from simsearch_spark.mount import artifacts
-from simsearch_spark.mount.artifacts import load_manifest, snapshot
-from simsearch_spark.mount.dedup import dedup_append
+from simsearch_spark.mount.artifacts import FAMILY_ARTIFACTS, load_manifest, snapshot
+from simsearch_spark.mount.bpe import mount_bpe
+from simsearch_spark.mount.dedup import dedup_append, delete_docs
 from simsearch_spark.mount.maintain import compact_codes, compact_dedup, split_cell
 from simsearch_spark.mount.serve import (
     read_codes,
@@ -298,3 +303,66 @@ def test_codes_probe_scans_only_probed_cells(spark, m):
     assert len(df.collect()) == 23  # 20 mounted + 3 appended
     codes_scan = [s for s in _scan_metrics(df) if s["numPartitions"] > 0]
     assert codes_scan == [{"numFiles": probed, "numPartitions": 2}]
+
+
+def test_full_refresh_keeps_dedup_tombstones(spark, frames, m):
+    """A doc removed with ``delete_docs`` stays removed across a full
+    refresh: the docs frame still holds it, so the tombstones must
+    outlive the dedup retrain."""
+    emb, docs = frames
+    probe = _BASE_TEXTS[5]
+    assert 5 in [r[0] for r in serve_dedup_lookup(spark, m, probe).collect()]
+    delete_docs(spark, m, [5])
+    refresh(spark, m, sf_dir="", emb_frame=emb, docs_frame=docs)
+    assert snapshot(spark, m).has("dedup_tombstones")
+    assert 5 not in [r[0] for r in serve_dedup_lookup(spark, m, probe).collect()]
+
+
+@pytest.mark.parametrize("families", [None, ["text"]])
+def test_refresh_rejects_a_docs_frame_that_shrinks_the_mount(spark, frames, m, families):
+    """A docs frame covering 10 of the 40 mounted docs is rejected by a
+    full refresh exactly as by a text refresh, and the mount is left as
+    it was."""
+    emb, docs = frames
+    before = load_manifest(m)
+    with pytest.raises(ValueError, match="silently vanish"):
+        refresh(
+            spark, m, sf_dir="", emb_frame=emb,
+            docs_frame=docs.where(F.col("doc_id") < 10), families=families,
+        )
+    assert load_manifest(m) == before
+
+
+def test_full_refresh_adds_no_family(spark, frames, tmp_path):
+    """A full refresh of a mount built with ``dedup=False`` retrains the
+    families it holds and adds no dedup index."""
+    emb, docs = frames
+    d = str(tmp_path / "nodedup")
+    mount(spark, "", d, emb_frame=emb, docs_frame=docs, dedup=False)
+    man = refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs)
+    assert man["generation"] == 1 and "dedup" not in man
+    dedup_artifacts = set(FAMILY_ARTIFACTS["dedup"])
+    assert not dedup_artifacts & (set(man["artifacts"]) | set(man["dirs"]))
+
+
+def test_full_refresh_equals_a_refresh_of_every_family(spark, frames, m, tmp_path):
+    """``refresh()`` and ``refresh(families=<every mounted family>)``
+    leave equal manifests (but for the new directory names) and equal
+    artifact rows, on a mount holding all four families."""
+    emb, docs = frames
+    mount_bpe(spark, m, docs)
+    m2 = str(tmp_path / "m2")
+    shutil.copytree(m, m2)
+    full = refresh(spark, m, sf_dir="", emb_frame=emb, docs_frame=docs)
+    named = refresh(
+        spark, m2, sf_dir="", emb_frame=emb, docs_frame=docs,
+        families=list(FAMILY_ARTIFACTS),
+    )
+    assert {k: v for k, v in full.items() if k != "dirs"} == {
+        k: v for k, v in named.items() if k != "dirs"
+    }
+    assert sorted(full["dirs"]) == sorted(named["dirs"])
+    for name in full["dirs"]:
+        assert _rows(snapshot(spark, m).read(name)) == _rows(
+            snapshot(spark, m2).read(name)
+        ), name

@@ -1,8 +1,8 @@
 """Every mount mutator publishes through the one rule of ``mount/lock.py``:
 write new version directories, then commit the manifest.
 
-Three static checks over the product package, so that no mutator grows a
-private publish path again:
+Four static checks over the product package, so that no mutator grows a
+private publish or training path again:
 
 - only ``mount/artifacts.py``, the owner of ``save_manifest``, opens
   ``manifest.json`` for writing;
@@ -10,7 +10,11 @@ private publish path again:
   every read and write resolves through a manifest snapshot;
 - no module under ``mount/`` renames, moves or ``rmtree``s anything,
   except GC (``artifacts._collect``) and the lock's single-winner
-  stale-lock claim (``lock._break_stale``, which renames the lock file).
+  stale-lock claim (``lock._break_stale``, which renames the lock file);
+- the family trainers are called only by the one retrain loop
+  (``audit._train_families``, behind ``mount()`` and ``refresh``) and by
+  the build callbacks handed to ``artifacts._publish_family``
+  (``mount_dedup``, ``mount_bpe``).
 
 Pure ``ast``, no Spark.
 """
@@ -26,6 +30,9 @@ MANIFEST_OWNER = MOUNT_DIR / "artifacts.py"
 #: (module, function) pairs allowed to rename, move or rmtree
 MOVERS = {("artifacts.py", "_collect"), ("lock.py", "_break_stale")}
 MOVE_CALLS = {"rename", "move", "rmtree"}
+#: the family trainers, and the one loop allowed to call them by name
+TRAINERS = {"_train_vector_family", "_train_text_family", "_build_dedup", "_build_bpe"}
+TRAIN_LOOP = ("audit.py", "_train_families")
 
 
 def _artifact_names() -> set[str]:
@@ -137,6 +144,29 @@ def moves_outside(source: str, module: str) -> list[int]:
     return sorted(out)
 
 
+def trainer_calls_outside(source: str, module: str) -> list[int]:
+    """Line numbers of calls to a family trainer outside ``TRAIN_LOOP``
+    and outside the arguments of a ``_publish_family`` call."""
+    tree = ast.parse(source)
+    out = []
+
+    def visit(node, fn, published):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "_publish_family":
+                published = True
+            elif name in TRAINERS and not published and (module, fn) != TRAIN_LOOP:
+                out.append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn, published)
+
+    visit(tree, None, False)
+    return sorted(out)
+
+
 def _product_files() -> list[Path]:
     return sorted(PACKAGE_DIR.rglob("*.py"))
 
@@ -164,6 +194,15 @@ def test_no_rename_move_or_rmtree_outside_gc():
         p.name: lines
         for p in sorted(MOUNT_DIR.glob("*.py"))
         if (lines := moves_outside(p.read_text(), p.name))
+    }
+    assert bad == {}
+
+
+def test_only_the_retrain_loop_calls_a_family_trainer():
+    bad = {
+        str(p.relative_to(PACKAGE_DIR)): lines
+        for p in _product_files()
+        if (lines := trainer_calls_outside(p.read_text(), p.name))
     }
     assert bad == {}
 
@@ -196,3 +235,18 @@ def test_checks_catch_the_private_shapes():
     assert moves_outside(swap, "lock.py") == [2, 3, 4]
     assert moves_outside(gc, "artifacts.py") == []
     assert moves_outside(gc, "maintain.py") == [2]
+
+    loop = "def _train_families(s):\n    _build_dedup(s)\n"
+    published = (
+        "def mount_dedup(s):\n"
+        "    return _publish_family(s, 'dedup', lambda snap: _build_dedup(s, snap))\n"
+    )
+    private = (
+        "def _mount_into(s):\n"
+        "    _train_vector_family(s)\n"
+        "    dedup._build_bpe(s)\n"
+    )
+    assert trainer_calls_outside(loop, "audit.py") == []
+    assert trainer_calls_outside(loop, "artifacts.py") == [2]
+    assert trainer_calls_outside(published, "dedup.py") == []
+    assert trainer_calls_outside(private, "artifacts.py") == [2, 3]

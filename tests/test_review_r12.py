@@ -1,5 +1,5 @@
 """Regression tests for the r12 self-review findings: tombstone
-resurrect rejection, stream-pairs write-if-absent, an uncapped mount,
+resurrect rejection, stream-pairs replay, an uncapped mount,
 delta id-dtype normalization, refresh crash recovery and
 shrink guard."""
 
@@ -49,36 +49,53 @@ def test_tombstoned_id_not_reusable_until_compaction(spark, sf_dir, docs_stub, t
     assert load_manifest(d)["counts"]["n_vectors"] == n0 + 1
 
 
-def test_stream_pairs_write_if_absent(spark, sf_dir, tmp_path):
-    """A batch directory that already carries _SUCCESS (committed by a
-    pre-crash run BEFORE the index update) is never overwritten — the
-    replay's residual recompute cannot clobber the full pair set."""
+def test_stream_replay_keeps_full_pair_set(spark, sf_dir, tmp_path, monkeypatch):
+    """A batch that crashes between its pair write and its index commit,
+    or just after the commit, is replayed from the checkpoint; either
+    way the batch directory ends holding the batch's full pair set, and
+    the index holds the batch once."""
+    import simsearch_spark.mount.dedup as dedupmod
     from simsearch_spark.mount.dedup import stream_dedup_append
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") < 300)
-    delta = docs.where(F.col("doc_id") >= 300)
-    d = str(tmp_path / "m")
-    mount_dedup(spark, d, base, threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS)
-
-    pairs_dir = str(tmp_path / "pairs")
-    sentinel = spark.createDataFrame(
-        [(111, 222, 0.987654)], "id_a long, id_b long, jaccard double"
-    )
-    sentinel.write.parquet(os.path.join(pairs_dir, "batch_id=0"))
+    delta = docs.where(F.col("doc_id") >= 300).select("doc_id", "text")
+    fam = dict(threshold=MINHASH_T, n_hashes=N_HASHES, bands=N_BANDS)
+    ref = str(tmp_path / "ref")
+    mount_dedup(spark, ref, base, **fam)
+    want = sorted(tuple(r) for r in dedup_append(spark, ref, delta).collect())
+    assert want
 
     src = str(tmp_path / "src")
-    delta.select("doc_id", "text").write.parquet(src + "/b0")
+    delta.write.parquet(src + "/b0")
     stream = spark.readStream.schema("doc_id long, text string").parquet(src + "/*")
-    q = stream_dedup_append(
-        spark, d, stream, pairs_dir, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(180)
+    real_update = dedupmod._update_index
+    for crash in ("before_commit", "after_commit"):
+        d = str(tmp_path / crash / "m")
+        mount_dedup(spark, d, base, **fam)
+        pairs_dir = str(tmp_path / crash / "pairs")
+        ckpt = str(tmp_path / crash / "ckpt")
 
-    got = spark.read.parquet(os.path.join(pairs_dir, "batch_id=0")).collect()
-    assert [tuple(r) for r in got] == [(111, 222, 0.987654)]  # preserved
-    # ... while the index update still happened
-    assert load_manifest(d)["dedup"]["n_docs"] == docs.count()
+        def crashing_update(*a, crash=crash, **kw):
+            if crash == "after_commit":
+                real_update(*a, **kw)
+            raise OSError(f"crash {crash}")
+
+        monkeypatch.setattr(dedupmod, "_update_index", crashing_update)
+        with pytest.raises(Exception, match=f"crash {crash}"):
+            stream_dedup_append(
+                spark, d, stream, pairs_dir, checkpoint_dir=ckpt
+            ).awaitTermination(180)
+        monkeypatch.undo()
+        batch_dir = os.path.join(pairs_dir, "batch_id=0")
+        assert os.path.exists(os.path.join(batch_dir, "_SUCCESS")), crash
+
+        stream_dedup_append(
+            spark, d, stream, pairs_dir, checkpoint_dir=ckpt
+        ).awaitTermination(180)
+        got = sorted(tuple(r) for r in spark.read.parquet(batch_dir).collect())
+        assert got == want, crash
+        assert load_manifest(d)["dedup"]["n_docs"] == docs.count(), crash
 
     # and a vector-only mount fails synchronously, not per-batch
     d2 = str(tmp_path / "m2")
@@ -164,12 +181,12 @@ def test_refresh_crash_recovery_and_shrink_guard(
 
     monkeypatch.setattr(artifacts, "save_manifest", crash)
     with pytest.raises(OSError, match="before the commit"):
-        refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub, dedup=False)
+        refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub)
     monkeypatch.undo()
     assert "generation" not in load_manifest(d)
     debris = set(os.listdir(os.path.join(d, "pq_codes"))) - live0
     assert len(debris) == 1
-    man = refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub, dedup=False)
+    man = refresh(spark, d, sf_dir="", emb_frame=emb, docs_frame=docs_stub)
     assert man["generation"] == 1
     assert load_manifest(d)["counts"]["n_vectors"] == n0
     assert not debris & set(os.listdir(os.path.join(d, "pq_codes")))
@@ -177,11 +194,11 @@ def test_refresh_crash_recovery_and_shrink_guard(
     # shrink guard
     smaller = emb.where(F.col("vec_id") < 100)
     with pytest.raises(ValueError, match="silently vanish"):
-        refresh(spark, d, sf_dir="", emb_frame=smaller, docs_frame=docs_stub, dedup=False)
+        refresh(spark, d, sf_dir="", emb_frame=smaller, docs_frame=docs_stub)
     assert load_manifest(d)["generation"] == 1  # old generation untouched
     man = refresh(
         spark, d, sf_dir="", emb_frame=smaller, docs_frame=docs_stub,
-        dedup=False, allow_shrink=True,
+        allow_shrink=True,
     )
     assert man["generation"] == 2
     assert load_manifest(d)["counts"]["n_vectors"] == smaller.count()

@@ -3,7 +3,7 @@
 Measures, at corpus factors over $SPARK_GRAFT_SF_DIR (default sf0.1):
 
 - ``mount_full``      — mount() wall-clock (vector + text + dedup families)
-- ``refresh_full``    — whole-mount retrain-and-swap (the r13 shape)
+- ``refresh_full``    — refresh() with no families: every mounted family
 - ``refresh_vector``  — refresh(families=["vector"]): the localized-drift
                         path that skips the text/dedup retrains entirely
 - ``refresh_text``    — refresh(families=["text"])
